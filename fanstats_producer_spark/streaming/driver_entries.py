@@ -92,45 +92,63 @@ def _skip_nodata_batch(spark: SparkSession):
         )
 
 
-def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the fixture events table (s01's P1-made-
-    continuous source, parquet flavor).  The fixture ships as a single
-    file and the file-stream source requires a directory landing zone,
-    so the file is staged into a temp dir by hard link (fallback copy) —
-    zero data movement, and the stream sees it as one arriving file.
-    The schema comes from a static read so the stream never infers."""
+@contextlib.contextmanager
+def _work_dir(prefix: str):
+    """A private scratch dir for one drain's state, checkpoint and
+    outputs, removed on exit — so results must be read back eagerly
+    inside the block."""
+    import shutil
+
+    work = scratch_dir(prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _link_landing(spark: SparkSession, path: str, prefix: str) -> DataFrame:
+    """File-stream source over ONE fixture parquet file.  The
+    file-stream source requires a directory landing zone, so the file
+    is staged into a fresh dir by hard link (fallback copy) — zero data
+    movement, and the stream sees it as one arriving file.  The schema
+    comes from a static read so the stream never infers.  The dir must
+    outlive this call (the caller drains later), so removal defers to
+    interpreter exit — bounds /tmp growth across a long bench/driver
+    session without racing any in-flight stream."""
+    import atexit
     import os
     import shutil
 
+    schema = spark.read.parquet(path).schema
+    landing = scratch_dir(prefix)
+    atexit.register(shutil.rmtree, landing, ignore_errors=True)
+    name = os.path.basename(path).replace(".parquet", "-000.parquet")
+    dst = os.path.join(landing, name)
+    try:
+        os.link(path, dst)
+    except OSError:
+        shutil.copy(path, dst)
+    return spark.readStream.schema(schema).parquet(landing)
+
+
+def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-stream source over the fixture events table (s01's P1-made-
+    continuous source, parquet flavor), staged by _link_landing."""
     from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
     from fanstats_producer_spark.io import load as _load
 
-    path = f"{sf_dir}/events.parquet"
     # Validate on the batch side FIRST: io.load raises on unrecognized or
     # magnitude-implausible ts types, so reaching the stream read means
     # the raw type is one of the three known fixture flavors — and the
     # session confs (UTC, nanosAsLong) it pins also govern this stream.
     _load(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s_landing_")
-    # the dir must outlive this call (the caller drains later), so defer
-    # removal to interpreter exit — bounds /tmp growth across a long
-    # bench/driver session without racing any in-flight stream
-    import atexit
-
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "events-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = spark.readStream.schema(schema).parquet(landing)
+    stream = _link_landing(spark, f"{sf_dir}/events.parquet", "s_landing_")
     # Mirror io.load's normalization exactly (event-time ops need
     # TIMESTAMP): TIMESTAMP(NANOS) reads as long under nanosAsLong —
     # integer div to micros, NOT cast('timestamp') which would interpret
     # the long as epoch SECONDS and silently corrupt every drain.
-    ts_type = schema["ts"].dataType
+    ts_type = stream.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     if isinstance(ts_type, TimestampNTZType):
@@ -1036,7 +1054,6 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     update mode; the final emission per key equals the batch aggregate
     over both event types."""
     import os
-    import shutil
 
     from fanstats_producer_spark.functions.num import dsum_pos
     from fanstats_producer_spark.io import load
@@ -1045,29 +1062,28 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    stage = scratch_dir("s20_split_")
-    clicks_dir = os.path.join(stage, "clicks")
-    purchases_dir = os.path.join(stage, "purchases")
-    # distributed split write (no driver materialization), one dir per
-    # "topic" — each becomes its own file-stream source
-    events.where(F.col("event_type") == "click").write.parquet(clicks_dir)
-    events.where(F.col("event_type") == "purchase").write.parquet(
-        purchases_dir
-    )
-    schema = spark.read.parquet(clicks_dir).schema
-    clicks = spark.readStream.schema(schema).parquet(clicks_dir)
-    purchases = spark.readStream.schema(schema).parquet(purchases_dir)
-    # watermark each source BEFORE the union: the query watermark is the
-    # MIN across the two operators, so a lagging source holds the line
-    # (a single post-union watermark would track the global max and drop
-    # the lagging source's rows as late once batches separate)
-    unioned = clicks.withWatermark("ts", "30 minutes").union(
-        purchases.withWatermark("ts", "30 minutes")
-    )
-    agg = unioned.groupBy(
-        F.window("ts", "1 day").alias("w"), "event_type"
-    ).agg(F.count("*").alias("n"), dsum_pos("value").alias("sum_value"))
-    try:
+    with _work_dir("s20_split_") as stage:
+        clicks_dir = os.path.join(stage, "clicks")
+        purchases_dir = os.path.join(stage, "purchases")
+        # distributed split write (no driver materialization), one dir per
+        # "topic" — each becomes its own file-stream source
+        events.where(F.col("event_type") == "click").write.parquet(clicks_dir)
+        events.where(F.col("event_type") == "purchase").write.parquet(
+            purchases_dir
+        )
+        schema = spark.read.parquet(clicks_dir).schema
+        clicks = spark.readStream.schema(schema).parquet(clicks_dir)
+        purchases = spark.readStream.schema(schema).parquet(purchases_dir)
+        # watermark each source BEFORE the union: the query watermark is the
+        # MIN across the two operators, so a lagging source holds the line
+        # (a single post-union watermark would track the global max and drop
+        # the lagging source's rows as late once batches separate)
+        unioned = clicks.withWatermark("ts", "30 minutes").union(
+            purchases.withWatermark("ts", "30 minutes")
+        )
+        agg = unioned.groupBy(
+            F.window("ts", "1 day").alias("w"), "event_type"
+        ).agg(F.count("*").alias("n"), dsum_pos("value").alias("sum_value"))
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = (
                 agg.writeStream.format("memory")
@@ -1085,8 +1101,6 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .agg(F.max("n").alias("n"), F.max("sum_value").alias("sum_value"))
         )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query(
@@ -1142,15 +1156,13 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH over history; jobs.streaming_near_dup documents why the merge
     is JVM-side foreachBatch rather than per-bucket Python state."""
     import os
-    import shutil
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s21_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
+    with _work_dir("s21_work_") as work:
+        state_dir = os.path.join(work, "state")
+        verdict_dir = os.path.join(work, "verdicts")
+        ckpt = os.path.join(work, "ckpt")
+        stream = jobs.read_document_stream(spark, landing)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_near_dup(stream, state_dir, verdict_dir, ckpt)
             _drain(q)
@@ -1160,9 +1172,6 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
         out = out.localCheckpoint(eager=True)
         return out
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1241,15 +1250,13 @@ def s22_stream_verified_near_dup(
     exactly one data batch and fails loudly if a trigger change ever
     splits it."""
     import os
-    import shutil
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s22_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
+    with _work_dir("s22_work_") as work:
+        state_dir = os.path.join(work, "state")
+        verdict_dir = os.path.join(work, "verdicts")
+        ckpt = os.path.join(work, "ckpt")
+        stream = jobs.read_document_stream(spark, landing)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_verified_near_dup(
                 stream, state_dir, verdict_dir, ckpt
@@ -1274,9 +1281,6 @@ def s22_stream_verified_near_dup(
         )
         out = out.localCheckpoint(eager=True)
         return out
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1324,7 +1328,6 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch formulation for ANY batch slicing — the oracle states that
     batch value directly (no single-batch precondition, unlike s22)."""
     import os
-    import shutil
 
     from fanstats_producer_spark.io import load as _load
 
@@ -1341,11 +1344,10 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_events_stream(spark, sf_dir).filter(
         F.col("event_id") % 2 == 1
     )
-    work = scratch_dir("s23_work_")
-    state_dir = os.path.join(work, "state")
-    monitor_dir = os.path.join(work, "monitor")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with _work_dir("s23_work_") as work:
+        state_dir = os.path.join(work, "state")
+        monitor_dir = os.path.join(work, "monitor")
+        ckpt = os.path.join(work, "ckpt")
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_psi_drift(
                 stream, ref_counts, state_dir, monitor_dir, ckpt
@@ -1355,8 +1357,6 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "psi_e9", "n_ref", "n_live"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1464,14 +1464,12 @@ def s25_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching the (1-e^{-kn/m})^k ≈ 4e-4 expectation at n=2.5k — the
     number a capacity planner reads off before sizing m."""
     import os
-    import shutil
 
-    work = scratch_dir("s25_work_")
-    landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with _work_dir("s25_work_") as work:
+        landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
+        state_dir = os.path.join(work, "state")
+        verdict_dir = os.path.join(work, "verdicts")
+        ckpt = os.path.join(work, "ckpt")
         stream = (
             spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -1484,8 +1482,6 @@ def s25_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             _drain(q)
         out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _s26_oracle() -> str:
@@ -1517,9 +1513,6 @@ def s26_stream_semantic_decontam(
     leakage gets caught before a vector ever lands in the training
     index; the n-gram gate (s24) and this one are the two production
     arms of the same admission pipeline."""
-    import atexit
-    import os
-    import shutil
 
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import (
@@ -1530,20 +1523,9 @@ def s26_stream_semantic_decontam(
 
     emb = _load(spark, sf_dir, "embeddings")
     evs = eval_matrix_row(emb)
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s26_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "embeddings-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(landing)
-        .filter(F.col("vec_id") >= _X66_N_EVAL)
-    )
+    stream = _link_landing(
+        spark, f"{sf_dir}/embeddings.parquet", "s26_landing_"
+    ).filter(F.col("vec_id") >= _X66_N_EVAL)
     name = f"s26_mem_{uuid.uuid4().hex[:8]}"
     with _few_partitions(spark), _skip_nodata_batch(spark):
         q = (
@@ -1609,9 +1591,7 @@ def s26b_stream_decontam_large_eval(
     — entries whose fast sim lands within 1e-10 of an e6 floor
     boundary are recomputed with the fold's exact scalar sequence
     (similarity._decontam_blas), so no ulp class remains."""
-    import atexit
     import os
-    import shutil
 
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import _as_double
@@ -1621,25 +1601,14 @@ def s26b_stream_decontam_large_eval(
         F.col("vec_id").alias("eval_id"),
         _as_double(F.col("embedding")).alias("ev"),
     )
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s26b_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "embeddings-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(landing)
+        _link_landing(spark, f"{sf_dir}/embeddings.parquet", "s26b_landing_")
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    work = scratch_dir("s26b_work_")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with _work_dir("s26b_work_") as work:
+        verdict_dir = os.path.join(work, "verdicts")
+        ckpt = os.path.join(work, "ckpt")
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_decontam_crossjoin(
                 stream, evals, verdict_dir, ckpt, scorer="blas"
@@ -1649,8 +1618,6 @@ def s26b_stream_decontam_large_eval(
             "vec_id", "nearest_eval_id", "max_sim_e6", "contaminated"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1688,14 +1655,12 @@ def s27_stream_sequence_packing(
     in doc_id order.  The cross-batch carry is the thing under test:
     batch B's offsets continue exactly where batch A's total ended."""
     import os
-    import shutil
 
-    work = scratch_dir("s27_work_")
-    landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
-    manifest_dir = os.path.join(work, "manifest")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    try:
+    with _work_dir("s27_work_") as work:
+        landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
+        manifest_dir = os.path.join(work, "manifest")
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
         stream = (
             spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -1725,8 +1690,6 @@ def s27_stream_sequence_packing(
             "n_seqs",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1772,15 +1735,13 @@ def s28_stream_image_near_dup(
     first-arrival verdict only because the drain below consumes the
     whole landing in ONE data micro-batch — asserted loudly."""
     import os
-    import shutil
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s28_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
+    with _work_dir("s28_work_") as work:
+        state_dir = os.path.join(work, "state")
+        verdict_dir = os.path.join(work, "verdicts")
+        ckpt = os.path.join(work, "ckpt")
+        stream = jobs.read_document_stream(spark, landing)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_phash_near_dup(
                 stream, state_dir, verdict_dir, ckpt
@@ -1801,9 +1762,6 @@ def s28_stream_image_near_dup(
             "doc_id", "is_candidate", "is_dup"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query(
@@ -1845,19 +1803,17 @@ def s29_stream_audio_near_dup(
     ORACLE PRECONDITION: single-batch drain (the s22/s28 rationale),
     asserted loudly below."""
     import os
-    import shutil
 
     from fanstats_producer_spark.operators.multimodal import (
         audio_fp_features,
     )
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s29_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
+    with _work_dir("s29_work_") as work:
+        state_dir = os.path.join(work, "state")
+        verdict_dir = os.path.join(work, "verdicts")
+        ckpt = os.path.join(work, "ckpt")
+        stream = jobs.read_document_stream(spark, landing)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_phash_near_dup(
                 stream,
@@ -1880,9 +1836,6 @@ def s29_stream_audio_near_dup(
             "doc_id", "is_candidate", "is_dup"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s30_stream_weighted_sample", oracle=sampling.X92_ORACLE)
@@ -1898,14 +1851,12 @@ def s30_stream_weighted_sample(
     unlike the first-arrival gates (s22/s28/s29), this key is
     batching-invariant by algebra, not by drain shape."""
     import os
-    import shutil
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s30_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
+    with _work_dir("s30_work_") as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
+        stream = jobs.read_document_stream(spark, landing)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_weighted_sample(stream, state_dir, ckpt)
             _drain(q)
@@ -1913,8 +1864,6 @@ def s30_stream_weighted_sample(
             "doc_id", "n_tokens", "key_e9"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s31_stream_quantile_monitor", oracle=sketches.X97_ORACLE)
@@ -1929,20 +1878,16 @@ def s31_stream_quantile_monitor(
     min-k(min-k(A)∪min-k(B)) — pytest-pinned), so the online sketch is
     batching-invariant by algebra and no drain precondition exists."""
     import os
-    import shutil
 
-    work = scratch_dir("s31_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    stream = _read_events_stream(spark, sf_dir)
-    try:
+    with _work_dir("s31_work_") as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
+        stream = _read_events_stream(spark, sf_dir)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_quantile_monitor(stream, state_dir, ckpt)
             _drain(q)
         out = sketches.quantile_estimates(spark.read.parquet(state_dir))
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s32_stream_keyword_tags", oracle=text_extra.X101_ORACLE)
@@ -1955,7 +1900,6 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     x101's VERBATIM (the naive every-start-position probe), with no
     drain precondition."""
     import os
-    import shutil
 
     from fanstats_producer_spark.functions.text_extra import (
         _X101_TERMS,
@@ -1963,11 +1907,10 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s32_work_")
-    out_dir = os.path.join(work, "tags")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
+    with _work_dir("s32_work_") as work:
+        out_dir = os.path.join(work, "tags")
+        ckpt = os.path.join(work, "ckpt")
+        stream = jobs.read_document_stream(spark, landing)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = (
                 keyword_tags(stream, _X101_TERMS)
@@ -1982,27 +1925,23 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "term", "n_hits"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s33_stream_ks_monitor", oracle=quality_checks.X105_ORACLE)
 def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s33: ONLINE exact-KS drift matrix — the cumulative (type,
-    value) count state merged per batch under the _BATCH marker
-    protocol (jobs.streaming_ks_monitor), the KS matrix rebuilt from
+    value) count state merged per batch (jobs.streaming_ks_monitor),
+    the KS matrix rebuilt from
     the drained state with the SAME shared downstream as batch x105
     (quality_checks.ks_matrix_from_counts).  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the
     oracle is x105's VERBATIM with no drain precondition."""
     import os
-    import shutil
 
-    work = scratch_dir("s33_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    stream = _read_events_stream(spark, sf_dir)
-    try:
+    with _work_dir("s33_work_") as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
+        stream = _read_events_stream(spark, sf_dir)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_ks_monitor(stream, state_dir, ckpt)
             _drain(q)
@@ -2010,8 +1949,6 @@ def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(state_dir)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s34_stream_auc_monitor", oracle=quality_checks.X107_ORACLE)
@@ -2029,13 +1966,11 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor is batch-slicing-invariant by commutativity and the oracle
     is x107's VERBATIM with no drain precondition."""
     import os
-    import shutil
 
-    work = scratch_dir("s34_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    stream = _read_events_stream(spark, sf_dir)
-    try:
+    with _work_dir("s34_work_") as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
+        stream = _read_events_stream(spark, sf_dir)
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_value_counts_monitor(
                 stream, state_dir, ckpt, job_name="streaming_auc_monitor"
@@ -2045,8 +1980,6 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(state_dir)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s35_stream_chi2_monitor", oracle=quality_checks.X109_ORACLE)
@@ -2056,33 +1989,22 @@ def s35_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     categorical member closing the online battery (numeric: s23 PSI,
     s31 quantile, s33 KS, s34 AUC; categorical: s35).  State is the
     (lang, source) count table — bounded by the category domain
-    forever (jobs.streaming_contingency_monitor, the s33/s34 staged
-    SUM-merge protocol); the report rebuilds from state via the shared
+    forever (jobs.streaming_contingency_monitor); the report rebuilds
+    from state via the shared
     quality_checks.chi2_from_counts, bit-identical to batch x109 (the
     per-cell expression reads only the counts).  Counts are sums, so
     the monitor is batch-slicing-invariant by commutativity and the
     oracle is x109's VERBATIM with no drain precondition."""
-    import atexit
     import os
-    import shutil
 
-    work = scratch_dir("s35_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
     # the shared _doc_landing JSON staging drops the source column, so
-    # stage the parquet directly (the s26b pattern: hard-link, zero
-    # data movement; schema from a static read — never inferred)
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s35_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "documents-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = spark.readStream.schema(schema).parquet(landing)
-    try:
+    # stage the parquet directly
+    stream = _link_landing(
+        spark, f"{sf_dir}/documents.parquet", "s35_landing_"
+    )
+    with _work_dir("s35_work_") as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_contingency_monitor(stream, state_dir, ckpt)
             _drain(q)
@@ -2090,8 +2012,6 @@ def s35_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(state_dir)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @query("s36_stream_embedding_drift", oracle=quality_checks.X114_ORACLE)
@@ -2102,31 +2022,19 @@ def s36_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     s31 quantile, s33 KS, s34 AUC; categorical: s35; vector: s36).
     State is the (label, half, k) exact component-sum table — bounded
     by |labels| x 2 x dim forever
-    (jobs.streaming_embedding_drift_monitor, the s33/s34/s35 staged
-    SUM-merge protocol); the report rebuilds from state via the shared
+    (jobs.streaming_embedding_drift_monitor); the report rebuilds from
+    state via the shared
     quality_checks.embedding_drift_from_sums, bit-identical to batch
     x114 (integer sums are batch-slicing-invariant by commutativity),
     so the oracle is x114's VERBATIM with no drain precondition."""
-    import atexit
     import os
-    import shutil
 
-    work = scratch_dir("s36_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    # stage the parquet directly (the s35 pattern: hard-link, zero data
-    # movement; schema from a static read — never inferred)
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s36_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "embeddings-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = spark.readStream.schema(schema).parquet(landing)
-    try:
+    stream = _link_landing(
+        spark, f"{sf_dir}/embeddings.parquet", "s36_landing_"
+    )
+    with _work_dir("s36_work_") as work:
+        state_dir = os.path.join(work, "state")
+        ckpt = os.path.join(work, "ckpt")
         with _few_partitions(spark), _skip_nodata_batch(spark):
             q = jobs.streaming_embedding_drift_monitor(stream, state_dir, ckpt)
             _drain(q)
@@ -2134,5 +2042,3 @@ def s36_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(state_dir)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -32,26 +32,13 @@ EVENT_SCHEMA = (
 
 
 class _StagedState:
-    """Crash-safe two-rename promote protocol for foreachBatch parquet
-    state tables — ONE implementation shared by every stateful stream
-    in this module (s09/s21/s22/s23/s25/s27), so a protocol fix lands
-    everywhere at once.  The caller writes the new state to `.staged`,
-    then calls promote(): stamp the optional `_BATCH` marker, retire
-    the old dir, rename staged into place, drop the retired copy.
-    recover() finishes (or rolls back) a promote the driver died
-    inside — without it a replay would see no state and rebuild from
-    one batch, silently dropping every earlier key.
+    """The on-disk half of staged_merge's protocol: a state dir with
+    `.staged` and `.retired` siblings and an optional `_BATCH` marker.
+    promote() stamps the marker into `.staged`, retires the old dir,
+    renames staged into place and drops the retired copy; recover()
+    finishes (or rolls back) a promote the driver died inside."""
 
-    ``with_marker=True`` adds the replay protocol NON-idempotent merges
-    need (sums, offset advances): the `_BATCH` marker (last merged
-    batch id) is written into `.staged` BEFORE the rename so it
-    promotes atomically with the data.  check_batch() returns True when
-    the incoming batch already merged (crash-window replay — caller
-    skips the merge), and raises when the batch id is BELOW the marker
-    (stale state under a fresh checkpoint — a double-merge hazard that
-    must fail loudly, never silently corrupt)."""
-
-    def __init__(self, state_dir: str, with_marker: bool = False):
+    def __init__(self, state_dir: str, with_marker: bool):
         self.state_dir = state_dir
         self.staged = state_dir.rstrip("/") + ".staged"
         self.retired = state_dir.rstrip("/") + ".retired"
@@ -99,7 +86,7 @@ class _StagedState:
             )
         return last == batch_id
 
-    def promote(self, batch_id: int | None = None) -> None:
+    def promote(self, batch_id: int) -> None:
         import os
         import shutil
 
@@ -113,6 +100,129 @@ class _StagedState:
             os.rename(self.state_dir, self.retired)
         os.rename(self.staged, self.state_dir)
         shutil.rmtree(self.retired, ignore_errors=True)
+
+
+_EMIT_FRAMES = frozenset({"batch", "prior", "combined", "batch_id"})
+
+
+def _tables(state) -> dict:
+    """A state is one DataFrame, stored at the state dir itself (name
+    ""), or a dict of named sub-tables staged and promoted together."""
+    return state if isinstance(state, dict) else {"": state}
+
+
+def staged_merge(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    *,
+    partial,
+    combine,
+    idempotent: bool,
+    emit=None,
+    name: str = "staged_merge",
+) -> StreamingQuery:
+    """Maintain a mergeable state table over `stream` with exactly-once
+    effect — the one foreachBatch state protocol behind s09, s21, s22,
+    s23, s25, s27, s28/s29, s30, s31, s33/s34, s35 and s36.  Callers
+    supply only the monoid and, optionally, what each batch publishes.
+
+    Per micro-batch:
+
+    1. recover(): a `.staged` dir with `_SUCCESS` (and `_BATCH` when
+       the marker is on) is promoted; otherwise `.retired` is renamed
+       back.  Without this a replay after a crash mid-promote would see
+       no state and rebuild from one batch, dropping every earlier key.
+    2. ``idempotent=False`` (sums, offset advances, verdicts scored
+       against prior state): `_BATCH` holds the last merged batch id.
+       A batch equal to it is a crash-window replay — everything it
+       writes, emit included, landed before that promote — so it
+       returns.  A batch below it means stale state under a fresh
+       checkpoint, a double-merge hazard, so it raises.  With
+       ``idempotent=True`` (MIN, top-k, latest-per-key: re-merging a
+       batch is a fixed point) there is no marker.
+    3. ``part = partial(batch)``.  On the first batch the new state is
+       `part`; after that it is ``combine(state ∪ part)``, which must
+       re-aggregate so that combine(partial(A) ∪ partial(B)) equals
+       partial(A ∪ B) — the drained state is then independent of how
+       the stream was sliced into batches.
+    4. ``emit``, if given, writes the batch's verdicts or monitor
+       BEFORE the promote, so a marker match (step 2) implies they are
+       on disk.  emit names the frames it reads as its parameters, from
+       `batch`, `prior` (the state before this batch, None on the
+       first), `combined` (the new state) and `batch_id`.  `batch` and
+       `combined` are localCheckpointed only when emit names them —
+       only then do they have a second consumer.
+    5. The new state is written to `.staged` and promoted by rename,
+       the marker stamped first so it lands atomically with the data.
+
+    A state is one DataFrame or a dict of named sub-tables (s22).  The
+    query drains with Trigger.AvailableNow."""
+    import inspect
+    import os
+    import shutil
+
+    st = _StagedState(state_dir, with_marker=not idempotent)
+    reads = set(inspect.signature(emit).parameters) if emit else set()
+    if reads - _EMIT_FRAMES:
+        raise TypeError(f"emit may only read {sorted(_EMIT_FRAMES)}")
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        st.recover()
+        if not idempotent and st.check_batch(batch_id, name):
+            return
+        spark = batch_df.sparkSession
+        batch = batch_df
+        if "batch" in reads:
+            batch = batch.localCheckpoint(eager=True)
+        part = partial(batch)
+
+        def shaped(tables: dict):
+            return tables if isinstance(part, dict) else tables[""]
+
+        prior = None
+        combined = part
+        if st.exists():
+            prior = shaped({
+                n: spark.read.parquet(os.path.join(state_dir, n))
+                for n in _tables(part)
+            })
+            combined = combine(shaped({
+                n: _tables(prior)[n].unionByName(p)
+                for n, p in _tables(part).items()
+            }))
+        if "combined" in reads:
+            combined = shaped({
+                n: t.localCheckpoint(eager=True)
+                for n, t in _tables(combined).items()
+            })
+        if emit is not None:
+            frames = {"batch": batch, "prior": prior,
+                      "combined": combined, "batch_id": batch_id}
+            emit(**{k: frames[k] for k in reads})
+        shutil.rmtree(st.staged, ignore_errors=True)
+        for n, t in _tables(combined).items():
+            t.write.parquet(os.path.join(st.staged, n))
+        # root marker for sub-table states (Spark marks each sub-dir)
+        open(os.path.join(st.staged, "_SUCCESS"), "w").close()
+        st.promote(batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _write_stamped(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Batch-stamped output partition: a replay of the batch overwrites
+    the same directory, never double-appends."""
+    import os
+
+    df.write.mode("overwrite").parquet(
+        os.path.join(out_dir, f"batch={batch_id}")
+    )
 
 
 def read_event_stream(
@@ -226,8 +336,8 @@ def streaming_near_dup(
     combined per-bucket minima = min(state, batch), per-doc verdict =
     near-dup iff ANY of the doc's buckets has combined_min < doc_id
     (deterministic — ties inside a batch resolve by id, not arrival),
-    verdicts land batch-stamped (idempotent replay), state promotes via
-    the s09 staged/retired rename protocol (crash-recoverable).
+    verdicts land batch-stamped, and the MIN merge is idempotent
+    (staged_merge without a marker).
 
     Why not per-bucket typed state (applyInPandasWithState/TWS): a
     bucket-keyed stateful op calls Python once per GROUP, and band
@@ -248,30 +358,9 @@ def streaming_near_dup(
     fixture's id-ordered event time; an out-of-order replay is the
     same arrival-order dependence s11/s12 document for their dedup
     drains.  Cross-batch accumulation is pytest-verified."""
-    import os
-
     from fanstats_producer_spark.operators.dedup import streaming_band_keys
 
-    # per-bucket MIN merges are replay-idempotent, so no _BATCH marker
-    st = _StagedState(state_dir)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        batch = batch_df.localCheckpoint(eager=True)  # reused twice below
-        batch_min = batch.groupBy("band_hash").agg(
-            F.min("doc_id").alias("min_id")
-        )
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = (
-                current.unionByName(batch_min)
-                .groupBy("band_hash")
-                .agg(F.min("min_id").alias("min_id"))
-            )
-        else:
-            combined = batch_min
-        combined = combined.localCheckpoint(eager=True)  # verdict + promote
+    def emit(batch, combined, batch_id):
         verdicts = (
             batch.join(combined, "band_hash")
             .groupBy("doc_id")
@@ -283,21 +372,22 @@ def streaming_near_dup(
                 .alias("is_dup")
             )
         )
-        # batch-stamped verdict partition: a checkpoint replay of this
-        # batch overwrites the same directory, never double-appends
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote()
+        _write_stamped(verdicts, verdict_dir, batch_id)
 
-    return (
-        streaming_band_keys(docs)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        streaming_band_keys(docs),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: _bucket_min(b, "doc_id"),
+        combine=lambda u: _bucket_min(u, "min_id"),
+        idempotent=True,
+        emit=emit,
     )
+
+
+def _bucket_min(df: DataFrame, id_col: str) -> DataFrame:
+    """Per-band-bucket minimum id (s21/s22's MIN monoid)."""
+    return df.groupBy("band_hash").agg(F.min(id_col).alias("min_id"))
 
 
 def streaming_verified_near_dup(
@@ -323,7 +413,7 @@ def streaming_verified_near_dup(
     monitor (candidates vs confirmed, per batch).
 
     State = TWO compacted parquet tables under state_dir, promoted
-    together by the s09 staged/retired rename protocol: `buckets/`
+    together by staged_merge: `buckets/`
     (per-band-bucket min id — 8 B per live bucket, same as s21) and
     `texts/` (the text of every CURRENT bucket-minimum doc — the only
     docs a future candidate can be paired against, so text state is
@@ -337,55 +427,40 @@ def streaming_verified_near_dup(
     the minimum only — the one partner an online filter with 8-B
     bucket state can name.  The s22 oracle states exactly this rule;
     x59 remains the batch answer over ALL banded pairs."""
-    import os
-    import shutil
-
     from fanstats_producer_spark.operators.dedup import streaming_band_keys
 
-    # two subtables (buckets/, texts/) promote atomically under ONE
-    # staged dir — the shared protocol with a hand-touched _SUCCESS
-    # (Spark writes per-subdir markers, not a root one)
-    st = _StagedState(state_dir)
-    buckets_t, texts_t = "buckets", "texts"
+    def live_texts(texts: DataFrame, buckets: DataFrame) -> DataFrame:
+        # only CURRENT bucket minima can partner future docs
+        live = buckets.select(F.col("min_id").alias("doc_id")).distinct()
+        return texts.join(live, "doc_id")
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        batch = batch_df.localCheckpoint(eager=True)
-        keys = batch.select("doc_id", "band_hash")
-        batch_texts = batch.select("doc_id", "text").distinct()
-        batch_min = keys.groupBy("band_hash").agg(
-            F.min("doc_id").alias("min_id")
-        )
-        have_state = st.exists()
-        if have_state:
-            current = spark.read.parquet(os.path.join(state_dir, buckets_t))
-            combined = (
-                current.unionByName(batch_min)
-                .groupBy("band_hash")
-                .agg(F.min("min_id").alias("min_id"))
-            )
-            known_texts = spark.read.parquet(
-                os.path.join(state_dir, texts_t)
-            ).unionByName(batch_texts)
-        else:
-            combined = batch_min
-            known_texts = batch_texts
-        combined = combined.localCheckpoint(eager=True)
-        known_texts = known_texts.localCheckpoint(eager=True)
+    def partial(batch):
+        buckets = _bucket_min(batch, "doc_id")
+        texts = batch.select("doc_id", "text").distinct()
+        return {"buckets": buckets, "texts": live_texts(texts, buckets)}
+
+    def combine(union):
+        buckets = _bucket_min(union["buckets"], "min_id")
+        # a replayed batch re-delivers texts the state already holds
+        texts = union["texts"].dropDuplicates(["doc_id"])
+        return {"buckets": buckets, "texts": live_texts(texts, buckets)}
+
+    def emit(batch, combined, batch_id):
         # banded candidates: (doc, partner = colliding bucket's min)
         cands = (
-            keys.join(combined, "band_hash")
+            batch.join(combined["buckets"], "band_hash")
             .filter(F.col("min_id") < F.col("doc_id"))
             .select("doc_id", F.col("min_id").alias("partner_id"))
             .distinct()
         )
         # exact edit gate over the bounded candidate list only: texts
         # broadcast onto the spread pair list (the x47 plan shape)
+        batch_texts = batch.select("doc_id", "text").distinct()
         ta = batch_texts.select(
             F.col("doc_id"), F.col("text").alias("text_a")
         )
-        tb = known_texts.select(
+        # every partner is a live minimum, so its text is in the state
+        tb = combined["texts"].select(
             F.col("doc_id").alias("partner_id"), F.col("text").alias("text_b")
         )
         gated = (
@@ -417,25 +492,16 @@ def streaming_verified_near_dup(
                 F.coalesce("is_dup", F.lit(0)).cast("int").alias("is_dup"),
             )
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
-        # texts state: only CURRENT bucket minima can partner future docs
-        live = combined.select(F.col("min_id").alias("doc_id")).distinct()
-        next_texts = known_texts.join(live, "doc_id")
-        shutil.rmtree(st.staged, ignore_errors=True)
-        combined.write.parquet(os.path.join(st.staged, buckets_t))
-        next_texts.write.parquet(os.path.join(st.staged, texts_t))
-        with open(os.path.join(st.staged, "_SUCCESS"), "w"):
-            pass
-        st.promote()
+        _write_stamped(verdicts, verdict_dir, batch_id)
 
-    return (
-        streaming_band_keys(docs, carry=("text",))
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        streaming_band_keys(docs, carry=("text",)),
+        state_dir,
+        checkpoint_dir,
+        partial=partial,
+        combine=combine,
+        idempotent=True,
+        emit=emit,
     )
 
 
@@ -465,9 +531,7 @@ def streaming_phash_near_dup(
     `is_dup` additionally requires hamming(pHash, partner pHash) <=
     {hamming} — the same band/verify parameters as x88, where 9 bands
     at hamming <= 8 make banding pigeonhole-complete.  Verdicts land
-    batch-stamped (replay overwrites, never double-appends); the
-    bucket argmin merge is idempotent, so the staged-state promote
-    needs no _BATCH marker (the s21 rationale).
+    batch-stamped; the bucket argmin merge is idempotent (no marker).
 
     ONLINE semantics are first-arrival with bucket-min partner — the
     s22 rule on image hashes; the s28 oracle states exactly it.  State
@@ -478,35 +542,17 @@ def streaming_phash_near_dup(
     multimodal.audio_fp_features = the s29 audio arm) — the banding,
     state, and verdict machinery are modality-blind over any 63-bit
     fingerprint."""
-    import os
-
     from fanstats_producer_spark.operators.multimodal import (
         streaming_phash_band_keys,
     )
 
-    st = _StagedState(state_dir)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        batch = batch_df.localCheckpoint(eager=True)  # verdict + min merge
-        batch_min = batch.groupBy("band_hash").agg(
-            F.min("doc_id").alias("min_id"),
-            F.min_by("phash", "doc_id").alias("min_ph"),
+    def bucket_argmin(df: DataFrame, id_col: str, ph_col: str) -> DataFrame:
+        return df.groupBy("band_hash").agg(
+            F.min(id_col).alias("min_id"),
+            F.min_by(ph_col, id_col).alias("min_ph"),
         )
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = (
-                current.unionByName(batch_min)
-                .groupBy("band_hash")
-                .agg(
-                    F.min("min_id").alias("min_id"),
-                    F.min_by("min_ph", "min_id").alias("min_ph"),
-                )
-            )
-        else:
-            combined = batch_min
-        combined = combined.localCheckpoint(eager=True)  # verdict + promote
+
+    def emit(batch, combined, batch_id):
         near = F.col("min_id") < F.col("doc_id")
         ham_ok = (
             F.bit_count(F.col("phash").bitwiseXOR(F.col("min_ph")))
@@ -524,18 +570,16 @@ def streaming_phash_near_dup(
                 .alias("is_dup"),
             )
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote()
+        _write_stamped(verdicts, verdict_dir, batch_id)
 
-    return (
-        streaming_phash_band_keys(docs, features)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        streaming_phash_band_keys(docs, features),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: bucket_argmin(b, "doc_id", "phash"),
+        combine=lambda u: bucket_argmin(u, "min_id", "min_ph"),
+        idempotent=True,
+        emit=emit,
     )
 
 
@@ -561,8 +605,6 @@ def streaming_decontam_crossjoin(
     overwrites).  `evals` is a static (eval_id, ev) frame — broadcast
     into every batch join (sql) or collected once into a broadcast
     matrix (blas; ValueError-gated small side)."""
-    import os
-
     from fanstats_producer_spark.operators.similarity import (
         decontam_blas_prepare,
         semantic_decontam_crossjoin,
@@ -581,9 +623,7 @@ def streaming_decontam_crossjoin(
         verdicts = semantic_decontam_crossjoin(
             batch_df, evals, scorer, prepared
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
+        _write_stamped(verdicts, verdict_dir, batch_id)
 
     return (
         vectors.writeStream.foreachBatch(gate)
@@ -712,44 +752,24 @@ def upsert_latest_per_key(
     """
     from pyspark.sql import Window
 
-    # the ORIGINAL staged/retired rename protocol — now the shared
-    # _StagedState; recover() finishes or rolls back a crashed promote
-    st = _StagedState(state_dir)
+    w = Window.partitionBy(key).orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        # Existence check instead of read-and-catch: the local path is
-        # authoritative here, and the failed read would log a full JVM
-        # stack trace on every first batch.  (On an object store this
-        # would be a manifest check, not a listing.)
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-        else:  # first batch: no state yet
-            current = None
-        merged = (
-            current.unionByName(batch_df) if current is not None else batch_df
-        )
-        w = Window.partitionBy(key).orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
+    def latest(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        # Stage then swap: state_dir stays readable until the promote, and
-        # the promote is rename-only (no delete between the old state going
-        # away and the new one appearing) so every intermediate crash state
-        # is recoverable by recover() above.
-        latest.write.mode("overwrite").parquet(st.staged)
-        st.promote()
 
-    return (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        df,
+        state_dir,
+        checkpoint_dir,
+        partial=latest,
+        combine=latest,
+        idempotent=True,
     )
 
 
@@ -990,16 +1010,10 @@ def streaming_psi_drift(
     continuously against a static reference distribution.
 
     State is the cumulative (event_type, bucket) live histogram: plain
-    integer counts merged per batch (staged/retired rename promote), so
-    state size is |types x buckets| — corpus-length-independent — and
-    the merge is a commutative sum.  A SUM merge is NOT replay-
-    idempotent the way s21's per-bucket MIN is: if the driver dies
-    after the state promote but before the checkpoint commits the
-    batch, restart replays it and would double-count.  The promote
-    therefore carries a `_BATCH` marker (last merged batch id, written
-    into the staged dir before the rename so it promotes atomically
-    with the data); a replayed batch matches the marker and skips the
-    re-merge, recomputing only the idempotent monitor overwrite.
+    integer counts merged per batch, so state size is |types x buckets|
+    — corpus-length-independent — and the merge is a commutative sum,
+    NOT replay-idempotent (staged_merge with the `_BATCH` marker; the
+    monitor lands before the promote, so a replay has nothing to do).
     That commutativity gives s23 a property the dedup streams lack: the
     final monitor is BATCH-PARTITION-INVARIANT (any maxFilesPerTrigger
     slicing converges to the same table, pytest-pinned), because PSI is
@@ -1010,40 +1024,12 @@ def streaming_psi_drift(
     PSI math is x63's exactly: Laplace-smoothed probabilities over the
     union bucket set, each term floor(x*1e9+0.5)-quantized BEFORE the
     integer sum, so the monitor value-hash-matches the batch oracle."""
-    st = _StagedState(state_dir, with_marker=True)
     bucketed = events.select(
         "event_type",
         F.floor(F.col("value") / bucket_width).cast("long").alias("bucket"),
     )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        # a sum-merge is NOT replay-idempotent: check_batch absorbs the
-        # crash-window replay and raises on stale state (double-count)
-        already_merged = st.check_batch(batch_id, "streaming_psi_drift")
-        if already_merged:
-            # crash-window replay: counts are in the state already —
-            # only the (idempotent) monitor overwrite below re-runs
-            combined = spark.read.parquet(state_dir).localCheckpoint(
-                eager=True
-            )
-        else:
-            batch_counts = batch_df.groupBy("event_type", "bucket").agg(
-                F.count("*").alias("n_live")
-            )
-            if st.exists():
-                current = spark.read.parquet(state_dir)
-                combined = (
-                    current.unionByName(batch_counts)
-                    .groupBy("event_type", "bucket")
-                    .agg(F.sum("n_live").cast("long").alias("n_live"))
-                )
-            else:
-                combined = batch_counts.withColumn(
-                    "n_live", F.col("n_live").cast("long")
-                )
-            combined = combined.localCheckpoint(eager=True)
+    def emit(combined):
         counts = (
             ref_counts.select(
                 "event_type",
@@ -1094,15 +1080,20 @@ def streaming_psi_drift(
             )
         )
         monitor.write.mode("overwrite").parquet(monitor_dir)
-        if not already_merged:
-            combined.write.mode("overwrite").parquet(st.staged)
-            st.promote(batch_id)
 
-    return (
-        bucketed.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        bucketed,
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: b.groupBy("event_type", "bucket").agg(
+            F.count("*").cast("long").alias("n_live")
+        ),
+        combine=lambda u: u.groupBy("event_type", "bucket").agg(
+            F.sum("n_live").cast("long").alias("n_live")
+        ),
+        idempotent=False,
+        emit=emit,
+        name="streaming_psi_drift",
     )
 
 
@@ -1124,58 +1115,40 @@ def streaming_bloom_dedup(
     catches them).  The state merge is bit_or — idempotent as a SET of
     bits — but the VERDICTS are not: a batch replayed after its own
     bits were promoted would score every doc against itself and flag
-    the whole batch.  So s25 carries the same `_BATCH` marker as s23:
-    a replay whose id matches the marker returns immediately (its
-    verdict partition was written BEFORE the promote, so it is already
-    on disk and correct for every crash interleaving), and recovery
-    refuses a staged dir without the marker.  Uses x79's portable md5 bit positions (sketches._X79_M
-    bits, _X79_K hashes), so a filter built by this stream can gate any
-    engine's batch scan."""
-    import os
-
+    the whole batch, so staged_merge runs with the `_BATCH` marker.
+    Uses x79's portable md5 bit positions (sketches._X79_M bits, _X79_K
+    hashes), so a filter built by this stream can gate any engine's
+    batch scan."""
     from fanstats_producer_spark.operators.sketches import (
         _X79_K,
         _X79_W,
         _bloom_bit,
     )
 
-    st = _StagedState(state_dir, with_marker=True)
-    hashed = docs.withColumn("digest", F.md5("text"))
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        # bit-SET is idempotent but the VERDICTS are not: a stale-state
-        # replay would score docs against their own bits (self-flag);
-        # check_batch raises on that and absorbs the crash-window replay
-        # (verdicts landed before the promote — nothing left to do)
-        if st.check_batch(batch_id, "streaming_bloom_dedup"):
-            return
-        bits = batch_df.select(
+    bits = (
+        docs.select(
             "doc_id",
-            "digest",
-            F.explode(
-                F.array(*[F.lit(j) for j in range(_X79_K)])
-            ).alias("j"),
-        ).select(
-            "doc_id", _bloom_bit(F.col("digest"), F.col("j")).alias("bit")
+            F.md5("text").alias("digest"),
+            F.explode(F.array(*[F.lit(j) for j in range(_X79_K)])).alias("j"),
         )
-        # verdict against the PRIOR state only
-        bits = bits.select(
+        .select("doc_id", _bloom_bit(F.col("digest"), F.col("j")).alias("bit"))
+        .select(
             "doc_id",
             F.expr(f"bit DIV {_X79_W}").alias("word"),
             F.expr(f"shiftleft(1L, cast(bit % {_X79_W} as int))").alias(
                 "mask"
             ),
-        ).localCheckpoint(eager=True)
-        if st.exists():
-            prior = spark.read.parquet(state_dir)
-        else:
+        )
+    )
+
+    def emit(batch, prior, batch_id):
+        # verdict against the PRIOR state only
+        if prior is None:
             # empty JVM-side relation (no Python-RDD scan)
-            prior = spark.range(0).select(
+            prior = batch.sparkSession.range(0).select(
                 F.col("id").alias("word"), F.col("id").alias("bits")
             )
-        hits = bits.join(F.broadcast(prior), "word", "left").select(
+        hits = batch.join(F.broadcast(prior), "word", "left").select(
             "doc_id",
             (
                 F.col("bits").isNotNull()
@@ -1185,24 +1158,21 @@ def streaming_bloom_dedup(
         verdicts = hits.groupBy("doc_id").agg(
             F.min(F.col("hit").cast("int")).cast("int").alias("is_dup")
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
-        # fold this batch's bits into the sketch (idempotent bit_or)
-        batch_words = bits.groupBy("word").agg(F.bit_or("mask").alias("bits"))
-        combined = (
-            prior.unionByName(batch_words)
-            .groupBy("word")
-            .agg(F.bit_or("bits").alias("bits"))
-        ).localCheckpoint(eager=True)
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote(batch_id)
+        _write_stamped(verdicts, verdict_dir, batch_id)
 
-    return (
-        hashed.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        bits,
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: b.groupBy("word").agg(
+            F.bit_or("mask").alias("bits")
+        ),
+        combine=lambda u: u.groupBy("word").agg(
+            F.bit_or("bits").alias("bits")
+        ),
+        idempotent=False,
+        emit=emit,
+        name="streaming_bloom_dedup",
     )
 
 
@@ -1215,14 +1185,11 @@ def streaming_sequence_packing(
 ) -> StreamingQuery:
     """s27: ONLINE concat-and-chunk sequence packing — x91's manifest
     built incrementally as documents arrive.  State is ONE NUMBER (the
-    cumulative token offset), promoted per batch with the s23/s25
-    staged-rename + `_BATCH` marker protocol: the offset advance is a
-    sum (NOT replay-idempotent), so a replayed batch whose id matches
-    the marker skips the promote — its manifest partition was written
-    BEFORE the state advanced, from the same prior offset, so a
-    crash-window recompute lands byte-identical; a batch id BELOW the
-    marker means stale state under a fresh checkpoint and fails loudly
-    (double-advancing the offset would shift every later document).
+    cumulative token offset); the advance is a sum, NOT replay-
+    idempotent (double-advancing would shift every later document), so
+    staged_merge runs with the `_BATCH` marker.  Each batch's manifest
+    partition is computed from the PRIOR offset and lands before the
+    promote.
 
     Within a batch, documents pack in doc_id order via the bucketed
     running sum (no single-task window — the x35/x91 scale shape);
@@ -1235,32 +1202,12 @@ def streaming_sequence_packing(
     manifest write, state is O(1), and every emitted manifest row is
     immediately consumable — downstream shard writers can render
     sequence ranges while ingest continues."""
-    import os
+    from fanstats_producer_spark.operators.llm_data import global_running_sum
 
-    st = _StagedState(state_dir, with_marker=True)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from fanstats_producer_spark.operators.llm_data import (
-            global_running_sum,
-        )
-
-        spark = batch_df.sparkSession
-        st.recover()
-        # the offset advance is a sum — stale state would double-advance
-        # and shift every later document; a marker match means the
-        # manifest partition landed before the promote (nothing to do)
-        if st.check_batch(batch_id, "streaming_sequence_packing"):
-            return
-        if st.exists():
-            base = spark.read.parquet(state_dir).collect()[0]["offset"]
-        else:
-            base = 0
-        t = batch_df.select(
-            "doc_id",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        )
+    def emit(batch, prior, batch_id):
+        base = prior.first()["offset"] if prior is not None else 0
         c = global_running_sum(
-            t,
+            batch,
             [F.asc("doc_id")],
             "n_tokens",
             bucket=F.expr("doc_id div 4096"),
@@ -1275,27 +1222,26 @@ def streaming_sequence_packing(
             first.alias("first_seq"),
             last_seq.alias("last_seq"),
             (last_seq - first + F.lit(1)).alias("n_seqs"),
-        ).localCheckpoint(eager=True)
-        manifest.write.mode("overwrite").parquet(
-            os.path.join(manifest_dir, f"batch={batch_id}")
         )
-        total = manifest.agg(
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t")
-        ).collect()[0]["t"]
-        # range(1)+lit stays JVM-side: createDataFrame from a Python
-        # list routes through a Python-RDD scan — measured ~5 s of pure
-        # worker-spawn overhead PER WRITE (the q15 LocalRelation lesson)
-        new_state = spark.range(1).select(
-            F.lit(int(base) + int(total)).cast("long").alias("offset")
-        )
-        new_state.coalesce(1).write.mode("overwrite").parquet(st.staged)
-        st.promote(batch_id)
+        _write_stamped(manifest, manifest_dir, batch_id)
 
-    return (
-        docs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def offset(df: DataFrame, col: str) -> DataFrame:
+        return df.agg(
+            F.coalesce(F.sum(col), F.lit(0)).cast("long").alias("offset")
+        )
+
+    return staged_merge(
+        docs.select(
+            "doc_id",
+            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+        ),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: offset(b, "n_tokens"),
+        combine=lambda u: offset(u, "offset"),
+        idempotent=False,
+        emit=emit,
+        name="streaming_sequence_packing",
     )
 
 
@@ -1314,43 +1260,26 @@ def streaming_weighted_sample(
     the merge trivially correct AND batch-slicing-invariant:
     top-k(A ∪ B) = top-k(top-k(A) ∪ top-k(B)), so any micro-batch
     boundary (and any replay — the merge dedups on doc_id and re-ranks,
-    hence idempotent: no _BATCH marker, the s21/s28 rationale) yields
-    the exact batch-x92 sample.  This is the piece a 100 TB ingest
-    pipeline uses to keep a token-proportional dev slice LIVE while
-    data lands, instead of re-scanning the corpus per refresh.
+    hence idempotent) yields the exact batch-x92 sample.  This is the
+    piece a 100 TB ingest pipeline uses to keep a token-proportional
+    dev slice LIVE while data lands, instead of re-scanning the corpus
+    per refresh.
 
     Per batch: the incoming rows truncate to their own top-k first
     (TakeOrderedAndProject — per-partition heaps), then merge with the
-    k-row state and re-truncate; the staged-rename promote keeps the
-    state table crash-safe."""
-    from fanstats_producer_spark.operators.sampling import ares_topk
+    k-row state and re-truncate."""
+    from fanstats_producer_spark.operators.sampling import (
+        ares_keyed,
+        ares_topk,
+    )
 
-    st = _StagedState(state_dir)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        batch_top = ares_topk(batch_df, k).localCheckpoint(eager=True)
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = ares_topk(
-                current.unionByName(batch_top).dropDuplicates(["doc_id"]),
-                k,
-            )
-        else:
-            combined = batch_top
-        combined = combined.localCheckpoint(eager=True)
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote()
-
-    from fanstats_producer_spark.operators.sampling import ares_keyed
-
-    return (
-        ares_keyed(docs)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        ares_keyed(docs),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: ares_topk(b, k),
+        combine=lambda u: ares_topk(u.dropDuplicates(["doc_id"]), k),
+        idempotent=True,
     )
 
 
@@ -1367,42 +1296,22 @@ def streaming_quantile_monitor(
     k·16 B forever.  Same fixed-point algebra as s30 but on the MIN-k
     side: min-k(A ∪ B) = min-k(min-k(A) ∪ min-k(B)), so the drained
     state equals the batch-x97 sample at any micro-batch slicing, and
-    redelivery is idempotent (event_id dedup + re-truncate) with no
-    _BATCH marker.  Readers compute quantile estimates from the state
-    table at any time (sketches.quantile_estimates) — the monitor a
-    100 TB ingest uses to watch a value distribution live without ever
-    rescanning landed data."""
+    redelivery is idempotent (event_id dedup + re-truncate).  Readers
+    compute quantile estimates from the state table at any time
+    (sketches.quantile_estimates) — the monitor a 100 TB ingest uses
+    to watch a value distribution live without ever rescanning landed
+    data."""
     from fanstats_producer_spark.operators.sketches import bottomk_sample
 
-    st = _StagedState(state_dir)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        batch_top = bottomk_sample(batch_df, "event_id", k).localCheckpoint(
-            eager=True
-        )
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = bottomk_sample(
-                current.unionByName(batch_top).dropDuplicates(
-                    ["event_id"]
-                ),
-                "event_id",
-                k,
-            )
-        else:
-            combined = batch_top
-        combined = combined.localCheckpoint(eager=True)
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote()
-
-    return (
-        events.select("event_id", "value")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        events.select("event_id", "value"),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: bottomk_sample(b, "event_id", k),
+        combine=lambda u: bottomk_sample(
+            u.dropDuplicates(["event_id"]), "event_id", k
+        ),
+        idempotent=True,
     )
 
 
@@ -1417,48 +1326,25 @@ def streaming_value_counts_monitor(
     count table maintained over an unbounded event stream — bounded
     by the live value domain (the regime exact rank/CDF statistics
     are for; continuous domains go through x97's sample first, x105's
-    block comment).  Counts merge by SUM — NON-idempotent — so the
-    staged promote carries the _BATCH marker (the s23/s25/s27 replay
-    protocol: a crash-window replay skips the merge, a stale-state
-    restart raises loudly).  Readers rebuild their matrix from state
-    at any time (quality_checks.ks_matrix_from_counts /
-    auc_matrix_from_counts) — republishing per batch costs |grid|
-    work, never a rescan of the stream; ONE state table serves every
-    rank/CDF statistic at once."""
-    st = _StagedState(state_dir, with_marker=True)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        if st.check_batch(batch_id, job_name):
-            return  # crash-window replay: this batch already merged
-        batch_cnt = (
-            batch_df.filter(F.col("value").isNotNull())
-            .select(
-                F.col("event_type").alias("t"), F.col("value").alias("v")
-            )
+    block comment).  Counts merge by SUM, so staged_merge runs with
+    the `_BATCH` marker; `job_name` labels its stale-state error.
+    Readers rebuild their matrix from state at any time
+    (quality_checks.ks_matrix_from_counts / auc_matrix_from_counts) —
+    republishing per batch costs |grid| work, never a rescan of the
+    stream; ONE state table serves every rank/CDF statistic at once."""
+    return staged_merge(
+        events.select("event_type", "value"),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: (
+            b.filter(F.col("value").isNotNull())
+            .select(F.col("event_type").alias("t"), F.col("value").alias("v"))
             .groupBy("t", "v")
             .agg(F.count("*").alias("c"))
-        ).localCheckpoint(eager=True)
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = (
-                current.unionByName(batch_cnt)
-                .groupBy("t", "v")
-                .agg(F.sum("c").alias("c"))
-            )
-        else:
-            combined = batch_cnt
-        combined = combined.localCheckpoint(eager=True)
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote(batch_id)
-
-    return (
-        events.select("event_type", "value")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        combine=lambda u: u.groupBy("t", "v").agg(F.sum("c").alias("c")),
+        idempotent=False,
+        name=job_name,
     )
 
 
@@ -1483,43 +1369,24 @@ def streaming_contingency_monitor(
 ) -> StreamingQuery:
     """s35: the categorical twin of the value-counts state engine —
     the cumulative (lang, source) contingency-count table maintained
-    over a document stream, bounded by |langs|·|sources| forever.
-    Same SUM-merge staged-state protocol as s33/s34 (non-idempotent,
-    _BATCH marker; replay skips, stale state raises).  Readers rebuild
-    the full chi-square independence report from state at any time via
+    over a document stream, bounded by |langs|·|sources| forever,
+    merged by SUM under the `_BATCH` marker.  Readers rebuild the full
+    chi-square independence report from state at any time via
     quality_checks.chi2_from_counts — x109's exact per-cell expression
     over counts, so the online report is bit-identical to the batch
     key at every point in the stream."""
-    st = _StagedState(state_dir, with_marker=True)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        if st.check_batch(batch_id, "streaming_contingency_monitor"):
-            return  # crash-window replay: this batch already merged
-        batch_cnt = (
-            batch_df.groupBy("lang", "source")
-            .agg(F.count("*").alias("o"))
-        ).localCheckpoint(eager=True)
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = (
-                current.unionByName(batch_cnt)
-                .groupBy("lang", "source")
-                .agg(F.sum("o").alias("o"))
-            )
-        else:
-            combined = batch_cnt
-        combined = combined.localCheckpoint(eager=True)
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote(batch_id)
-
-    return (
-        docs.select("lang", "source")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        docs.select("lang", "source"),
+        state_dir,
+        checkpoint_dir,
+        partial=lambda b: b.groupBy("lang", "source").agg(
+            F.count("*").alias("o")
+        ),
+        combine=lambda u: u.groupBy("lang", "source").agg(
+            F.sum("o").alias("o")
+        ),
+        idempotent=False,
+        name="streaming_contingency_monitor",
     )
 
 
@@ -1531,44 +1398,24 @@ def streaming_embedding_drift_monitor(
     """s36: the VECTOR member of the online drift battery — the
     cumulative (label, half, k) component-sum table (exact int64 sum
     of e6-quantized embedding components + row count) maintained over
-    an embedding stream, bounded by |labels| x 2 x dim cells forever.
-    Same SUM-merge staged-state protocol as s33/s34/s35
-    (non-idempotent, _BATCH marker; replay skips, stale state raises).
-    Readers rebuild the centroid-shift report from state at any time
-    via quality_checks.embedding_drift_from_sums — only the final row
-    runs (correctly-rounded) float ops, so the online report is
+    an embedding stream, bounded by |labels| x 2 x dim cells forever,
+    merged by SUM under the `_BATCH` marker.  Readers rebuild the
+    centroid-shift report from state at any time via
+    quality_checks.embedding_drift_from_sums — only the final row runs
+    (correctly-rounded) float ops, so the online report is
     bit-identical to batch x114 at every point in the stream."""
     from fanstats_producer_spark.operators.quality_checks import (
         embedding_component_sums,
     )
 
-    st = _StagedState(state_dir, with_marker=True)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        st.recover()
-        if st.check_batch(batch_id, "streaming_embedding_drift_monitor"):
-            return  # crash-window replay: this batch already merged
-        batch_sums = embedding_component_sums(batch_df).localCheckpoint(
-            eager=True
-        )
-        if st.exists():
-            current = spark.read.parquet(state_dir)
-            combined = (
-                current.unionByName(batch_sums)
-                .groupBy("label", "half", "k")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            )
-        else:
-            combined = batch_sums
-        combined = combined.localCheckpoint(eager=True)
-        combined.write.mode("overwrite").parquet(st.staged)
-        st.promote(batch_id)
-
-    return (
-        emb.select("vec_id", "label", "embedding")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return staged_merge(
+        emb.select("vec_id", "label", "embedding"),
+        state_dir,
+        checkpoint_dir,
+        partial=embedding_component_sums,
+        combine=lambda u: u.groupBy("label", "half", "k").agg(
+            F.sum("s").alias("s"), F.sum("n").alias("n")
+        ),
+        idempotent=False,
+        name="streaming_embedding_drift_monitor",
     )

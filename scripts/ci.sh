@@ -4,6 +4,9 @@
 set -e
 cd "$(dirname "$0")/.."
 python -m pytest tests/ -q
+# perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
+# _rocksdb_state, the landing caches): its tests gate their names
+python -m pytest perfbench/tests -q
 python scripts/check_oracle.py /root/testdata/sf0.01
 # bench-SF sweep: catches cardinality-regime drift the sf0.01 gate
 # misses (r6: HLL lgConfigK default was exact at sf0.01, wrong at sf0.1)

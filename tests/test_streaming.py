@@ -205,53 +205,242 @@ def test_foreach_batch_upsert(spark, landing, tmp_path):
     assert s2 == {1: 4, 2: 3}  # user1 upserted, user2 keeps newer state
 
 
-def test_foreach_batch_upsert_crash_recovery(spark, landing, tmp_path):
-    """s09: a crash mid-swap must not lose earlier keys on replay.
+def _rows(spark, state):
+    """A state dir's tables as sorted row lists (one per sub-table)."""
+    import os
 
-    Simulates the two interruptible points of the state promote: (a) old
-    state renamed aside, new state still in .staged (with _SUCCESS); (b)
-    same but the staged write never finished (no _SUCCESS), only .retired
-    remains.  Both must recover the full key set, not just the replayed
-    batch.
-    """
+    subs = sorted(
+        d for d in os.listdir(state) if os.path.isdir(os.path.join(state, d))
+    )
+    paths = [os.path.join(state, d) for d in subs] or [state]
+    return [
+        sorted(tuple(r) for r in spark.read.parquet(p).collect())
+        for p in paths
+    ]
+
+
+def _doc(i, text, lang="en", source="web"):
+    return {"doc_id": i, "ts": f"2024-01-01T10:{i:02d}:00Z", "text": text,
+            "lang": lang, "source": source}
+
+
+_BASE = (
+    "the quick brown fox jumps over the lazy dog and then runs far "
+    "away into the deep dark forest tonight"
+)
+_OTHER = (
+    "completely different sentence about spark structured streaming "
+    "state stores and watermark semantics for testing purposes only"
+)
+_DOCS = (
+    [_doc(1, _BASE), _doc(2, _OTHER, "fr", "book")],
+    [_doc(3, _BASE), _doc(4, _OTHER + " x y z", "fr"), _doc(5, "a b c d")],
+)
+_EVENTS = (
+    [_event(i, f"2024-01-01T10:{i:02d}:00Z", user=i % 3,
+            etype="click" if i % 2 else "view", value=float(i * 7 % 40))
+     for i in range(1, 9)],
+    [_event(i, f"2024-01-01T11:{i:02d}:00Z", user=3 + i % 2,
+            etype="click" if i % 3 else "view", value=float(i * 5 % 40))
+     for i in range(9, 17)],
+)
+_EMB = (
+    [{"vec_id": 0, "embedding": [0.5, 0.0], "label": 0},
+     {"vec_id": 1, "embedding": [0.0, 0.5], "label": 0}],
+    [{"vec_id": 2, "embedding": [0.25, 0.25], "label": 0},
+     {"vec_id": 3, "embedding": [0.125, 0.75], "label": 1}],
+)
+_DOC_SCHEMA = "doc_id long, ts timestamp, text string, lang string, source string"
+
+
+def _psi(src, state, ckpt, out):
+    ref = src.sparkSession.createDataFrame(
+        [("click", 0, 3), ("view", 2, 1)],
+        "event_type string, bucket long, n_ref long",
+    )
+    return jobs.streaming_psi_drift(src, ref, state, out, ckpt)
+
+
+# every staged_merge user: (schema, batches, start(src, state, ckpt,
+# out_dir), idempotent)
+_STAGED_USERS = {
+    "s09": (jobs.EVENT_SCHEMA, _EVENTS,
+            lambda s, st, ck, o: jobs.upsert_latest_per_key(s, st, ck),
+            True),
+    "s21": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_near_dup(s, st, o, ck),
+            True),
+    "s22": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_verified_near_dup(
+                s, st, o, ck),
+            True),
+    "s23": (jobs.EVENT_SCHEMA, _EVENTS, _psi, False),
+    "s25": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_bloom_dedup(s, st, o, ck),
+            False),
+    "s27": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_sequence_packing(
+                s, o, st, ck, seq_len=4),
+            False),
+    "s28": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_phash_near_dup(
+                s, st, o, ck),
+            True),
+    "s30": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_weighted_sample(
+                s, st, ck, k=3),
+            True),
+    "s31": (jobs.EVENT_SCHEMA, _EVENTS,
+            lambda s, st, ck, o: jobs.streaming_quantile_monitor(
+                s, st, ck, k=5),
+            True),
+    "s33": (jobs.EVENT_SCHEMA, _EVENTS,
+            lambda s, st, ck, o: jobs.streaming_ks_monitor(s, st, ck),
+            False),
+    "s35": (_DOC_SCHEMA, _DOCS,
+            lambda s, st, ck, o: jobs.streaming_contingency_monitor(
+                s, st, ck),
+            False),
+    "s36": ("vec_id long, embedding array<float>, label int", _EMB,
+            lambda s, st, ck, o: jobs.streaming_embedding_drift_monitor(
+                s, st, ck),
+            False),
+}
+
+
+@pytest.mark.parametrize("user", sorted(_STAGED_USERS))
+def test_staged_merge_crash_windows(spark, tmp_path, user):
+    """Every staged_merge user survives the crash windows of its
+    promote.  The driver dies inside batch 1's promote — old state
+    renamed to .retired, the checkpoint never committed batch 1 — with
+    .staged either (a) complete or (b) torn; the restart replays batch
+    1 and must reach the state of the uninterrupted drain.  Marker
+    users (idempotent=False) additionally absorb a fresh-checkpoint
+    replay of the batch the marker names without merging it twice,
+    and raise on a replay of a batch BELOW the marker (stale state)."""
     import os
     import shutil
 
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck9c")
-    _write_batch(landing, "b1.json", [
-        _event(1, "2024-01-01T10:00:00Z", user=1, etype="view"),
-        _event(3, "2024-01-01T10:30:00Z", user=2, etype="view"),
-    ])
-    q = jobs.upsert_latest_per_key(
-        jobs.read_event_stream(spark, str(landing)), state, ckpt)
-    q.awaitTermination(120)
+    from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    # (a) crash after the new state was fully staged: state_dir gone,
-    # .staged complete.  A replayed batch containing only user 3 must
-    # still see users 1 and 2 after recovery.
-    shutil.rmtree(state + ".staged", ignore_errors=True)
-    os.rename(state, state + ".staged")
-    _write_batch(landing, "b2.json", [
-        _event(7, "2024-01-01T12:00:00Z", user=3, etype="view"),
-    ])
-    q2 = jobs.upsert_latest_per_key(
-        jobs.read_event_stream(spark, str(landing)), state, ckpt)
-    q2.awaitTermination(120)
-    s = {r.user_id: r.event_id for r in spark.read.parquet(state).collect()}
-    assert s == {1: 1, 2: 3, 3: 7}
+    schema, batches, start, idempotent = _STAGED_USERS[user]
+    landing, first = tmp_path / "in", tmp_path / "in_b0"
+    for d in (landing, first):
+        d.mkdir()
 
-    # (b) crash before the staged write completed: only .retired holds
-    # the old state (no _SUCCESS in .staged).
-    os.rename(state, state + ".retired")
-    os.makedirs(state + ".staged")  # torn write: empty, no _SUCCESS
-    _write_batch(landing, "b3.json", [
-        _event(9, "2024-01-01T13:00:00Z", user=4, etype="view"),
-    ])
-    q3 = jobs.upsert_latest_per_key(
-        jobs.read_event_stream(spark, str(landing)), state, ckpt)
-    q3.awaitTermination(120)
-    s = {r.user_id: r.event_id for r in spark.read.parquet(state).collect()}
-    assert s == {1: 1, 2: 3, 3: 7, 4: 9}
+    def land(d, bi):
+        _write_batch(d, f"b{bi}.json", batches[bi])
+        os.utime(d / f"b{bi}.json", (1000000000 + bi * 100,) * 2)
+
+    state, ckpt, out = (str(tmp_path / n) for n in ("state", "ckpt", "out"))
+
+    def drain(src_dir, ckpt_dir):
+        src = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src_dir))
+        )
+        start(src, state, ckpt_dir, out).awaitTermination(120)
+
+    def restore(state_src, suffix=""):
+        for sfx in ("", ".staged", ".retired"):
+            shutil.rmtree(state + sfx, ignore_errors=True)
+        shutil.copytree(state_src, state + suffix)
+
+    # uninterrupted drain, snapshotting state + checkpoint after batch 0
+    land(landing, 0)
+    land(first, 0)
+    drain(landing, ckpt)
+    s0, ckpt0 = str(tmp_path / "s0"), str(tmp_path / "ckpt0")
+    shutil.copytree(state, s0)
+    shutil.copytree(ckpt, ckpt0)
+    land(landing, 1)
+    drain(landing, ckpt)
+    s01 = str(tmp_path / "s01")
+    shutil.copytree(state, s01)
+    want = _rows(spark, state)
+
+    for staged_complete in (True, False):
+        restore(s0, ".retired")
+        if staged_complete:
+            shutil.copytree(s01, state + ".staged")
+        else:
+            os.makedirs(state + ".staged")  # torn write: no _SUCCESS
+        shutil.rmtree(ckpt)
+        shutil.copytree(ckpt0, ckpt)
+        drain(landing, ckpt)
+        assert _rows(spark, state) == want, staged_complete
+
+    if idempotent:
+        return
+    # fresh checkpoint re-delivers batch 0 onto state whose marker is 0
+    restore(s0)
+    drain(first, str(tmp_path / "ckpt_replay"))
+    assert _rows(spark, state) == _rows(spark, s0)
+    # ... and onto state whose marker is 1: stale, must fail loudly
+    restore(s01)
+    with pytest.raises(StreamingQueryException, match="stale state"):
+        drain(first, str(tmp_path / "ckpt_stale"))
+    assert _rows(spark, state) == want
+
+
+def test_staged_merge_toy_max_monoid(spark, tmp_path):
+    """staged_merge on a toy monoid (per-key max) over three file
+    batches: the drained state does not depend on the batch slicing, a
+    fresh-checkpoint replay with idempotent=True is a fixed point, and
+    idempotent=False stamps the last merged batch id as `_BATCH`.
+    emit sees the combined state of every batch."""
+    import os
+
+    landing = tmp_path / "in"
+    landing.mkdir()
+    batches = [[("a", 3), ("b", 1)], [("a", 5), ("c", 2)], [("b", 4), ("a", 1)]]
+    for bi, rows in enumerate(batches):
+        with open(landing / f"b{bi}.json", "w") as f:
+            for k, v in rows:
+                f.write(json.dumps({"k": k, "v": v}) + "\n")
+        os.utime(landing / f"b{bi}.json", (1000000000 + bi * 100,) * 2)
+    emitted = []
+
+    def emit(combined, batch_id):
+        emitted.append((batch_id, sorted(tuple(r) for r in combined.collect())))
+
+    def drain(tag, mfpt, idempotent, ckpt=None):
+        reader = spark.readStream.schema("k string, v long")
+        if mfpt:
+            reader = reader.option("maxFilesPerTrigger", mfpt)
+        state = str(tmp_path / f"state_{tag}")
+        jobs.staged_merge(
+            reader.json(str(landing)),
+            state,
+            str(tmp_path / f"ckpt_{ckpt or tag}"),
+            partial=lambda b: b.groupBy("k").agg(F.max("v").alias("v")),
+            combine=lambda u: u.groupBy("k").agg(F.max("v").alias("v")),
+            idempotent=idempotent,
+            emit=emit,
+        ).awaitTermination(120)
+        return state, sorted(tuple(r) for r in spark.read.parquet(state).collect())
+
+    want = [("a", 5), ("b", 4), ("c", 2)]
+    _, whole = drain("whole", None, True)
+    sliced_dir, sliced = drain("sliced", 1, True)
+    assert whole == sliced == want
+    assert [b for b, _ in emitted] == [0, 0, 1, 2]
+    assert emitted[-1][1] == want and emitted[1][1] == [("a", 3), ("b", 1)]
+    assert not os.path.exists(os.path.join(sliced_dir, "_BATCH"))
+    # idempotent replay from a fresh checkpoint: state is a fixed point
+    assert drain("sliced", 1, True, ckpt="replay")[1] == want
+
+    marked_dir, marked = drain("marked", 1, False)
+    assert marked == want
+    with open(os.path.join(marked_dir, "_BATCH")) as f:
+        assert f.read() == "2"
+
+    with pytest.raises(TypeError):
+        jobs.staged_merge(
+            None, "", "", partial=None, combine=None, idempotent=True,
+            emit=lambda frame: None,
+        )
 
 
 def test_transform_with_state(spark, landing):
