@@ -1,22 +1,28 @@
-"""Driver-visible `queries()` entries for the streaming operators
-(SURVEY.md §2B rows s01, s05, s07).
+"""Driver-visible `queries()` entries for the 33 registered stream keys.
 
 The streaming jobs in streaming/jobs.py are pytest-verified with real
 file streams, but the driver's correctness harness only sees registry
-entries.  These wrappers run each job for real — `readStream` over the
-sf parquet, `Trigger.AvailableNow`, checkpointed sink — then return the
-drained result as a *batch* DataFrame.  Because the fixture lands as ONE
-file (a single micro-batch), the drained results equal the batch
-aggregates over the same events — so each entry carries a full value-
-hash oracle: the streaming machinery is exercised for real AND checked
-exactly.  What the oracle cannot state — watermark eviction across
-micro-batches, state recovery — stays pytest-verified with multi-batch
-file streams in tests/test_streaming.py.
+entries.  Each entry here runs its job for real — `readStream` over
+the sf fixture, `Trigger.AvailableNow`, a checkpointed sink — then
+returns the drained result as a *batch* DataFrame carrying a full
+value-hash oracle, so the streaming machinery is exercised for real
+AND checked exactly.  Most fixtures land as one file and drain as one
+data micro-batch; s25/s27 drain two parity batches and s20 drains two
+sources.  Where an oracle holds only for a given batch count (s22,
+s27, s28, s29) the drain asserts that count.  What the oracle cannot
+state — watermark eviction across many micro-batches, state recovery
+— stays pytest-verified in tests/test_streaming.py.
 
-Everything is bounded: sinks and checkpoints live in fresh temp dirs,
-output rows are per-key / per-window aggregates (never the raw event
-echo), and each call uses its own memory-sink name so repeated driver
-invocations don't collide.
+The drain policy lives in ONE place, `_drain`: shuffle width, the
+trailing no-data tick, the state backend, the AvailableNow run and the
+batch-count precondition.  `_drain_memory` adds the memory sink.  Each
+key states only what differs from the defaults.
+
+Everything is bounded: checkpoints, state and file sinks live in a
+private scratch dir removed after the drain (`_work_dir`), output rows
+are per-key / per-window aggregates (never the raw event echo), and
+each memory sink gets a fresh name so repeated invocations
+don't collide.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from fanstats_producer_spark.functions.chunking import _CHUNK, _STRIDE
 from fanstats_producer_spark.functions.num import sql_dsum_pos
@@ -53,11 +60,9 @@ def _few_partitions(spark: SparkSession, n: int = 8):
     (n=4 starves applyInPandasWithState's Arrow workers, n=32 pays 2x
     state-store commits on the two-store stream-stream join).  Partition
     count never changes stream RESULTS, only parallelism — at 100 TB
-    this knob goes UP, not down.  (Purely a parallelism knob: the
-    no-data-micro-batch skip is a SEPARATE, semantic opt-in —
-    _skip_nodata_batch — so a drain whose output depends on the trailing
-    watermark tick, e.g. an append-mode windowed aggregation like s16,
-    can take this helper without silently losing its final emit.)"""
+    this knob goes UP, not down.  (Purely a parallelism knob: skipping
+    the no-data micro-batch is a SEPARATE, semantic choice — `_drain`'s
+    `tick`.)"""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -69,19 +74,10 @@ def _few_partitions(spark: SparkSession, n: int = 8):
 @contextlib.contextmanager
 def _skip_nodata_batch(spark: SparkSession):
     """Skip the trailing no-data micro-batch for the enclosed drain.
-
-    That batch exists only to advance the watermark and EVICT state
-    after the last data batch (profiled at ~0.9-1.3 s of pure
-    replan+commit per drain here).  Only drains whose OUTPUT does not
-    depend on it may opt in: s05 emits in update mode, s08 is an inner
-    join (rows append on match), s11/s12 dedup appends first-arrival
-    rows immediately, s04b rewrites in complete mode, and s07's
-    applyInPandasWithState runs GroupStateTimeout.NoTimeout
-    (jobs.py:122) so no timeout path needs a tick.  An append-mode
-    *windowed aggregation* (s16) emits a window's row only when the
-    watermark passes its end — it MUST NOT use this manager.
-    Eviction-across-batches itself stays pytest-verified with
-    multi-batch file streams (tests/test_streaming.py)."""
+    Only drains whose OUTPUT does not depend on it may use this; the
+    rule is `_drain`'s `tick`.  Eviction-across-batches itself stays
+    pytest-verified with multi-batch file streams
+    (tests/test_streaming.py)."""
     prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
@@ -89,6 +85,108 @@ def _skip_nodata_batch(spark: SparkSession):
     finally:
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev
+        )
+
+
+@contextlib.contextmanager
+def _rocksdb_state(spark: SparkSession):
+    """Run the enclosed drain on the RocksDB state store provider — the
+    production backend once state outgrows the JVM heap (the default
+    HDFS-backed store keeps every version's map IN MEMORY per executor;
+    RocksDB spills to local SSD and bounds memory, which is the only
+    viable posture for 100 TB keyed state).  Results are provider-
+    independent — only the storage engine changes."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _drain(
+    spark: SparkSession,
+    start,
+    *,
+    partitions: int = 8,
+    tick: bool = False,
+    rocksdb: bool = False,
+    batches: tuple[int, ...] | None = None,
+) -> StreamingQuery:
+    """Run one AvailableNow query to completion — drain everything, then
+    stop, the reference's cron cadence (main.tf:217) — under the drain
+    policy every registered stream key shares.  `start()` builds and
+    starts the query inside the confs below, which are restored on exit
+    even when it raises.
+
+    - `partitions`: shuffle width, hence the number of per-partition
+      state stores (see _few_partitions).
+    - `tick`: keep the trailing no-data micro-batch.  It exists only to
+      advance the watermark and EVICT state after the last data batch
+      (profiled at ~0.9-1.3 s of pure replan+commit per drain), so
+      drains skip it by default.  A drain whose OUTPUT rides the tick
+      must keep it: an append-mode windowed aggregation emits a window
+      only once the watermark passes its end (s16, and s18 behind its
+      join), an outer join emits its null rows on eviction (s17), and
+      event-time timers fire on it (s10b).  The others may skip:
+      update and complete modes and inner joins emit on data, dedup
+      appends first arrivals at once, applyInPandasWithState (s07)
+      and s10's transformWithState run without timeouts, and
+      foreachBatch sinks only act on data batches.
+    - `rocksdb`: run on the RocksDB state store (_rocksdb_state).
+    - `batches`: the data micro-batch counts the key's oracle holds
+      for; any other count raises AssertionError naming the query and
+      the count.  A raise, not an assert, so it survives python -O."""
+    skip = contextlib.nullcontext() if tick else _skip_nodata_batch(spark)
+    store = _rocksdb_state(spark) if rocksdb else contextlib.nullcontext()
+    with _few_partitions(spark, partitions), skip, store:
+        q = start()
+        q.awaitTermination()
+    if batches is not None:
+        n = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+        if n not in batches:
+            raise AssertionError(
+                f"query {q.name or q.id}: observed {n} data micro-batches;"
+                f" its oracle holds for {batches} — a trigger or landing"
+                " change broke the precondition"
+            )
+    return q
+
+
+def _drain_memory(
+    spark: SparkSession, df: DataFrame, mode: str, **kw
+) -> DataFrame:
+    """`_drain` into a memory sink under a fresh query name; returns
+    the sink's table.  `kw` goes to `_drain`."""
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    _drain(
+        spark,
+        lambda: df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start(),
+        **kw,
+    )
+    return spark.table(name)
+
+
+def _require_protobuf(spark: SparkSession) -> None:
+    """transformWithStateInPandas (s10, s10b) speaks protobuf between
+    the JVM and Python; see s10 for how compat.ensure_protobuf provides
+    it."""
+    from fanstats_producer_spark.compat import ensure_protobuf
+
+    if not ensure_protobuf(spark):
+        raise RuntimeError(
+            "transformWithStateInPandas needs google.protobuf; install "
+            "protobuf or provide the Cloud SDK vendored runtime "
+            "(see fanstats_producer_spark/compat.py)"
         )
 
 
@@ -295,12 +393,6 @@ def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
     return landing
 
 
-def _drain(q) -> None:
-    """Run an AvailableNow query to completion (drain everything, then
-    stop — the reference's batch cadence, main.tf:217)."""
-    q.awaitTermination()
-
-
 @query(
     "s01_stream_ingest",
     oracle="""
@@ -313,16 +405,20 @@ def s01_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exactly-once), then summarize the landed layout.  Returns one row
     per event_date partition with its row count — the sink's manifest,
     not the raw echo, so the result stays tiny at any scale."""
-    tmp = scratch_dir("s01_")
-    out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
     stream = _read_events_stream(spark, sf_dir)
-    _drain(jobs.write_partitioned_stream(stream, out, ckpt))
-    return (
-        spark.read.parquet(out)
-        .groupBy("event_date")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("event_date").cast("string").alias("event_date"), "n")
-    )
+    with _work_dir("s01_") as work:
+        out = f"{work}/out"
+        _drain(
+            spark,
+            lambda: jobs.write_partitioned_stream(stream, out, f"{work}/ckpt"),
+        )
+        return (
+            spark.read.parquet(out)
+            .groupBy("event_date")
+            .agg(F.count("*").alias("n"))
+            .select(F.col("event_date").cast("string").alias("event_date"), "n")
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -339,22 +435,12 @@ def s05_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds window state; update mode emits each window's running result
     per micro-batch, so the drained table holds the final per-window
     aggregates after AvailableNow finishes."""
-    name = f"s05_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     counts = jobs.windowed_counts(
         stream, window="1 day", watermark="30 minutes"
     )
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_memory(spark, counts, "update")
         .groupBy(
             F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
@@ -378,20 +464,10 @@ def s07_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s07: applyInPandasWithState per-user running totals, drained via
     AvailableNow into a memory sink.  One output row per user per batch;
     the last emission per user is the final running total."""
-    name = f"s07_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     totals = jobs.user_running_totals(stream)
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_memory(spark, totals, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -417,22 +493,12 @@ def s08_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same event stream, time-bounded state), drained in append mode;
     the per-day pair counts equal the batch time-conditioned self-join
     the oracle states."""
-    name = f"s08_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     joined = jobs.clicks_to_purchases_join(stream, horizon="1 hour")
     # Stream-stream joins keep TWO per-partition state stores; see
     # _few_partitions.
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_memory(spark, joined, "append")
         .groupBy(
             F.col("purchase_ts").cast("date").cast("string").alias("purchase_date")
         )
@@ -475,24 +541,14 @@ def s17_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     s08's inner join doesn't cover: an unmatched purchase emits its
     null-click row only when the WATERMARK proves no qualifying click
     can still arrive (state eviction, on the trailing no-data tick —
-    so this drain, like s16, must NOT skip it).  Purchases inside the
+    so this drain, like s16, runs with tick=True).  Purchases inside the
     final 2-hour watermark delay stay in state and are deliberately
     absent from the null counts, which the oracle states exactly;
     matched pairs emit regardless (the inner part)."""
-    name = f"s17_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     joined = jobs.clicks_to_purchases_join(stream, horizon="1 hour", how="leftOuter")
-    with _few_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_memory(spark, joined, "append", tick=True)
         .groupBy(
             F.col("purchase_ts").cast("date").cast("string").alias("purchase_date")
         )
@@ -538,23 +594,13 @@ def s18_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     s16 rule (window_end <= watermark) under the s17 watermark (MIN
     across both join inputs' watermark operators); the trailing
     windows stay in the aggregation's state and are absent.  Needs the
-    trailing no-data tick (no _skip_nodata_batch)."""
-    name = f"s18_mem_{uuid.uuid4().hex[:8]}"
+    trailing no-data tick (tick=True)."""
     stream = _read_events_stream(spark, sf_dir)
     joined = jobs.clicks_to_purchases_join(stream, horizon="1 hour")
     counts = joined.groupBy(
         F.window("purchase_ts", "6 hours").alias("w")
     ).agg(F.count("*").alias("n_pairs"))
-    with _few_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _drain_memory(spark, counts, "append", tick=True).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "n_pairs",
     )
@@ -575,17 +621,22 @@ def s09_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-event-per-user state table after the drain equals the batch
     argmax the oracle states (ties broken by event_id, so the merge is
     deterministic across any batching)."""
-    tmp = scratch_dir("s09_")
-    state, ckpt = f"{tmp}/state", f"{tmp}/ckpt"
     stream = _read_events_stream(spark, sf_dir)
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        _drain(jobs.upsert_latest_per_key(stream, state, ckpt))
-    latest = spark.read.parquet(state)
-    return latest.select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-    )
+    with _work_dir("s09_") as work:
+        state = f"{work}/state"
+        _drain(
+            spark,
+            lambda: jobs.upsert_latest_per_key(stream, state, f"{work}/ckpt"),
+        )
+        return (
+            spark.read.parquet(state)
+            .select(
+                "user_id",
+                F.col("event_id").alias("last_event_id"),
+                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -614,40 +665,21 @@ def s10_tws_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(value*1e6+0.5); values are nonnegative in this schema so
     pandas' truncating astype('int64') IS floor), so the totals are
     arrival-order-free and the batch SQL states them bit-exactly."""
-    from fanstats_producer_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf; install "
-            "protobuf or provide the Cloud SDK vendored runtime "
-            "(see fanstats_producer_spark/compat.py)"
-        )
-    name = f"s10_mem_{uuid.uuid4().hex[:8]}"
+    _require_protobuf(spark)
     stream = _read_events_stream(spark, sf_dir)
     totals = jobs.user_value_stats_tws(stream)
-    # TWS requires the RocksDB provider.  n=8, NOT the s15 n=2: unlike
-    # the JVM-side stateful operators, every TWS state call is a
+    # TWS requires the RocksDB provider.  8 partitions, NOT the s15 2:
+    # unlike the JVM-side stateful operators, every TWS state call is a
     # synchronous per-key proto round-trip through that partition's
     # state-server socket, so partitions parallelize the PROTOCOL, not
     # just the rows (measured at sf0.1: n=2 5.5s / n=4 4.5s / n=8 3.7s
     # / n=16 3.8s — RocksDB per-store setup wins below 8, socket
     # parallelism above).  timeMode="None" → no timer path depends on
     # the trailing no-data tick, so the skip is output-safe.
-    with _few_partitions(spark, 8), _skip_nodata_batch(spark), _rocksdb_state(
-        spark
-    ):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     # One emission per user per micro-batch of running totals; the max
     # per user is the final state (counts/totals only grow).
     return (
-        spark.table(name)
+        _drain_memory(spark, totals, "update", rocksdb=True)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -677,33 +709,16 @@ def s10b_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     deadline (the state store's timer queue drives emission, not data
     arrival).  The fixture drains in one data batch, so all timers fire
     on the trailing no-data tick with watermark = max(ts) - 10 min —
-    this drain therefore runs WITHOUT _skip_nodata_batch (the s16
-    rule).  Users still active within 40 min of stream end stay open
-    and are deliberately absent, which the oracle states exactly."""
-    from fanstats_producer_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf; install "
-            "protobuf or provide the Cloud SDK vendored runtime "
-            "(see fanstats_producer_spark/compat.py)"
-        )
-    name = f"s10b_mem_{uuid.uuid4().hex[:8]}"
+    this drain therefore runs with tick=True (the s16 rule).  Users
+    still active within 40 min of stream end stay open and are
+    deliberately absent, which the oracle states exactly."""
+    _require_protobuf(spark)
     stream = _read_events_stream(spark, sf_dir)
     closed = jobs.user_session_close_tws(
         stream, gap_seconds=1800, watermark="10 minutes"
     )
-    # n=8: socket-parallel TWS protocol (see s10's measurement note).
-    with _few_partitions(spark, 8), _rocksdb_state(spark):
-        q = (
-            closed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name)
+    # 8 partitions: socket-parallel TWS protocol (see s10's note).
+    return _drain_memory(spark, closed, "append", tick=True, rocksdb=True)
 
 
 @query(
@@ -720,19 +735,9 @@ def s11_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives is arrival-order-dependent, so the oracle states the
     deterministic part: input size and the number of kept (distinct-
     content) rows."""
-    name = f"s11_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     deduped = jobs.deduped_by_content(stream, text_col="props")
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    kept = spark.table(name)
+    kept = _drain_memory(spark, deduped, "append")
     from fanstats_producer_spark.io import load as _load
 
     total = _load(spark, sf_dir, "events").count()
@@ -775,19 +780,9 @@ def s04b_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions).  Equals the batch gap-and-island sessionization the
     oracle states; cross-batch merging is pytest-verified
     (tests/test_streaming.py::test_session_window_stream)."""
-    name = f"s04b_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     sessions = jobs.sessionized(stream, gap="30 minutes")
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _drain_memory(spark, sessions, "complete").select(
         "user_id",
         F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format("end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
@@ -842,20 +837,9 @@ def s12_stream_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch, so the 30-min watermark never drops rows regardless
     # of part-file order.
     landing = _doc_landing(spark, sf_dir)
-    name = f"s12_mem_{uuid.uuid4().hex[:8]}"
     stream = jobs.read_document_stream(spark, landing)
     prepped = jobs.corpus_prep_stream(stream)
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            prepped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    t = spark.table(name)
-    return t.agg(
+    return _drain_memory(spark, prepped, "append").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count("*").alias("n_chunks"),
         F.sum("n_chunk_tokens").alias("total_tokens"),
@@ -880,7 +864,7 @@ def s16_append_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     one streaming shape whose output depends on the trailing no-data
     micro-batch (the tick advances the watermark past closed windows so
     they emit exactly once and their state evicts), so this drain runs
-    WITHOUT _skip_nodata_batch.  Contrast s05/s15, which drain the same
+    with tick=True.  Contrast s05/s15, which drain the same
     aggregation in update mode and can skip the tick.
 
     Append semantics the oracle states exactly: a window emits iff
@@ -888,47 +872,16 @@ def s16_append_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial window(s) stay in state and are deliberately ABSENT from
     the result — exactly-once emission, not completeness, is append
     mode's contract."""
-    name = f"s16_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     counts = jobs.windowed_counts(
         stream, window="1 hour", watermark="30 minutes"
     )
-    with _few_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _drain_memory(spark, counts, "append", tick=True).select(
         F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",
         "sum_value",
     )
-
-
-@contextlib.contextmanager
-def _rocksdb_state(spark: SparkSession):
-    """Run the enclosed drain on the RocksDB state store provider — the
-    production backend once state outgrows the JVM heap (the default
-    HDFS-backed store keeps every version's map IN MEMORY per executor;
-    RocksDB spills to local SSD and bounds memory, which is the only
-    viable posture for 100 TB keyed state).  Results are provider-
-    independent — only the storage engine changes."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 @query(
@@ -946,24 +899,15 @@ def s15_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised drain, not just a config note: at 100 TB the HDFS-backed
     default is an OOM, and this entry proves the engine runs unchanged
     on the spill-to-disk provider."""
-    name = f"s15_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     counts = jobs.windowed_counts(stream, window="1 day", watermark="30 minutes")
-    # n=2, not the drain-default 8: RocksDB pays a native DB instance +
-    # snapshot upload PER partition per batch (measured 12 s at n=8 vs
-    # ~1 s at n=2 for identical results) — at 100 TB that per-partition
-    # cost amortizes over real state and the knob goes back up.
-    with _few_partitions(spark, 2), _skip_nodata_batch(spark), _rocksdb_state(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
+    # 2 partitions, not the drain-default 8: RocksDB pays a native DB
+    # instance + snapshot upload PER partition per batch (measured 12 s
+    # at n=8 vs ~1 s at n=2 for identical results) — at 100 TB that
+    # per-partition cost amortizes over real state and the knob goes
+    # back up.
     return (
-        spark.table(name)
+        _drain_memory(spark, counts, "update", partitions=2, rocksdb=True)
         .groupBy(
             F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
@@ -999,7 +943,6 @@ def s19_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fanstats_producer_spark.functions.num import dsum_pos
     from fanstats_producer_spark.io import load
 
-    name = f"s19_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
@@ -1010,19 +953,10 @@ def s19_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         dsum_pos("value").alias("sum_value"),
     )
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     # update mode re-emits a key each batch it changes in; both
     # aggregates are monotone over positive inputs, so max = final.
     return (
-        spark.table(name)
+        _drain_memory(spark, agg, "update")
         .groupBy("segment", "nation")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -1058,7 +992,6 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fanstats_producer_spark.functions.num import dsum_pos
     from fanstats_producer_spark.io import load
 
-    name = f"s20_mem_{uuid.uuid4().hex[:8]}"
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1084,17 +1017,8 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = unioned.groupBy(
             F.window("ts", "1 day").alias("w"), "event_type"
         ).agg(F.count("*").alias("n"), dsum_pos("value").alias("sum_value"))
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
         return (
-            spark.table(name)
+            _drain_memory(spark, agg, "update")
             .groupBy(
                 F.col("w.start").cast("date").cast("string").alias("day"),
                 "event_type",
@@ -1163,9 +1087,10 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         verdict_dir = os.path.join(work, "verdicts")
         ckpt = os.path.join(work, "ckpt")
         stream = jobs.read_document_stream(spark, landing)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_near_dup(stream, state_dir, verdict_dir, ckpt)
-            _drain(q)
+        _drain(
+            spark,
+            lambda: jobs.streaming_near_dup(stream, state_dir, verdict_dir, ckpt),
+        )
         # one verdict row per doc (a doc's band keys ride one input row,
         # so they never split across micro-batches); materialize before
         # the temp dirs go away
@@ -1247,8 +1172,9 @@ def s22_stream_verified_near_dup(
     a multi-batch trigger, a doc arriving before its eventual bucket
     minimum would be judged against an earlier (larger-id) partner and
     the two sides would silently diverge — so the drain below asserts
-    exactly one data batch and fails loudly if a trigger change ever
-    splits it."""
+    at most one data batch (none, an empty landing, is trivially
+    oracle-consistent) and fails loudly if a trigger change ever splits
+    it."""
     import os
 
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
@@ -1257,25 +1183,13 @@ def s22_stream_verified_near_dup(
         verdict_dir = os.path.join(work, "verdicts")
         ckpt = os.path.join(work, "ckpt")
         stream = jobs.read_document_stream(spark, landing)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_verified_near_dup(
+        _drain(
+            spark,
+            lambda: jobs.streaming_verified_near_dup(
                 stream, state_dir, verdict_dir, ckpt
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) > 1:
-                # 0 data batches (empty landing) is trivially
-                # oracle-consistent — only a SPLIT drain breaks the
-                # bucket-minimum == first-arrival equivalence
-                raise AssertionError(
-                    "s22 oracle assumes a single-batch drain (partner ="
-                    " global bucket minimum == first-arrival verdict);"
-                    f" observed {len(data_batches)} data micro-batches"
-                    " — a trigger change broke the equivalence"
-                    " precondition"
-                )
+            ),
+            batches=(0, 1),
+        )
         out = spark.read.parquet(verdict_dir).select(
             "doc_id", "is_candidate", "is_dup"
         )
@@ -1348,11 +1262,12 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir = os.path.join(work, "state")
         monitor_dir = os.path.join(work, "monitor")
         ckpt = os.path.join(work, "ckpt")
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_psi_drift(
+        _drain(
+            spark,
+            lambda: jobs.streaming_psi_drift(
                 stream, ref_counts, state_dir, monitor_dir, ckpt
-            )
-            _drain(q)
+            ),
+        )
         out = spark.read.parquet(monitor_dir).select(
             "event_type", "psi_e9", "n_ref", "n_live"
         )
@@ -1415,19 +1330,8 @@ def s24_stream_contamination_gate(
         shingles = _EVAL_SHINGLES_CACHE[key] = eval_shingle_set(ev_docs)
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
     stream = jobs.read_document_stream(spark, landing)
-    name = f"s24_mem_{uuid.uuid4().hex[:8]}"
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            contamination_gate(stream, shingles)
-            .select("doc_id")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select("doc_id").localCheckpoint(eager=True)
+    kept = contamination_gate(stream, shingles).select("doc_id")
+    return _drain_memory(spark, kept, "append").localCheckpoint(eager=True)
 
 
 @query(
@@ -1475,11 +1379,12 @@ def s25_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .json(landing)
         )
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_bloom_dedup(
+        _drain(
+            spark,
+            lambda: jobs.streaming_bloom_dedup(
                 stream, state_dir, verdict_dir, ckpt
-            )
-            _drain(q)
+            ),
+        )
         out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
         return out.localCheckpoint(eager=True)
 
@@ -1526,19 +1431,8 @@ def s26_stream_semantic_decontam(
     stream = _link_landing(
         spark, f"{sf_dir}/embeddings.parquet", "s26_landing_"
     ).filter(F.col("vec_id") >= _X66_N_EVAL)
-    name = f"s26_mem_{uuid.uuid4().hex[:8]}"
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            semantic_decontam_gate(stream, evs)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_memory(spark, semantic_decontam_gate(stream, evs), "append")
         .select("vec_id", "nearest_eval_id", "max_sim_e6", "contaminated")
         .localCheckpoint(eager=True)
     )
@@ -1572,8 +1466,8 @@ def s26b_stream_decontam_large_eval(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """s26b: the decontamination stream for LARGE eval suites — the
-    BLAS batch scorer per micro-batch (jobs.streaming_decontam_crossjoin
-    with scorer="blas") instead of s26's per-row HOF.  The eval suite
+    BLAS batch scorer per micro-batch (jobs.streaming_decontam_crossjoin)
+    instead of s26's per-row HOF.  The eval suite
     is every EVEN vec_id (scales with SF: 1,000 vectors at sf0.1,
     10,000 at sf1 — VERDICT r9 watch item 1's regime), the stream is
     every ODD vec_id.
@@ -1609,11 +1503,12 @@ def s26b_stream_decontam_large_eval(
     with _work_dir("s26b_work_") as work:
         verdict_dir = os.path.join(work, "verdicts")
         ckpt = os.path.join(work, "ckpt")
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_decontam_crossjoin(
-                stream, evals, verdict_dir, ckpt, scorer="blas"
-            )
-            _drain(q)
+        _drain(
+            spark,
+            lambda: jobs.streaming_decontam_crossjoin(
+                stream, evals, verdict_dir, ckpt
+            ),
+        )
         out = spark.read.parquet(verdict_dir).select(
             "vec_id", "nearest_eval_id", "max_sim_e6", "contaminated"
         )
@@ -1666,21 +1561,14 @@ def s27_stream_sequence_packing(
             .option("maxFilesPerTrigger", 1)
             .json(landing)
         )
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_sequence_packing(
+        # the oracle states the two-parity-batch arrival order
+        _drain(
+            spark,
+            lambda: jobs.streaming_sequence_packing(
                 stream, manifest_dir, state_dir, ckpt
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) != 2:
-                raise AssertionError(
-                    "s27 oracle states the two-parity-batch arrival"
-                    f" order; observed {len(data_batches)} data"
-                    " micro-batches — the staged landing or trigger"
-                    " changed"
-                )
+            ),
+            batches=(2,),
+        )
         out = spark.read.parquet(manifest_dir).select(
             "doc_id",
             "n_tokens",
@@ -1742,22 +1630,13 @@ def s28_stream_image_near_dup(
         verdict_dir = os.path.join(work, "verdicts")
         ckpt = os.path.join(work, "ckpt")
         stream = jobs.read_document_stream(spark, landing)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_phash_near_dup(
+        _drain(
+            spark,
+            lambda: jobs.streaming_phash_near_dup(
                 stream, state_dir, verdict_dir, ckpt
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) > 1:
-                raise AssertionError(
-                    "s28 oracle assumes a single-batch drain (partner ="
-                    " global bucket minimum == first-arrival verdict);"
-                    f" observed {len(data_batches)} data micro-batches"
-                    " — a trigger change broke the equivalence"
-                    " precondition"
-                )
+            ),
+            batches=(0, 1),
+        )
         out = spark.read.parquet(verdict_dir).select(
             "doc_id", "is_candidate", "is_dup"
         )
@@ -1814,24 +1693,17 @@ def s29_stream_audio_near_dup(
         verdict_dir = os.path.join(work, "verdicts")
         ckpt = os.path.join(work, "ckpt")
         stream = jobs.read_document_stream(spark, landing)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_phash_near_dup(
+        _drain(
+            spark,
+            lambda: jobs.streaming_phash_near_dup(
                 stream,
                 state_dir,
                 verdict_dir,
                 ckpt,
                 features=audio_fp_features,
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) > 1:
-                raise AssertionError(
-                    "s29 oracle assumes a single-batch drain (partner ="
-                    " global bucket minimum == first-arrival verdict);"
-                    f" observed {len(data_batches)} data micro-batches"
-                )
+            ),
+            batches=(0, 1),
+        )
         out = spark.read.parquet(verdict_dir).select(
             "doc_id", "is_candidate", "is_dup"
         )
@@ -1857,9 +1729,9 @@ def s30_stream_weighted_sample(
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
         stream = jobs.read_document_stream(spark, landing)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_weighted_sample(stream, state_dir, ckpt)
-            _drain(q)
+        _drain(
+            spark, lambda: jobs.streaming_weighted_sample(stream, state_dir, ckpt)
+        )
         out = spark.read.parquet(state_dir).select(
             "doc_id", "n_tokens", "key_e9"
         )
@@ -1883,9 +1755,9 @@ def s31_stream_quantile_monitor(
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
         stream = _read_events_stream(spark, sf_dir)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_quantile_monitor(stream, state_dir, ckpt)
-            _drain(q)
+        _drain(
+            spark, lambda: jobs.streaming_quantile_monitor(stream, state_dir, ckpt)
+        )
         out = sketches.quantile_estimates(spark.read.parquet(state_dir))
         return out.localCheckpoint(eager=True)
 
@@ -1911,16 +1783,15 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir = os.path.join(work, "tags")
         ckpt = os.path.join(work, "ckpt")
         stream = jobs.read_document_stream(spark, landing)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = (
-                keyword_tags(stream, _X101_TERMS)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
+        _drain(
+            spark,
+            lambda: keyword_tags(stream, _X101_TERMS)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start(),
+        )
         out = spark.read.parquet(out_dir).select(
             "doc_id", "term", "n_hits"
         )
@@ -1942,9 +1813,7 @@ def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
         stream = _read_events_stream(spark, sf_dir)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_ks_monitor(stream, state_dir, ckpt)
-            _drain(q)
+        _drain(spark, lambda: jobs.streaming_ks_monitor(stream, state_dir, ckpt))
         out = quality_checks.ks_matrix_from_counts(
             spark.read.parquet(state_dir)
         )
@@ -1971,11 +1840,12 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
         stream = _read_events_stream(spark, sf_dir)
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_value_counts_monitor(
+        _drain(
+            spark,
+            lambda: jobs.streaming_value_counts_monitor(
                 stream, state_dir, ckpt, job_name="streaming_auc_monitor"
-            )
-            _drain(q)
+            ),
+        )
         out = quality_checks.auc_matrix_from_counts(
             spark.read.parquet(state_dir)
         )
@@ -2005,9 +1875,10 @@ def s35_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _work_dir("s35_work_") as work:
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_contingency_monitor(stream, state_dir, ckpt)
-            _drain(q)
+        _drain(
+            spark,
+            lambda: jobs.streaming_contingency_monitor(stream, state_dir, ckpt),
+        )
         out = quality_checks.chi2_from_counts(
             spark.read.parquet(state_dir)
         )
@@ -2035,9 +1906,12 @@ def s36_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _work_dir("s36_work_") as work:
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_embedding_drift_monitor(stream, state_dir, ckpt)
-            _drain(q)
+        _drain(
+            spark,
+            lambda: jobs.streaming_embedding_drift_monitor(
+                stream, state_dir, ckpt
+            ),
+        )
         out = quality_checks.embedding_drift_from_sums(
             spark.read.parquet(state_dir)
         )

@@ -588,23 +588,22 @@ def streaming_decontam_crossjoin(
     evals: DataFrame,
     verdict_dir: str,
     checkpoint_dir: str,
-    scorer: str = "sql",
 ) -> StreamingQuery:
     """s26b: the LARGE-EVAL-SUITE decontamination stream — x66's
     decision run per micro-batch in foreachBatch over an eval FRAME
-    (similarity.semantic_decontam_crossjoin), with ``scorer="blas"``
-    selecting the batched-matmul arm that actually serves suites in
-    the thousands (measured: SQL expression arms — HOF and cross-join
-    alike — cost ~125 s at 10k evals × 10k vectors; the BLAS arm 5 s
-    cold / ~2 s warm, identical verdicts; similarity.py docstring has
-    the full measurement and the ulp-boundary analysis).  foreachBatch
-    exists because the per-vector nearest-eval re-aggregate (groupBy +
-    struct-min) cannot ride an append-mode streaming plan; the gate is
-    stateless and per-row, so batch-local evaluation is exact and
-    batch-slicing-invariant, and verdicts land batch-stamped (replay
-    overwrites).  `evals` is a static (eval_id, ev) frame — broadcast
-    into every batch join (sql) or collected once into a broadcast
-    matrix (blas; ValueError-gated small side)."""
+    with the batched-matmul arm of
+    similarity.semantic_decontam_crossjoin, the one that actually
+    serves suites in the thousands (measured: SQL expression arms —
+    HOF and cross-join alike — cost ~125 s at 10k evals × 10k vectors;
+    the BLAS arm 5 s cold / ~2 s warm, identical verdicts; similarity.py
+    docstring has the full measurement and the ulp-boundary analysis).
+    foreachBatch exists because the per-vector nearest-eval
+    re-aggregate (groupBy + struct-min) cannot ride an append-mode
+    streaming plan; the gate is stateless and per-row, so batch-local
+    evaluation is exact and batch-slicing-invariant, and verdicts land
+    batch-stamped (replay overwrites).  `evals` is a static (eval_id,
+    ev) frame, collected once into a broadcast matrix (ValueError-gated
+    small side)."""
     from fanstats_producer_spark.operators.similarity import (
         decontam_blas_prepare,
         semantic_decontam_crossjoin,
@@ -613,15 +612,11 @@ def streaming_decontam_crossjoin(
     # collect + broadcast the eval matrix ONCE, outside foreachBatch —
     # a per-batch re-collect would leak one broadcast per micro-batch
     # for the life of a long-running stream (r10 review finding)
-    prepared = (
-        decontam_blas_prepare(vectors.sparkSession, evals)
-        if scorer == "blas"
-        else None
-    )
+    prepared = decontam_blas_prepare(vectors.sparkSession, evals)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         verdicts = semantic_decontam_crossjoin(
-            batch_df, evals, scorer, prepared
+            batch_df, evals, "blas", prepared
         )
         _write_stamped(verdicts, verdict_dir, batch_id)
 
@@ -637,8 +632,6 @@ def write_partitioned_stream(
     df: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """s01 sink: checkpointed append to a partitioned layout.
     Trigger.AvailableNow preserves the reference's batch cadence
@@ -651,16 +644,15 @@ def write_partitioned_stream(
     # micro-batch exchange and gives each writer task a disjoint date
     # subset — same layout, same exactly-once manifest, N-way file IO.
     events = events.repartition("event_date")
-    writer = (
-        events.writeStream.format(fmt)
+    return (
+        events.writeStream.format("parquet")
         .option("checkpointLocation", checkpoint_dir)
         .option("path", out_dir)
         .partitionBy("event_date")
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def clicks_to_purchases_join(

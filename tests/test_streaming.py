@@ -2733,3 +2733,84 @@ def test_decontam_blas_repartitions_single_split_batch(spark):
     )
     out2 = _decontam_blas(wide, evals)
     assert out2.rdd.getNumPartitions() == target
+
+
+def test_driver_entries_harness_imports():
+    """The names bench.py's warm-ups and perfbench import from
+    driver_entries.  bench.py's warm-ups catch every exception and only
+    print WARN, so a rename would silently switch off its RocksDB, TWS
+    and stream-join warm-ups; this import fails loudly instead."""
+    from fanstats_producer_spark.streaming.driver_entries import (
+        _DOC_LANDING_CACHE,
+        _PARITY_LANDING_CACHE,
+        _few_partitions,
+        _rocksdb_state,
+        _skip_nodata_batch,
+    )
+
+    assert isinstance(_DOC_LANDING_CACHE, dict)
+    assert isinstance(_PARITY_LANDING_CACHE, dict)
+    for cm in (_few_partitions, _rocksdb_state, _skip_nodata_batch):
+        assert callable(cm)
+
+
+def test_drain_batch_precondition_and_conf_restore(spark, landing):
+    """`_drain` owns the batch-count precondition and the drain confs:
+    a two-file landing read one file per trigger drains as 2 data
+    micro-batches, so batches=(0, 1) raises naming the count and
+    batches=(2,) passes; a `start` that raises still leaves the shuffle
+    width, the no-data-batch flag and the state store provider as they
+    were."""
+    from fanstats_producer_spark.streaming.driver_entries import (
+        _drain,
+        _drain_memory,
+    )
+
+    _write_batch(landing, "a.json", [_event(i, f"2024-01-01T0{i}:00:00Z") for i in range(3)])
+    _write_batch(landing, "b.json", [_event(9, "2024-01-02T00:00:00Z")])
+
+    def stream():
+        return jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1)
+
+    with pytest.raises(AssertionError, match=r"observed 2 data micro-batches"):
+        _drain_memory(spark, stream(), "append", batches=(0, 1))
+    got = _drain_memory(spark, stream(), "append", batches=(2,))
+    assert got.count() == 4
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.stateStore.providerClass",
+    )
+    prior = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        inside = {}
+
+        def boom():
+            inside.update({k: spark.conf.get(k) for k in keys})
+            raise RuntimeError("start failed")
+
+        with pytest.raises(RuntimeError, match="start failed"):
+            _drain(spark, boom, partitions=3, rocksdb=True)
+        assert inside[keys[0]] == "3"
+        assert inside[keys[1]] == "false"
+        assert inside[keys[2]].endswith("RocksDBStateStoreProvider")
+        assert {k: spark.conf.get(k) for k in keys} == before
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior[keys[0]])
+
+
+def test_s01_s09_leave_no_scratch(spark, tmp_path, monkeypatch):
+    """s01 and s09 drain into a private work dir removed on return (the
+    result is read back eagerly first), so repeated calls leave
+    no checkpoint or sink behind on the scratch root."""
+    from conftest import SF_DIR
+
+    from fanstats_producer_spark import registry
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    for key, prefix in (("s01_stream_ingest", "s01_"), ("s09_upsert_state", "s09_")):
+        assert registry.QUERIES[key](spark, SF_DIR).collect()
+        assert not [p.name for p in tmp_path.iterdir() if p.name.startswith(prefix)]
