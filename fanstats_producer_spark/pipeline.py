@@ -10,7 +10,8 @@ Flow parity, step for step:
 A user of the reference runs `python main.py -d nba.yaml -p
 platforms.yaml`; here the same run is
 `python -m fanstats_producer_spark.pipeline --data-file nba.yaml
---platforms-file platforms.yaml --output /lake --fetcher demo`.
+--platforms-file platforms.yaml --output /lake` (offline, over the
+deterministic demo fetcher).
 The scheduled trigger (EventBridge cron, main.tf:214-218) maps to
 invoking this module from any scheduler — or switching the same
 transforms to readStream (streaming/jobs.py) for a continuous run.
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import argparse
 import datetime
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,13 +43,11 @@ def collect_twitter(
     cfg: DataFileConfig,
     fetch_page: FetchPage,
     start_time: str,
-    max_results: int = 3000,
 ) -> DataFrame:
     """The Twitter collector (main.py:162-200): paginated scan over the
     topic + aliases, source predicates applied declaratively."""
     topics = list(dict.fromkeys([cfg.topic, *cfg.aliases]))
-    src = PaginatedSource(spark, fetch_page, max_results=max_results)
-    df = src.scan(topics, start_time)
+    df = PaginatedSource(spark, fetch_page).scan(topics, start_time)
     return default_source_filters(df, topic=None)
 
 
@@ -60,22 +58,22 @@ def run_pipeline(
     output: str,
     fetch_page: FetchPage,
     now: datetime.datetime | None = None,
-    lookback_days: int = 1,
     extra_collectors: dict | None = None,
 ) -> dict[str, bool]:
     """One scheduled run.  Returns {platform: wrote_anything} — the
     empty-result guard outcome per platform (main.py:183-194).
 
+    This is the per-platform dispatch (main.py:203-219).
     ``extra_collectors`` registers additional platforms (the Facebook/
     Reddit sources the reference's architecture diagram plans but never
     implements): {platform_name: (spark) -> DataFrame}.  Each platform's
     frame must carry a ``created_at`` column for the partition layout;
     other columns may differ — the lake tolerates per-source schema
-    drift (JSON landing + mergeSchema read)."""
+    drift (JSON landing + mergeSchema read unions platforms by name)."""
     cfg = load_data_file(data_file)
     platforms = load_platforms(platforms_file)
     now = now or datetime.datetime.now(datetime.timezone.utc)
-    start_time = (now - datetime.timedelta(days=lookback_days)).strftime(
+    start_time = (now - datetime.timedelta(days=1)).strftime(
         "%Y-%m-%dT%H:%M:%SZ"
     )  # main.py:262-263 + isotime main.py:138
 
@@ -133,8 +131,6 @@ def main() -> None:
     ap.add_argument("-d", "--data-file", required=True)
     ap.add_argument("-p", "--platforms-file", required=True)
     ap.add_argument("-o", "--output", required=True)
-    ap.add_argument("-m", "--max-results", type=int, default=3000)
-    ap.add_argument("--fetcher", choices=["demo"], default="demo")
     args = ap.parse_args()
     spark = get_spark("fanstats-producer-pipeline")
     wrote = run_pipeline(

@@ -22,16 +22,18 @@ Twitter and Reddit, and this module models that shape faithfully:
 
 The HTTP seam is injectable exactly like sources/rest.py and
 sources/reddit.py (no network in this repo; tests inject a
-deterministic fake).  ``collector()`` adapts landed posts to the
-TWEET_SCHEMA column names so ``PlatformRegistry.collect_all`` unions
-Facebook rows with the Twitter and Reddit collectors' by name — one
+deterministic fake), and the cursor chain and fan-out are rest.py's
+``paginate``/``fan_out``.  ``normalize_posts`` adapts landed posts to
+the TWEET_SCHEMA column names; registered with
+``run_pipeline(extra_collectors={"Facebook": ...})``, Facebook rows
+land beside Twitter's and Reddit's and read back unioned by name — one
 pipeline, N platforms.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +43,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from fanstats_producer_spark.sources.ndjson import utc_rfc3339
+from fanstats_producer_spark.sources.rest import fan_out, paginate
 
 # fetch_feed(page_id, after, limit) ->
 #   (data: list[dict] post objects, after: str | None)
@@ -75,6 +80,33 @@ def _summary_count(post: dict, edge: str) -> int:
         return 0
 
 
+def _parse(page_id: str, post: dict) -> dict | None:
+    """One feed post → a FACEBOOK_POST_SCHEMA row, or None to skip it."""
+    if not isinstance(post, dict) or not post.get("id"):
+        # deleted/permission-stripped posts arrive as bare stubs; a row
+        # without an id is unusable — skip it rather than kill the scan
+        # (the rest.py tolerance contract: land what's landable)
+        return None
+    frm = post.get("from")
+    if not isinstance(frm, dict):  # stripped/odd author
+        frm = {}
+    try:
+        shares = int((post.get("shares") or {}).get("count") or 0)
+    except (TypeError, ValueError):
+        shares = 0
+    return {
+        "post_id": str(post["id"]),
+        "page": page_id,
+        "message": post.get("message", ""),
+        "author_id": frm.get("id"),
+        "author_name": frm.get("name"),
+        "created_time": post.get("created_time"),
+        "reactions": _summary_count(post, "reactions"),
+        "comments": _summary_count(post, "comments"),
+        "shares": shares,
+    }
+
+
 class FacebookFeedSource:
     def __init__(
         self,
@@ -88,58 +120,19 @@ class FacebookFeedSource:
         self.limit = min(limit, GRAPH_LIMIT)
         self.max_posts = max_posts
 
-    def _collect_page(self, page_id: str) -> list[dict]:
-        rows: list[dict] = []
-        after: str | None = None
-        seen_cursors: set[str] = set()
-        while len(rows) < self.max_posts:
-            before = len(rows)
-            data, after = self.fetch_feed(page_id, after, self.limit)
-            for post in data:
-                if not isinstance(post, dict) or not post.get("id"):
-                    # deleted/permission-stripped posts arrive as bare
-                    # stubs; a row without an id is unusable — skip it
-                    # rather than kill the scan (the rest.py tolerance
-                    # contract: land what's landable)
-                    continue
-                frm = post.get("from")
-                if not isinstance(frm, dict):  # stripped/odd author
-                    frm = {}
-                try:
-                    shares = int((post.get("shares") or {}).get("count") or 0)
-                except (TypeError, ValueError):
-                    shares = 0
-                rows.append(
-                    {
-                        "post_id": str(post["id"]),
-                        "page": page_id,
-                        "message": post.get("message", ""),
-                        "author_id": frm.get("id"),
-                        "author_name": frm.get("name"),
-                        "created_time": post.get("created_time"),
-                        "reactions": _summary_count(post, "reactions"),
-                        "comments": _summary_count(post, "comments"),
-                        "shares": shares,
-                    }
-                )
-            if not after:  # feed exhausted
-                break
-            # liveness guards (same contract as reddit.py): a server
-            # that keeps handing back a cursor over pages with no
-            # usable rows, or that repeats a cursor, must not spin the
-            # collector forever
-            if len(rows) == before or after in seen_cursors:
-                break
-            seen_cursors.add(after)
-        return rows[: self.max_posts]
-
     def scan(self, page_ids: list[str]) -> DataFrame:
-        """Pages fan out in parallel (each feed's cursor chain is
-        serial), landing as one schema-pinned DataFrame."""
-        with ThreadPoolExecutor(max_workers=max(len(page_ids), 1)) as pool:
-            per_page = list(pool.map(self._collect_page, page_ids))
-        all_rows = [r for rows in per_page for r in rows]
-        return self.spark.createDataFrame(all_rows, schema=FACEBOOK_POST_SCHEMA)
+        """One `after`-cursor chain per page, fanned out in parallel,
+        landing as one schema-pinned DataFrame."""
+        return fan_out(
+            self.spark,
+            page_ids,
+            lambda page_id: paginate(
+                lambda after: self.fetch_feed(page_id, after, self.limit),
+                functools.partial(_parse, page_id),
+                self.max_posts,
+            ),
+            FACEBOOK_POST_SCHEMA,
+        )
 
 
 def normalize_posts(posts: DataFrame) -> DataFrame:
@@ -147,25 +140,16 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
     names so the P9 union aligns: id, text (message), created_at
     (RFC-3339 ``Z`` milliseconds from the ``+0000``-offset string),
     author_id.  Platform-specific columns (page, reactions, comments,
-    shares) ride along — unionByName(allowMissingColumns=True)
-    null-fills them on the other platforms' sides.
+    shares) ride along — a mergeSchema read of the lake null-fills them
+    on the other platforms' sides.
 
-    The offset-aware parse makes the conversion timezone-invariant
-    (same concern as reddit.py's normalize_posts): ``to_timestamp``
-    with an explicit ``Z`` offset pattern anchors the instant, and
-    ``to_utc_timestamp(…, current_timezone())`` re-expresses the
-    session-zone wall clock back to UTC before formatting."""
+    ``to_timestamp`` with an explicit ``Z`` offset pattern anchors the
+    instant; ``ndjson.utc_rfc3339`` renders it in UTC."""
     return posts.select(
         F.col("post_id").alias("id"),
         F.col("message").alias("text"),
-        F.date_format(
-            F.to_utc_timestamp(
-                F.to_timestamp(
-                    F.col("created_time"), "yyyy-MM-dd'T'HH:mm:ssZ"
-                ),
-                F.expr("current_timezone()"),
-            ),
-            "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+        utc_rfc3339(
+            F.to_timestamp(F.col("created_time"), "yyyy-MM-dd'T'HH:mm:ssZ")
         ).alias("created_at"),
         "author_id",
         "page",
@@ -174,10 +158,3 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
         "shares",
     )
 
-
-def collector(
-    source: FacebookFeedSource, page_ids: list[str]
-) -> Callable[[SparkSession], DataFrame]:
-    """PlatformRegistry-shaped collector: register with
-    ``registry.register("Facebook", collector(src, ["nba"]))``."""
-    return lambda spark: normalize_posts(source.scan(page_ids))

@@ -18,7 +18,7 @@ S3 keys `<platform>/<topic>/YYYY/MM/DD/HH-MM-SS.json` (main.py:70-73,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -165,12 +165,26 @@ def default_source_filters(df: DataFrame, topic: str | None = None) -> DataFrame
     return out
 
 
-def with_partition_columns(
-    df: DataFrame, platform: str, topic: str, ts_col: str = "created_at"
-) -> DataFrame:
+def utc_rfc3339(ts: Column) -> Column:
+    """Render a timestamp column as RFC-3339 UTC milliseconds
+    (``yyyy-MM-ddTHH:mm:ss.SSSZ``, the Twitter ``created_at`` shape)
+    whatever ``spark.sql.session.timeZone`` is.
+
+    A bare date_format renders in the session time zone, so the literal
+    'Z' would lie on any non-UTC session (measured: Europe/Berlin shifts
+    the instant one hour); to_utc_timestamp re-expresses the session-zone
+    wall clock back to UTC first, making the composition
+    timezone-invariant."""
+    return F.date_format(
+        F.to_utc_timestamp(ts, F.expr("current_timezone()")),
+        "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+    )
+
+
+def with_partition_columns(df: DataFrame, platform: str, topic: str) -> DataFrame:
     """Derive the reference's partition keys (main.py:70-73, 184-191) as
-    named columns: platform/topic/year/month/day."""
-    ts = F.to_timestamp(F.col(ts_col))
+    named columns: platform/topic/year/month/day from ``created_at``."""
+    ts = F.to_timestamp(F.col("created_at"))
     return (
         df.withColumn("platform", F.lit(platform))
         .withColumn("topic", F.lit(topic))
@@ -180,29 +194,19 @@ def with_partition_columns(
     )
 
 
-def write_partitioned(
-    df: DataFrame, path: str, fmt: str = "json", mode: str = "append"
-) -> bool:
-    """Partitioned append sink (P6+P7).  Returns False (and skips the
-    write) on empty input — the reference's "No Twitter data found"
+def write_partitioned(df: DataFrame, path: str) -> bool:
+    """Partitioned NDJSON append sink (P6+P7).  Returns False (and skips
+    the write) on empty input — the reference's "No Twitter data found"
     guard (main.py:183-194).
 
     At scale: named Hive partitions give free partition pruning on
-    read; `json` keeps byte-parity with the reference's landing zone,
-    `parquet` is what the Q-layer actually wants.
+    read; `json` keeps byte-parity with the reference's landing zone.
     """
     if df.isEmpty():
         return False
     (
-        df.write.mode(mode)
+        df.write.mode("append")
         .partitionBy("platform", "topic", "year", "month", "day")
-        .format(fmt)
-        .save(path)
+        .json(path)
     )
     return True
-
-
-def lookback_filter(df: DataFrame, days: int = 1, ts_col: str = "created_at") -> DataFrame:
-    """The 24-hour lookback bound (P3, main.py:262-263) generalized."""
-    ts = F.to_timestamp(F.col(ts_col))
-    return df.filter(ts >= F.current_timestamp() - F.expr(f"INTERVAL {days} DAY"))

@@ -17,16 +17,18 @@ search API, and this module models that shape faithfully:
   RESULTS_PER_PAGE clamp.
 
 The HTTP seam is injectable exactly like sources/rest.py (no network
-in this repo; tests inject a deterministic fake).  ``collector()``
-adapts the landed posts to the TWEET_SCHEMA column names so
-``PlatformRegistry.collect_all`` unions Reddit rows with the Twitter
-collector's by name — one pipeline, N platforms.
+in this repo; tests inject a deterministic fake), and the cursor chain
+and fan-out are rest.py's ``paginate``/``fan_out``.  ``normalize_posts``
+adapts the landed posts to the TWEET_SCHEMA column names; registered
+with ``run_pipeline(extra_collectors={"Reddit": ...})``, Reddit rows
+land in the same lake as Twitter's and read back unioned by name — one
+pipeline, N platforms.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +39,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from fanstats_producer_spark.sources.ndjson import utc_rfc3339
+from fanstats_producer_spark.sources.rest import fan_out, paginate
 
 # fetch_listing(subreddit, after, limit) ->
 #   (children: list[dict] with the kind/data envelope, after: str | None)
@@ -59,6 +64,43 @@ REDDIT_POST_SCHEMA = StructType(
 )
 
 
+def _parse(subreddit: str, child: dict) -> dict | None:
+    """One listing child → a REDDIT_POST_SCHEMA row, or None to skip it."""
+    if child.get("kind") != "t3":  # only link/self posts
+        return None
+    d = child.get("data") or {}
+    if not d.get("id"):
+        # removed/deleted posts can arrive field-stripped; a row without
+        # an id is unusable — skip it rather than kill the whole scan
+        # (the rest.py tolerance contract: land what's landable)
+        return None
+    # per-row tolerance: a malformed numeric field nulls / zeroes that
+    # field instead of killing the whole scan
+    cu = d.get("created_utc")
+    try:
+        cu = float(cu) if cu is not None else None
+    except (TypeError, ValueError):
+        cu = None
+    try:
+        score = int(d.get("score") or 0)
+    except (TypeError, ValueError):
+        score = 0
+    try:
+        num_comments = int(d.get("num_comments") or 0)
+    except (TypeError, ValueError):
+        num_comments = 0
+    return {
+        "post_id": d["id"],
+        "subreddit": d.get("subreddit", subreddit),
+        "title": d.get("title", ""),
+        "selftext": d.get("selftext", ""),
+        "author": d.get("author"),
+        "created_utc": cu,
+        "score": score,
+        "num_comments": num_comments,
+    }
+
+
 class RedditListingSource:
     def __init__(
         self,
@@ -72,69 +114,19 @@ class RedditListingSource:
         self.limit = min(limit, LISTING_LIMIT)
         self.max_posts = max_posts
 
-    def _collect_subreddit(self, subreddit: str) -> list[dict]:
-        rows: list[dict] = []
-        after: str | None = None
-        seen_cursors: set[str] = set()
-        while len(rows) < self.max_posts:
-            before = len(rows)
-            children, after = self.fetch_listing(subreddit, after, self.limit)
-            for child in children:
-                if child.get("kind") != "t3":  # only link/self posts
-                    continue
-                d = child.get("data") or {}
-                if not d.get("id"):
-                    # removed/deleted posts can arrive field-stripped;
-                    # a row without an id is unusable — skip it rather
-                    # than kill the whole scan (the rest.py tolerance
-                    # contract: land what's landable)
-                    continue
-                # per-row tolerance: a malformed numeric field nulls /
-                # zeroes that field instead of killing the whole scan
-                # (the rest.py contract: land what's landable)
-                cu = d.get("created_utc")
-                try:
-                    cu = float(cu) if cu is not None else None
-                except (TypeError, ValueError):
-                    cu = None
-                try:
-                    score = int(d.get("score") or 0)
-                except (TypeError, ValueError):
-                    score = 0
-                try:
-                    num_comments = int(d.get("num_comments") or 0)
-                except (TypeError, ValueError):
-                    num_comments = 0
-                rows.append(
-                    {
-                        "post_id": d["id"],
-                        "subreddit": d.get("subreddit", subreddit),
-                        "title": d.get("title", ""),
-                        "selftext": d.get("selftext", ""),
-                        "author": d.get("author"),
-                        "created_utc": cu,
-                        "score": score,
-                        "num_comments": num_comments,
-                    }
-                )
-            if not after:  # listing exhausted
-                break
-            # liveness guards: a server that keeps handing back a
-            # cursor while yielding pages with no usable rows (all
-            # filtered), or that repeats a cursor, must not spin the
-            # collector forever
-            if len(rows) == before or after in seen_cursors:
-                break
-            seen_cursors.add(after)
-        return rows[: self.max_posts]
-
     def scan(self, subreddits: list[str]) -> DataFrame:
-        """Subreddits fan out in parallel (each listing's cursor chain
-        is serial), landing as one schema-pinned DataFrame."""
-        with ThreadPoolExecutor(max_workers=max(len(subreddits), 1)) as pool:
-            per_sub = list(pool.map(self._collect_subreddit, subreddits))
-        all_rows = [r for rows in per_sub for r in rows]
-        return self.spark.createDataFrame(all_rows, schema=REDDIT_POST_SCHEMA)
+        """One `after`-cursor chain per subreddit, fanned out in
+        parallel, landing as one schema-pinned DataFrame."""
+        return fan_out(
+            self.spark,
+            subreddits,
+            lambda sub: paginate(
+                lambda after: self.fetch_listing(sub, after, self.limit),
+                functools.partial(_parse, sub),
+                self.max_posts,
+            ),
+            REDDIT_POST_SCHEMA,
+        )
 
 
 def normalize_posts(posts: DataFrame) -> DataFrame:
@@ -142,8 +134,8 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
     names so the P9 union aligns: id, text (title + selftext),
     created_at (RFC-3339 from epoch seconds), author_id.  Platform-
     specific columns (subreddit, score, num_comments) ride along —
-    unionByName(allowMissingColumns=True) null-fills them on the
-    Twitter side, exactly the drift the dispatch layer tolerates."""
+    a mergeSchema read of the lake null-fills them on the Twitter
+    side, exactly the drift the lake tolerates."""
     return posts.select(
         F.col("post_id").alias("id"),
         F.when(
@@ -152,28 +144,10 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
         )
         .otherwise(F.col("title"))
         .alias("text"),
-        # render the instant in UTC regardless of the session timezone
-        # (a bare date_format renders in spark.sql.session.timeZone, so
-        # the literal 'Z' would lie on any non-UTC session — measured:
-        # Europe/Berlin shifts the instant one hour); to_utc_timestamp
-        # re-expresses the session-zone wall clock back to UTC, making
-        # the composition timezone-invariant
-        F.date_format(
-            F.to_utc_timestamp(
-                F.timestamp_seconds("created_utc"), F.expr("current_timezone()")
-            ),
-            "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
-        ).alias("created_at"),
+        utc_rfc3339(F.timestamp_seconds("created_utc")).alias("created_at"),
         F.col("author").alias("author_id"),
         "subreddit",
         "score",
         "num_comments",
     )
 
-
-def collector(
-    source: RedditListingSource, subreddits: list[str]
-) -> Callable[[SparkSession], DataFrame]:
-    """PlatformRegistry-shaped collector: register with
-    ``registry.register("reddit", collector(src, ["nba"]))``."""
-    return lambda spark: normalize_posts(source.scan(subreddits))

@@ -3,17 +3,21 @@
 The reference's `write_tweets` loop (reference main.py:122-160) pulls
 ≤RESULTS_PER_PAGE rows per request, follows `meta.next_token`, and stops
 at MAX_RESULTS (main.py:136, 156-160).  This module reproduces those
-semantics as a Spark source:
+semantics as a Spark source, and owns the two steps every collector
+shares:
 
+- `paginate` walks one cursor chain: the reference's loop plus the
+  liveness guards it lacks (a page with no usable row, or a repeated
+  cursor, ends the chain instead of spinning until the cap).
+- `fan_out` runs one chain per key (topic, subreddit, page) in
+  parallel — the axis the reference leaves on the table (it loops
+  topics sequentially in one process, main.py:214) — and lands every
+  chain's rows as one schema-pinned DataFrame.
 - `PaginatedSource` takes an injectable `fetch_page` callable (the
   seam where the real authenticated HTTP GET, main.py:114-120, plugs
   in; tests inject a deterministic fake — no network in this repo).
-- Pagination is cursor-serial per topic (the API forces that), but
-  topics fan out in parallel — the axis the reference leaves on the
-  table (it loops topics sequentially in one process, main.py:214).
-- Each page lands as rows with the pinned TWEET_SCHEMA; pages
-  accumulate via unionByName and the cap is enforced exactly like
-  main.py:136 (stop counting, then LIMIT).
+  Rows land as-is with the pinned TWEET_SCHEMA; the cap is enforced
+  exactly like main.py:136 (stop fetching, then truncate).
 
 Scale note: a production deployment would wrap this as a DataSourceV2
 reader with SupportsPushDownFilters/RequiredColumns so the query-string
@@ -28,6 +32,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
 
@@ -37,6 +42,45 @@ FetchPage = Callable[[str, str, str | None, int], tuple[list[dict], str | None]]
 
 RESULTS_PER_PAGE = 100  # main.py:6-12
 MAX_RESULTS = 3000  # main.py:13-19
+
+
+def paginate(
+    fetch: Callable[[str | None], tuple[list, str | None]],
+    parse: Callable[[object], object | None],
+    cap: int,
+) -> list:
+    """Follow one cursor chain: ``fetch(cursor) -> (items, next_cursor)``
+    from cursor None, ``parse(item)`` each item to a row (None skips it),
+    and return at most ``cap`` rows in chain order.
+
+    The chain ends when the cursor is falsy (main.py:156-160), the cap is
+    reached (main.py:136), a page adds no usable row, or a cursor repeats
+    — so a server that hands back a live cursor over empty or filtered
+    pages, or never advances it, cannot spin the collector."""
+    rows: list = []
+    cursor: str | None = None
+    seen: set[str] = set()
+    while len(rows) < cap:
+        before = len(rows)
+        items, cursor = fetch(cursor)
+        rows.extend(row for row in map(parse, items) if row is not None)
+        if not cursor or len(rows) == before or cursor in seen:
+            break
+        seen.add(cursor)
+    return rows[:cap]
+
+
+def fan_out(
+    spark: SparkSession,
+    keys: list[str],
+    collect: Callable[[str], list],
+    schema: StructType,
+) -> DataFrame:
+    """``collect`` every key in parallel (each key's cursor chain stays
+    serial) and land all rows, in key order, as one DataFrame."""
+    with ThreadPoolExecutor(max_workers=max(len(keys), 1)) as pool:
+        per_key = list(pool.map(collect, keys))
+    return spark.createDataFrame([r for rows in per_key for r in rows], schema=schema)
 
 
 class PaginatedSource:
@@ -53,22 +97,16 @@ class PaginatedSource:
         self.page_size = min(page_size, RESULTS_PER_PAGE)
         self.max_results = max_results
 
-    def _collect_topic(self, topic: str, start_time: str) -> list[dict]:
-        rows: list[dict] = []
-        next_token: str | None = None
-        while len(rows) < self.max_results:  # main.py:136
-            page, next_token = self.fetch_page(
-                topic, start_time, next_token, self.page_size
-            )
-            rows.extend(page)
-            if next_token is None:  # main.py:156-160
-                break
-        return rows[: self.max_results]
-
     def scan(self, topics: list[str], start_time: str) -> DataFrame:
-        """Fan out topics in parallel (each topic's cursor chain is
-        serial), land all pages as one schema-pinned DataFrame."""
-        with ThreadPoolExecutor(max_workers=max(len(topics), 1)) as pool:
-            per_topic = list(pool.map(lambda t: self._collect_topic(t, start_time), topics))
-        all_rows = [r for rows in per_topic for r in rows]
-        return self.spark.createDataFrame(all_rows, schema=TWEET_SCHEMA)
+        """One cursor chain per topic, fanned out in parallel; tweets
+        land unchanged with the pinned TWEET_SCHEMA."""
+        return fan_out(
+            self.spark,
+            topics,
+            lambda topic: paginate(
+                lambda cursor: self.fetch_page(topic, start_time, cursor, self.page_size),
+                lambda tweet: tweet,
+                self.max_results,
+            ),
+            TWEET_SCHEMA,
+        )

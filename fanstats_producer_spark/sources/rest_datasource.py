@@ -3,9 +3,9 @@
 
 `spark.read.format("fanstats_rest").option("topics", "NBA,NFL")` plans
 one *input partition per topic*: pagination is cursor-serial inside a
-partition (the API forces it) but topics scan in parallel across
-executors — the parallelism axis the reference's single process leaves
-unused (reference main.py:214).  The page clamp and result cap
+partition (rest.paginate, liveness guards included) but topics scan in
+parallel across executors — the parallelism axis the reference's
+single process leaves unused (reference main.py:214).  The page clamp and result cap
 (main.py:95-96, 136) are reader options, and the lookback start_time
 (main.py:263) is pushed into every request — source-side predicates,
 not post-filters.
@@ -17,6 +17,10 @@ offline.  Everything lands with the pinned TWEET_SCHEMA.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import uuid
 from collections.abc import Callable, Iterator
 
 from pyspark.sql.datasource import (
@@ -31,7 +35,7 @@ from pyspark.sql.datasource import (
 )
 
 from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
-from fanstats_producer_spark.sources.rest import FetchPage
+from fanstats_producer_spark.sources.rest import FetchPage, paginate
 
 # Name → fetcher factory.  Module-level so executor-side deserialization
 # can resolve it by name (options travel as strings).
@@ -104,19 +108,12 @@ class RestReader(DataSourceReader):
 
     def read(self, partition: TopicPartition) -> Iterator[tuple]:
         fetch = self.fetcher_factory()
-        n, next_token = 0, None
         field_names = [f.name for f in TWEET_SCHEMA.fields]
-        while n < self.max_results:
-            rows, next_token = fetch(
-                partition.topic, self.start_time, next_token, self.page_size
-            )
-            for r in rows:
-                if n >= self.max_results:
-                    break
-                yield tuple(_to_row_value(r.get(name)) for name in field_names)
-                n += 1
-            if next_token is None:
-                break
+        yield from paginate(
+            lambda cursor: fetch(partition.topic, self.start_time, cursor, self.page_size),
+            lambda r: tuple(_to_row_value(r.get(name)) for name in field_names),
+            self.max_results,
+        )
 
 
 def _to_row_value(v):
@@ -221,56 +218,64 @@ class _StagedUpload(WriterCommitMessage):
         self.n_rows = n_rows
 
 
+def _staging_path(dest: str, ext: str) -> str:
+    staging = os.path.join(dest, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    return os.path.join(staging, f"{uuid.uuid4().hex}.{ext}")
+
+
+def _promote(dest: str, messages, name: str) -> tuple[int, int]:
+    """Promote the tasks' staged files into ``dest`` as ``name.format(i)``
+    and return (files, rows).  Zero-row staged files are dropped instead:
+    the reference's empty-result guard (main.py:183-194) — nothing to
+    upload, no object created."""
+    files = rows = 0
+    for m in messages:
+        if m is None:
+            continue
+        if m.n_rows == 0:
+            os.remove(m.staged)
+            continue
+        os.replace(m.staged, os.path.join(dest, name.format(files)))
+        files += 1
+        rows += m.n_rows
+    return files, rows
+
+
+def _discard(messages) -> None:
+    """Remove whatever staged files the tasks left (the abort path)."""
+    for m in messages:
+        if m is not None and os.path.exists(m.staged):
+            os.remove(m.staged)
+
+
 class UploadWriter(DataSourceWriter):
+    ext = "json"
+
     def __init__(self, options: dict, overwrite: bool) -> None:
         self.dest = options["dest"]
         self.overwrite = overwrite
 
     def write(self, iterator) -> _StagedUpload:
-        import json as _json
-        import os
-        import uuid
-
-        staging = os.path.join(self.dest, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        path = os.path.join(staging, uuid.uuid4().hex + ".json")
+        path = _staging_path(self.dest, self.ext)
         n = 0
         with open(path, "w") as f:
             for row in iterator:
-                f.write(_json.dumps(row.asDict(recursive=True), default=str) + "\n")
+                f.write(json.dumps(row.asDict(recursive=True), default=str) + "\n")
                 n += 1
         return _StagedUpload(staged=path, n_rows=n)
 
     def commit(self, messages) -> None:
-        import json as _json
-        import os
-
         if self.overwrite:
             for name in os.listdir(self.dest):
                 if name.startswith("part-") or name == "_SUCCESS":
                     os.remove(os.path.join(self.dest, name))
-        total = 0
-        part = 0
-        for m in messages:
-            if m is None:
-                continue
-            if m.n_rows == 0:
-                # the reference's empty-result guard (main.py:183-194):
-                # nothing to upload -> no object created
-                os.remove(m.staged)
-                continue
-            os.replace(m.staged, os.path.join(self.dest, f"part-{part:05d}.json"))
-            part += 1
-            total += m.n_rows
+        files, rows = _promote(self.dest, messages, "part-{:05d}." + self.ext)
         with open(os.path.join(self.dest, "_SUCCESS"), "w") as f:
-            f.write(_json.dumps({"rows": total, "files": part}))
+            json.dump({"rows": rows, "files": files}, f)
 
     def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)
+        _discard(messages)
 
 
 class UploadStreamWriter(DataSourceStreamWriter):
@@ -287,65 +292,37 @@ class UploadStreamWriter(DataSourceStreamWriter):
         return UploadWriter({"dest": self.dest}, overwrite=False).write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        import glob
-        import json as _json
-        import os
-
         # A replayed batch may produce fewer parts than a previously
         # half-committed attempt; clear every file this batch id could have
         # left (parts AND manifest) so stale higher-numbered parts can't
         # survive next to the new manifest and double-count rows.
-        for stale in glob.glob(
-            os.path.join(self.dest, f"batch-{batchId:05d}-part-*")
-        ) + glob.glob(os.path.join(self.dest, f"_batch-{batchId:05d}.manifest")):
+        batch = f"batch-{batchId:05d}"
+        for stale in glob.glob(os.path.join(self.dest, f"{batch}-part-*")) + glob.glob(
+            os.path.join(self.dest, f"_{batch}.manifest")
+        ):
             os.remove(stale)
-
-        total = 0
-        part = 0
-        for m in messages:
-            if m is None:
-                continue
-            if m.n_rows == 0:
-                os.remove(m.staged)
-                continue
-            os.replace(
-                m.staged,
-                os.path.join(self.dest, f"batch-{batchId:05d}-part-{part:05d}.json"),
-            )
-            part += 1
-            total += m.n_rows
-        with open(os.path.join(self.dest, f"_batch-{batchId:05d}.manifest"), "w") as f:
-            f.write(_json.dumps({"batch": batchId, "rows": total, "files": part}))
+        files, rows = _promote(self.dest, messages, batch + "-part-{:05d}.json")
+        with open(os.path.join(self.dest, f"_{batch}.manifest"), "w") as f:
+            json.dump({"batch": batchId, "rows": rows, "files": files}, f)
 
     def abort(self, messages, batchId: int) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)
+        _discard(messages)
 
 
-class UploadArrowWriter(DataSourceArrowWriter):
+class UploadArrowWriter(UploadWriter, DataSourceArrowWriter):
     """Arrow-batch arm of the committing sink: tasks receive PyArrow
     RecordBatches (zero per-row Python objects — the Arrow columnar
     transfer the row writer pays per-Row conversion for) and stage one
-    parquet file per task; the commit/abort protocol is shared with
-    UploadWriter.  Select with option("format", "arrow-parquet")."""
+    parquet file per task; the commit/abort protocol is UploadWriter's.
+    Select with option("format", "arrow-parquet")."""
 
-    def __init__(self, options: dict, overwrite: bool) -> None:
-        self.dest = options["dest"]
-        self.overwrite = overwrite
+    ext = "parquet"
 
     def write(self, iterator) -> _StagedUpload:
-        import os
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        staging = os.path.join(self.dest, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        path = os.path.join(staging, uuid.uuid4().hex + ".parquet")
+        path = _staging_path(self.dest, self.ext)
         writer = None
         n = 0
         for batch in iterator:
@@ -360,32 +337,3 @@ class UploadArrowWriter(DataSourceArrowWriter):
         else:
             writer.close()
         return _StagedUpload(staged=path, n_rows=n)
-
-    def commit(self, messages) -> None:
-        import json as _json
-        import os
-
-        if self.overwrite:
-            for name in os.listdir(self.dest):
-                if name.startswith("part-") or name == "_SUCCESS":
-                    os.remove(os.path.join(self.dest, name))
-        total = 0
-        part = 0
-        for m in messages:
-            if m is None:
-                continue
-            if m.n_rows == 0:
-                os.remove(m.staged)
-                continue
-            os.replace(m.staged, os.path.join(self.dest, f"part-{part:05d}.parquet"))
-            part += 1
-            total += m.n_rows
-        with open(os.path.join(self.dest, "_SUCCESS"), "w") as f:
-            f.write(_json.dumps({"rows": total, "files": part}))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)
