@@ -90,7 +90,7 @@ def _parse(subreddit: str, child: dict) -> dict | None:
     except (TypeError, ValueError):
         num_comments = 0
     return {
-        "post_id": d["id"],
+        "post_id": str(d["id"]),
         "subreddit": d.get("subreddit", subreddit),
         "title": d.get("title", ""),
         "selftext": d.get("selftext", ""),

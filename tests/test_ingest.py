@@ -558,6 +558,137 @@ def test_trace_instrument_wraps_each_scan_once(spark):
     assert [cls.__dict__["scan"] for cls in classes] == originals
 
 
+# --- Arrow landing (rest.fan_out) ---------------------------------------------
+_BASE = {"id": "1", "text": "t", "created_at": "2024-01-15T12:00:00.000Z", "lang": "en"}
+
+
+def _fan_out_tweets(spark, rows):
+    from fanstats_producer_spark.sources.rest import fan_out
+
+    return fan_out(spark, ["NBA"], lambda topic: rows, TWEET_SCHEMA)
+
+
+def test_scans_land_without_python_rdd(spark):
+    """Every collector's frame is a JVM collection of Arrow batches: no
+    PythonRDD in its lineage, so the empty-result guard and the write
+    over it start no Python worker."""
+    from fanstats_producer_spark.sources import facebook, reddit
+
+    scans = {
+        "Twitter": PaginatedSource(
+            spark, _fake_fetch({"NBA": [[_tweet(i, 10) for i in range(5)]]})
+        ).scan(["NBA"], "t0"),
+        "Reddit": reddit.RedditListingSource(spark, _fake_reddit(5)).scan(["nba"]),
+        "Facebook": facebook.FacebookFeedSource(spark, _fake_facebook(5)).scan(["espn"]),
+    }
+    for platform, df in scans.items():
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, (platform, lineage)
+        assert df.count() == 5, platform
+
+
+def test_reddit_numeric_id_lands_as_string(spark):
+    from fanstats_producer_spark.sources.reddit import RedditListingSource
+
+    def fetch(subreddit, after, limit):
+        return [{"kind": "t3", "data": {"id": 5, "title": "t"}}], None
+
+    out = RedditListingSource(spark, fetch).scan(["nba"]).collect()
+    assert [r.post_id for r in out] == ["5"]
+
+
+def test_fan_out_row_tolerance(spark):
+    """Extra keys are ignored and missing keys land as null, top-level
+    and nested; a bad value in an int field raises the same error class
+    as createDataFrame over the list of rows, before any Spark job."""
+    from pyspark.errors import PySparkException
+
+    rows = [
+        dict(_BASE, extra=1, public_metrics={"like_count": 3, "views": 9},
+             entities={"hashtags": [{"start": 0, "end": 4, "tag": "nba", "x": 1}]}),
+        {"id": "2"},
+    ]
+    assert _fan_out_tweets(spark, rows).toJSON().collect() == [
+        '{"id":"1","text":"t","created_at":"2024-01-15T12:00:00.000Z","lang":"en",'
+        '"public_metrics":{"like_count":3},'
+        '"entities":{"hashtags":[{"start":0,"end":4,"tag":"nba"}]}}',
+        '{"id":"2"}',
+    ]
+
+    sc = spark.sparkContext
+    group = "fan-out-row-tolerance"
+    sc.setJobGroup(group, "bad rows")
+    try:
+        for bad, condition in [
+            ("5", "FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME"),
+            (True, "FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME"),
+            (2**31, "VALUE_OUT_OF_BOUNDS"),
+            (5.0, "FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME"),
+        ]:
+            with pytest.raises(PySparkException) as err:
+                _fan_out_tweets(spark, [dict(_BASE, public_metrics={"like_count": bad})])
+            assert err.value.getCondition() == condition, bad
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        _fan_out_tweets(spark, [_BASE]).count()  # the group does see jobs
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.mark.parametrize("field, value", [("id", 5), ("text", 1.5), ("lang", True)])
+def test_fan_out_rejects_non_string_scalar_in_string_field(spark, field, value):
+    """The one change from landing a list of rows: the JVM turned a
+    non-string scalar in a string field into its toString ("5", "1.5",
+    "true"); the Arrow build raises instead of landing those bytes."""
+    import pyarrow as pa
+
+    with pytest.raises(pa.ArrowTypeError):
+        _fan_out_tweets(spark, [dict(_BASE, **{field: value})])
+
+
+def test_twitter_page_lands_exact_ndjson(spark, tmp_path):
+    """A page with nested public_metrics, a hashtag without a tag and
+    null entities lands these exact lines under the partition dirs;
+    a scan that collects no row writes nothing."""
+    metrics = {"retweet_count": 1, "reply_count": 2, "like_count": 3, "quote_count": 4}
+    page = [
+        dict(_BASE, public_metrics=metrics, entities={"hashtags": [
+            {"start": 0, "end": 4, "tag": None}, {"start": 5, "end": 9, "tag": "NBA"}]}),
+        dict(_BASE, id="2", created_at="2024-01-16T01:02:03.000Z",
+             public_metrics=metrics, entities=None),
+    ]
+    out = str(tmp_path / "lake")
+    df = PaginatedSource(spark, _fake_fetch({"NBA": [page]})).scan(["NBA"], "t0")
+    assert write_partitioned(with_partition_columns(df, platform="Twitter", topic="NBA"), out)
+    landed: dict[str, list[str]] = {}
+    for root, _, files in os.walk(out):
+        for name in files:
+            if name.endswith(".json"):
+                with open(os.path.join(root, name)) as f:
+                    landed.setdefault(os.path.relpath(root, out), []).extend(f.read().splitlines())
+    day = "platform=Twitter/topic=NBA/year=2024/month=01/day="
+    pm = '"public_metrics":{"retweet_count":1,"reply_count":2,"like_count":3,"quote_count":4}'
+    assert landed == {
+        day + "15": [
+            '{"id":"1","text":"t","created_at":"2024-01-15T12:00:00.000Z","lang":"en",'
+            + pm + ',"entities":{"hashtags":[{"start":0,"end":4},'
+            '{"start":5,"end":9,"tag":"NBA"}]}}'
+        ],
+        day + "16": [
+            '{"id":"2","text":"t","created_at":"2024-01-16T01:02:03.000Z","lang":"en",'
+            + pm + "}"
+        ],
+    }
+
+    never = str(tmp_path / "never")
+    empty = PaginatedSource(spark, _fake_fetch({"NBA": [[]]})).scan(["NBA"], "t0")
+    assert not write_partitioned(
+        with_partition_columns(empty, platform="Twitter", topic="NBA"), never
+    )
+    assert not os.path.exists(never)
+
+
 def test_corrupt_records_tolerated(spark, tmp_path):
     """PERMISSIVE ingest: malformed NDJSON lines land in _corrupt_record
     instead of failing the job (the reference appends API responses
