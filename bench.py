@@ -99,9 +99,6 @@ def main() -> None:
     # column-family setup (~1 s) that every later drain skips — warm it
     # on a 100-row throwaway stream so s15 measures the steady state,
     # the same treatment the scan/codegen/UDF paths get above.
-    import shutil as _sh
-    import tempfile as _tf
-
     from fanstats_producer_spark.streaming.driver_entries import (
         _few_partitions,
         _rocksdb_state,

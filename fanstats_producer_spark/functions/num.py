@@ -23,13 +23,6 @@ def dsum(col: Column | str) -> Column:
     return F.sum(c.cast(DEC)).cast("double")
 
 
-def davg(col: Column | str, scale: int = 6) -> Column:
-    """avg = exact-decimal sum / count, rounded — deterministic because
-    both operands are bit-identical across engines."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(dsum(c) / F.count(c), scale)
-
-
 def sql_dsum(expr: str) -> str:
     """DuckDB mirror of :func:`dsum`."""
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
@@ -68,18 +61,6 @@ def dsum_pos(col: Column | str) -> Column:
     return total.cast("double") / _M
 
 
-def davg_pos(col: Column | str, scale: int = 6) -> Column:
-    """avg over :func:`dsum_pos` — same contract as davg for nonnegative
-    inputs."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(dsum_pos(c) / F.count(c), scale)
-
-
-def sql_davg_pos(expr: str, scale: int = 6) -> str:
-    """DuckDB mirror of :func:`davg_pos`."""
-    return f"ROUND({sql_dsum_pos(expr)} / COUNT({expr}), {scale})"
-
-
 def sql_dsum_pos(expr: str) -> str:
     """DuckDB mirror of :func:`dsum_pos` (SUM over BIGINT is HUGEINT in
     DuckDB, so the digit sums recombine exactly with no explicit cast)."""
@@ -89,11 +70,6 @@ def sql_dsum_pos(expr: str) -> str:
         f" + SUM(({v} >> {_B}) & {_MASK}) * CAST({1 << _B} AS HUGEINT)"
         f" + SUM({v} & {_MASK}) AS DOUBLE) / {_M}"
     )
-
-
-def sql_davg(expr: str, scale: int = 6) -> str:
-    """DuckDB mirror of :func:`davg`."""
-    return f"ROUND({sql_dsum(expr)} / COUNT({expr}), {scale})"
 
 
 # --- integer quantization for query OUTPUT columns -----------------------------
@@ -118,18 +94,6 @@ def qint(col: Column | str, scale: int = 6) -> Column:
 def sql_qint(expr: str, scale: int = 6) -> str:
     """DuckDB mirror of :func:`qint`."""
     return f"CAST(floor(CAST(({expr}) AS DOUBLE) * 1e{scale} + 0.5) AS BIGINT)"
-
-
-def qavg(col: Column | str, scale: int = 6) -> Column:
-    """Integer-quantized exact average: qint over dsum/count — the
-    output-column form of :func:`davg` (no engine round() anywhere)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return qint(dsum(c) / F.count(c), scale)
-
-
-def sql_qavg(expr: str, scale: int = 6) -> str:
-    """DuckDB mirror of :func:`qavg`."""
-    return sql_qint(f"{sql_dsum(expr)} / COUNT({expr})", scale)
 
 
 def qavg_pos(col: Column | str, scale: int = 6) -> Column:

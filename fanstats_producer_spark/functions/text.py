@@ -5,25 +5,21 @@ counting, document fingerprinting.
 T1/T2 are the reference's declared-but-unimplemented Comprehend stage
 (reference main.tf:100-104 grants comprehend:BatchDetectSentiment /
 BatchDetectKeyPhrases; no code calls it — contrast main.py:39).  We
-implement them natively: sentiment as an Arrow-batched pandas UDF
-(mirroring Comprehend's Batch* call shape), key phrases as pure
-built-ins (split→explode→count→top-k).
+implement them natively on built-in expressions: sentiment as
+per-document lexicon hit counts, key phrases as
+split→explode→count→top-k.
 
 All scoring is deterministic and lexicon-based so results are auditable
-and oracle-checkable; swapping in a real model is a one-function change
-(the pandas UDF boundary is the extension point).  The batched
-Spark-side sentiment architecture follows the pattern of
-"Large Scale Sentiment Analysis on Twitter with Spark" (EDBT 2016 —
-PAPERS.md): tweet-level lexicon scoring parallelized over partitions.
+and oracle-checkable.  The Spark-side sentiment architecture follows the
+pattern of "Large Scale Sentiment Analysis on Twitter with Spark" (EDBT
+2016 — PAPERS.md): tweet-level lexicon scoring parallelized over
+partitions.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from fanstats_producer_spark.functions.num import qint, sql_qint
 from fanstats_producer_spark.io import load, spread
@@ -40,28 +36,6 @@ _STOP_SQL = "('a', 'the')"
 
 
 # --- x01: sentiment (T1; Comprehend BatchDetectSentiment stand-in) ------------
-@F.pandas_udf(DoubleType())
-def sentiment_score(texts: pd.Series) -> pd.Series:
-    """Polarity in [-1, 1]: (pos_hits - neg_hits) / n_tokens — RAW double.
-
-    Batched like Comprehend's BatchDetectSentiment (reference
-    main.tf:101): one Arrow batch in, one vector of scores out.  This is
-    the model extension point (swap in a real classifier here); the
-    REGISTERED x01 query uses the built-in-expression arm below — same
-    math, zero Python in the hot path (~3x faster at sf0.1) — and a
-    pytest asserts the two arms agree bit-for-bit.
-    """
-    pos, neg = set(POSITIVE), set(NEGATIVE)
-
-    def score(t: str) -> float:
-        toks = t.split(" ")
-        p = sum(1 for x in toks if x in pos)
-        n = sum(1 for x in toks if x in neg)
-        return (p - n) / len(toks)
-
-    return texts.map(score)
-
-
 @query(
     "x01_sentiment",
     oracle=f"""
@@ -135,8 +109,8 @@ def x02_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x08_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-density language heuristic (the fixture vocabulary is
     synthetic English-ish tokens, so the only separable signal is English
-    function-word density; a real deployment drops a fastText-style model
-    into the same pandas-UDF slot as x01)."""
+    function-word density; a real deployment would swap in a
+    fastText-style model behind a pandas UDF)."""
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     stop_hits = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))

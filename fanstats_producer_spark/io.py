@@ -1,15 +1,24 @@
-"""Fixture table IO.
+"""Table IO: fixture scans in, driver-built rows in.
 
 The reference's "catalog" is a Glue crawler over a date-partitioned S3
 prefix (reference main.tf:301-314); here the analogue is parquet-per-table
 directories plus Spark's in-session catalog (temp views), with schema read
 from parquet footers rather than re-inferred per query.
+
+Frames the driver builds itself (collected posts, union-find clusters,
+numpy PageRank ranks, the MMR trajectory, the topics dimension) all land
+through `local_frame`, as one Arrow table.  Handed a Python list instead,
+Spark lands a pickled Python RDD, and every job over the frame then starts
+Python workers to unpickle and re-pickle each row.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 TABLES = (
     "region",
@@ -86,6 +95,29 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _LOAD_CACHE[key] = (spark, df)
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: list[dict], schema: StructType | str
+) -> DataFrame:
+    """Land driver-side ``rows`` (dicts keyed by field name) as a frame
+    with ``schema`` (a StructType or DDL string).
+
+    Each row is first checked with the verifier ``createDataFrame`` runs
+    on a list of rows, so a bad value raises the same error before any
+    Spark job.  The rows then reach Spark as one Arrow table, and the
+    frame's lineage is a JVM collection of Arrow batches (one partition
+    per ``arrow.maxRecordsPerBatch`` rows): no job over it starts a
+    Python worker.  Extra keys are ignored and missing keys land as
+    null; a string field takes only ``str`` (any other scalar raises
+    ``pyarrow.ArrowTypeError``)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

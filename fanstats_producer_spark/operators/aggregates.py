@@ -14,15 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fanstats_producer_spark.functions.num import (
-    qavg,
     qavg_pos,
     qint,
-    dsum,
     dsum_pos,
-    sql_qavg,
     sql_qavg_pos,
     sql_qint,
-    sql_dsum,
     sql_dsum_pos,
 )
 from fanstats_producer_spark.io import load

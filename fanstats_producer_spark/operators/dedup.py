@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from fanstats_producer_spark.functions.num import qint
-from fanstats_producer_spark.io import disk_checkpoint, load, spread
+from fanstats_producer_spark.io import disk_checkpoint, load, local_frame, spread
 from pyspark.storagelevel import StorageLevel as _SL
 
 #: iterative lineage-truncation checkpoints are DISK_ONLY too — label/
@@ -755,8 +755,11 @@ def connected_components(
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
             nodes = set(parent) | {v for v in parent.values()}
-            out = [(int(n), int(find(n))) for n in sorted(nodes)]
-            return spark.createDataFrame(out, "doc_id long, cluster_id long")
+            return local_frame(
+                spark,
+                [dict(doc_id=n, cluster_id=find(n)) for n in sorted(nodes)],
+                "doc_id long, cluster_id long",
+            )
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -1542,18 +1545,19 @@ def _semdedup_blas_pairs(side: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-#: scorer="auto" crossover: below this many vectors the JVM fold join
-#: beats the applyInPandas BLAS matmul (the Arrow round-trip dominates
-#: when per-cluster work is trivial).  Measured r13, warm interleaved
-#: best-of-5 at sf0.1 / 2k vectors: fold 4.03 s vs blas 2.90 s — blas
-#: already wins; sf1 / 20k vectors fold 84.3 s vs blas 12.0 s
-#: (BASELINE.md).  The gate reads one metadata-only count, the same
-#: size-gated-plan pattern as connected_components' driver_threshold.
+#: scorer="auto" crossover: below this many vectors (sf0.01's 500) the
+#: gate keeps the JVM fold join, where per-cluster work is too small to
+#: amortize the Arrow round-trip; at and above it the applyInPandas BLAS
+#: matmul runs.  Measured r13 above the gate, warm interleaved
+#: best-of-5: sf0.1 / 2k vectors fold 4.03 s vs blas 2.90 s; sf1 / 20k
+#: vectors fold 84.3 s vs blas 12.0 s (BASELINE.md).  The gate reads one
+#: metadata-only count, the same size-gated-plan pattern as
+#: connected_components' driver_threshold.
 _X61_BLAS_MIN_VECTORS = 1_000
 
 
 def semdedup(
-    spark: SparkSession, sf_dir: str, scorer: str = "fold"
+    spark: SparkSession, sf_dir: str, scorer: str = "auto"
 ) -> DataFrame:
     """SemDeDup over the full embeddings table: k-means prunes the pair
     space to within-cluster joins, cosine pairs at or above
@@ -1569,12 +1573,13 @@ def semdedup(
     levers the fixture pins but production turns: k scales with corpus
     size so cluster cardinality stays bounded (the within-cluster pair
     count is Σ|cluster|², so k ∝ N holds per-cluster work constant);
-    and ``scorer="blas"`` swaps the fold-exact JVM cosine for a
-    per-cluster applyInPandas BLAS matmul (_semdedup_blas_pairs —
-    measured sf1 84.3 s → 12.0 s = 7.0×, identical rows at both SFs,
-    keep decisions pinned by the forced-path test) at the cost of reassociated float sums — the
-    registered key keeps the fold-exact default because the oracle
-    contract is bit-parity."""
+    and the pair scorer.  ``scorer="auto"`` (the default, and what x61
+    runs) picks by corpus size at _X61_BLAS_MIN_VECTORS: the fold-exact
+    JVM cosine join below it, the per-cluster applyInPandas BLAS matmul
+    (_semdedup_blas_pairs — measured sf1 84.3 s → 12.0 s = 7.0×) at and
+    above it.  The BLAS arm is fold-exact by construction, so both emit
+    the same pair set; ``"fold"`` and ``"blas"`` force one arm, which
+    the forced-path test uses to pin that equality."""
     from fanstats_producer_spark.operators.clustering import kmeans_assignments
 
     emb = spread(load(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
@@ -1670,11 +1675,12 @@ def x61_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every cluster and keep decision — is bit-identical to the fold
     scorer on every input (forced-path pytest pins fixture equality;
     oracle stays green at every SF by construction).  Below the
-    crossover the JVM fold join wins (the Arrow round-trip dominates
-    at small cluster counts): measured warm interleaved at sf0.1 fold
-    4.03 s vs blas 2.90 s, sf1 fold 84.3 s vs blas 12.0 s
+    crossover (sf0.01's 500 vectors) the JVM fold join runs, where
+    per-cluster work is too small to amortize the Arrow round-trip.
+    Above it blas wins, measured warm interleaved: sf0.1 (2k vectors)
+    fold 4.03 s vs blas 2.90 s, sf1 fold 84.3 s vs blas 12.0 s
     (BASELINE.md, OPTIMIZATION_r13.md)."""
-    return semdedup(spark, sf_dir, scorer="auto")
+    return semdedup(spark, sf_dir)
 
 
 def streaming_band_keys(

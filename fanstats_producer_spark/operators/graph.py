@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fanstats_producer_spark.io import disk_checkpoint, load
+from fanstats_producer_spark.io import disk_checkpoint, load, local_frame
 from pyspark.storagelevel import StorageLevel as _SL
 
 #: iterative lineage-truncation checkpoints are DISK_ONLY too — label/
@@ -139,14 +139,13 @@ def pagerank_ranks(
                 contrib = np.zeros(len(nodes), np.int64)
                 np.add.at(contrib, dst_idx, vals)
                 rank = _BASE + (85 * contrib) // 100
-            out = spark.createDataFrame(
-                [
-                    (int(n), int(r), int(d))
-                    for n, r, d in zip(nodes, rank, outdeg)
-                ],
+            # .tolist() yields plain ints, which the row verifier needs
+            cols = zip(nodes.tolist(), rank.tolist(), outdeg.tolist())
+            return local_frame(
+                spark,
+                [dict(node=n, rank=r, outdeg=d) for n, r, d in cols],
                 "node long, rank long, outdeg long",
             )
-            return out
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     if broadcast_threshold is None:
         # caller asserts the vector fits (no probe job)

@@ -1534,7 +1534,6 @@ _JPEG_AC_CHROMA = (
 #: inputs, identical tables, bit-identical output.  Bounded: real
 #: inputs only ever present the 4 standard tables.
 _JPEG_CODES_MEMO: dict[tuple, dict] = {}
-_JPEG_DECODE_MEMO: dict[tuple, dict] = {}
 
 
 def _jpeg_canonical_codes(bits, vals):
@@ -1556,24 +1555,6 @@ def _jpeg_canonical_codes(bits, vals):
     return out
 
 
-def _jpeg_decode_table(bits, vals):
-    """Inverse map {(length, code): symbol} for the decoder."""
-    key = (tuple(bits), tuple(vals))
-    memo = _JPEG_DECODE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    if len(_JPEG_DECODE_MEMO) < 64:
-        _JPEG_DECODE_MEMO[key] = out
-    return out
-
-
 _JPEG_LUT_MEMO: dict[tuple, tuple] = {}
 
 
@@ -1587,7 +1568,7 @@ def _jpeg_decode_lut(bits, vals):
     code keep length 0 -> 'invalid JPEG Huffman code', exactly the
     per-bit walk's failure case (canonical codes are prefix-free, so
     for any valid stream the two decoders resolve identical (sym, L)).
-    Memoized per table content, same policy as the dict builder."""
+    Memoized per table content, same policy as the code-table memo."""
     import numpy as np
 
     key = (tuple(bits), tuple(vals))

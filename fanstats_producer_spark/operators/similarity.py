@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fanstats_producer_spark.functions.num import qint
-from fanstats_producer_spark.io import disk_checkpoint, load, spread
+from fanstats_producer_spark.io import disk_checkpoint, load, local_frame, spread
 from fanstats_producer_spark.operators.sampling import hash_bucket
 from fanstats_producer_spark.registry import query
 
@@ -1101,8 +1101,8 @@ def semantic_decontam_crossjoin(
     exact scalar sequence, making the blas verdicts bit-identical to
     the fold arms BY CONSTRUCTION on every input (forced-rescue
     pytest pins the scalar sequence against the fold on the real
-    fixture).  Registered usage: x61's key keeps its fold-exact
-    default, while s26b_stream_decontam_large_eval RUNS scorer="blas"
+    fixture).  Registered usage: x61's semdedup picks its blas arm by
+    corpus size, and s26b_stream_decontam_large_eval RUNS scorer="blas"
     — exact at scale, since the fold arms simply do not scale to its
     10k-eval regime."""
     if scorer == "blas":
@@ -1879,13 +1879,16 @@ def mmr_rerank(
                     m = 7 * rel - 3 * ms
                     if mmr is None or m > mmr:
                         picked, mmr = cid, m
-                out_rows.append((qid, j, picked, mmr))
+                out_rows.append(
+                    dict(query_id=qid, rnk=j, picked_id=picked, mmr_score_e6=mmr)
+                )
                 del cands[picked]
                 for cid, st in cands.items():
                     s = sim.get((qid, cid, picked), 0)
                     if s > st[1]:
                         st[1] = s
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             out_rows,
             "query_id long, rnk int, picked_id long, mmr_score_e6 long",
         )

@@ -20,6 +20,8 @@ import yaml
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fanstats_producer_spark.io import local_frame
+
 SUPPORTED_VERSIONS = ("1.0",)
 
 
@@ -93,11 +95,11 @@ def topics_dimension(spark: SparkSession, cfgs: list[DataFileConfig]) -> DataFra
     the alias IN-list predicate the reference loads but never uses
     (main.py:173, nba.yaml:6-7), made queryable."""
     rows = [
-        (c.topic, c.type, c.partition_key, alias)
+        dict(topic=c.topic, type=c.type, partition_key=c.partition_key, alias=alias)
         for c in cfgs
         for alias in dict.fromkeys([c.topic, *c.aliases])
     ]
-    df = spark.createDataFrame(
-        rows, schema="topic string, type string, partition_key string, alias string"
+    df = local_frame(
+        spark, rows, "topic string, type string, partition_key string, alias string"
     )
     return F.broadcast(df)

@@ -12,11 +12,9 @@ shares:
 - `fan_out` runs one chain per key (topic, subreddit, page) in
   parallel — the axis the reference leaves on the table (it loops
   topics sequentially in one process, main.py:214) — and lands every
-  chain's rows as one schema-pinned DataFrame.  The rows cross into
-  the JVM as one Arrow table, not as a pickled Python RDD, which
-  would re-run Python workers to unpickle and re-pickle every nested
-  row on each job over the frame (the empty-result guard and the
-  write, per platform) — most of a scheduled run's time.
+  chain's rows as one schema-pinned DataFrame through `io.local_frame`,
+  so the jobs over it (the empty-result guard and the write, per
+  platform) start no Python worker.
 - `PaginatedSource` takes an injectable `fetch_page` callable (the
   seam where the real authenticated HTTP GET, main.py:114-120, plugs
   in; tests inject a deterministic fake — no network in this repo).
@@ -35,11 +33,10 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType, _make_type_verifier
+from pyspark.sql.types import StructType
 
+from fanstats_producer_spark.io import local_frame
 from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
 
 # fetch_page(topic, start_time, next_token, page_size) ->
@@ -83,25 +80,14 @@ def fan_out(
     schema: StructType,
 ) -> DataFrame:
     """``collect`` every key in parallel (each key's cursor chain stays
-    serial) and land all rows, in key order, as one DataFrame.
-
-    Each row is checked with the verifier ``createDataFrame`` runs on a
-    list of rows (same errors), then the rows go to Spark as one Arrow
-    table.  The frame's lineage is then a JVM collection of Arrow
-    batches, so the jobs over it (the empty-result guard, the write)
-    start no Python worker; handed the list itself, Spark lands a
-    pickled Python RDD that every job re-reads through Python workers.
-    A string field takes only ``str``: any other scalar raises
-    ``pyarrow.ArrowTypeError``, so a parse must ``str()`` ids it may
+    serial) and land all rows, in key order, as one DataFrame through
+    `io.local_frame` (row verifier, then one Arrow table).  A string
+    field takes only ``str``, so a parse must ``str()`` ids it may
     receive as numbers."""
     with ThreadPoolExecutor(max_workers=max(len(keys), 1)) as pool:
         per_key = list(pool.map(collect, keys))
     rows = [r for chain in per_key for r in chain]
-    verify = _make_type_verifier(schema)
-    for row in rows:
-        verify(row)
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema=schema)
+    return local_frame(spark, rows, schema)
 
 
 class PaginatedSource:

@@ -3,6 +3,14 @@
 # driver's SF, dtype audit, and the benchmark line.
 set -e
 cd "$(dirname "$0")/.."
+# Driver-built rows become a frame only through io.local_frame (row
+# verifier, then one Arrow table); a createDataFrame( call anywhere else
+# in the package lands a pickled Python RDD that starts Python workers.
+if grep -rn "createDataFrame(" fanstats_producer_spark --include=*.py |
+  grep -v "^fanstats_producer_spark/io.py:"; then
+  echo "createDataFrame( outside fanstats_producer_spark/io.py" >&2
+  exit 1
+fi
 python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names

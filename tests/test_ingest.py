@@ -568,23 +568,111 @@ def _fan_out_tweets(spark, rows):
     return fan_out(spark, ["NBA"], lambda topic: rows, TWEET_SCHEMA)
 
 
-def test_scans_land_without_python_rdd(spark):
-    """Every collector's frame is a JVM collection of Arrow batches: no
-    PythonRDD in its lineage, so the empty-result guard and the write
-    over it start no Python worker."""
-    from fanstats_producer_spark.sources import facebook, reddit
+def _twitter_landing(spark):
+    df = PaginatedSource(
+        spark, _fake_fetch({"NBA": [[_tweet(i, 10) for i in range(5)]]})
+    ).scan(["NBA"], "t0")
+    assert df.count() == 5
+    return df
 
-    scans = {
-        "Twitter": PaginatedSource(
-            spark, _fake_fetch({"NBA": [[_tweet(i, 10) for i in range(5)]]})
-        ).scan(["NBA"], "t0"),
-        "Reddit": reddit.RedditListingSource(spark, _fake_reddit(5)).scan(["nba"]),
-        "Facebook": facebook.FacebookFeedSource(spark, _fake_facebook(5)).scan(["espn"]),
-    }
-    for platform, df in scans.items():
-        lineage = df._jdf.queryExecution().toRdd().toDebugString()
-        assert "PythonRDD" not in lineage, (platform, lineage)
-        assert df.count() == 5, platform
+
+def _reddit_landing(spark):
+    from fanstats_producer_spark.sources.reddit import RedditListingSource
+
+    df = RedditListingSource(spark, _fake_reddit(5)).scan(["nba"])
+    assert df.count() == 5
+    return df
+
+
+def _facebook_landing(spark):
+    from fanstats_producer_spark.sources.facebook import FacebookFeedSource
+
+    df = FacebookFeedSource(spark, _fake_facebook(5)).scan(["espn"])
+    assert df.count() == 5
+    return df
+
+
+def _union_find_landing(spark):
+    from fanstats_producer_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2, 0.9), (2, 3, 0.9), (3, 4, 0.9), (10, 11, 0.8)],
+        "id_a long, id_b long, jaccard double",
+    )
+    df = connected_components(pairs)
+    got = {r.doc_id: r.cluster_id for r in df.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    return df
+
+
+def _pagerank_landing(spark):
+    from fanstats_producer_spark.operators.graph import pagerank_ranks
+
+    e0 = spark.createDataFrame(
+        [(1, 10), (2, 10), (3, 10), (3, 11), (4, 11), (5, 12)],
+        "src long, dst long",
+    )
+    edges = e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
+    df = pagerank_ranks(edges, broadcast_threshold=None, driver_threshold=1_000)
+    driver = sorted(tuple(r) for r in df.collect())
+    broad = sorted(
+        tuple(r) for r in pagerank_ranks(edges, broadcast_threshold=None).collect()
+    )
+    assert driver == broad and len(driver) == 8
+    return df
+
+
+def _mmr_landing(spark):
+    from conftest import SF_DIR
+
+    from fanstats_producer_spark.io import load, spread
+    from fanstats_producer_spark.operators.similarity import mmr_rerank
+
+    emb = spread(load(spark, SF_DIR, "embeddings"))
+    df = mmr_rerank(emb)
+    fast = sorted(tuple(r) for r in df.collect())
+    dist = sorted(tuple(r) for r in mmr_rerank(emb, driver_threshold=0).collect())
+    assert fast == dist and len(fast) > 0
+    return df
+
+
+def _topics_landing(spark):
+    c = cfg.DataFileConfig(
+        version="1.0", topic="NBA", type="League", aliases=["NBA", "Hoops"]
+    )
+    df = cfg.topics_dimension(spark, [c])
+    assert sorted(map(tuple, df.collect())) == [
+        ("NBA", "League", "NBA", "Hoops"),
+        ("NBA", "League", "NBA", "NBA"),
+    ]
+    return df
+
+
+# every frame the driver builds from Python rows: the three collectors'
+# scans and the driver arms of connected_components, PageRank and MMR,
+# plus the topics dimension; each case checks its values, then returns it
+_DRIVER_LANDINGS = {
+    "Twitter": _twitter_landing,
+    "Reddit": _reddit_landing,
+    "Facebook": _facebook_landing,
+    "union_find": _union_find_landing,
+    "pagerank": _pagerank_landing,
+    "mmr": _mmr_landing,
+    "topics": _topics_landing,
+}
+
+
+@pytest.mark.parametrize("case", list(_DRIVER_LANDINGS))
+def test_scans_land_without_python_rdd(spark, case):
+    """Every driver-built frame is a JVM collection of Arrow batches: no
+    PythonRDD in its lineage, so the jobs over it (a collector's
+    empty-result guard and write, a cluster or rank join) start no
+    Python worker."""
+    df = _DRIVER_LANDINGS[case](spark)
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, (case, lineage)
 
 
 def test_reddit_numeric_id_lands_as_string(spark):

@@ -455,7 +455,8 @@ def test_semdedup_blas_scorer_matches_fold(spark):
     """Forced-path check for the x61 scale arm: the per-cluster
     applyInPandas BLAS matmul scorer (scorer="blas") must produce the
     exact same rows — sem_cluster assignment AND keep decisions — as
-    the fold-exact JVM scorer the registered key uses.  BLAS
+    the fold-exact JVM scorer the registered key runs below its size
+    gate.  BLAS
     reassociates the float sums, so this holds only because no fixture
     pair sits within float-reassociation error of the 0.35 threshold;
     running on the real sf0.001 fixture (not a toy) keeps the check
