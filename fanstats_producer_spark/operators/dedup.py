@@ -6,8 +6,7 @@ Scale design:
   the full text — at 100 TB you shuffle 32-byte digests, not documents).
 - Exact Jaccard uses an inverted-index (shingle → postings) join, which
   only materializes pairs that share ≥1 shingle — the classic
-  all-pairs-similarity pruning; `max_df` drops stopword-shingles whose
-  postings would dominate the pair count (frequency pruning).
+  all-pairs-similarity pruning.
 - MinHash+LSH (pyspark.ml MinHashLSH) is the sub-quadratic scale path:
   band-bucket join instead of all overlapping pairs.
 - SimHash gives a 64-bit locality-sensitive signature; near-dup pairs
@@ -96,13 +95,8 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     k: int = 3,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs via inverted-index join.
-
-    ``max_df`` (optional) drops shingles appearing in more than that many
-    docs before pairing — the standard frequency-pruning lever that keeps
-    the candidate-pair count sub-quadratic on skewed corpora.
 
     Plan shape: ONE shuffle (groupBy shingle), then candidate pairs are
     expanded map-side from each posting list (i<j combinations) and
@@ -127,8 +121,6 @@ def jaccard_pairs(
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    if max_df is not None:
-        lists = lists.filter(F.size("ids") <= max_df)
     # Pair expansion is size-gated (sf10 probe finding, round 13): the
     # map-side combos expression materializes ALL C(m,2) pairs of one
     # posting list as a single in-memory array value — on a closed
@@ -450,9 +442,6 @@ def minhash_native_pairs(
     n_hashes: int = 64,
     bands: int = 16,
     k: int = 3,
-    max_bucket: int | None = None,
-    bucket_join: bool = False,
-    salt: int = 1,
 ) -> DataFrame:
     """MinHash signatures and LSH banding as pure DataFrame expressions.
 
@@ -492,10 +481,7 @@ def minhash_native_pairs(
     computed right at pair expansion — no signature join (measured
     1.4x at sf0.1), and since r14 the below-threshold flood is dropped
     BEFORE the cross-band dedupe so that exchange carries 20-byte
-    (id, id, est) rows, never signatures.  ``max_bucket`` drops degenerate
-    mega-buckets (boilerplate bands shared by thousands of docs) before
-    the quadratic expansion — the LSH analogue of jaccard_pairs'
-    ``max_df`` frequency pruning; at 100 TB set it to a few thousand.
+    (id, id, est) rows, never signatures.
 
     vs MLlib's MinHashLSH: same asymptotics, ~2x faster here (no
     HashingTF sparse-vector materialization), deterministic via xxhash64.
@@ -548,88 +534,29 @@ def minhash_native_pairs(
         F.expr(sig_arr).alias("sig"),
         F.expr(f"explode(array({band_arr}))").alias("band_hash"),
     )
-    if bucket_join:
-        # Skew-robust pair expansion: a SELF-JOIN on band_hash instead
-        # of collect_list + in-row combos.  The combos path folds each
-        # bucket into ONE row and expands |bucket|² pairs inside ONE
-        # task — a straggler (and an OOM-sized row: a 10M-doc hot
-        # bucket at 520 B/sig is a ~5 GB single row) the moment a
-        # Zipfian crawl plants a hot near-dup cluster, since every
-        # cluster member shares every band hash.  The join shape gives
-        # the pair explosion to the join machinery instead.
-        #
-        # AQE alone does NOT fix the hot key here — measured: a
-        # self-join is skewed on BOTH sides of the same partition, the
-        # one case OptimizeSkewedJoin skips (no `skew=true` marker even
-        # with skewedPartitionThresholdInBytes floored to 16 KB on the
-        # skewed fixture).  Hence `salt`: the probe side replicates
-        # across `salt` sub-keys (explode) while the build side hashes
-        # into one, splitting each hot band bucket into `salt`
-        # co-sized join groups deterministically — the quadratic work
-        # for the hot cluster runs WIDE.  Identical output for any
-        # salt (asserted in tests); total shuffle volume scales with
-        # salt, so enable it for skewed corpora, not by default.
-        if max_bucket is not None:
-            ok = (
-                banded.groupBy("band_hash")
-                .agg(F.count("*").alias("bn"))
-                .filter(F.col("bn") <= max_bucket)
-                .select("band_hash")
-            )
-            banded = banded.join(ok, "band_hash", "left_semi")
-        left = banded.select(
-            "band_hash",
-            F.col("doc_id").alias("id_a"),
-            F.col("sig").alias("sig_a"),
+    buckets = (
+        banded.groupBy("band_hash")
+        .agg(F.expr("array_sort(collect_list(struct(doc_id, sig))) as ids"))
+        .filter(F.size("ids") > 1)
+    )
+    combos = (
+        "flatten(transform(ids, (x, i) ->"
+        " transform(slice(ids, cast(i + 2 as int), size(ids)),"
+        " y -> struct(x.doc_id as id_a, y.doc_id as id_b,"
+        " x.sig as sig_a, y.sig as sig_b))))"
+    )
+    cands = (
+        buckets.select(F.expr(f"explode({combos}) as p"))
+        .select(
+            F.col("p.id_a").alias("id_a"),
+            F.col("p.id_b").alias("id_b"),
+            _mh_est("p.sig_a", "p.sig_b", n_hashes).alias(
+                "est_jaccard_e6"
+            ),
         )
-        right = banded.select(
-            "band_hash",
-            F.col("doc_id").alias("id_b"),
-            F.col("sig").alias("sig_b"),
-        )
-        join_keys = ["band_hash"]
-        if salt > 1:
-            left = left.withColumn(
-                "salt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-            )
-            right = right.withColumn(
-                "salt", F.pmod(F.xxhash64("id_b"), F.lit(salt)).cast("int")
-            )
-            join_keys = ["band_hash", "salt"]
-        cands = (
-            left.join(right, join_keys)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("est_jaccard_e6", _mh_est("sig_a", "sig_b", n_hashes))
-            .filter(F.col("est_jaccard_e6") >= int(threshold * 1e6))
-            .select("id_a", "id_b", "est_jaccard_e6")
-            .distinct()
-        )
-    else:
-        buckets = (
-            banded.groupBy("band_hash")
-            .agg(F.expr("array_sort(collect_list(struct(doc_id, sig))) as ids"))
-            .filter(F.size("ids") > 1)
-        )
-        if max_bucket is not None:
-            buckets = buckets.filter(F.size("ids") <= max_bucket)
-        combos = (
-            "flatten(transform(ids, (x, i) ->"
-            " transform(slice(ids, cast(i + 2 as int), size(ids)),"
-            " y -> struct(x.doc_id as id_a, y.doc_id as id_b,"
-            " x.sig as sig_a, y.sig as sig_b))))"
-        )
-        cands = (
-            buckets.select(F.expr(f"explode({combos}) as p"))
-            .select(
-                F.col("p.id_a").alias("id_a"),
-                F.col("p.id_b").alias("id_b"),
-                _mh_est("p.sig_a", "p.sig_b", n_hashes).alias(
-                    "est_jaccard_e6"
-                ),
-            )
-            .filter(F.col("est_jaccard_e6") >= int(threshold * 1e6))
-            .distinct()
-        )
+        .filter(F.col("est_jaccard_e6") >= int(threshold * 1e6))
+        .distinct()
+    )
     # Estimate-then-dedupe (r14, guide §2.3): every copy of a pair
     # carries the same two signatures, so the estimate is computed AT
     # pair expansion (64 int compares, recomputed per shared band —
@@ -639,7 +566,7 @@ def minhash_native_pairs(
     # row.  distinct == the old groupBy+first: copies are identical by
     # construction, so the surviving pair set and estimates are
     # unchanged (pinned by the x04d value oracle).
-    return cands.select("id_a", "id_b", "est_jaccard_e6")
+    return cands
 
 
 # The oracle reproduces the signature bit-for-bit (md5-derived word mod

@@ -14,11 +14,9 @@ bit-identical ranks at every iteration — no float drift, no decimal
 casts.  Mass bound: total rank ≈ N*1e9 ≤ 1e14 at any fixture SF and
 85*S stays far under 2^63.
 
-100 TB posture: each iteration is one shuffle of (dst, contribution)
-partials — map-side combined — joined back to the node list; edges are
-re-read from their own shuffle output each round (in a cluster: persist
-or bucket the edge list by src so the per-iteration join is
-co-partitioned and only the small rank vector moves).
+Scale posture: each distributed iteration joins the broadcast rank
+vector to the edge list map-side and shuffles only (dst, contribution)
+partials — map-side combined — back to the node list; edges never move.
 """
 
 from __future__ import annotations
@@ -27,11 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fanstats_producer_spark.io import disk_checkpoint, load, local_frame
-from pyspark.storagelevel import StorageLevel as _SL
-
-#: iterative lineage-truncation checkpoints are DISK_ONLY too — label/
-#: rank vectors scale with the corpus (rationale: io.disk_checkpoint)
-_DISK_ONLY = _SL.DISK_ONLY
 from fanstats_producer_spark.registry import query
 
 _ITER = 5
@@ -87,16 +80,15 @@ def _oracle_sql() -> str:
 def pagerank_ranks(
     edges: DataFrame,
     n_iter: int = _ITER,
-    broadcast_threshold: int | None = 10_000_000,
-    driver_threshold: int | None = None,
+    driver_threshold: int | None = 4_000_000,
 ) -> DataFrame:
     """Integer-exact PageRank ranks over a symmetric edge list
     (src, dst), returned as (node, rank, outdeg).
 
-    Three physical strategies behind one result (size-gated, the
+    Two physical strategies behind one result (size-gated, the
     dedup.py union-find pattern):
 
-    - |edges| <= ``driver_threshold`` (opt-in): the edge list rides to
+    - |edges| <= ``driver_threshold``: the edge list rides to
       the driver ONCE (Arrow) and the n_iter rounds run as vectorized
       int64 numpy (np.add.at scatter-sum, // division) — exactly the
       engine arithmetic (`div` on nonnegative int64 == floor
@@ -104,16 +96,12 @@ def pagerank_ranks(
       costs a join + aggregate + checkpoint of fixed overhead that
       dwarfs the math at bench scale (measured r13: 5 rounds ≈ 2.4 s
       vs ~0.9 s driver-side at 1.17M edges / 16k nodes).
-    - |nodes| <= ``broadcast_threshold``: the rank vector broadcasts —
-      edges NEVER shuffle; each iteration is one map-side join plus one
-      map-side-combined (dst, contrib) aggregate.
-    - beyond the threshold (billions of nodes — the vector outgrows a
-      broadcast): edges are hash-partitioned by src ONCE (in a cluster:
-      bucket the edge table) and every iteration's join co-locates on
-      that partitioning, so only the |nodes|-sized rank vector moves
-      per round; edge bytes stay put.
+      ``None`` forces the distributed arm.
+    - otherwise the rank vector broadcasts — edges NEVER shuffle; each
+      iteration is one map-side join plus one map-side-combined
+      (dst, contrib) aggregate.
 
-    All paths run the same integer arithmetic, so ranks are
+    Both paths run the same integer arithmetic, so ranks are
     bit-identical (asserted in tests with forced arms)."""
     if driver_threshold is not None:
         # bounded probe-and-fetch: one evaluation of the (caller-
@@ -147,24 +135,6 @@ def pagerank_ranks(
                 "node long, rank long, outdeg long",
             )
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    if broadcast_threshold is None:
-        # caller asserts the vector fits (no probe job)
-        use_broadcast = True
-    else:
-        # |nodes| rows — checkpoint so the size probe and the
-        # rank-vector init are one computation (a limit(k).count()
-        # probe would funnel deg through a single-partition
-        # GlobalLimit; a full distributed count over the checkpoint is
-        # cheaper).
-        deg = disk_checkpoint(deg)
-        use_broadcast = deg.count() <= broadcast_threshold
-    if use_broadcast:
-        maybe_b = F.broadcast
-    else:
-        maybe_b = lambda df: df  # noqa: E731
-        # one-time co-partitioning; localCheckpoint preserves the hash
-        # partitioning so every per-iteration join reuses it
-        edges = disk_checkpoint(edges.repartition("src"))
     ranks = deg.select(
         F.col("src").alias("node"),
         F.lit(_SCALE).cast("long").alias("rank"),
@@ -172,13 +142,15 @@ def pagerank_ranks(
     )
     for _ in range(n_iter):
         contribs = (
-            edges.join(maybe_b(ranks), ranks.node == edges.src)
+            edges.join(F.broadcast(ranks), ranks.node == edges.src)
             .select("dst", F.expr("rank div outdeg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
         ranks = (
-            ranks.join(maybe_b(contribs), ranks.node == contribs.dst, "left")
+            ranks.join(
+                F.broadcast(contribs), ranks.node == contribs.dst, "left"
+            )
             .select(
                 "node",
                 (
@@ -221,17 +193,10 @@ def q65_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize once: 5 iterations must not re-derive the join+distinct
     edges = disk_checkpoint(edges)
-    # threshold=None: the fixture graph is |cust|+|supp| nodes — always
-    # broadcastable, so skip the size-probe job.  A production caller on
-    # an unknown graph passes a byte-budget-derived node threshold and
-    # pagerank_ranks gates to the co-partitioned path by itself.
-    # driver_threshold: the checkpointed edge list is bounded by
-    # |cust|x|supp|; under 4M edges the n_iter rounds run as exact
-    # int64 numpy on the driver (r13 — see pagerank_ranks), above it
-    # the broadcast arm below runs unchanged.
-    ranks = pagerank_ranks(
-        edges, broadcast_threshold=None, driver_threshold=4_000_000
-    )
+    # the checkpointed edge list is bounded by |cust|x|supp|; under the
+    # default 4M edges the n_iter rounds run as exact int64 numpy on the
+    # driver (r13 — see pagerank_ranks), above it the broadcast arm.
+    ranks = pagerank_ranks(edges)
     return (
         ranks.select("node", F.col("rank").alias("rank_e9"))
         .orderBy(F.col("rank_e9").desc(), "node")

@@ -67,9 +67,7 @@ def x27_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate_hits(load(spark, sf_dir, "documents"))
 
 
-def decontaminate_hits(
-    docs: DataFrame, max_posting: int | None = None
-) -> DataFrame:
+def decontaminate_hits(docs: DataFrame) -> DataFrame:
     """Inverted-index single pass (the x04 pattern): the corpus is
     shingle-exploded ONCE and grouped by shingle with the train and
     eval postings separated inside the aggregate; (train, eval) hits
@@ -77,17 +75,7 @@ def decontaminate_hits(
     broadcast join read and shingled the corpus twice — same plan
     semantics (eval lists are benchmark-sized: the per-shingle eval
     array stays tiny), half the scan work, and still exactly one
-    shuffle on the shingle key.
-
-    ``max_posting`` is the hot-shingle guard for the TRAIN side: a
-    boilerplate shingle shared by millions of train docs would fold
-    them all into ONE collect_list row (the measured ~GB-single-row
-    combos failure, BASELINE skew section).  Capping drops postings
-    above the bound BEFORE the aggregate — the x04 ``max_df`` /
-    jaccard frequency-pruning lever; a shingle that common carries no
-    decontamination signal anyway (it is corpus boilerplate, not
-    benchmark leakage).  None (the oracle-checked default) keeps exact
-    semantics at fixture scale; at 100 TB set it to a few thousand."""
+    shuffle on the shingle key."""
     # Collapse the ~50-char 5-gram strings to 8-byte xxhash64 keys BEFORE
     # the shuffle (the x04 lever): the exchange moves 6x less data, and a
     # collision merely co-groups two shingles (counted once per (train,
@@ -97,14 +85,6 @@ def decontaminate_hits(
         .select("doc_id", F.explode("shingles").alias("sh"))
         .select("doc_id", F.xxhash64("sh").alias("shingle"))
     )
-    if max_posting is not None:
-        ok = (
-            post.groupBy("shingle")
-            .agg(F.count("*").alias("pn"))
-            .filter(F.col("pn") <= max_posting)
-            .select("shingle")
-        )
-        post = post.join(ok, "shingle", "left_semi")
     lists = (
         post.groupBy("shingle")
         .agg(
@@ -815,8 +795,7 @@ def x46_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a fixed fraction of the corpus — so at full scale the per-shingle
     # eval collect_set and the leaked-set broadcast both grow with the
     # corpus.  The production form swaps the broadcast for a shuffled
-    # LEFT SEMI on eval_id and applies decontaminate_hits' max_posting
-    # cap to the shingle postings; kept broadcast here because the
+    # LEFT SEMI on eval_id; kept broadcast here because the
     # split fraction at every tested SF stays far under the 8 GB
     # broadcast ceiling and the simpler plan is 2x faster at bench SF.
     from fanstats_producer_spark.operators.corpus_extra import _x44_split_col

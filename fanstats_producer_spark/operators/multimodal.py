@@ -2333,10 +2333,8 @@ def x87_resize_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: hashing is embarrassingly parallel mapInPandas (one pass, no
 # shuffle); banding shuffles 9 rows of (7-bit key, 8-byte hash) per doc
 # — ~100 B/doc, corpus-sized but tiny; the bucket self-join is the
-# quadratic guard point — degenerate corpora (millions of flat images
-# sharing a band) need the same max_bucket/salt levers as x04d
-# (documented in BASELINE.md; the fixture's buckets are dup-cluster
-# sized).  Reference parity: AJ2O/fanstats-producer ships no image
+# quadratic point (the fixture's buckets are dup-cluster sized).
+# Reference parity: AJ2O/fanstats-producer ships no image
 # pipeline at all (reference/src/main.py is a text crawler) — x88 is
 # part of the beyond-reference training-data surface the brief asks
 # for.
@@ -2444,39 +2442,11 @@ def _phash_band_val(col, b: int):
     )
 
 
-def phash_near_dup_pairs(
-    hashes: DataFrame,
-    salt: int = 1,
-    max_bucket: int | None = None,
-) -> DataFrame:
+def phash_near_dup_pairs(hashes: DataFrame) -> DataFrame:
     """Banded near-dup pair expansion over a (doc_id, phash) frame:
     9x7-bit LSH bands -> bucket self-join -> hamming <= 8 verify.
     Exact-complete by pigeonhole (see module comment).  Pure built-in
-    expressions; the only Python in x88 is the codec worker.
-
-    Skew levers (the minhash_native_pairs pair, dedup.py:393 — ported
-    here because a 7-bit band key has only 128 distinct values, so a
-    DEGENERATE corpus (near-constant images: solid frames, silence
-    spectrograms, boilerplate scans) drives bucket population toward
-    n/128 and this self-join toward quadratic in ONE partition):
-
-    ``salt``: replicate the probe side across `salt` sub-keys while the
-    build side hashes into one — each hot (band, val) bucket splits
-    into `salt` co-sized join groups, running the unavoidable quadratic
-    work WIDE instead of in a straggler task.  AQE's OptimizeSkewedJoin
-    cannot do this for us: a self-join is skewed on BOTH sides of the
-    same partition, the one shape it skips (measured on the minhash
-    twin, dedup.py:487).  Output is provably IDENTICAL for any salt
-    (every (id_a, id_b) meets exactly once per shared bucket: id_b's
-    salt is a pure function of id_b, and id_a's explode covers all
-    values — pytest-pinned on the degenerate fixture).
-
-    ``max_bucket``: drop band buckets larger than the cap BEFORE the
-    expansion.  UNLIKE salt this trades recall (a pair whose only
-    shared band is mega-bucketed is lost) — the pigeonhole exactness
-    proof no longer applies, so it is None here by default and exists
-    for the 100 TB regime where a hot bucket is boilerplate, not
-    signal (the x27 max_posting / minhash max_bucket convention)."""
+    expressions; the only Python in x88 is the codec worker."""
     # Materialize the hash frame ONCE before the bucket self-join
     # (optimization r13, guide §3.3/§4.1): both join sides derive from
     # `hashes`, whose upstream in every batch caller is the render+
@@ -2502,14 +2472,6 @@ def phash_near_dup_pairs(
             )
         ).alias("bk"),
     ).select("doc_id", "phash", "bk.band", "bk.val")
-    if max_bucket is not None:
-        ok = (
-            banded.groupBy("band", "val")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") <= max_bucket)
-            .select("band", "val")
-        )
-        banded = banded.join(ok, ["band", "val"], "left_semi")
     left = banded.select(
         "band",
         "val",
@@ -2522,15 +2484,6 @@ def phash_near_dup_pairs(
         F.col("doc_id").alias("id_b"),
         F.col("phash").alias("h_b"),
     )
-    join_keys = ["band", "val"]
-    if salt > 1:
-        left = left.withColumn(
-            "salt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-        )
-        right = right.withColumn(
-            "salt", F.pmod(F.xxhash64("id_b"), F.lit(salt)).cast("int")
-        )
-        join_keys = ["band", "val", "salt"]
     # Hamming-verify BEFORE the cross-band dedupe (sf10 probe finding,
     # round 13): the dedupe is a shuffle over every banding candidate,
     # and on a near-uniform hash population the 7-bit band buckets hold
@@ -2542,7 +2495,7 @@ def phash_near_dup_pairs(
     # the flood streams map-side through the verify, materialized
     # nowhere.
     return (
-        left.join(right, join_keys)
+        left.join(right, ["band", "val"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "hamming",

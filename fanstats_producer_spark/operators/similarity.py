@@ -1030,8 +1030,8 @@ def semantic_decontam_gate(vectors: DataFrame, evs_row: DataFrame) -> Column:
 
     The per-row reduction is interpreted HOF work (~8k ops/row at 20
     evals × 64 dims — fine for a benchmark-sized eval set; for eval
-    suites in the thousands, run x66's codegen'd cross-join form in
-    foreachBatch instead — the x78 interpreted-HOF rule)."""
+    suites in the thousands, run :func:`decontam_blas` in foreachBatch
+    instead, as s26b does)."""
     joined = vectors.crossJoin(F.broadcast(evs_row))
     comp = F.array_min(
         F.transform(
@@ -1055,76 +1055,6 @@ def semantic_decontam_gate(vectors: DataFrame, evs_row: DataFrame) -> Column:
     )
 
 
-def semantic_decontam_crossjoin(
-    vectors: DataFrame,
-    evals: DataFrame,
-    scorer: str = "sql",
-    prepared: tuple | None = None,
-) -> DataFrame:
-    """x66's CODEGEN'D decision form — the large-eval-suite arm of the
-    decontamination gate (VERDICT r9 watch item 1 / ask 4).
-
-    `semantic_decontam_gate` reduces a broadcast eval ARRAY with an
-    interpreted per-row HOF: constant in corpus size but linear
-    interpreted work in eval-suite size (~8k interpreted ops/row at 20
-    evals — fine; 400k/row at 1,000 evals — the regime the x78
-    interpreted-HOF rule forbids).  Here the eval set stays a FRAME:
-    broadcast hash join fans each arriving vector out to one row per
-    eval, the cosine runs in whole-stage-codegen'd columnar kernels,
-    and the nearest eval folds back with one struct-min aggregate on
-    (1e6 - sim_e6, eval_id) — lexicographic min == best similarity
-    with eval_id tie-break, the same integer-exact decision as the HOF
-    form, so the two arms are interchangeable bit-for-bit.
-
-    `evals` columns: (eval_id, ev array<double>).  Works on batch
-    frames; streams use it per micro-batch in foreachBatch (a streaming
-    plan cannot host the groupBy re-aggregate in append mode, and the
-    verdict is per-arriving-row anyway, so batch-local aggregation is
-    semantically exact — batch-slicing-invariant like the HOF arm).
-
-    MEASURED (round 10, local[32], forced outputs): at 1k evals × 1k
-    vectors the HOF and cross-join arms are EQUAL (1.8 vs 2.0 s), and
-    at 10k × 10k both take ~125 s — the r9 "interpreted HOF" premise
-    does not reproduce on Spark 4.1 (both arms are expression-tree
-    bound on the per-pair cosine).  The lever that actually serves
-    large eval suites is ``scorer="blas"`` (the x61 semdedup pattern):
-    the eval matrix collects ONCE to the driver (it is the SMALL side
-    — 1e5 × 64 doubles = 51 MB; a ValueError guards the contract),
-    broadcasts, and each mapInPandas batch scores 1024-row blocks with
-    one float64 matmul — measured 125 s → 1.9 s at 10k × 10k, with
-    the SAME composite-integer decision (floor(sim·1e6+0.5),
-    (1e6−sim_e6)·1e10+eval_id argmin) so verdicts match the SQL arms
-    on every fixture (parity pytest).  Round 11 closed the former ulp
-    caveat: the matmul's reassociated sums now pass through a
-    boundary-rescue pass (_decontam_blas docstring) that recomputes
-    any entry within 1e-10 of an e6 floor boundary with the fold's
-    exact scalar sequence, making the blas verdicts bit-identical to
-    the fold arms BY CONSTRUCTION on every input (forced-rescue
-    pytest pins the scalar sequence against the fold on the real
-    fixture).  Registered usage: x61's semdedup picks its blas arm by
-    corpus size, and s26b_stream_decontam_large_eval RUNS scorer="blas"
-    — exact at scale, since the fold arms simply do not scale to its
-    10k-eval regime."""
-    if scorer == "blas":
-        return _decontam_blas(vectors, evals, prepared)
-    scored = vectors.join(F.broadcast(evals)).select(
-        "vec_id",
-        "eval_id",
-        (F.lit(1_000_000) - qint(cosine(F.col("embedding"), F.col("ev"))))
-        .alias("d"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.min(F.struct("d", "eval_id")).alias("b")
-    )
-    sim = F.lit(1_000_000) - F.col("b.d")
-    return best.select(
-        "vec_id",
-        F.col("b.eval_id").alias("nearest_eval_id"),
-        sim.alias("max_sim_e6"),
-        (sim >= F.lit(_X66_THRESH_E6)).cast("int").alias("contaminated"),
-    )
-
-
 #: BLAS-arm guard: the eval suite must be the SMALL side — 2e5 x 64
 #: float64 = 102 MB on the driver/executors; beyond that, shard the
 #: suite and union the per-shard verdicts (min composite re-reduces)
@@ -1133,7 +1063,7 @@ _DECONTAM_MAX_EVALS = 200_000
 
 def decontam_blas_prepare(spark, evals: DataFrame) -> tuple:
     """Collect + broadcast the eval matrix ONCE for the blas arm —
-    returned handles feed any number of _decontam_blas_apply calls
+    returned handles feed any number of decontam_blas calls
     (a long-running stream must NOT re-collect per micro-batch; the
     r10 review caught exactly that in foreachBatch).  Raises on an
     empty or oversized suite and on zero-norm eval vectors (a zero
@@ -1160,7 +1090,7 @@ def decontam_blas_prepare(spark, evals: DataFrame) -> tuple:
             " is undefined for them; drop or re-embed"
         )
     # broadcast the RAW matrix: the boundary-rescue path (see
-    # _decontam_blas) re-derives the fold-exact cosine from raw
+    # decontam_blas) re-derives the fold-exact cosine from raw
     # components; workers normalize once per task for the fast path
     b_ids = spark.sparkContext.broadcast(ids)
     b_m = spark.sparkContext.broadcast(m)  # (n_eval, dim), raw
@@ -1179,7 +1109,7 @@ def decontam_blas_prepare(spark, evals: DataFrame) -> tuple:
 _BLAS_RESCUE_BAND_E6 = 1e-4
 # per-block score-matrix area for the blas arms (rows x n_eval cells):
 # bounds every worker's live numpy temporaries (~5 arrays x 8 B x cells
-# = ~300 MB) independent of eval-suite size — see _decontam_blas
+# = ~300 MB) independent of eval-suite size — see decontam_blas
 _BLAS_BLOCK_CELLS = 8_000_000
 
 
@@ -1198,16 +1128,31 @@ def _fold_cosine(a, b) -> float:
     return d / (math.sqrt(n2a) * math.sqrt(n2b))
 
 
-def _decontam_blas(
+def decontam_blas(
     vectors: DataFrame,
     evals: DataFrame,
     prepared: tuple | None = None,
     band: float = _BLAS_RESCUE_BAND_E6,
 ) -> DataFrame:
-    """semantic_decontam_crossjoin(scorer="blas"): eval matrix as one
-    broadcast numpy array, per-batch 1024-row-block float64 matmul,
-    composite-integer argmin decode — see the caller's docstring for
-    the measured 65× at 10k evals.
+    """x66's decision for LARGE eval suites (s26b): the eval matrix as
+    one broadcast numpy array, per-batch 1024-row-block float64
+    matmul, composite-integer argmin decode — the same decision as
+    semantic_decontam_gate (floor(sim·1e6+0.5), then the
+    (1e6−sim_e6)·1e10+eval_id argmin), so verdicts match it bitwise
+    (parity pytest).
+
+    `vectors` columns: (vec_id, embedding); `evals` columns: (eval_id,
+    ev array<double>), collected ONCE to the driver — the SMALL side,
+    guarded by decontam_blas_prepare — unless `prepared` handles are
+    passed.  Works on batch frames; streams call it per micro-batch in
+    foreachBatch (the verdict is per-arriving-row, so batch-local
+    evaluation is exact and batch-slicing-invariant).
+
+    MEASURED (round 10, local[32]): the SQL expression forms — the
+    interpreted HOF gate and a codegen'd broadcast cross-join with a
+    struct-min re-aggregate — are both bound on the per-pair cosine
+    expression and both take ~125 s at 10k evals × 10k vectors; this
+    matmul takes 1.9 s on the same input.
 
     FOLD-EXACT BY CONSTRUCTION (closes the r10 ulp watch item): after
     the fast matmul, every entry whose sim·1e6+0.5 lands within
@@ -1216,8 +1161,8 @@ def _decontam_blas(
     sequence over the RAW components.  Outside the band the fast and
     fold values provably floor to the same e6 integer (error budget in
     the band comment), so the emitted verdicts are bit-identical to
-    the HOF/cross-join arms on EVERY input, not just measured-equal on
-    the fixtures.  Expected rescue count: the band admits ~2·band of
+    the HOF gate on EVERY input, not just measured-equal on the
+    fixtures.  Expected rescue count: the band admits ~2·band of
     the e6 grid per entry (≈2e-4 of entries), each costing one 64-term
     scalar fold — vectorized-comparison-cheap at any scale.
 

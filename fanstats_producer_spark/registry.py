@@ -26,7 +26,7 @@ ORACLE: dict[str, str] = {}
 # python-worker speed — a 2× interpreter/worker slowdown was previously
 # invisible to all three sentinels (VERDICT r12 item 2, the x96 case).
 # Membership test: the key's hot path is a Python worker stage (see the
-# call sites in multimodal.py, similarity._decontam_blas, dedup x61/
+# call sites in multimodal.py, similarity.decontam_blas, dedup x61/
 # simhash, text/text_extra/udfs, llm_data x89/x95).
 PY_WORKER_KEYS: frozenset[str] = frozenset(
     {

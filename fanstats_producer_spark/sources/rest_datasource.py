@@ -10,9 +10,10 @@ single process leaves unused (reference main.py:214).  The page clamp and result
 (main.py:263) is pushed into every request — source-side predicates,
 not post-filters.
 
-Fetchers are pluggable by name (an HTTP fetcher would do the bearer-token
-GET of main.py:114-120); the in-repo fetchers are deterministic and
-offline.  Everything lands with the pinned TWEET_SCHEMA.
+Fetchers are pluggable as importable "module.path:attr" specs (an HTTP
+fetcher would do the bearer-token GET of main.py:114-120); the default,
+pipeline.demo_fetcher, is deterministic and offline.  Everything lands
+with the pinned TWEET_SCHEMA.
 """
 
 from __future__ import annotations
@@ -37,51 +38,24 @@ from pyspark.sql.datasource import (
 from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
 from fanstats_producer_spark.sources.rest import FetchPage, paginate
 
-# Name → fetcher factory.  Module-level so executor-side deserialization
-# can resolve it by name (options travel as strings).
-FETCHERS: dict[str, Callable[[], FetchPage]] = {}
-
-
-def register_fetcher(name: str, factory: Callable[[], FetchPage]) -> None:
-    """Register a named fetcher factory IN THIS PROCESS.
-
-    Note the Python DataSource lifecycle: readers are constructed in a
-    plan-time Python worker and executed on executor workers, both of
-    which import this module fresh — a runtime registration in the
-    driver process is NOT visible there.  Use this for factories
-    registered at module import time (e.g. from a package every worker
-    imports); for everything else pass the fetcher option as an
-    importable "module.path:attr" spec, which resolves anywhere.
-    """
-    FETCHERS[name] = factory
+#: the offline fetcher the reader uses when no "fetcher" option is given
+_DEFAULT_FETCHER = "fanstats_producer_spark.pipeline:demo_fetcher"
 
 
 def _resolve_fetcher(spec: str) -> Callable[[], FetchPage]:
-    """Resolve a fetcher option to a factory: a registry name, or an
-    importable "module.path:attr" spec (works in any worker process)."""
-    if spec in FETCHERS:
-        return FETCHERS[spec]
-    if ":" in spec:
-        import importlib
+    """Resolve a fetcher option, an importable "module.path:attr" spec,
+    to a factory (works in any worker process)."""
+    if ":" not in spec:
+        raise KeyError(
+            f"unknown fetcher {spec!r}: not a 'module:attr' import spec"
+        )
+    import importlib
 
-        mod, attr = spec.split(":", 1)
-        obj = importlib.import_module(mod)
-        for part in attr.split("."):
-            obj = getattr(obj, part)
-        return obj
-    raise KeyError(
-        f"unknown fetcher {spec!r}: not in the import-time registry "
-        f"({sorted(FETCHERS)}) and not a 'module:attr' import spec"
-    )
-
-
-def _demo_factory() -> FetchPage:
-    from fanstats_producer_spark.pipeline import demo_fetcher
-
-    return demo_fetcher()
-
-
-FETCHERS["demo"] = _demo_factory
+    mod, attr = spec.split(":", 1)
+    obj = importlib.import_module(mod)
+    for part in attr.split("."):
+        obj = getattr(obj, part)
+    return obj
 
 
 class TopicPartition(InputPartition):
@@ -93,12 +67,10 @@ class RestReader(DataSourceReader):
     def __init__(self, options: dict) -> None:
         self.topics = [t for t in options.get("topics", "").split(",") if t]
         # Resolve the factory at plan time — the callable is then pickled
-        # with the reader, so executors never do a registry lookup.  A
-        # call-time FETCHERS[name] lookup in read() would run on executor
-        # Python workers, where this module is imported fresh and only
-        # import-time registrations exist; _resolve_fetcher also accepts
-        # an importable "module:attr" spec, which works in any process.
-        self.fetcher_factory = _resolve_fetcher(options.get("fetcher", "demo"))
+        # with the reader, so executors never import the spec themselves.
+        self.fetcher_factory = _resolve_fetcher(
+            options.get("fetcher", _DEFAULT_FETCHER)
+        )
         self.start_time = options.get("start_time", "1970-01-01T00:00:00Z")
         self.page_size = min(int(options.get("page_size", "100")), 100)
         self.max_results = int(options.get("max_results", "3000"))
@@ -139,7 +111,9 @@ class RestStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict) -> None:
         self.topics = [t for t in options.get("topics", "").split(",") if t]
         # Plan-time resolution: see RestReader.__init__.
-        self.fetcher_factory = _resolve_fetcher(options.get("fetcher", "demo"))
+        self.fetcher_factory = _resolve_fetcher(
+            options.get("fetcher", _DEFAULT_FETCHER)
+        )
         self.start_time = options.get("start_time", "1970-01-01T00:00:00Z")
         self.page_size = min(int(options.get("page_size", "100")), 100)
         self.pages_per_batch = int(options.get("pages_per_batch", "1"))

@@ -1472,19 +1472,18 @@ def s26b_stream_decontam_large_eval(
     10,000 at sf1 — VERDICT r9 watch item 1's regime), the stream is
     every ODD vec_id.
 
-    HONEST FINDING (round 10): the r9 hypothesis was that x66's
-    codegen'd cross-join would serve this regime; measured, it does
-    NOT — at 10k evals the HOF and cross-join arms BOTH cost ~125 s
+    HONEST FINDING (round 10): the r9 hypothesis was that a codegen'd
+    SQL cross-join would serve this regime; measured, it does NOT — at
+    10k evals the HOF and cross-join forms BOTH cost ~125 s
     (expression-tree-bound on the per-pair cosine), while the
-    batched-matmul arm costs ~2 s warm with identical verdicts
-    (similarity.semantic_decontam_crossjoin docstring has the
-    measurement table).  All three arms share the identical
-    integer-exact decision (e6-quantized cosine, eval_id tie-break,
-    threshold 350000), pinned bitwise by the interchangeability
-    pytest; since round 11 the blas arm is fold-exact BY CONSTRUCTION
-    — entries whose fast sim lands within 1e-10 of an e6 floor
-    boundary are recomputed with the fold's exact scalar sequence
-    (similarity._decontam_blas), so no ulp class remains."""
+    batched-matmul scorer costs ~2 s warm with identical verdicts
+    (similarity.decontam_blas docstring has the measurement).  The
+    scorer shares s26's integer-exact decision (e6-quantized cosine,
+    eval_id tie-break, threshold 350000), pinned bitwise against the HOF gate by the
+    parity pytest; since round 11 it is fold-exact BY CONSTRUCTION —
+    entries whose fast sim lands within 1e-10 of an e6 floor boundary
+    are recomputed with the fold's exact scalar sequence, so no ulp
+    class remains."""
     import os
 
     from fanstats_producer_spark.io import load as _load

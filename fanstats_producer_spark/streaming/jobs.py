@@ -243,20 +243,18 @@ def read_event_stream(
 def windowed_counts(
     events: DataFrame,
     window: str = "1 hour",
-    slide: str | None = None,
     watermark: str = "30 minutes",
 ) -> DataFrame:
-    """s02/s03/s05: watermarked tumbling/sliding window aggregation.
+    """s05/s15/s16: watermarked tumbling window aggregation.
     sum_value uses the split-accumulator exact sum (functions/num.py):
     in streaming the partials land in the state store per window, and
     exactness there means the emitted aggregate is bit-identical no
     matter how rows were batched — same contract as the batch arm."""
     from fanstats_producer_spark.functions.num import dsum_pos
 
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(win.alias("w"), "event_type")
+        .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum_pos("value").alias("sum_value"))
         .select("w.start", "w.end", "event_type", "n", "sum_value")
     )
@@ -591,22 +589,20 @@ def streaming_decontam_crossjoin(
 ) -> StreamingQuery:
     """s26b: the LARGE-EVAL-SUITE decontamination stream — x66's
     decision run per micro-batch in foreachBatch over an eval FRAME
-    with the batched-matmul arm of
-    similarity.semantic_decontam_crossjoin, the one that actually
-    serves suites in the thousands (measured: SQL expression arms —
-    HOF and cross-join alike — cost ~125 s at 10k evals × 10k vectors;
-    the BLAS arm 5 s cold / ~2 s warm, identical verdicts; similarity.py
-    docstring has the full measurement and the ulp-boundary analysis).
-    foreachBatch exists because the per-vector nearest-eval
-    re-aggregate (groupBy + struct-min) cannot ride an append-mode
-    streaming plan; the gate is stateless and per-row, so batch-local
-    evaluation is exact and batch-slicing-invariant, and verdicts land
-    batch-stamped (replay overwrites).  `evals` is a static (eval_id,
-    ev) frame, collected once into a broadcast matrix (ValueError-gated
-    small side)."""
+    with similarity.decontam_blas, the batched-matmul scorer that
+    serves suites in the thousands (measured: the SQL expression
+    forms cost ~125 s at 10k evals × 10k vectors, the matmul 5 s cold
+    / ~2 s warm with identical verdicts; its docstring has the
+    measurement and the ulp-boundary analysis).  foreachBatch exists
+    because the scorer widens a single-split batch by reading its
+    partition count, a batch-frame call; the gate is stateless and
+    per-row, so batch-local evaluation is exact and
+    batch-slicing-invariant, and verdicts land batch-stamped (replay
+    overwrites).  `evals` is a static (eval_id, ev) frame, collected
+    once into a broadcast matrix (ValueError-gated small side)."""
     from fanstats_producer_spark.operators.similarity import (
+        decontam_blas,
         decontam_blas_prepare,
-        semantic_decontam_crossjoin,
     )
 
     # collect + broadcast the eval matrix ONCE, outside foreachBatch —
@@ -615,9 +611,7 @@ def streaming_decontam_crossjoin(
     prepared = decontam_blas_prepare(vectors.sparkSession, evals)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = semantic_decontam_crossjoin(
-            batch_df, evals, "blas", prepared
-        )
+        verdicts = decontam_blas(batch_df, evals, prepared)
         _write_stamped(verdicts, verdict_dir, batch_id)
 
     return (

@@ -11,6 +11,14 @@ if grep -rn "createDataFrame(" fanstats_producer_spark --include=*.py |
   echo "createDataFrame( outside fanstats_producer_spark/io.py" >&2
   exit 1
 fi
+# The opt-in scale arms these options selected were deleted: no
+# registered key set them, and each remaining arm is chosen from input
+# size.  Re-adding one needs a key that runs it.
+if grep -rnwE "bucket_join|max_bucket|max_posting|max_df|broadcast_threshold" \
+  fanstats_producer_spark --include=*.py; then
+  echo "deleted opt-in scale option re-added in fanstats_producer_spark" >&2
+  exit 1
+fi
 python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names

@@ -57,18 +57,10 @@ def generate(
     sf: float,
     out: str,
     seed: int = 42,
-    hot_frac: float = 0.0,
     planted_neighbors: int = 0,
     planted_margins: int = 0,
-    flat_frac: float = 0.0,
 ) -> None:
-    """hot_frac > 0 plants ONE Zipfian hot near-dup cluster in
-    `documents`: that fraction of docs become near-copies of a single
-    template (one token swapped per copy) — the skewed-crawl shape that
-    stresses the dedup path's band buckets (every copy shares most band
-    hashes, so one bucket holds the whole cluster).
-
-    planted_neighbors > 0 plants that many REAL near neighbors (cosine
+    """planted_neighbors > 0 plants that many REAL near neighbors (cosine
     ≈ 0.9+) in `embeddings` for each of the three x57 probe queries
     (vec_id 16-18): the base fixture's neighborhoods are barely
     separated (top-5 cosine 0.34-0.45 vs p99 0.29 — VERDICT r6), so
@@ -82,17 +74,7 @@ def generate(
     hard-negative margin is NEGATIVE there), so mining quality on it
     measures label noise, not the miner.  With a genuinely-close
     positive planted, x84's margin must recover POSITIVE (the natural
-    impostor ceiling is ~0.45 cosine vs the planted ~0.9).
-
-    flat_frac > 0 makes that fraction of documents NEAR-CONSTANT text
-    (one varied character in a run of 'm's): they render to
-    near-constant images whose pHashes are ~0, so all of them pile into
-    the (band, 0) LSH buckets — the degenerate-corpus shape (solid
-    frames, silence, boilerplate scans) that drives x88/x90's 7-bit
-    band buckets toward n-sized population and the bucket self-join
-    toward single-task quadratic.  Used by the salted-plan parity test
-    and the BASELINE skew measurement; NOT part of the standard
-    fixtures (it changes documents content)."""
+    impostor ceiling is ~0.45 cosine vs the planted ~0.9)."""
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng(seed)
 
@@ -294,10 +276,8 @@ def generate(
         texts.append(" ".join(toks))
     n_near = int(round(ndoc * 0.051))
     near_ids = rng.choice(np.arange(1, ndoc), size=n_near, replace=False)
-    dup_srcs: set[int] = set()
     for i in near_ids:
         src = int(rng.integers(0, i))
-        dup_srcs.add(src)
         toks = texts[src].split(" ")
         toks[int(rng.integers(0, len(toks)))] = "dup"
         texts[int(i)] = " ".join(toks)
@@ -307,55 +287,7 @@ def generate(
     )
     for i in exact_ids:
         src = int(rng.integers(0, i))
-        dup_srcs.add(src)
         texts[int(i)] = texts[src]
-    if hot_frac > 0:
-        # one hot cluster: hot_frac of docs are near-copies of doc 0.
-        # Exclude the planted near/exact COPIES *and their sources* —
-        # overwriting a source would silently break the planted pairs
-        # the dedup keys measure against.
-        reserved = np.unique(
-            np.concatenate(
-                [near_ids, exact_ids, np.fromiter(dup_srcs, dtype="int64")]
-            )
-        )
-        n_hot = max(int(round(ndoc * hot_frac)), 2)
-        hot_ids = rng.choice(
-            np.setdiff1d(np.arange(1, ndoc), reserved),
-            size=n_hot - 1,
-            replace=False,
-        )
-        template = texts[0].split(" ")
-        for i in hot_ids:
-            toks = list(template)
-            toks[int(rng.integers(0, len(toks)))] = f"hot{int(i)}"
-            texts[int(i)] = " ".join(toks)
-    if flat_frac > 0:
-        # constant documents (degenerate pHash corpus): identical runs
-        # of 'm's render to pixel-identical solid strips, so ALL of
-        # them share every band bucket — the solid-frame/silence shape.
-        # (A near-constant variant does NOT concentrate: pHash bits are
-        # sign tests of near-zero AC coefficients, so one changed pixel
-        # flips many bits — only byte-identical renders collide, which
-        # is exactly what solid frames are.)  Excludes the planted
-        # near/exact dup ids and their sources (same rule as hot_frac)
-        # so the text-dedup keys stay measurable.
-        reserved = np.unique(
-            np.concatenate(
-                [near_ids, exact_ids, np.fromiter(dup_srcs, dtype="int64")]
-            )
-        )
-        n_flat = max(int(round(ndoc * flat_frac)), 2)
-        pool = np.setdiff1d(np.arange(1, ndoc), reserved)
-        if n_flat > len(pool):
-            raise ValueError(
-                f"flat_frac={flat_frac} needs {n_flat} free doc ids but"
-                f" only {len(pool)} remain after excluding the planted"
-                " dup ids/sources; lower flat_frac or raise sf"
-            )
-        flat_ids = rng.choice(pool, size=n_flat, replace=False)
-        for i in flat_ids:
-            texts[int(i)] = "m" * 600
     _write(
         out,
         "documents",
@@ -443,17 +375,6 @@ def generate(
 
 
 if __name__ == "__main__":
-    sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/repo/localdata/sf{sys.argv[1] if len(sys.argv) > 1 else '1'}"
-    hot = float(sys.argv[3]) if len(sys.argv) > 3 else 0.0
-    planted = int(sys.argv[4]) if len(sys.argv) > 4 else 0
-    margins = int(sys.argv[5]) if len(sys.argv) > 5 else 0
-    flat = float(sys.argv[6]) if len(sys.argv) > 6 else 0.0
-    generate(
-        sf,
-        out,
-        hot_frac=hot,
-        planted_neighbors=planted,
-        planted_margins=margins,
-        flat_frac=flat,
-    )
+    if len(sys.argv) != 3:
+        sys.exit("usage: python scripts/gen_sf.py <sf> <out_dir>")
+    generate(float(sys.argv[1]), sys.argv[2])

@@ -273,34 +273,9 @@ def test_x45_metric_identities(spark):
         assert r.recall_e6 == math.floor(r.tp / (r.tp + r.fn) * 1e6 + 0.5)
 
 
-def test_pagerank_copartitioned_path_matches_broadcast(spark):
-    """The size-gated co-partitioned PageRank (rank vector too big to
-    broadcast) must produce bit-identical ranks to the broadcast path."""
-    from pyspark.sql import functions as F
-
-    from fanstats_producer_spark.operators.graph import pagerank_ranks
-
-    e0 = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 10), (3, 11), (4, 11), (5, 12)],
-        "src long, dst long",
-    )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    broad = {
-        r.node: r.rank
-        for r in pagerank_ranks(edges, broadcast_threshold=None).collect()
-    }
-    copart = {
-        r.node: r.rank
-        for r in pagerank_ranks(edges, broadcast_threshold=0).collect()
-    }
-    assert broad == copart and len(broad) == 8
-
-
 def test_pagerank_driver_fast_path_matches_broadcast(spark):
     """The size-gated driver numpy arm (r13) must produce bit-identical
-    (node, rank, outdeg) rows to the distributed arms — same int64
+    (node, rank, outdeg) rows to the broadcast arm — same int64
     floor-division arithmetic, scatter-summed."""
     from pyspark.sql import functions as F
 
@@ -315,21 +290,17 @@ def test_pagerank_driver_fast_path_matches_broadcast(spark):
     ).localCheckpoint(eager=True)
     broad = sorted(
         tuple(r)
-        for r in pagerank_ranks(edges, broadcast_threshold=None).collect()
+        for r in pagerank_ranks(edges, driver_threshold=None).collect()
     )
     driver = sorted(
         tuple(r)
-        for r in pagerank_ranks(
-            edges, broadcast_threshold=None, driver_threshold=1_000
-        ).collect()
+        for r in pagerank_ranks(edges, driver_threshold=1_000).collect()
     )
     assert broad == driver and len(driver) == 8
     # threshold below the edge count must fall through to distributed
     fallthrough = sorted(
         tuple(r)
-        for r in pagerank_ranks(
-            edges, broadcast_threshold=None, driver_threshold=3
-        ).collect()
+        for r in pagerank_ranks(edges, driver_threshold=3).collect()
     )
     assert fallthrough == broad
 

@@ -615,10 +615,10 @@ def _pagerank_landing(spark):
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    df = pagerank_ranks(edges, broadcast_threshold=None, driver_threshold=1_000)
+    df = pagerank_ranks(edges, driver_threshold=1_000)
     driver = sorted(tuple(r) for r in df.collect())
     broad = sorted(
-        tuple(r) for r in pagerank_ranks(edges, broadcast_threshold=None).collect()
+        tuple(r) for r in pagerank_ranks(edges, driver_threshold=None).collect()
     )
     assert driver == broad and len(driver) == 8
     return df

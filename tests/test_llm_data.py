@@ -192,29 +192,6 @@ def test_x46_leakage_counts_bounded(spark):
         assert 0 <= r.n_leaked <= r.n_docs
 
 
-def test_decontaminate_hot_shingle_cap(spark):
-    """x27's max_posting lever (forced path): a train-side posting cap
-    drops boilerplate shingles before the collect_list aggregate, so a
-    hot shingle can never fold the corpus into one row; uncapped and
-    generously-capped runs are identical (the cap only bites past the
-    bound)."""
-    from fanstats_producer_spark.io import load
-    from fanstats_producer_spark.operators.llm_data import decontaminate_hits
-
-    docs = load(spark, "/root/testdata/sf0.001", "documents")
-    base = sorted(map(tuple, decontaminate_hits(docs).collect()))
-    loose = sorted(
-        map(tuple, decontaminate_hits(docs, max_posting=10**6).collect())
-    )
-    assert loose == base  # cap above every posting size: no-op
-    tight = sorted(
-        map(tuple, decontaminate_hits(docs, max_posting=2).collect())
-    )
-    # capped hits are a subset computed from strictly fewer shingles
-    assert set(t[:2] for t in tight) <= set(b[:2] for b in base)
-    assert len(tight) < len(base)
-
-
 def test_x78_repetition_chars_hand_computed(spark):
     """Planted doc: 'a b c a b c x' — top 3-gram 'a b c' occurs twice
     (len 5), total chars 13; dup 3-gram coverage = positions 1-3 and

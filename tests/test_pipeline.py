@@ -79,10 +79,9 @@ def test_rest_datasource_parallel_topics(spark):
 def test_rest_datasource_custom_fetcher_via_import_spec(spark):
     """A custom fetcher must work although the reader is constructed in
     a plan-time Python worker and run on executor workers — processes
-    that import rest_datasource fresh, where runtime register_fetcher()
-    calls from the driver are invisible.  The supported cross-process
-    path is an importable 'module:attr' spec, resolved in __init__ and
-    pickled with the reader."""
+    that import rest_datasource fresh.  The cross-process path is an
+    importable 'module:attr' spec, resolved in __init__ and pickled
+    with the reader."""
     rest_datasource.register(spark)
     df = (
         spark.read.format("fanstats_rest")
@@ -95,7 +94,7 @@ def test_rest_datasource_custom_fetcher_via_import_spec(spark):
     assert len(rows) == 20  # 10-cap per topic × 2 topics
     assert all("game update" in r.text for r in rows)
 
-    # An unknown bare name fails loudly at plan time, listing the registry.
+    # A bare name that is not an import spec fails loudly at plan time.
     with pytest.raises(Exception, match="unknown fetcher|KeyError"):
         (
             spark.read.format("fanstats_rest")

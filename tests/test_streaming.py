@@ -2072,18 +2072,19 @@ def test_s26_gate_is_batch_slicing_invariant(spark, tmp_path):
 
 
 def test_s26b_crossjoin_arm_matches_hof_arm_bitwise(spark):
-    """The two decontamination arms must be interchangeable bit-for-bit
-    (same e6-quantized cosine, same eval_id tie-break, same threshold):
-    run s26's interpreted-HOF gate and s26b's codegen'd cross-join form
-    over the SAME corpus/eval split and compare every verdict column.
-    The split is s26b's parity split so the eval side is the many-vector
-    regime the cross-join arm exists for."""
+    """The two decontamination scorers must be interchangeable
+    bit-for-bit (same e6-quantized cosine, same eval_id tie-break, same
+    threshold): run s26's interpreted-HOF gate — the registered x66/s26
+    decision — and s26b's BLAS scorer over the SAME corpus/eval split
+    and compare every verdict column.  The split is s26b's parity split
+    so the eval side is the many-vector regime the BLAS scorer exists
+    for."""
     from pyspark.sql import functions as F
 
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import (
         _as_double,
-        semantic_decontam_crossjoin,
+        decontam_blas,
         semantic_decontam_gate,
     )
 
@@ -2111,13 +2112,10 @@ def test_s26b_crossjoin_arm_matches_hof_arm_bitwise(spark):
         }
 
     hof = key(semantic_decontam_gate(corpus, evs_row).collect())
-    cj = key(semantic_decontam_crossjoin(corpus, evals).collect())
-    blas = key(
-        semantic_decontam_crossjoin(corpus, evals, scorer="blas").collect()
-    )
-    assert hof == cj and len(cj) == corpus.count()
+    assert len(hof) == corpus.count()
     # the registered s26b arm: batched matmul, same verdicts bitwise
-    assert blas == cj
+    blas = key(decontam_blas(corpus, evals).collect())
+    assert blas == hof
 
     # FORCED-RESCUE pass (r10 ulp item): with the boundary band blown
     # wide open every entry routes through _fold_cosine, so this pins
@@ -2126,14 +2124,8 @@ def test_s26b_crossjoin_arm_matches_hof_arm_bitwise(spark):
     # registered narrow band (1e-4 e6-units) relies on.  Not just the
     # winner: max_sim_e6 AND nearest_eval_id must both hold, since a
     # rescued q feeds the composite argmin.
-    from fanstats_producer_spark.operators.similarity import (
-        _decontam_blas,
-    )
-
-    rescued = key(
-        _decontam_blas(corpus, evals, band=float("inf")).collect()
-    )
-    assert rescued == cj
+    rescued = key(decontam_blas(corpus, evals, band=float("inf")).collect())
+    assert rescued == hof
 
 
 def test_s27_packing_carries_offset_and_absorbs_replay(spark, tmp_path):
@@ -2709,7 +2701,7 @@ def test_decontam_blas_repartitions_single_split_batch(spark):
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import (
         _as_double,
-        _decontam_blas,
+        decontam_blas,
     )
 
     emb = _load(spark, "/root/testdata/sf0.001", "embeddings")
@@ -2722,7 +2714,7 @@ def test_decontam_blas_repartitions_single_split_batch(spark):
         .select("vec_id", "embedding")
         .coalesce(1)  # the one-split batch shape
     )
-    out = _decontam_blas(corpus, evals)
+    out = decontam_blas(corpus, evals)
     target = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() >= min(target, 8)
     # and an already-wide batch is left alone (no extra shuffle)
@@ -2731,8 +2723,48 @@ def test_decontam_blas_repartitions_single_split_batch(spark):
         .select("vec_id", "embedding")
         .repartition(target)
     )
-    out2 = _decontam_blas(wide, evals)
+    out2 = decontam_blas(wide, evals)
     assert out2.rdd.getNumPartitions() == target
+
+
+def test_fixture_cache_key_tracks_documents_file(tmp_path):
+    """The per-fixture session caches key on the sf_dir's abspath plus
+    documents.parquet's (mtime_ns, size): regenerating the fixture into
+    the same directory must change the key, so a staged landing is never
+    served from a stale corpus; a directory without the file keys as
+    (abspath, 0, 0)."""
+    import os
+
+    from fanstats_producer_spark.streaming.driver_entries import (
+        _fixture_cache_key,
+    )
+
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    path = os.path.abspath(str(sf_dir))
+    assert _fixture_cache_key(str(sf_dir)) == (path, 0, 0)
+
+    doc = sf_dir / "documents.parquet"
+    doc.write_bytes(b"x" * 10)
+    os.utime(doc, ns=(1_000_000_000, 1_000_000_000))
+    first = _fixture_cache_key(str(sf_dir))
+    assert first == (path, 1_000_000_000, 10)
+    assert _fixture_cache_key(str(sf_dir)) == first  # stable while unchanged
+
+    # rewritten with a different size (mtime pinned): key changes
+    doc.write_bytes(b"x" * 11)
+    os.utime(doc, ns=(1_000_000_000, 1_000_000_000))
+    resized = _fixture_cache_key(str(sf_dir))
+    assert resized != first and resized[2] == 11
+
+    # rewritten with the same size but a new mtime: key changes
+    os.utime(doc, ns=(2_000_000_000, 2_000_000_000))
+    touched = _fixture_cache_key(str(sf_dir))
+    assert touched != resized and touched[1:] == (2_000_000_000, 11)
+
+    # a relative spelling of the same directory maps to the same key
+    rel = os.path.relpath(str(sf_dir))
+    assert _fixture_cache_key(rel) == touched
 
 
 def test_driver_entries_harness_imports():

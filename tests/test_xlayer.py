@@ -487,15 +487,9 @@ def test_semdedup_blas_scorer_matches_fold(spark):
 def test_minhash_skew_arms_identical_and_wide(spark):
     """Zipfian-skew robustness of the banded pair expansion: on a
     corpus with one hot near-dup cluster (20% of docs near-copies of a
-    single template — every member shares every band hash), the three
-    pair-generation arms (in-row combos, band-hash self-join, salted
-    self-join) must produce IDENTICAL (id_a, id_b, est) sets, and the
-    plans must witness the scale story: combos folds each bucket into
-    one collect_list row (the single-task bottleneck), the join arms
-    have no collect_list, and the salted arm's join keys include the
-    salt column (the hot bucket splits into `salt` co-sized groups —
-    required because AQE's OptimizeSkewedJoin skips a self-join skewed
-    on both sides of the same partition)."""
+    single template — every member shares every band hash), the in-row
+    combos expansion must still emit the cluster's quadratic pair mass,
+    and its plan folds each bucket into one collect_list row."""
     import random
 
     from fanstats_producer_spark.operators.dedup import minhash_native_pairs
@@ -513,25 +507,13 @@ def test_minhash_skew_arms_identical_and_wide(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    arms = {
-        "combos": minhash_native_pairs(docs),
-        "join": minhash_native_pairs(docs, bucket_join=True),
-        "salt": minhash_native_pairs(docs, bucket_join=True, salt=4),
-    }
-    got = {
-        k: {(r.id_a, r.id_b, r.est_jaccard_e6) for r in df.collect()}
-        for k, df in arms.items()
-    }
-    assert got["combos"], "hot cluster must produce pairs"
-    assert got["combos"] == got["join"] == got["salt"]
+    combos = minhash_native_pairs(docs)
+    got = {(r.id_a, r.id_b, r.est_jaccard_e6) for r in combos.collect()}
+    assert got, "hot cluster must produce pairs"
     # the hot cluster is actually in there (quadratic pair mass)
-    hot = [p for p in got["combos"] if p[0] <= 40 and p[1] <= 40]
+    hot = [p for p in got if p[0] <= 40 and p[1] <= 40]
     assert len(hot) > 400
-    plans = {k: df._jdf.queryExecution().toString() for k, df in arms.items()}
-    assert "collect_list" in plans["combos"]
-    assert "collect_list" not in plans["join"]
-    assert "collect_list" not in plans["salt"]
-    assert "salt" in plans["salt"] and "salt" not in plans["join"]
+    assert "collect_list" in combos._jdf.queryExecution().toString()
 
 
 def test_connected_components_chain_and_clique(spark):
@@ -1724,65 +1706,6 @@ def test_x88_pigeonhole_banding_is_exact_complete(spark):
     assert (1, 2) in got and got[(1, 2)] == 0
     assert (1, 3) in got and got[(1, 3)] == 8
     assert (1, 4) not in got
-
-
-def test_x88_salted_banding_identical_pairs_on_degenerate_corpus(
-    spark, tmp_path
-):
-    """Skew lever parity (VERDICT r9 ask 2): on a flat_frac corpus —
-    near-constant documents whose pHashes pile into the (band, 0)
-    buckets, the n/128 degenerate shape — the salted bucket self-join
-    must return the IDENTICAL pair set as the unsalted plan (salting
-    only re-partitions the quadratic work, probe side exploded across
-    salt values x build side hashed into one), and the degeneracy must
-    actually be present (one bucket holding the whole flat cluster).
-    Also pins max_bucket's contract: it DROPS mega-buckets, so its
-    output is a strict subset on this corpus."""
-    from scripts.gen_sf import generate
-    from fanstats_producer_spark.io import load, spread
-    from fanstats_producer_spark.operators.multimodal import (
-        phash_features,
-        phash_near_dup_pairs,
-        streaming_phash_band_keys,
-        with_payload,
-    )
-
-    d = str(tmp_path / "flat")
-    generate(0.01, d, flat_frac=0.3)  # 500 docs, 150 pixel-identical
-    payloads = with_payload(
-        spread(load(spark, d, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    hashes = payloads.mapInPandas(
-        phash_features, schema="doc_id long, phash long"
-    ).localCheckpoint(eager=True)
-    # the degenerate shape is real: some (band, val) bucket holds the
-    # whole flat cluster (>= 100 docs >> 500/128) — band keys via the
-    # SHARED banding helper (streaming prefix), not a re-derivation
-    from pyspark.sql import functions as F2
-
-    docs_like = load(spark, d, "documents").select("doc_id", "text")
-    bucket_max = (
-        streaming_phash_band_keys(docs_like)
-        .groupBy("band_hash")
-        .count()
-        .agg(F2.max("count"))
-        .collect()[0][0]
-    )
-    assert bucket_max >= 100, bucket_max
-    base = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_near_dup_pairs(hashes).collect()
-    }
-    salted = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_near_dup_pairs(hashes, salt=8).collect()
-    }
-    assert salted == base and len(base) > 100
-    capped = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_near_dup_pairs(hashes, max_bucket=50).collect()
-    }
-    assert capped < base  # mega-buckets dropped => strictly fewer pairs
 
 
 def test_x84_mines_positive_margins_on_planted_geometry(spark, tmp_path):
