@@ -1,51 +1,116 @@
 """Multimodal columns (SURVEY.md §2C T7): binary payloads with typed
-metadata, carried through the relational pipeline, processed via
-Arrow-batched mapInPandas.
+metadata, carried through the relational pipeline and processed in
+Arrow-batched mapInPandas workers.
 
-Design: image/audio/video are opaque `binary` columns plus a metadata
-struct (format, n_bytes, ...).  Decode / feature-extraction runs inside
-mapInPandas so each Arrow batch of blobs is handled by one Python worker
-pass — the same shape a real CV/audio stage would use.  IMAGE decode is
-REAL: `decode_image` is a stdlib-only PNG decoder (chunk walk with CRC
-verification, zlib inflate, all five reverse filters) with a matching
-`encode_png`, exercised end-to-end by the oracle-checked x58 round trip.
-AUDIO decode is REAL too: `encode_wav`/`decode_wav` are a stdlib-only
-RIFF/WAVE codec pair (chunk walk, fmt validation, 16-bit PCM),
-exercised end-to-end by the oracle-checked x64 round trip and
-cross-validated against the stdlib `wave` module in tests.
-ANIMATION decode is REAL as well: `encode_gif`/`decode_gif` are a
-stdlib-only animated-GIF89a codec (block walk, real variable-width LZW,
-per-frame delays), exercised end-to-end by the oracle-checked x65
-round trip.  VIDEO decode is REAL for AVI carrying uncompressed DIB
-or Motion-JPEG: `encode_avi`/`decode_avi` implement the RIFF/AVI LIST
-grammar (avih/strh/strf headers, bottom-up padded DIB rows, idx1) with
-an 'MJPG' arm whose frame chunks are complete baseline JPEGs decoded
-through the x71 codec — exercised end-to-end by the oracle-checked
-x70 and x76 round trips — and `decode_video` dispatches to it.  The
-ONLY NotImplementedError paths left are INTER-FRAME codecs
-(H.264/VP9/...), which genuinely require ffmpeg — absent here — so
-their pipelines substitute deterministic fakes, keeping the
-Spark-side plumbing (schema, batching, partitioning) fully real and
-testable.
+Image/audio/video are opaque `binary` columns plus a metadata struct
+(`with_payload`).  The fixture has no binary column, so payloads are
+manufactured from `documents.text` (UTF-8 bytes), byte-identical on
+both engines, which makes every codec path oracle-checkable.
 
-The fixture has no binary column, so x07 manufactures payloads from
-`documents.text` (UTF-8 bytes) — byte-identical on both engines, which
-makes the whole binary path oracle-checkable.
+The codecs are real and stdlib-only: PNG (`encode_png`/`decode_image`,
+x58), WAV (`encode_wav`/`decode_wav`, x64), animated GIF89a
+(`encode_gif`/`decode_gif`, x65), baseline JPEG
+(`encode_jpeg`/`decode_jpeg`, x71) and AVI carrying uncompressed DIB or
+Motion-JPEG frames (`encode_avi`/`decode_avi`, x70/x76).  Only
+inter-frame video codecs (H.264/VP9) raise NotImplementedError: they
+need ffmpeg, which is absent.
+
+One combinator owns the engine-to-Python boundary.  A key states a row
+function `rows(doc_id: int, payload: bytes)` that yields tuples in the
+field order of a DDL schema string.  `payload_worker(rows, schema)`
+turns it into the mapInPandas function: one
+`pd.DataFrame(..., columns=<the schema's field names>)` per Arrow batch,
+zero-row frames included, with the schema carried as `.schema`.
+`document_features(spark, sf_dir, worker)` runs a worker over the
+spread fixture documents' (doc_id, payload), and the s28/s29 stream
+prefix runs the same worker objects.  Every row function is row-local,
+so the codec work runs map-side on every executor with no shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
+import struct
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fanstats_producer_spark.io import disk_checkpoint, load
+from fanstats_producer_spark.io import disk_checkpoint, load, spread
 from fanstats_producer_spark.registry import query
+
+
+def payload_worker(rows, schema: str):
+    """The mapInPandas function that yields, per (doc_id, payload)
+    batch, one frame of every `rows(doc_id, payload)` tuple, with
+    columns named by the fields of the DDL string `schema` (carried as
+    `.schema`)."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    row
+                    for doc_id, blob in zip(pdf["doc_id"], pdf["payload"])
+                    for row in rows(int(doc_id), bytes(blob))
+                ],
+                columns=names,
+            )
+
+    worker.schema = schema
+    return worker
+
+
+def with_payload(docs: DataFrame) -> DataFrame:
+    """Attach a binary payload + metadata struct (T7 column model)."""
+    return docs.select(
+        "doc_id",
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
+        F.struct(
+            F.lit("utf8-blob").alias("format"),
+            F.octet_length("text").cast("long").alias("n_bytes"),
+            F.col("lang").alias("lang"),
+        ).alias("meta"),
+    )
+
+
+def document_features(spark: SparkSession, sf_dir: str, worker) -> DataFrame:
+    """`worker` over the fixture documents' (doc_id, payload).  The
+    documents are one parquet split, so they are spread across the
+    cores first; otherwise every codec call runs in one task."""
+    payloads = with_payload(spread(load(spark, sf_dir, "documents"), "doc_id"))
+    return payloads.select("doc_id", "payload").mapInPandas(worker, worker.schema)
+
+
+def _grid(b: bytes, width: int):
+    """`b` as a (h, width) uint8 grid, h = max(1, ceil(len(b) / width)),
+    the final row padded with spaces."""
+    h = max(1, -(-len(b) // width))
+    return np.frombuffer(b.ljust(h * width, b" "), np.uint8).reshape(h, width)
+
+
+def _pcm(b: bytes):
+    """16-bit PCM synthesized from payload bytes, (byte-128)<<8 per
+    sample: byte-deterministic, so an oracle can re-derive it."""
+    return ((np.frombuffer(b, np.uint8).astype(np.int16) - 128) * 256).astype("<i2")
+
+
+def _blocks_up(grid):
+    """Every pixel of `grid` as a constant 8x8 block."""
+    return np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1)
+
+
+def _blocks_down(px):
+    """The rounded 8x8 block means of `px`, inverse of `_blocks_up`."""
+    h, w = px.shape[0] // 8, px.shape[1] // 8
+    blocks = px.reshape(h, 8, w, 8).transpose(0, 2, 1, 3).reshape(h, w, 64)
+    return np.round(blocks.mean(axis=2)).astype(np.uint8)
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -54,9 +119,6 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + typ
@@ -71,11 +133,6 @@ def encode_png(pixels) -> bytes:
     r % 5, so a full encode/decode round trip exercises every PNG
     filter type (None/Sub/Up/Average/Paeth); all filters are computed
     vectorized (the Paeth predictor is an elementwise min-of-three)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         color_type, h, w = 0, px.shape[0], px.shape[1]
@@ -131,17 +188,12 @@ def decode_image(payload: bytes):
     (decode_jpeg, x71); GIF payloads dispatch to the real GIF89a codec
     (decode_gif, x65) and return the FIRST frame's color-table indices
     as the still image.  Adam7-interlaced PNGs and every other format
-    (WebP/...) raise NotImplementedError — callers fall back to deterministic
-    byte-level features, same as before this decoder existed.
+    (WebP/...) raise NotImplementedError; x07's extract_features falls
+    back to byte-level features.
     Corrupt PNG-signed payloads raise ValueError (CRC/length mismatch),
     struct.error (truncated header), or zlib.error (damaged deflate) —
     batch callers must treat those as fallback-able too (a bad blob in
     a 100 TB asset scan must not fail the job)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     b = bytes(payload)
     if b[:2] == b"\xff\xd8":
         return decode_jpeg(b)  # baseline sequential JPEG (x71 codec)
@@ -236,58 +288,23 @@ def decode_image(payload: bytes):
     return out.reshape(h, w, bpp)
 
 
-def extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: per-blob features.  PNG payloads go through
-    the REAL stdlib decoder and report features of the decoded pixel
-    array (count, digest, first pixel); every other format falls back
-    to deterministic byte-level features — same schema, so the batch
-    shape stays production-real either way."""
-    import struct
-    import zlib
-
-    for pdf in batches:
-        payloads = pdf["payload"]
-        feats = []
-        for doc_id, blob in zip(pdf["doc_id"], payloads):
-            b = bytes(blob)
-            try:
-                px = decode_image(b)
-                flat = px.reshape(-1)
-                feats.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_bytes": int(px.size),
-                        "payload_sha": hashlib.sha256(px.tobytes()).hexdigest(),
-                        "head_byte": int(flat[0]) if px.size else None,
-                    }
-                )
-            except (NotImplementedError, ValueError, struct.error, zlib.error):
-                # non-PNG formats AND corrupt PNGs (truncated header ->
-                # struct.error, bit-flip -> CRC ValueError, damaged
-                # deflate -> zlib.error) all take the byte-level
-                # fallback — a bad blob must never fail the whole job
-                feats.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_bytes": len(b),
-                        "payload_sha": hashlib.sha256(b).hexdigest(),
-                        "head_byte": b[0] if b else None,
-                    }
-                )
-        yield pd.DataFrame(feats)
+def _x07_rows(doc_id: int, b: bytes):
+    """Per-blob features.  Payloads a real codec decodes (PNG/GIF/JPEG)
+    report the decoded uint8 pixels (count, digest, first pixel).
+    Every other format, and a corrupt blob (truncated header ->
+    struct.error, bit-flip -> CRC ValueError, damaged deflate ->
+    zlib.error), falls back to the same features over the raw bytes:
+    a bad blob must never fail the scan."""
+    try:
+        data = decode_image(b).tobytes()
+    except (NotImplementedError, ValueError, struct.error, zlib.error):
+        data = b
+    yield doc_id, len(data), hashlib.sha256(data).hexdigest(), data[0] if data else None
 
 
-def with_payload(docs: DataFrame) -> DataFrame:
-    """Attach a binary payload + metadata struct (T7 column model)."""
-    return docs.select(
-        "doc_id",
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-        F.struct(
-            F.lit("utf8-blob").alias("format"),
-            F.octet_length("text").cast("long").alias("n_bytes"),
-            F.col("lang").alias("lang"),
-        ).alias("meta"),
-    )
+extract_features = payload_worker(
+    _x07_rows, "doc_id long, n_bytes long, payload_sha string, head_byte int"
+)
 
 
 @query(
@@ -301,49 +318,39 @@ def with_payload(docs: DataFrame) -> DataFrame:
     """,
 )
 def x07_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # No spread: x07's rows are one failed decode and one sha256, cheaper
+    # than the spread's exchange (sf0.1, 4 cores: 0.28 s unspread, 0.39 s
+    # spread, slower in 15 of 15 same-session pairs).
     payloads = with_payload(load(spark, sf_dir, "documents"))
-    return payloads.mapInPandas(
-        extract_features,
-        schema="doc_id long, n_bytes long, payload_sha string, head_byte int",
+    return payloads.select("doc_id", "payload").mapInPandas(
+        extract_features, extract_features.schema
     )
 
 
 _PNG_W = 32  # x58 image width: each document renders as a 32-px-wide strip
 
 
-def png_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for x58: render each document's UTF-8 bytes
-    as an 8-bit grayscale image (width _PNG_W, space-padded final row),
-    ENCODE it to a real PNG (encode_png — filters rotate through all
-    five types), then DECODE it back with the real decoder and emit
-    features of the decoded pixels.  The pixel digest equals the digest
-    of the padded source bytes iff inflate + unfiltering reconstructed
-    every row exactly — which is what the DuckDB oracle asserts from
-    the text side."""
-    import numpy as np
+def _x58_rows(doc_id: int, b: bytes):
+    """Render the bytes as an 8-bit grayscale image (width _PNG_W,
+    space-padded final row), ENCODE it to a real PNG (encode_png's
+    filters rotate through all five types), DECODE it back and report
+    the decoded pixels.  The pixel digest equals the digest of the
+    padded source bytes iff inflate + unfiltering reconstructed every
+    row exactly, which is what the DuckDB oracle asserts from the text
+    side."""
+    px = decode_image(encode_png(_grid(b, _PNG_W)))
+    yield (
+        doc_id,
+        int(px.shape[1]),
+        int(px.shape[0]),
+        int(px.size),
+        hashlib.sha256(px.tobytes()).hexdigest(),
+    )
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(blob)
-            h = max(1, -(-len(b) // _PNG_W))
-            padded = b + b" " * (h * _PNG_W - len(b))
-            img = np.frombuffer(padded, np.uint8).reshape(h, _PNG_W)
-            px = decode_image(encode_png(img))
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "width": int(px.shape[1]),
-                    "height": int(px.shape[0]),
-                    "n_px": int(px.size),
-                    "pixel_sha": hashlib.sha256(px.tobytes()).hexdigest(),
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "width", "height", "n_px", "pixel_sha"]
-        )
+
+png_roundtrip_features = payload_worker(
+    _x58_rows, "doc_id long, width int, height int, n_px long, pixel_sha string"
+)
 
 
 @query(
@@ -363,65 +370,38 @@ def png_roundtrip_features(
     """,
 )
 def x58_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x58: REAL image decode in the multimodal path — documents render
-    to genuine PNGs (stdlib encoder, all five filter types) and the
-    stdlib decoder (CRC walk + inflate + reverse filtering) recovers
-    the pixel matrix; the oracle recomputes the pixel digest straight
-    from the text (fixture text is ASCII, so rpad's char padding is
-    byte padding).  Decode runs inside mapInPandas, so at 100 TB the
-    codec work distributes across executors with zero shuffle — the
-    fallback-only ffmpeg-class video stub is the one fake left in the
-    repo (audio and animation decode are real too: x64, x65)."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        png_roundtrip_features,
-        schema="doc_id long, width int, height int, n_px long, pixel_sha string",
-    )
+    """x58: REAL image decode: documents render to genuine PNGs (stdlib
+    encoder, all five filter types) and the stdlib decoder (CRC walk +
+    inflate + reverse filtering) recovers the pixel matrix; the oracle
+    recomputes the pixel digest straight from the text (fixture text is
+    ASCII, so rpad's char padding is byte padding)."""
+    return document_features(spark, sf_dir, png_roundtrip_features)
 
 
-def tensor_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker with REAL vectorized compute: each payload is
-    viewed as a uint8 tensor (numpy zero-copy over the Arrow buffer),
-    split into 8 contiguous segments (np.array_split boundaries), and
-    mean-pooled per segment — the shape of a patch-embedding stage, with
-    the codec decode swapped for the byte view.  Empty segments (payloads
-    shorter than 8 bytes) emit no row, so the output is well-defined for
-    any blob."""
-    import numpy as np
+def _x07b_rows(doc_id: int, b: bytes):
+    """REAL vectorized compute: the payload viewed as a uint8 tensor
+    (numpy zero-copy), split into 8 contiguous segments (np.array_split
+    boundaries) and mean-pooled per segment, the shape of a
+    patch-embedding stage with the codec decode swapped for the byte
+    view.  Empty segments (payloads shorter than 8 bytes) emit no row,
+    so the output is well-defined for any blob."""
+    arr = np.frombuffer(b, dtype=np.uint8)
+    for seg, chunk in enumerate(np.array_split(arr, 8)):
+        if chunk.size:
+            # exact: integer byte sum / count, then pure-IEEE floor
+            # quantization
+            mean_e6 = math.floor(float(chunk.sum()) / chunk.size * 1e6 + 0.5)
+            yield doc_id, seg, int(mean_e6)
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(bytes(blob), dtype=np.uint8)
-            for seg, chunk in enumerate(np.array_split(arr, 8)):
-                if chunk.size:
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "seg": seg,
-                            # exact: integer byte sum / count, then
-                            # pure-IEEE floor quantization
-                            "mean_byte_e6": int(
-                                math.floor(
-                                    float(chunk.sum())
-                                    / chunk.size
-                                    * 1e6
-                                    + 0.5
-                                )
-                            ),
-                        }
-                    )
-        yield pd.DataFrame(rows, columns=["doc_id", "seg", "mean_byte_e6"])
+
+tensor_features = payload_worker(
+    _x07b_rows, "doc_id long, seg int, mean_byte_e6 long"
+)
 
 
 # The oracle reproduces np.array_split's boundaries (i*(l//8)+min(i,l%8))
 # byte-for-byte over the UTF-8 blob, so the numpy pooling is value-hash
-# checked — the ffmpeg-class video stub is the only fake in the
-# multimodal path.
+# checked.
 @query(
     "x07b_tensor_features",
     oracle="""
@@ -448,98 +428,23 @@ def tensor_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """,
 )
 def x07b_tensor_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    payloads = with_payload(load(spark, sf_dir, "documents")).select(
-        "doc_id", "payload"
-    )
-    return payloads.mapInPandas(
-        tensor_features, schema="doc_id long, seg int, mean_byte_e6 long"
-    )
+    return document_features(spark, sf_dir, tensor_features)
 
 
 def resize_image(payload: bytes, width: int, height: int) -> bytes:
     """REAL image resize, stdlib+numpy only: decode through the real
     codecs (PNG/GIF/JPEG via decode_image), nearest-neighbor resample
-    with integer index math — out(i,j) = src((i*H) div height,
+    with integer index math (out(i,j) = src((i*H) div height,
     (j*W) div width), exact and engine-reproducible, no interpolation
-    arithmetic to drift — and re-encode as PNG.  Payloads no real
-    codec can decode still raise NotImplementedError; callers keep the
-    deterministic fake as their fallback."""
-    import numpy as np
-
+    arithmetic to drift) and re-encode as PNG.  Raises what
+    decode_image raises on a payload no real codec decodes, the error
+    classes x07's extract_features falls back on."""
     arr = decode_image(payload)
     h, w = arr.shape[0], arr.shape[1]
     rows = (np.arange(height) * h) // height
     cols = (np.arange(width) * w) // width
     resized = arr[rows][:, cols]
     return encode_png(resized)
-
-
-def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in with the right contract shape: output size
-    scales with the requested dimensions, content derived from input."""
-    target = max(1, (width * height) // 64)
-    reps = (target // max(len(payload), 1)) + 1
-    return (payload * reps)[:target]
-
-
-def resize_batch(width: int, height: int):
-    """mapInPandas stage: resize every blob in the batch. Arrow batch in,
-    Arrow batch out — the exact shape of a production CV stage."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        for pdf in batches:
-            out = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(blob)
-                try:
-                    resized = resize_image(b, width, height)
-                except (NotImplementedError, ValueError, struct.error,
-                        zlib.error):
-                    # decode_image's contract: corrupt or unsupported
-                    # blobs must not fail a 100 TB asset scan — and
-                    # encode_png rejects alpha shapes with ValueError
-                    resized = _fake_resize(b, width, height)
-                out.append({"doc_id": int(doc_id), "payload": resized,
-                            "width": width, "height": height})
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def sample_frames(payload: bytes, n_frames: int) -> list[bytes]:
-    """Real frame sampling goes here (pyav/ffmpeg). Unavailable —
-    callers catch and use the deterministic byte-stride fake."""
-    raise NotImplementedError("video codecs not available in this environment")
-
-
-def _fake_frames(payload: bytes, n_frames: int) -> list[bytes]:
-    """Deterministic stride sampling over the byte stream: n_frames
-    evenly spaced 16-byte windows (contract: list of frame blobs)."""
-    if not payload:
-        return []
-    stride = max(len(payload) // n_frames, 1)
-    return [payload[i * stride : i * stride + 16] for i in range(n_frames)]
-
-
-def frame_sample_batch(n_frames: int):
-    """mapInPandas stage: explode each video blob into frame rows."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(blob)
-                try:
-                    frames = sample_frames(b, n_frames)
-                except NotImplementedError:
-                    frames = _fake_frames(b, n_frames)
-                for idx, frame in enumerate(frames):
-                    rows.append({"doc_id": int(doc_id), "frame_idx": idx,
-                                 "frame": frame})
-            yield pd.DataFrame(rows)
-
-    return fn
 
 
 def read_binary_assets(
@@ -583,22 +488,20 @@ def read_binary_assets(
 
 # --- x42: video frame sampling (T7 temporal-media arm) --------------------------
 # A video stage samples every S-th frame before feature extraction (the
-# standard decode-cost lever).  The codec is stubbed like decode_image;
-# the fallback treats the payload as fixed-size frame records (FB bytes
-# per frame) — which keeps the frame arithmetic, the Arrow batch shape,
-# and the sampled-bytes fingerprint fully real and byte-checkable in
-# SQL (fixture text is ASCII, so char offsets == byte offsets).
+# standard decode-cost lever).  x42 treats the payload as fixed-size
+# frame records (FB bytes per frame), which keeps the frame arithmetic
+# and the sampled-bytes fingerprint byte-checkable in SQL (fixture text
+# is ASCII, so char offsets == byte offsets).
 _FRAME_BYTES = 32
 _FRAME_STRIDE = 4
 
 
 def decode_video(payload: bytes) -> object:
     """Video demux/decode.  REAL for AVI carrying uncompressed DIB
-    (x70) or Motion-JPEG (x76 — every frame chunk decoded through the
-    x71 baseline JPEG codec); only INTER-FRAME codecs (H.264/VP9,
-    non-AVI containers) raise NotImplementedError because decoding
-    them genuinely requires ffmpeg/pyav, which this container lacks —
-    callers catch and use the fixed-size-frame fallback."""
+    (x70) or Motion-JPEG (x76, every frame chunk decoded through the
+    x71 baseline JPEG codec); INTER-FRAME codecs (H.264/VP9, non-AVI
+    containers) raise NotImplementedError because decoding them needs
+    ffmpeg/pyav, which this container lacks."""
     b = bytes(payload)
     if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"AVI ":
         return decode_avi(b)
@@ -607,45 +510,19 @@ def decode_video(payload: bytes) -> object:
     )
 
 
-class _FallBack(Exception):
-    """Control-flow marker: take x42's deterministic byte-slice path."""
+def _x42_rows(doc_id: int, b: bytes):
+    """Every _FRAME_STRIDE-th fixed-size frame of the payload,
+    md5-fingerprinted.  Byte slicing never parses the payload, so no
+    blob can fail the scan."""
+    n_frames = max(1, math.ceil(len(b) / _FRAME_BYTES))
+    picks = range(0, n_frames, _FRAME_STRIDE)
+    sampled = b"".join(b[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES] for i in picks)
+    yield doc_id, n_frames, len(picks), hashlib.md5(sampled).hexdigest()
 
 
-def x42_sample_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: per-blob frame sampling.  Tries the real
-    decoder, falls back to deterministic fixed-size frame slicing.
-    (Named distinctly from the pre-existing sample_frames(payload,
-    n_frames) codec stub used by frame_sample_batch.)"""
-    import struct as _struct
-    for pdf in batches:
-        out = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(blob)
-            try:
-                # text payloads are not AVI, so this raises (real AVI
-                # decode lives in the x70 path); a payload that merely
-                # STARTS like RIFF/AVI raises ValueError/struct.error
-                # from the parser — every such shape must take the
-                # fallback, never fail the scan (the 100 TB bad-blob
-                # rule)
-                decode_video(b)
-                raise _FallBack()  # parsed as real video: x42 still
-                # reports byte-slice features (its oracle's contract)
-            except (NotImplementedError, ValueError, _struct.error, _FallBack):
-                n_frames = max(1, math.ceil(len(b) / _FRAME_BYTES))
-                picks = range(0, n_frames, _FRAME_STRIDE)
-                sampled = b"".join(
-                    b[i * _FRAME_BYTES : (i + 1) * _FRAME_BYTES] for i in picks
-                )
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_frames": n_frames,
-                        "n_sampled": len(list(picks)),
-                        "sample_fp": hashlib.md5(sampled).hexdigest(),
-                    }
-                )
-        yield pd.DataFrame(out)
+x42_sample_worker = payload_worker(
+    _x42_rows, "doc_id long, n_frames long, n_sampled long, sample_fp string"
+)
 
 
 @query(
@@ -666,28 +543,18 @@ def x42_sample_worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
 )
 def x42_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sample the manufactured video payloads: every
-    `_FRAME_STRIDE`th fixed-size frame, fingerprinted — the oracle
+    `_FRAME_STRIDE`th fixed-size frame, fingerprinted; the oracle
     re-derives frame boundaries and the sampled-bytes md5 from the same
     ASCII payloads."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        x42_sample_worker,
-        schema="doc_id long, n_frames long, n_sampled long, sample_fp string",
-    )
+    return document_features(spark, sf_dir, x42_sample_worker)
 
 
 # --- x64: REAL audio decode (stdlib WAV codec + framed features) -----------------
 #
 # Same posture as the PNG pair above: a hand-rolled RIFF/WAVE writer and
 # a hand-rolled chunk-walk parser (both stdlib-only), cross-validated
-# against the stdlib `wave` module in tests, so the audio arm of the
-# multimodal mandate decodes a genuine container format rather than a
-# fake.  Reference anchor: none (the reference has no multimodal at
-# all) — this is the X-layer audio mandate.
+# against the stdlib `wave` module in tests.  Reference anchor: none
+# (the reference has no multimodal at all).
 
 _WAV_RATE = 16000
 _WAV_FRAME = 256  # samples per analysis frame (non-overlapping)
@@ -698,10 +565,6 @@ def encode_wav(samples, rate: int = _WAV_RATE) -> bytes:
     numpy array -> canonical RIFF/WAVE bytes (fmt + data chunks, even
     chunk padding per the RIFF spec).  Output opens cleanly in the
     stdlib `wave` module (asserted in tests)."""
-    import struct
-
-    import numpy as np
-
     pcm = np.asarray(samples, dtype="<i2").tobytes()
     fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
     body = (
@@ -725,10 +588,6 @@ def decode_wav(payload: bytes):
     Non-RIFF payloads and non-PCM encodings raise NotImplementedError;
     structurally broken WAVs (missing/truncated fmt or data chunks)
     raise ValueError — callers fall back exactly as for PNG."""
-    import struct
-
-    import numpy as np
-
     b = bytes(payload)
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise NotImplementedError("not a RIFF/WAVE payload")
@@ -759,50 +618,32 @@ def decode_wav(payload: bytes):
     return rate, channels, 2, samples
 
 
-def wav_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: synthesize 16-bit PCM from the payload bytes
-    ((byte-128)<<8 per sample — byte-deterministic, so the oracle can
-    re-derive it), encode to a genuine WAV container, decode it back
-    with the chunk-walk parser, then compute per-frame energy/peak over
-    the DECODED samples.  The container header fields (rate, channels)
-    flow through to the output, so a header-parse regression is
-    value-hash visible."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            raw = np.frombuffer(bytes(blob), dtype=np.uint8)
-            pcm = ((raw.astype(np.int16) - 128) * 256).astype("<i2")
-            rate, channels, _width, dec = decode_wav(encode_wav(pcm))
-            s = dec.astype(np.int64)
-            for f in range(0, len(s), _WAV_FRAME):
-                chunk = s[f : f + _WAV_FRAME]
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "frame_id": f // _WAV_FRAME,
-                        "n_samples": int(chunk.size),
-                        "energy": int((chunk * chunk).sum()),
-                        "peak": int(np.abs(chunk).max()),
-                        "rate": int(rate),
-                        "channels": int(channels),
-                    }
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "frame_id",
-                "n_samples",
-                "energy",
-                "peak",
-                "rate",
-                "channels",
-            ],
+def _x64_rows(doc_id: int, b: bytes):
+    """Encode the payload's PCM (`_pcm`) to a genuine WAV container,
+    decode it back with the chunk-walk parser, then report per-frame
+    energy/peak over the DECODED samples.  The container header fields
+    (rate, channels) flow through to the output, so a header-parse
+    regression is value-hash visible."""
+    rate, channels, _width, dec = decode_wav(encode_wav(_pcm(b)))
+    s = dec.astype(np.int64)
+    for f in range(0, len(s), _WAV_FRAME):
+        chunk = s[f : f + _WAV_FRAME]
+        yield (
+            doc_id,
+            f // _WAV_FRAME,
+            int(chunk.size),
+            int((chunk * chunk).sum()),
+            int(np.abs(chunk).max()),
+            int(rate),
+            int(channels),
         )
+
+
+wav_roundtrip_features = payload_worker(
+    _x64_rows,
+    "doc_id long, frame_id int, n_samples int, energy long, peak int, "
+    "rate int, channels int",
+)
 
 
 @query(
@@ -830,38 +671,23 @@ def wav_roundtrip_features(
     """,
 )
 def x64_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x64: REAL audio decode in the multimodal path — payload bytes
-    become 16-bit PCM, encoded into a genuine RIFF/WAVE container and
-    decoded back through the stdlib chunk-walk parser (cross-validated
-    against the `wave` module in tests), then framed into 256-sample
-    windows with integer energy/peak features; the oracle re-derives
-    every sample value and frame boundary from the text bytes.  Decode
-    runs inside mapInPandas, so at 100 TB the codec work distributes
-    across executors with zero shuffle, same as the PNG arm."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        wav_roundtrip_features,
-        schema=(
-            "doc_id long, frame_id int, n_samples int, energy long, "
-            "peak int, rate int, channels int"
-        ),
-    )
+    """x64: REAL audio decode: payload bytes become 16-bit PCM, encoded
+    into a genuine RIFF/WAVE container and decoded back through the
+    stdlib chunk-walk parser (cross-validated against the `wave` module
+    in tests), then framed into 256-sample windows with integer
+    energy/peak features; the oracle re-derives every sample value and
+    frame boundary from the text bytes."""
+    return document_features(spark, sf_dir, wav_roundtrip_features)
 
 
 # --- x65: REAL animation decode (stdlib GIF89a codec + frame sampling) -----------
 #
-# The video arm's last fake: x42 samples frames from a byte-sliced
-# pseudo-container.  This section adds a genuine multi-frame container:
-# a stdlib-only animated-GIF89a writer (real variable-width LZW
-# compressor, sub-block framing, per-frame graphic-control delays) and
-# a matching parser (block walk, LZW decompressor with clear/EOI and
-# code-width growth), so frame extraction + per-frame timing decode a
-# real animation format end-to-end.  ffmpeg-class codecs (H.264/VP9)
-# remain the one documented stub (`decode_video`).
+# A genuine multi-frame container: a stdlib-only animated-GIF89a writer
+# (real variable-width LZW compressor, sub-block framing, per-frame
+# graphic-control delays) and a matching parser (block walk, LZW
+# decompressor with clear/EOI and code-width growth), so frame
+# extraction + per-frame timing decode a real animation format end to
+# end.
 
 _GIF_W, _GIF_H = 16, 8  # frame geometry: 128 payload bytes per frame
 
@@ -989,10 +815,6 @@ def encode_gif(frames, delays_cs, w: int = _GIF_W, h: int = _GIF_H) -> bytes:
     table; each frame carries a graphic-control delay (centiseconds).
     Includes the Netscape looping extension, so the output is the exact
     grammar browsers animate."""
-    import struct
-
-    import numpy as np
-
     out = bytearray(b"GIF89a")
     out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT: 256 entries
     for i in range(256):
@@ -1017,10 +839,6 @@ def decode_gif(payload: bytes):
     raise NotImplementedError (the fallback contract); interlaced or
     local-color-table frames and structurally broken files raise
     ValueError."""
-    import struct
-
-    import numpy as np
-
     b = bytes(payload)
     if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
         raise NotImplementedError("not a GIF payload")
@@ -1088,44 +906,26 @@ def decode_gif(payload: bytes):
     raise ValueError("missing GIF trailer")
 
 
-def gif_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: payload bytes become an animated GIF (one
-    16x8 frame per 128 bytes, space-padded tail, delay = frame index
-    centiseconds), encoded and decoded through the stdlib codec; the
-    emitted per-frame digest/delay come from the DECODED frames."""
-    import numpy as np
-
-    n_bytes = _GIF_W * _GIF_H
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(blob)
-            n_frames = max(1, -(-len(b) // n_bytes))
-            padded = b + b" " * (n_frames * n_bytes - len(b))
-            frames = [
-                np.frombuffer(
-                    padded[i * n_bytes : (i + 1) * n_bytes], np.uint8
-                ).reshape(_GIF_H, _GIF_W)
-                for i in range(n_frames)
-            ]
-            decoded = decode_gif(encode_gif(frames, range(n_frames)))
-            _w, _h, out_frames = decoded
-            for fid, (delay, px) in enumerate(out_frames):
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "frame_id": fid,
-                        "delay_cs": int(delay),
-                        "n_px": int(px.size),
-                        "frame_sha": hashlib.sha256(px.tobytes()).hexdigest(),
-                    }
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "frame_id", "delay_cs", "n_px", "frame_sha"],
+def _x65_rows(doc_id: int, b: bytes):
+    """The payload becomes an animated GIF (one 16x8 frame per 128
+    bytes, space-padded tail, delay = frame index centiseconds),
+    encoded and decoded through the stdlib codec; the per-frame
+    digest/delay come from the DECODED frames."""
+    frames = _grid(b, _GIF_W * _GIF_H).reshape(-1, _GIF_H, _GIF_W)
+    _w, _h, decoded = decode_gif(encode_gif(frames, range(len(frames))))
+    for fid, (delay, px) in enumerate(decoded):
+        yield (
+            doc_id,
+            fid,
+            int(delay),
+            int(px.size),
+            hashlib.sha256(px.tobytes()).hexdigest(),
         )
+
+
+gif_roundtrip_features = payload_worker(
+    _x65_rows, "doc_id long, frame_id int, delay_cs int, n_px int, frame_sha string"
+)
 
 
 @query(
@@ -1152,38 +952,21 @@ def gif_roundtrip_features(
     """,
 )
 def x65_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x65: REAL animation decode in the multimodal path — documents
-    render to genuine animated GIF89a files (stdlib encoder with a real
-    variable-width LZW compressor and per-frame timing) and the stdlib
-    parser (block walk + LZW decompressor) recovers every frame and its
-    delay; the oracle recomputes each frame digest straight from the
-    text (ASCII fixture, so rpad/substring are byte-exact).  With x58
-    (PNG) and x64 (WAV), all three multimodal arms now decode real
-    container formats inside mapInPandas — distributed, zero-shuffle;
-    only ffmpeg-class video codecs remain stubbed."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        gif_roundtrip_features,
-        schema=(
-            "doc_id long, frame_id int, delay_cs int, n_px int, "
-            "frame_sha string"
-        ),
-    )
+    """x65: REAL animation decode: documents render to genuine animated
+    GIF89a files (stdlib encoder with a real variable-width LZW
+    compressor and per-frame timing) and the stdlib parser (block walk
+    + LZW decompressor) recovers every frame and its delay; the oracle
+    recomputes each frame digest straight from the text (ASCII fixture,
+    so rpad/substring are byte-exact)."""
+    return document_features(spark, sf_dir, gif_roundtrip_features)
 
 
 # --- x70: REAL video decode (stdlib AVI codec, uncompressed DIB frames) ----------
 #
-# The last multimodal fake falls: a stdlib-only AVI writer/parser pair
-# for uncompressed 24-bit DIB video (RIFF grammar reused from the WAV
-# codec: LIST hdrl with avih/strh/strf headers, movi LIST of 00db frame
-# chunks with bottom-up 4-byte-aligned DIB rows, idx1 index).
-# `decode_video` below now parses this for real; only COMPRESSED codecs
-# (H.264/VP9/MJPEG...) remain behind NotImplementedError, because no
-# ffmpeg exists in this container.
+# A stdlib-only AVI writer/parser pair for uncompressed 24-bit DIB video
+# (RIFF grammar reused from the WAV codec: LIST hdrl with
+# avih/strh/strf headers, movi LIST of 00db frame chunks with bottom-up
+# 4-byte-aligned DIB rows, idx1 index); `decode_video` dispatches to it.
 
 _AVI_W, _AVI_H = 16, 8  # same frame geometry as the GIF arm
 _AVI_FPS = 25
@@ -1206,10 +989,6 @@ def encode_avi(
     JPEG encoder; each '00dc' chunk is a complete JPEG (the Motion-JPEG
     convention — 'MJPG' handler, biCompression='MJPG').  Both wrap the
     canonical RIFF/AVI LIST structure with an idx1 index."""
-    import struct
-
-    import numpy as np
-
     stride = (w * 3 + 3) & ~3
     frame_bytes = []
     if codec == "mjpg":
@@ -1280,10 +1059,6 @@ def decode_avi(payload: bytes):
     payloads raise NotImplementedError; genuinely-ffmpeg codecs
     (H.264/VP9/...) raise NotImplementedError; structurally broken
     files raise ValueError."""
-    import struct
-
-    import numpy as np
-
     b = bytes(payload)
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         raise NotImplementedError("not a RIFF/AVI payload")
@@ -1350,46 +1125,28 @@ def decode_avi(payload: bytes):
     return w, h, fps, frames
 
 
-def avi_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: payload bytes become grayscale BGR frames
-    (one 16x8 frame per 128 bytes, space-padded tail, b=g=r=byte),
-    encoded into a genuine AVI and decoded back through the chunk-walk
-    parser; per-frame digests come from the DECODED gray channel, so
-    they equal a digest over the original bytes iff the whole container
-    round-trips."""
-    import numpy as np
-
-    n_bytes = _AVI_W * _AVI_H
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            raw = bytes(blob)
-            nf = max(1, -(-len(raw) // n_bytes))
-            padded = raw + b" " * (nf * n_bytes - len(raw))
-            frames = []
-            for i in range(nf):
-                gray = np.frombuffer(
-                    padded[i * n_bytes : (i + 1) * n_bytes], np.uint8
-                ).reshape(_AVI_H, _AVI_W)
-                frames.append(np.repeat(gray[:, :, None], 3, axis=2))
-            w, h, fps, dec = decode_avi(encode_avi(frames))
-            for fid, px in enumerate(dec):
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "frame_id": fid,
-                        "n_px": int(px.shape[0] * px.shape[1]),
-                        "frame_sha": hashlib.sha256(
-                            px[:, :, 0].tobytes()
-                        ).hexdigest(),
-                        "fps": int(fps),
-                    }
-                )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "frame_id", "n_px", "frame_sha", "fps"]
+def _x70_rows(doc_id: int, b: bytes):
+    """The payload becomes grayscale BGR frames (one 16x8 frame per 128
+    bytes, space-padded tail, b=g=r=byte), encoded into a genuine AVI
+    and decoded back through the chunk-walk parser; per-frame digests
+    come from the DECODED gray channel, so they equal a digest over the
+    original bytes iff the whole container round-trips."""
+    grays = _grid(b, _AVI_W * _AVI_H).reshape(-1, _AVI_H, _AVI_W)
+    frames = [np.repeat(gray[:, :, None], 3, axis=2) for gray in grays]
+    _w, _h, fps, dec = decode_avi(encode_avi(frames))
+    for fid, px in enumerate(dec):
+        yield (
+            doc_id,
+            fid,
+            int(px.shape[0] * px.shape[1]),
+            hashlib.sha256(px[:, :, 0].tobytes()).hexdigest(),
+            int(fps),
         )
+
+
+avi_roundtrip_features = payload_worker(
+    _x70_rows, "doc_id long, frame_id int, n_px int, frame_sha string, fps int"
+)
 
 
 @query(
@@ -1416,29 +1173,17 @@ def avi_roundtrip_features(
     """,
 )
 def x70_avi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x70: REAL video-container decode — documents render to genuine
+    """x70: REAL video-container decode: documents render to genuine
     uncompressed-DIB AVI files (RIFF LIST grammar, bottom-up padded
     rows, idx1 index) and the stdlib parser recovers every frame and
-    the fps; the oracle recomputes each frame digest from the text.
-    With x58 (PNG), x64 (WAV), and x65 (GIF), every multimodal arm now
-    decodes a real container inside mapInPandas; the only remaining
-    NotImplementedError paths are COMPRESSED codecs, which genuinely
-    require ffmpeg."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        avi_roundtrip_features,
-        schema="doc_id long, frame_id int, n_px int, frame_sha string, fps int",
-    )
+    the fps; the oracle recomputes each frame digest from the text."""
+    return document_features(spark, sf_dir, avi_roundtrip_features)
 
 
-# --- x71: REAL baseline JPEG codec (the last feasible stdlib codec) -------------
+# --- x71: REAL baseline JPEG codec ----------------------------------------------
 # PNG (x58), WAV (x64), GIF (x65) and AVI (x70) are lossless container
-# codecs; JPEG is the one remaining image format a real asset scan
-# meets that is feasible without ffmpeg — baseline sequential DCT
+# codecs; JPEG is the lossy image format a real asset scan meets that
+# is feasible without ffmpeg — baseline sequential DCT
 # (ISO/IEC 10918-1): level shift -> 8x8 FDCT -> quantize -> zigzag ->
 # DC-predicted / run-length Huffman entropy coding with byte stuffing.
 # Both directions are implemented from the public spec: the encoder
@@ -1569,8 +1314,6 @@ def _jpeg_decode_lut(bits, vals):
     per-bit walk's failure case (canonical codes are prefix-free, so
     for any valid stream the two decoders resolve identical (sym, L)).
     Memoized per table content, same policy as the code-table memo."""
-    import numpy as np
-
     key = (tuple(bits), tuple(vals))
     memo = _JPEG_LUT_MEMO.get(key)
     if memo is not None:
@@ -1600,8 +1343,6 @@ _DCT_MATRIX = None
 
 
 def _dct_matrix():
-    import numpy as np
-
     global _DCT_MATRIX
     if _DCT_MATRIX is None:
         x = np.arange(8)
@@ -1645,8 +1386,6 @@ def _jpeg_amplitude(v: int, s: int) -> int:
 
 def _jpeg_blocks(channel):
     """(H8, W8) channel -> (n_blocks, 8, 8) in raster MCU order."""
-    import numpy as np
-
     h, w = channel.shape
     return (
         channel.reshape(h // 8, 8, w // 8, 8)
@@ -1663,10 +1402,6 @@ def encode_jpeg(pixels) -> bytes:
     All-ones quantization tables (legal "quality 100"): the only loss
     is FDCT-coefficient rounding, so block-constant inputs round-trip
     exactly (DC-only spectra).  Annex-K standard Huffman tables."""
-    import struct
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim == 2:
         comps = [px.astype(np.float64)]
@@ -1864,10 +1599,6 @@ def decode_jpeg(payload: bytes):
     Progressive/arithmetic/hierarchical frames, subsampled chroma and
     restart intervals raise NotImplementedError; truncated or
     malformed payloads raise ValueError."""
-    import struct
-
-    import numpy as np
-
     b = bytes(payload)
     if len(b) < 4 or b[:2] != b"\xff\xd8":
         raise NotImplementedError("not a JPEG payload")
@@ -2025,49 +1756,32 @@ def decode_jpeg(payload: bytes):
 _JPEG_W = 24  # bytes per row -> 192-px-wide image after 8x block upsample
 
 
-def jpeg_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for x71: render each document's UTF-8 bytes
-    as a byte grid (width _JPEG_W, space-padded final row), upsample
-    each byte to a constant 8x8 block (so every block's spectrum is
-    DC-only and the all-ones-quant codec is EXACTLY invertible),
-    ENCODE to a real baseline JPEG, DECODE it back, then (a) count
-    pixel mismatches against the expected block expansion — the oracle
-    asserts 0 — and (b) digest the block-mean downsample of the
-    decoded pixels, which equals the padded source bytes' digest iff
-    the whole Huffman/DCT round trip reconstructed every block."""
-    import numpy as np
+def _x71_rows(doc_id: int, b: bytes):
+    """Render the bytes as a byte grid (width _JPEG_W, space-padded
+    final row), upsample each byte to a constant 8x8 block (so every
+    block's spectrum is DC-only and the all-ones-quant codec is EXACTLY
+    invertible), ENCODE to a real baseline JPEG, DECODE it back, then
+    (a) count pixel mismatches against the block expansion (the oracle
+    asserts 0) and (b) digest the block-mean downsample of the decoded
+    pixels, which equals the padded source bytes' digest iff the whole
+    Huffman/DCT round trip reconstructed every block."""
+    img = _blocks_up(_grid(b, _JPEG_W))
+    px = decode_jpeg(encode_jpeg(img))
+    yield (
+        doc_id,
+        int(px.shape[1]),
+        int(px.shape[0]),
+        int(px.size),
+        int((px != img).sum()),
+        hashlib.sha256(_blocks_down(px).tobytes()).hexdigest(),
+    )
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(blob)
-            h = max(1, -(-len(b) // _JPEG_W))
-            padded = b + b" " * (h * _JPEG_W - len(b))
-            grid = np.frombuffer(padded, np.uint8).reshape(h, _JPEG_W)
-            img = np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1)
-            px = decode_jpeg(encode_jpeg(img))
-            n_mismatch = int((px != img).sum())
-            down = np.round(
-                px.reshape(h, 8, _JPEG_W, 8).transpose(0, 2, 1, 3)
-                .reshape(h, _JPEG_W, 64).mean(axis=2)
-            ).astype(np.uint8)
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "width": int(px.shape[1]),
-                    "height": int(px.shape[0]),
-                    "n_px": int(px.size),
-                    "n_mismatch": n_mismatch,
-                    "pixel_sha": hashlib.sha256(down.tobytes()).hexdigest(),
-                }
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_px", "n_mismatch",
-                     "pixel_sha"],
-        )
+
+jpeg_roundtrip_features = payload_worker(
+    _x71_rows,
+    "doc_id long, width int, height int, n_px long, n_mismatch int, "
+    "pixel_sha string",
+)
 
 
 @query(
@@ -2089,93 +1803,50 @@ def jpeg_roundtrip_features(
     """,
 )
 def x71_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x71: REAL lossy-format decode in the multimodal path — documents
-    render to genuine baseline sequential JPEGs (Annex-K Huffman
-    tables, byte stuffing, DC prediction, all-ones quant) and the
-    stdlib decoder (marker walk + canonical Huffman + dequant + IDCT)
-    recovers the pixel matrix; block-constant inputs make the lossy
-    codec exactly invertible, so the oracle states both n_mismatch = 0
-    and the pixel digest straight from the text (fixture text is
-    ASCII, so rpad's char padding is byte padding — the x58/x70
-    contract).  Decode runs inside mapInPandas: at 100 TB the codec
-    work distributes across executors with zero shuffle.  With this,
-    every non-ffmpeg-class format in the repo decodes for real: PNG
-    x58, WAV x64, GIF x65, AVI x70, JPEG x71."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        jpeg_roundtrip_features,
-        schema="doc_id long, width int, height int, n_px long,"
-        " n_mismatch int, pixel_sha string",
-    )
+    """x71: REAL lossy-format decode: documents render to genuine
+    baseline sequential JPEGs (Annex-K Huffman tables, byte stuffing,
+    DC prediction, all-ones quant) and the stdlib decoder (marker walk
+    + canonical Huffman + dequant + IDCT) recovers the pixel matrix;
+    block-constant inputs make the lossy codec exactly invertible, so
+    the oracle states both n_mismatch = 0 and the pixel digest straight
+    from the text (fixture text is ASCII, so rpad's char padding is
+    byte padding, the x58/x70 contract)."""
+    return document_features(spark, sf_dir, jpeg_roundtrip_features)
 
 
 # --- x76: REAL Motion-JPEG video decode (AVI container + x71 JPEG frames) -------
-# The r6 verdict's "remaining gap" list had one feasible codec left
-# after JPEG landed: Motion-JPEG, which is nothing but the x70 AVI
-# container carrying one complete x71 baseline JPEG per frame chunk —
-# the two already-oracle-checked codecs composed.  encode_avi/decode_avi
-# grew an 'MJPG' arm above; after this, the ONLY stubbed video codecs
-# are inter-frame formats (H.264/VP9/...), which genuinely require
-# ffmpeg.
+# Motion-JPEG is the x70 AVI container carrying one complete x71
+# baseline JPEG per frame chunk: the two oracle-checked codecs composed
+# through encode_avi/decode_avi's 'MJPG' arm.
 _MJPEG_BPF = 16  # bytes per frame -> one (8, 128) gray frame after 8x blocks
 
 
-def mjpeg_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for x76: each document's bytes become
-    16-byte frames, every byte upsampled to a constant 8x8 block (the
-    x71 exactness condition: DC-only spectra make the lossy JPEG
-    round trip exact), encoded into a genuine MJPG AVI, decoded back
-    through the container walk + per-frame Huffman/IDCT, then the
-    block-mean downsample of every decoded frame is concatenated and
-    digested — equal to the padded source bytes' digest iff EVERY
-    frame of the whole video round-tripped exactly."""
-    import numpy as np
+def _x76_rows(doc_id: int, b: bytes):
+    """The bytes become 16-byte frames, every byte upsampled to a
+    constant 8x8 block (the x71 exactness condition: DC-only spectra
+    make the lossy JPEG round trip exact), encoded into a genuine MJPG
+    AVI and decoded back through the container walk + per-frame
+    Huffman/IDCT.  The block-mean downsamples of the decoded frames are
+    concatenated and digested, equal to the padded source bytes' digest
+    iff EVERY frame of the whole video round-tripped exactly."""
+    frames = [_blocks_up(row[None, :]) for row in _grid(b, _MJPEG_BPF)]
+    _w, _h, fps, dec = decode_video(
+        encode_avi(frames, w=8 * _MJPEG_BPF, h=8, codec="mjpg")
+    )
+    n_mismatch = sum(int((d != f).sum()) for d, f in zip(dec, frames))
+    downs = b"".join(_blocks_down(d).tobytes() for d in dec)
+    yield (
+        doc_id,
+        len(dec),
+        int(fps),
+        int(n_mismatch),
+        hashlib.sha256(downs).hexdigest(),
+    )
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            raw = bytes(blob)
-            nf = max(1, -(-len(raw) // _MJPEG_BPF))
-            padded = raw + b" " * (nf * _MJPEG_BPF - len(raw))
-            frames = []
-            for i in range(nf):
-                grid = np.frombuffer(
-                    padded[i * _MJPEG_BPF : (i + 1) * _MJPEG_BPF], np.uint8
-                ).reshape(1, _MJPEG_BPF)
-                frames.append(np.repeat(np.repeat(grid, 8, axis=0), 8, axis=1))
-            w, h, fps, dec = decode_video(
-                encode_avi(frames, w=8 * _MJPEG_BPF, h=8, codec="mjpg")
-            )
-            n_mismatch = sum(int((d != f).sum()) for d, f in zip(dec, frames))
-            downs = []
-            for d in dec:
-                downs.append(
-                    np.round(
-                        d.reshape(1, 8, _MJPEG_BPF, 8)
-                        .transpose(0, 2, 1, 3)
-                        .reshape(1, _MJPEG_BPF, 64)
-                        .mean(axis=2)
-                    ).astype(np.uint8).tobytes()
-                )
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "n_frames": int(len(dec)),
-                    "fps": int(fps),
-                    "n_mismatch": int(n_mismatch),
-                    "video_sha": hashlib.sha256(b"".join(downs)).hexdigest(),
-                }
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "n_frames", "fps", "n_mismatch", "video_sha"],
-        )
+
+mjpeg_roundtrip_features = payload_worker(
+    _x76_rows, "doc_id long, n_frames int, fps int, n_mismatch int, video_sha string"
+)
 
 
 @query(
@@ -2195,30 +1866,18 @@ def mjpeg_roundtrip_features(
     """,
 )
 def x76_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x76: REAL compressed-VIDEO decode — documents render to genuine
+    """x76: REAL compressed-VIDEO decode: documents render to genuine
     Motion-JPEG AVIs (x70's RIFF container, one complete x71 baseline
     JPEG per '00dc' chunk) and decode_video recovers every frame
     through the real Huffman/IDCT path; block-constant frames make the
     lossy per-frame codec exactly invertible, so the oracle states
     n_mismatch = 0 and the whole-video digest straight from the text
-    (ASCII fixture: rpad char padding == byte padding).  Runs inside
-    mapInPandas — codec work distributes with zero shuffle.  Remaining
-    stubs after this: inter-frame codecs (H.264/VP9) only, which
-    genuinely require ffmpeg."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        mjpeg_roundtrip_features,
-        schema="doc_id long, n_frames int, fps int, n_mismatch int,"
-        " video_sha string",
-    )
+    (ASCII fixture: rpad char padding == byte padding)."""
+    return document_features(spark, sf_dir, mjpeg_roundtrip_features)
 
 
 # --- x87: REAL image resize through the codec path ------------------------------
-# The resize stage of a production CV pipeline, now REAL end to end:
+# The resize stage of a production CV pipeline, REAL end to end: the
 # document renders to a genuine PNG (x58's path), resize_image decodes
 # it with the real codec, nearest-neighbor-resamples with integer index
 # math, re-encodes as PNG, and the worker decodes THAT to digest the
@@ -2230,35 +1889,20 @@ def x76_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X87_OUT = 16  # resized to 16x16
 
 
-def resize_roundtrip_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import numpy as np
+def _x87_rows(doc_id: int, b: bytes):
+    small_png = resize_image(encode_png(_grid(b, _PNG_W)), _X87_OUT, _X87_OUT)
+    px = decode_image(small_png)
+    yield (
+        doc_id,
+        int(px.shape[1]),
+        int(px.shape[0]),
+        hashlib.sha256(px.tobytes()).hexdigest(),
+    )
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(blob)
-            h = max(1, -(-len(b) // _PNG_W))
-            padded = b + b" " * (h * _PNG_W - len(b))
-            img = np.frombuffer(padded, np.uint8).reshape(h, _PNG_W)
-            small_png = resize_image(
-                encode_png(img), _X87_OUT, _X87_OUT
-            )
-            px = decode_image(small_png)
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "out_w": int(px.shape[1]),
-                    "out_h": int(px.shape[0]),
-                    "resized_sha": hashlib.sha256(
-                        px.tobytes()
-                    ).hexdigest(),
-                }
-            )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "out_w", "out_h", "resized_sha"]
-        )
+
+resize_roundtrip_features = payload_worker(
+    _x87_rows, "doc_id long, out_w int, out_h int, resized_sha string"
+)
 
 
 @query(
@@ -2294,15 +1938,7 @@ def resize_roundtrip_features(
     """,
 )
 def x87_resize_image(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    return payloads.mapInPandas(
-        resize_roundtrip_features,
-        schema="doc_id long, out_w int, out_h int, resized_sha string",
-    )
+    return document_features(spark, sf_dir, resize_roundtrip_features)
 
 
 # --- x88: perceptual image near-dup (pHash over the real decode path) --------
@@ -2330,10 +1966,10 @@ def x87_resize_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle below provably equals the sub-quadratic Spark plan (no
 # recall monitor needed, unlike x04d's Jaccard estimate).
 #
-# Scale: hashing is embarrassingly parallel mapInPandas (one pass, no
-# shuffle); banding shuffles 9 rows of (7-bit key, 8-byte hash) per doc
-# — ~100 B/doc, corpus-sized but tiny; the bucket self-join is the
-# quadratic point (the fixture's buckets are dup-cluster sized).
+# Scale: hashing is one row-local pass with no shuffle; banding
+# shuffles 9 rows of (7-bit key, 8-byte hash) per doc — ~100 B/doc,
+# corpus-sized but tiny; the bucket self-join is the quadratic point
+# (the fixture's buckets are dup-cluster sized).
 # Reference parity: AJ2O/fanstats-producer ships no image
 # pipeline at all (reference/src/main.py is a text crawler) — x88 is
 # part of the beyond-reference training-data surface the brief asks
@@ -2374,8 +2010,6 @@ def phash64(px32) -> int:
     identical coefficients).  Bit k-1 (k = u*8+v, k=1..63) is set iff
     63*Z[u,v] > sum(AC coefficients): the mean threshold stated
     multiplicatively over integers, division-free and exact."""
-    import numpy as np
-
     global _PHASH_C
     if _PHASH_C is None:
         _PHASH_C = np.asarray(_phash_dct_table(), dtype=np.int64)
@@ -2399,8 +2033,6 @@ def phash_image(payload: bytes) -> int:
     integer index math (out(i,j) = src((i*H) div 32, (j*W) div 32)),
     then phash64.  Raises what decode_image raises — batch callers
     treat undecodable blobs as fallback-able."""
-    import numpy as np
-
     arr = decode_image(payload)
     if arr.ndim == 3:
         arr = arr[:, :, 0]
@@ -2410,26 +2042,13 @@ def phash_image(payload: bytes) -> int:
     return phash64(arr[rows][:, cols])
 
 
-def phash_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for x88: render each document's bytes as the
-    x58 grayscale strip, push it through the REAL PNG encode->decode
-    codec pair, and emit the perceptual hash."""
-    import numpy as np
+def _x88_rows(doc_id: int, b: bytes):
+    """The x58 grayscale strip pushed through the REAL PNG
+    encode->decode codec pair, then perceptually hashed."""
+    yield doc_id, phash_image(encode_png(_grid(b, _PNG_W)))
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(blob)
-            h = max(1, -(-len(b) // _PNG_W))
-            padded = b + b" " * (h * _PNG_W - len(b))
-            img = np.frombuffer(padded, np.uint8).reshape(h, _PNG_W)
-            rows.append(
-                {
-                    "doc_id": int(doc_id),
-                    "phash": phash_image(encode_png(img)),
-                }
-            )
-        yield pd.DataFrame(rows, columns=["doc_id", "phash"])
+
+phash_features = payload_worker(_x88_rows, "doc_id long, phash long")
 
 
 def _phash_band_val(col, b: int):
@@ -2580,23 +2199,22 @@ def _phash_oracle() -> str:
 
 def streaming_phash_band_keys(docs: DataFrame, features=None) -> DataFrame:
     """s28/s29's stateless prefix: per-row 63-bit fingerprint +
-    exploded LSH band keys over a (doc_id, text, ...) stream — the
+    exploded LSH band keys over a (doc_id, text, ...) stream, the
     x88/x90 hash/banding expressed as row-local operators so it runs
     unchanged on a streaming plan (mapInPandas and explode are both
     stateless projections).  `features` is the fingerprint worker
-    (default: the image pHash codec path; pass audio_fp_features for
-    the audio arm — any (doc_id, payload) -> (doc_id, phash) worker
-    whose output is a non-negative 63-bit int64 plugs in).  Output:
-    (doc_id, phash, band_hash) with band_hash = band * 128 + band value
-    (one long key, the streaming_band_keys convention), 9 rows per doc.
-    Works on batch frames too — the slicing-invariance pytest uses the
-    same function both ways."""
+    (default: phash_features, the image codec path; audio_fp_features
+    is the audio arm; any payload_worker whose schema is
+    "doc_id long, phash long" with non-negative 63-bit values plugs
+    in).  Output: (doc_id, phash, band_hash) with band_hash = band *
+    128 + band value (one long key, the streaming_band_keys
+    convention), 9 rows per doc.  Works on batch frames too; the
+    slicing-invariance pytest uses the same function both ways."""
+    features = features or phash_features
     payloads = docs.select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
-    hashes = payloads.mapInPandas(
-        features or phash_features, schema="doc_id long, phash long"
-    )
+    hashes = payloads.mapInPandas(features, features.schema)
     return hashes.select(
         "doc_id",
         "phash",
@@ -2616,26 +2234,18 @@ def streaming_phash_band_keys(docs: DataFrame, features=None) -> DataFrame:
 
 @query("x88_image_neardup", oracle=_phash_oracle())
 def x88_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x88: perceptual image near-duplicate detection — the multimodal
+    """x88: perceptual image near-duplicate detection, the multimodal
     dedup arm.  Documents render to real PNGs, hash through the real
     decode path (phash_features), and pair up through the banded LSH
     self-join (phash_near_dup_pairs).  Output: (id_a, id_b, hamming)
     for every pair of perceptually-near images."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    hashes = payloads.mapInPandas(
-        phash_features, schema="doc_id long, phash long"
-    )
-    return phash_near_dup_pairs(hashes)
+    return phash_near_dup_pairs(document_features(spark, sf_dir, phash_features))
 
 
 # --- x90: perceptual AUDIO near-dup (energy-delta fingerprint) ----------------
 #
-# Completes the perceptual-dedup matrix: text (x04*/x59), image (x88),
-# and now audio.  Fingerprint = the sign pattern of successive segment
+# The audio arm of perceptual dedup, next to text (x04*/x59) and image
+# (x88).  Fingerprint = the sign pattern of successive segment
 # ENERGIES (the time-domain simplification of the Haitsma-Kalker
 # energy-difference fingerprint): the decoded PCM splits into 64 EQUAL
 # segments (np.array_split — the x07b boundary convention, already
@@ -2662,8 +2272,6 @@ def audio_fingerprint(samples) -> int:
     """63-bit energy-delta fingerprint of an int16 PCM array: 64 equal
     np.array_split segments, exact int64 energies (empty segment = 0),
     bit k-1 set iff energy[k] > energy[k-1]."""
-    import numpy as np
-
     s = np.asarray(samples, dtype=np.int64)
     energies = [
         int((seg * seg).sum()) if seg.size else 0
@@ -2676,24 +2284,14 @@ def audio_fingerprint(samples) -> int:
     return fp
 
 
-def audio_fp_features(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for x90: synthesize PCM from payload bytes
-    (the x64 convention, (byte-128)<<8), roundtrip through the REAL
-    WAV codec pair, fingerprint the decoded samples."""
-    import numpy as np
+def _x90_rows(doc_id: int, b: bytes):
+    """The payload's PCM (`_pcm`, the x64 convention) round-tripped
+    through the REAL WAV codec pair, then fingerprinted."""
+    _rate, _ch, _w, dec = decode_wav(encode_wav(_pcm(b)))
+    yield doc_id, audio_fingerprint(dec)
 
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-            raw = np.frombuffer(bytes(blob), dtype=np.uint8)
-            pcm = ((raw.astype(np.int16) - 128) * 256).astype("<i2")
-            _rate, _ch, _w, dec = decode_wav(encode_wav(pcm))
-            rows.append(
-                {"doc_id": int(doc_id), "phash": audio_fingerprint(dec)}
-            )
-        yield pd.DataFrame(rows, columns=["doc_id", "phash"])
+
+audio_fp_features = payload_worker(_x90_rows, "doc_id long, phash long")
 
 
 def _x90_fp_ctes() -> str:
@@ -2753,19 +2351,11 @@ def _x90_oracle() -> str:
 
 @query("x90_audio_neardup", oracle=_x90_oracle())
 def x90_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x90: perceptual audio near-duplicate detection — documents
+    """x90: perceptual audio near-duplicate detection: documents
     synthesize to PCM, roundtrip the real WAV codec, fingerprint by
     energy-delta signs, and pair up through the SAME banded LSH
     self-join as the image arm (phash_near_dup_pairs)."""
-    from fanstats_producer_spark.io import spread
-
-    payloads = with_payload(
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-    ).select("doc_id", "payload")
-    hashes = payloads.mapInPandas(
-        audio_fp_features, schema="doc_id long, phash long"
-    )
-    return phash_near_dup_pairs(hashes)
+    return phash_near_dup_pairs(document_features(spark, sf_dir, audio_fp_features))
 
 
 # --- x96: perceptual image CLUSTER dedup (pairs -> components -> keep best) ------
@@ -2819,23 +2409,15 @@ def _x96_oracle() -> str:
 
 @query("x96_image_cluster_dedup", oracle=_x96_oracle())
 def x96_image_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x96: end-to-end perceptual image dedup — pHash banding (x88)
+    """x96: end-to-end perceptual image dedup: pHash banding (x88)
     proposes pairs, connected components closes them into clusters
     (min-label propagation with the size-gated union-find fast path),
     keep_best picks one representative per cluster by the integer ttr
     quality rule.  The image twin of x52/x59's production last mile."""
-    from fanstats_producer_spark.io import spread
     from fanstats_producer_spark.operators.dedup import (
         connected_components,
         keep_best,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    payloads = with_payload(spread(docs, "doc_id")).select(
-        "doc_id", "payload"
-    )
-    hashes = payloads.mapInPandas(
-        phash_features, schema="doc_id long, phash long"
-    )
-    pairs = phash_near_dup_pairs(hashes)
-    return keep_best(docs, connected_components(pairs))
+    pairs = phash_near_dup_pairs(document_features(spark, sf_dir, phash_features))
+    return keep_best(load(spark, sf_dir, "documents"), connected_components(pairs))

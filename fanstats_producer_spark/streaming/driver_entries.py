@@ -1466,11 +1466,11 @@ def s26b_stream_decontam_large_eval(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """s26b: the decontamination stream for LARGE eval suites — the
-    BLAS batch scorer per micro-batch (jobs.streaming_decontam_crossjoin)
-    instead of s26's per-row HOF.  The eval suite
-    is every EVEN vec_id (scales with SF: 1,000 vectors at sf0.1,
-    10,000 at sf1 — VERDICT r9 watch item 1's regime), the stream is
-    every ODD vec_id.
+    BLAS batch scorer per micro-batch (jobs.streaming_decontam_blas,
+    which runs similarity.decontam_blas) instead of s26's per-row HOF.
+    The eval suite is every EVEN vec_id (scales with SF: 1,000 vectors
+    at sf0.1, 10,000 at sf1 — VERDICT r9 watch item 1's regime), the
+    stream is every ODD vec_id.
 
     HONEST FINDING (round 10): the r9 hypothesis was that a codegen'd
     SQL cross-join would serve this regime; measured, it does NOT — at
@@ -1504,7 +1504,7 @@ def s26b_stream_decontam_large_eval(
         ckpt = os.path.join(work, "ckpt")
         _drain(
             spark,
-            lambda: jobs.streaming_decontam_crossjoin(
+            lambda: jobs.streaming_decontam_blas(
                 stream, evals, verdict_dir, ckpt
             ),
         )

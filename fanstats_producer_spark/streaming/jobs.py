@@ -508,7 +508,6 @@ def streaming_phash_near_dup(
     state_dir: str,
     verdict_dir: str,
     checkpoint_dir: str,
-    hamming: int = 8,
     features=None,
 ) -> StreamingQuery:
     """s28: ONLINE perceptual image near-dup — x88's pHash banding run
@@ -527,9 +526,10 @@ def streaming_phash_near_dup(
     state ∪ batch; per doc, partner = each colliding bucket's minimum;
     `is_candidate` = any bucket min < doc_id (the raw LSH signal),
     `is_dup` additionally requires hamming(pHash, partner pHash) <=
-    {hamming} — the same band/verify parameters as x88, where 9 bands
-    at hamming <= 8 make banding pigeonhole-complete.  Verdicts land
-    batch-stamped; the bucket argmin merge is idempotent (no marker).
+    multimodal._X88_HAMMING — the same band/verify parameters as x88,
+    where 9 bands at hamming <= 8 make banding pigeonhole-complete.
+    Verdicts land batch-stamped; the bucket argmin merge is idempotent
+    (no marker).
 
     ONLINE semantics are first-arrival with bucket-min partner — the
     s22 rule on image hashes; the s28 oracle states exactly it.  State
@@ -541,6 +541,7 @@ def streaming_phash_near_dup(
     state, and verdict machinery are modality-blind over any 63-bit
     fingerprint."""
     from fanstats_producer_spark.operators.multimodal import (
+        _X88_HAMMING,
         streaming_phash_band_keys,
     )
 
@@ -554,7 +555,7 @@ def streaming_phash_near_dup(
         near = F.col("min_id") < F.col("doc_id")
         ham_ok = (
             F.bit_count(F.col("phash").bitwiseXOR(F.col("min_ph")))
-            <= F.lit(hamming)
+            <= F.lit(_X88_HAMMING)
         )
         verdicts = (
             batch.join(combined, "band_hash")
@@ -581,7 +582,7 @@ def streaming_phash_near_dup(
     )
 
 
-def streaming_decontam_crossjoin(
+def streaming_decontam_blas(
     vectors: DataFrame,
     evals: DataFrame,
     verdict_dir: str,

@@ -19,6 +19,16 @@ if grep -rnwE "bucket_join|max_bucket|max_posting|max_df|broadcast_threshold" \
   echo "deleted opt-in scale option re-added in fanstats_producer_spark" >&2
   exit 1
 fi
+# The multimodal keys cross the Arrow-batch -> Python boundary through
+# one combinator, multimodal.payload_worker: a key states a row function,
+# and a batch loop anywhere else in the module owns that boundary again.
+if awk '/^[^ #]/ { top = $0 }
+  /for pdf in batches/ && top !~ /^def payload_worker\(/ {
+    print FILENAME ":" FNR ":" $0; bad = 1 }
+  END { exit !bad }' fanstats_producer_spark/operators/multimodal.py; then
+  echo "batch loop outside multimodal.payload_worker" >&2
+  exit 1
+fi
 python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names

@@ -2071,7 +2071,7 @@ def test_s26_gate_is_batch_slicing_invariant(spark, tmp_path):
     assert single == batch
 
 
-def test_s26b_crossjoin_arm_matches_hof_arm_bitwise(spark):
+def test_s26b_blas_arm_matches_hof_arm_bitwise(spark):
     """The two decontamination scorers must be interchangeable
     bit-for-bit (same e6-quantized cosine, same eval_id tie-break, same
     threshold): run s26's interpreted-HOF gate — the registered x66/s26

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 
 from fanstats_producer_spark.io import load
-from fanstats_producer_spark.operators import similarity
+from fanstats_producer_spark.operators import multimodal, similarity
 from fanstats_producer_spark.operators.asof import asof_join
 from fanstats_producer_spark.operators.dedup import (
     _simhash64,
@@ -285,33 +285,41 @@ def test_binary_metadata_struct(spark):
     assert row.meta.format == "utf8-blob" and row.meta.n_bytes == 3
 
 
-def test_multimodal_resize_stage(spark):
-    from fanstats_producer_spark.operators.multimodal import resize_batch
-
-    docs = spark.createDataFrame(
-        [(1, "hello world " * 10, "en"), (2, "x", "en")],
-        "doc_id long, text string, lang string",
-    )
-    out = with_payload(docs).mapInPandas(
-        resize_batch(32, 32), schema="doc_id long, payload binary, width int, height int"
-    )
-    rows = {r.doc_id: r for r in out.collect()}
-    assert len(bytes(rows[1].payload)) == (32 * 32) // 64  # sized to target
-    assert (rows[1].width, rows[1].height) == (32, 32)
+_PAYLOAD_WORKERS = sorted(
+    name
+    for name, v in vars(multimodal).items()
+    if callable(v) and isinstance(getattr(v, "schema", None), str)
+)
 
 
-def test_multimodal_frame_sampling(spark):
-    from fanstats_producer_spark.operators.multimodal import frame_sample_batch
+def test_payload_workers_enumerated():
+    """Every document-payload key's worker is a module-level
+    payload_worker (x96 reuses x88's), so the contract test below sees
+    all of them."""
+    assert len(_PAYLOAD_WORKERS) == 12, _PAYLOAD_WORKERS
 
-    docs = spark.createDataFrame(
-        [(1, "frame content " * 50, "en")], "doc_id long, text string, lang string"
-    )
-    out = with_payload(docs).mapInPandas(
-        frame_sample_batch(4), schema="doc_id long, frame_idx int, frame binary"
-    )
-    rows = out.collect()
-    assert [r.frame_idx for r in rows] == [0, 1, 2, 3]  # one row per frame
-    assert all(len(bytes(r.frame)) == 16 for r in rows)
+
+@pytest.mark.parametrize("name", _PAYLOAD_WORKERS)
+def test_payload_worker_contract(name):
+    """payload_worker's contract, per worker: every yielded frame's
+    columns are the schema's field names in order, zero-row frames
+    included (x07b and x64 on an empty payload), and an empty batch
+    iterator yields nothing."""
+    import pandas as pd
+
+    worker = getattr(multimodal, name)
+    fields = [f.split()[0] for f in worker.schema.split(",")]
+    payloads = [b"", b"a", (bytes(range(32, 127)) * 4)[:300]]
+    batches = [pd.DataFrame({"doc_id": [1, 2, 3], "payload": payloads})] + [
+        pd.DataFrame({"doc_id": [i], "payload": [p]})
+        for i, p in enumerate(payloads)
+    ]
+    frames = list(worker(iter(batches)))
+    assert len(frames) == len(batches)
+    for frame in frames:
+        assert list(frame.columns) == fields
+    assert len(frames[0]) > 0
+    assert list(worker(iter([]))) == []
 
 
 def test_jaccard_properties(spark):
@@ -1169,8 +1177,8 @@ def test_gif_codec_roundtrip_and_rejects():
         decode_gif(bytes(bad))
     # structurally valid GIF with zero image frames (header + LSD +
     # trailer): decode_gif returns an empty frame list, and decode_image
-    # must raise ValueError (NOT IndexError) so resize_batch's
-    # corrupt-blob fallback catches it instead of failing the scan
+    # must raise ValueError (NOT IndexError) so x07's extract_features
+    # fallback catches it instead of failing the scan
     import struct as _struct
 
     from fanstats_producer_spark.operators.multimodal import decode_image
