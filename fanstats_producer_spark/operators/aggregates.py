@@ -243,7 +243,8 @@ def sort_percentile(
     # Interpolate EXACTLY as the percentile aggregate does
     # (Percentile.getPercentile): pos = p·(n-1);
     # result = (ceil(pos)-pos)·v_lo + (pos-floor(pos))·v_hi, with the
-    # exact v_lo short-circuit when pos is integral.  The algebraically
+    # exact v_lo short-circuits when pos is integral or v_lo == v_hi
+    # (0.8·-3.0 + 0.2·-3.0 is -3.0000000000000004).  The algebraically
     # equal v_lo + (v_hi-v_lo)·frac rounds differently in the last ulp —
     # caught by the equivalence test.
     j = ranked.join(F.broadcast(n), group_col).withColumn(
@@ -257,7 +258,9 @@ def sort_percentile(
     pos = F.min("__pos")
     interp = (F.ceil(pos) - pos) * v_lo + (pos - F.floor(pos)) * v_hi
     return edge.groupBy(group_col).agg(
-        F.when(F.floor(pos) == F.ceil(pos), v_lo).otherwise(interp).alias("pctl")
+        F.when((F.floor(pos) == F.ceil(pos)) | (v_lo == v_hi), v_lo)
+        .otherwise(interp)
+        .alias("pctl")
     )
 
 

@@ -2368,9 +2368,9 @@ def x90_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # image dedup decision: which images a 100 TB multimodal corpus keeps.
 # The oracle writes the x59 closure idiom verbatim (recursive reach ->
 # min-label clusters -> ttr keep rule) on top of the shared pHash CTE
-# chain, so scripts/sf1_closure_check.py's staged iterative closure
-# covers it at sf1 where the recursive CTE cannot run (KEYS list there
-# includes x96).
+# chain, so scripts/scale_closure_check.py's staged iterative closure
+# covers it at sf1 where the recursive CTE cannot run (CLOSURE_KEYS
+# there includes x96).
 
 
 def _x96_oracle() -> str:

@@ -598,7 +598,7 @@ def x56_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shortlist 20) recall only ~0.07 here; m=16 4-dim subspaces with a
 # 32-entry codebook and a 100-deep ADC shortlist lose NOTHING beyond
 # routing (shortlist recall == route recall), so the default n_probe
-# is set where the round-7 sweep (scripts/x57_sweep.py,
+# is set where the round-7 sweep (scripts/planted_sweep.py x57,
 # X57_SWEEP_r7.json) says routing saturates: n_probe=8 of 10 lists =
 # recall@5 0.933 on BOTH fixtures (planted-neighbor: 1.0) at the same
 # wall-clock as n_probe=5's 0.73 — on this barely-separated fixture
@@ -702,7 +702,7 @@ def ivfpq_ann(
     argmax / ranking stage breaks ties on id over INTEGER-quantized
     distances, so the composition is value-hash deterministic end to
     end.  `n_probe`/`shortlist`/`m` are the recall-vs-cost knobs the
-    x57 sweep (scripts/x57_sweep.py) tunes on the planted-neighbor
+    x57 sweep (scripts/planted_sweep.py x57) tunes on the planted-neighbor
     fixture; the registered key pins the defaults the oracle states.
     `m` sub-spaces re-slice the 64 dims (dsub = 64/m) over the same
     [29, 61) codebook range."""
@@ -881,7 +881,7 @@ def ivfpq_recall(
     """x50 extended to the composed arm: per-query recall@k of the
     IVF->ADC->rerank pipeline vs brute-force exact cosine over the SAME
     probe queries — the number a production owner tunes n_probe and
-    shortlist against (scripts/x57_sweep.py drives this surface over
+    shortlist against (scripts/planted_sweep.py x57 drives this surface over
     the planted-neighbor fixture).  Exact ground truth ranks over the
     quantized similarity (integer, neighbor_id tie-break) so both
     engines pick identical top-k sets."""
@@ -1995,7 +1995,7 @@ def x102_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the projected-cosine rank divides exact ints in the same IEEE order
 # on both engines; zero-norm projections are excluded on BOTH sides
 # (0/0 NaN would order differently cross-engine).
-# Registered knobs = the measured sweep knee (scripts/x103_sweep.py →
+# Registered knobs = the measured sweep knee (scripts/planted_sweep.py x103 →
 # X103_SWEEP.json, sf0.1): (out_dim 32, shortlist max(200, n DIV 5))
 # lifts base-fixture recall@5 from 0.533 [0, .8, .8] to 0.933
 # [.8, 1, 1] (planted 0.400 → 0.867) at the same wall cost — JL-16
@@ -2069,7 +2069,7 @@ def jl_ann_recall(
     frac_div: int = _X103_FRAC_DIV,
 ) -> DataFrame:
     """Parametrized JL-shortlist ANN surface (project → shortlist →
-    exact rerank → recall@k vs x05) — scripts/x103_sweep.py drives it
+    exact rerank → recall@k vs x05) — scripts/planted_sweep.py x103 drives it
     over out_dim × shortlist on the base + planted fixtures; the
     registered x103 key runs the defaults."""
     emb = spread(load(spark, sf_dir, "embeddings"))
@@ -2158,5 +2158,5 @@ def x103_jl_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x103: recall@k of the JL-shortlist + exact-rerank pipeline vs
     the exact x05 answer — integer candidate arithmetic end to end.
     Registered knobs sit at the measured sweep knee
-    (scripts/x103_sweep.py → X103_SWEEP.json; see BASELINE)."""
+    (scripts/planted_sweep.py x103 → X103_SWEEP.json; see BASELINE)."""
     return jl_ann_recall(spark, sf_dir)

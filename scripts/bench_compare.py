@@ -19,8 +19,13 @@ Printed old-side values are the drift-ADJUSTED baselines in that mode;
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
+import os
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -72,15 +77,6 @@ def main() -> int:
         keys = rec.get("qz_keys")
         if keys is None:
             try:
-                import hashlib
-                import os as _os
-
-                sys.path.insert(
-                    0,
-                    _os.path.dirname(
-                        _os.path.dirname(_os.path.abspath(__file__))
-                    ),
-                )
                 from fanstats_producer_spark import registry
 
                 registry.load_all()

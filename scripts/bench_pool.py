@@ -30,7 +30,8 @@ import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -55,14 +56,14 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    latest = os.path.join(REPO, "BENCH_FULL_LATEST.json")
+    latest = os.path.join(ROOT, "BENCH_FULL_LATEST.json")
     payloads = []
     totals = []
     for i in range(args.runs):
         t0 = time.time()
         r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "bench.py")],
-            cwd=REPO,
+            [sys.executable, os.path.join(ROOT, "bench.py")],
+            cwd=ROOT,
             capture_output=True,
             text=True,
         )
@@ -127,7 +128,7 @@ def main() -> int:
         "qzk": hashlib.sha256("\n".join(keys).encode()).hexdigest()[:8],
         "qz_keys": keys,
     }
-    with open(os.path.join(REPO, args.out), "w") as f:
+    with open(os.path.join(ROOT, args.out), "w") as f:
         json.dump(record, f, indent=1)
     print(f"wrote {args.out}: {record['value']:.1f} s over {len(keys)} keys")
 
@@ -162,14 +163,14 @@ def main() -> int:
                 for k in keys
             },
         }
-        with open(os.path.join(REPO, args.envelope), "w") as f:
+        with open(os.path.join(ROOT, args.envelope), "w") as f:
             json.dump(env, f, indent=1)
         print(f"wrote {args.envelope}")
 
     if not args.keep_latest:
         subprocess.run(
             ["git", "checkout", "--", "BENCH_FULL_LATEST.json"],
-            cwd=REPO,
+            cwd=ROOT,
             check=False,
         )
     return 0

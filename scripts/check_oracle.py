@@ -2,25 +2,58 @@
 query on Spark and its DuckDB oracle side-by-side, compare row count,
 column names, and order-insensitive canonical values.
 
+Also what the other scripts share: `session` (a Spark session whose
+Python workers import this checkout), `connect` (a DuckDB view per
+fixture table) and `canon_rows` (the order-insensitive row form).
+
 Usage: python scripts/check_oracle.py [sf_dir] [key ...]
+       python scripts/check_oracle.py --types
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.io import TABLES
 from fanstats_producer_spark.session import get_spark
 
 registry.load_all()
+
+# the read-only sf0.001/sf0.01/sf0.1 fixtures (TESTDATA.md)
+TESTDATA = "/root/testdata"
+
+
+def session(name: str, **kw):
+    """get_spark with this checkout on the Python workers' path, so keys
+    that run Python UDFs work whatever the caller's working directory."""
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+    )
+    return get_spark(name, **kw)
+
+
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table of sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def fetch(con: duckdb.DuckDBPyConnection, sql: str):
+    """(columns, rows) of one query."""
+    res = con.execute(sql)
+    return [d[0] for d in res.description], res.fetchall()
 
 
 def canon_value(v):
@@ -41,13 +74,10 @@ def canon_rows(cols, rows):
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(TESTDATA, "sf0.01")
     keys = sys.argv[2:] or sorted(registry.QUERIES)
-    spark = get_spark("oracle-check")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    spark = session("oracle-check")
+    con = connect(sf_dir)
 
     failures = 0
     for key in keys:
@@ -67,9 +97,7 @@ def main() -> int:
             print(f"rows  {key}: {len(s_rows)} rows (rows-only, {spark_sec:.1f}s)")
             continue
         try:
-            res = con.execute(registry.ORACLE[key])
-            d_cols = [d[0] for d in res.description]
-            d_rows = res.fetchall()
+            d_cols, d_rows = fetch(con, registry.ORACLE[key])
         except Exception:
             print(f"FAIL  {key}: duckdb error")
             traceback.print_exc()
@@ -99,11 +127,9 @@ def audit_types() -> int:
     """--types: assert Spark output dtypes equal DuckDB oracle dtypes
     (the driver may compare schemas strictly; int32-vs-int64 drift is a
     silent correctness failure waiting to happen)."""
-    sf_dir = "/root/testdata/sf0.01"
-    spark = get_spark("type-audit")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    sf_dir = os.path.join(TESTDATA, "sf0.01")
+    spark = session("type-audit")
+    con = connect(sf_dir)
     dmap = {
         "BIGINT": "bigint", "INTEGER": "int", "DOUBLE": "double",
         "VARCHAR": "string", "DATE": "date", "BOOLEAN": "boolean",

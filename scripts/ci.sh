@@ -29,6 +29,22 @@ if awk '/^[^ #]/ { top = $0 }
   echo "batch loop outside multimodal.payload_worker" >&2
   exit 1
 fi
+# Scripts and tests find their checkout from their own __file__: a
+# hard-coded checkout path makes a run from any other copy (a parent
+# copy for an A/B, say) silently import and measure that fixed checkout.
+if grep -rnF --include=*.py "$PWD" scripts tests fanstats_producer_spark bench.py; then
+  echo "hard-coded checkout path; derive it from __file__" >&2
+  exit 1
+fi
+# One tool per job in scripts/: these were folded into the closure
+# harness, planted_sweep.py, dump_plans.py and oracle_times.py.
+for f in sf1_closure_check x57_sweep x84_sweep x103_sweep dump_key_plans \
+  scale_trend baseline_table; do
+  if [ -e "scripts/$f.py" ]; then
+    echo "scripts/$f.py re-added; its job belongs to another script" >&2
+    exit 1
+  fi
+done
 python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names

@@ -1,18 +1,36 @@
-"""Generate PLANS.md: formatted physical plans of the headline queries
-with the scale-relevant properties annotated — the `.explain("formatted")
-and iterate` evidence trail (run after any plan-affecting change).
+"""Formatted physical plans (`.explain("formatted")`), the `.explain and
+iterate` evidence trail, in two modes that share one session, registry
+and explain path:
+
+- no keys: regenerate PLANS.md — the headline queries' plans with the
+  scale-relevant property of each annotated (run after any
+  plan-affecting change);
+- KEY... --tag T --suffix before|after: write each key's full plan to
+  plans/<T>/<key>_<suffix>.txt — the optimization-round trail, one
+  `<key>_before.txt` / `<key>_after.txt` pair per touched key, against
+  which plan claims are checked.  A streaming key's captured plan is the
+  post-drain batch summary its builder returns; the stream's own
+  micro-batch plan is not a DataFrame that can be explained offline.
+
+Usage:
+    python scripts/dump_plans.py
+    python scripts/dump_plans.py --tag r13 --suffix before KEY...
 """
 
 from __future__ import annotations
 
+import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
+from fanstats_producer_spark.operators.layout import ensure_layout
 from fanstats_producer_spark.plans.checks import explain_str
-from fanstats_producer_spark.session import get_spark
+from scripts.check_oracle import TESTDATA, session
 
 registry.load_all()
 
@@ -318,9 +336,40 @@ HEADLINERS = {
 }
 
 
-def main() -> None:
-    spark = get_spark("plan-dump")
-    sf = "/root/testdata/sf0.01"
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("keys", nargs="*")
+    ap.add_argument("--tag", default="r13")
+    ap.add_argument("--suffix", choices=["before", "after"])
+    ap.add_argument(
+        "--sf-dir", help="default: sf0.01 for PLANS.md, sf0.1 for named keys"
+    )
+    args = ap.parse_args()
+    if args.keys and not args.suffix:
+        ap.error("KEY... needs --suffix before|after")
+    unknown = [k for k in args.keys if k not in registry.QUERIES]
+    if unknown:
+        print(f"unknown keys: {unknown}", file=sys.stderr)
+        return 2
+    sf = args.sf_dir or os.path.join(TESTDATA, "sf0.1" if args.keys else "sf0.01")
+
+    spark = session("plan-dump")
+    ensure_layout(spark, sf)
+    plans = {
+        key: explain_str(registry.QUERIES[key](spark, sf), "formatted")
+        for key in args.keys or HEADLINERS
+    }
+
+    if args.keys:
+        outdir = os.path.join(ROOT, "plans", args.tag)
+        os.makedirs(outdir, exist_ok=True)
+        for key, plan in plans.items():
+            path = os.path.join(outdir, f"{key}_{args.suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(plan)
+            print(f"wrote {path}")
+        return 0
+
     out = ["# PLANS — headline physical plans (generated by scripts/dump_plans.py)",
            "",
            "Formatted `.explain` output per headline query, with the scale",
@@ -328,8 +377,7 @@ def main() -> None:
            "plan-affecting change: `python scripts/dump_plans.py`.",
            ""]
     for key, note in HEADLINERS.items():
-        df = registry.QUERIES[key](spark, sf)
-        plan = explain_str(df, "formatted")
+        plan = plans[key]
         # keep the operator tree + scan metadata, drop the verbose field lists
         tree = plan.split("\n\n")[0]
         details = "\n".join(
@@ -337,10 +385,11 @@ def main() -> None:
             if re.search(r"PushedFilters|PartitionFilters|ReadSchema|Location", line)
         )
         out += [f"## {key}", "", note, "", "```", tree, "", details, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

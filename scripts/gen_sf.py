@@ -22,6 +22,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
 VOCAB = (
     "spark window merge table column vector stream value data small join "
     "filter big group hash customer sort order slow line part fast the row "

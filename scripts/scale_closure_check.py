@@ -1,20 +1,34 @@
-"""Scale-proof harness for the heavy dedup/ANN family at ANY locally
-generated SF (VERDICT r11 item 1 — sf10): the sf1 closure harness
-generalized to a target fixture dir, with incremental per-key output
-so a long run commits partial evidence.
+"""Scale-proof harness for the closure-oracle dedup family and the heavy
+ANN keys at ANY locally generated SF: x04e, x59, x61, x96 (recursive-CTE
+transitive closures), x60 (quadratic pair-set monitor), and plain keys
+whose registered oracle runs directly (x68/x74/s26b by default).
+Results flush per key, so a long run commits partial evidence.
 
-Two key classes:
-- closure keys (x04e/x59/x60/x61/x96): DuckDB's recursive-CTE oracles
-  OOM past sf0.1, so the oracle side runs sf1_closure_check's STAGED
-  restatement (temp-table edges + iterative min-label propagation —
-  the same algorithm the Spark side runs), whose equivalence to the
-  registered oracle is pinned at sf0.01 first.
-- plain keys (x68/x74/s26b by default): the REGISTERED oracle runs
-  directly against the target SF.
+Past sf0.1 the registered recursive-CTE oracles OOM DuckDB reproducibly
+("Failed to allocate block...", 122 GB free at sf1) — recursive CTE
+state cannot spill.  The closure keys' oracle side therefore runs a
+STAGED restatement: temp tables with the closure computed by an
+ITERATIVE min-label-propagation loop (the same algorithm the Spark
+side's connected_components runs: neighbor-min + pointer-jump per
+round, O(log diameter) rounds), which spills fine.  `--deep` swaps in
+the per-stage-materialized restatements for the sf10 memory envelope,
+and a plain key whose registered shape cannot finish at scale has a
+staged-plain restatement.  Soundness: before any scale run, ONE pin loop
+runs every restatement in use against the REGISTERED oracle at sf0.01
+(where it still runs) — any drift fails loudly before the scale run
+spends minutes.
+
+The staged closure materializes `reach(node, r)` with ONE row per node
+(node, component-min).  Every registered suffix consumes reach only as
+`MIN(r) ... GROUP BY node`, for which the single-row form is
+equivalent.
 
 Usage:
     python scripts/scale_closure_check.py --sf-dir localdata/sf10 \
         --out SF10_CLOSURE.json
+    # the sf1 closure record:
+    python scripts/scale_closure_check.py --sf-dir localdata/sf1 \
+        --plain '' --out SF1_CLOSURE_LATEST.json
     # subset / reorder:
     python scripts/scale_closure_check.py --sf-dir localdata/sf10 \
         --keys x59_verified_dedup,x61_semdedup --plain ''
@@ -29,24 +43,28 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import pickle
 import sys
 import time
 
-_HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(_HERE))
-sys.path.insert(0, _HERE)
+import duckdb
 
-from sf1_closure_check import (  # noqa: E402
-    _connect,
-    canon_rows,
-    staged_oracle,
-    validate_staged,
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry  # noqa: E402
+from scripts.check_oracle import (  # noqa: E402
+    TESTDATA,
+    canon_rows,
+    connect,
+    fetch,
+    session,
+)
 
 registry.load_all()
 
+PIN_SF = os.path.join(TESTDATA, "sf0.01")
+SPILL = "/tmp/duckdb_spill"
 # cheapest-first by measured sf1 cost (spark + staged oracle seconds:
 # x59 151, x61 124, x60 407, x96 430, x04e 665)
 CLOSURE_KEYS = [
@@ -61,6 +79,241 @@ PLAIN_KEYS = [
     "x74_containment_dup",
     "s26b_stream_decontam_large_eval",
 ]
+
+
+def _connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    con = connect(sf_dir)
+    os.makedirs(SPILL, exist_ok=True)
+    con.execute(f"SET temp_directory='{SPILL}'")
+    con.execute("SET preserve_insertion_order=false")
+    # an explicit ceiling makes spillable operators spill EARLY instead
+    # of racing the default 80%-of-RAM limit against Spark's JVM (the
+    # sf10 x59 staged oracle hard-OOMed without it; with it, whatever
+    # still fails is genuinely unspillable state — the honest signal).
+    # Derived from the host, not hardcoded (ADVICE r12): a flat 60GB on
+    # a <75GB host would RAISE the ceiling above DuckDB's default 80%
+    # and make hard-OOM more likely — the opposite of the intent.
+    # Override with SPARK_GRAFT_DUCKDB_MEM if needed.
+    limit = os.environ.get("SPARK_GRAFT_DUCKDB_MEM")
+    if not limit:
+        try:
+            with open("/proc/meminfo") as mf:
+                kb = int(
+                    next(ln for ln in mf if ln.startswith("MemTotal")).split()[1]
+                )
+            limit = f"{min(60, max(1, int(kb / 1024 / 1024 * 0.6)))}GB"
+        except (OSError, StopIteration, ValueError):
+            limit = "60GB"
+    con.execute(f"SET memory_limit='{limit}'")
+    return con
+
+
+def _split_edges_prefix(oracle_sql: str) -> tuple[str, str]:
+    """Split a registered closure oracle into (edges-producing query,
+    suffix after the recursive reach block).  The four oracles share
+    the exact `edges AS (...)` / `reach(node, r) AS (...)` idiom."""
+    pre, rest = oracle_sql.split("edges AS (", 1)
+    body, rest2 = rest.split("),\n    reach", 1)
+    edges_query = (
+        pre.replace("WITH RECURSIVE", "WITH", 1)
+        + "edges AS ("
+        + body
+        + ")\n    SELECT src, dst FROM edges"
+    )
+    # rest2 = "(node, r) AS ( ... ON e.dst = r.node)<suffix>"
+    _, suffix = rest2.split("ON e.dst = r.node)", 1)
+    return edges_query, suffix
+
+
+def _iterative_closure(con: duckdb.DuckDBPyConnection) -> int:
+    """Temp table `edges(src, dst)` (both directions) -> temp table
+    `reach(node, r)` with one row per node holding its component min.
+    Neighbor-min propagation + pointer jump per round — the exact
+    algorithm operators/dedup.py::connected_components runs."""
+    con.execute("DROP TABLE IF EXISTS lbl")
+    con.execute(
+        "CREATE TEMP TABLE lbl AS SELECT DISTINCT src AS node, src AS label"
+        " FROM edges"
+    )
+    prev = None
+    rounds = 0
+    while True:
+        rounds += 1
+        con.execute(
+            """
+            CREATE TEMP TABLE lbl_p AS
+            SELECT l.node,
+                   LEAST(l.label, COALESCE(nm.m, l.label)) AS label
+            FROM lbl l LEFT JOIN (
+              SELECT e.src AS node, MIN(lb.label) AS m
+              FROM edges e JOIN lbl lb ON lb.node = e.dst
+              GROUP BY e.src) nm USING (node)
+            """
+        )
+        con.execute(
+            """
+            CREATE TEMP TABLE lbl_j AS
+            SELECT l.node, COALESCE(p.label, l.label) AS label
+            FROM lbl_p l LEFT JOIN lbl_p p ON p.node = l.label
+            """
+        )
+        con.execute("DROP TABLE lbl")
+        con.execute("DROP TABLE lbl_p")
+        con.execute("ALTER TABLE lbl_j RENAME TO lbl")
+        cur = con.execute("SELECT SUM(label) FROM lbl").fetchone()[0]
+        if cur == prev:
+            break
+        prev = cur
+        if rounds > 60:
+            raise RuntimeError("closure did not converge")
+    con.execute("DROP TABLE IF EXISTS reach")
+    con.execute(
+        "CREATE TEMP TABLE reach AS SELECT node, label AS r FROM lbl"
+    )
+    con.execute("DROP TABLE lbl")
+    return rounds
+
+
+def _closure_suffix(con, key: str):
+    """Run the registered oracle's post-closure suffix against the
+    staged `reach` temp table."""
+    _, suffix = _split_edges_prefix(registry.ORACLE[key])
+    if suffix.lstrip().startswith(","):
+        final = "WITH " + suffix.lstrip().lstrip(",")
+    else:
+        final = suffix
+    return fetch(con, final)
+
+
+def _ds(con, name: str, sql: str) -> None:
+    con.execute(f"DROP TABLE IF EXISTS {name}")
+    con.execute(f"CREATE TEMP TABLE {name} AS {sql}")
+
+
+def _close_over(con, pairs: str, key: str):
+    """Undirected edges from the temp pair table `pairs(id_a, id_b)`
+    (dropped once read), the iterative closure, then key's registered
+    suffix."""
+    _ds(
+        con,
+        "edges",
+        f"SELECT id_a AS src, id_b AS dst FROM {pairs}"
+        f" UNION SELECT id_b, id_a FROM {pairs}",
+    )
+    con.execute(f"DROP TABLE {pairs}")
+    _iterative_closure(con)
+    return _closure_suffix(con, key)
+
+
+# x60's final aggregation over its three materialized pair sets
+# (exact_pairs, banded, verified) — shared by its staged and deep-staged
+# restatements, which differ only in how they build those tables.
+_X60_FINAL = """
+    WITH base AS (
+      SELECT COALESCE(e.id_a, b.id_a) AS id_a,
+             COALESCE(e.id_b, b.id_b) AS id_b,
+             (e.id_a IS NOT NULL) AS in_exact,
+             (b.id_a IS NOT NULL) AS in_banded
+      FROM exact_pairs e
+      FULL OUTER JOIN banded b
+        ON e.id_a = b.id_a AND e.id_b = b.id_b),
+    j AS (
+      SELECT base.in_exact, base.in_banded,
+             (v.id_a IS NOT NULL) AS in_ver
+      FROM base LEFT JOIN verified v
+        ON base.id_a = v.id_a AND base.id_b = v.id_b)
+    SELECT COUNT(*) FILTER (WHERE in_banded) AS n_banded,
+           COUNT(*) FILTER (WHERE in_ver) AS n_verified,
+           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_banded) AS DOUBLE)
+                / greatest(COUNT(*) FILTER (WHERE in_banded), 1) * 1e6 + 0.5)
+                AS BIGINT) AS banded_precision_e6,
+           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
+                / greatest(COUNT(*) FILTER (WHERE in_ver), 1) * 1e6 + 0.5)
+                AS BIGINT) AS verified_precision_e6,
+           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_banded) AS DOUBLE)
+                / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
+                AS BIGINT) AS banded_recall_e6,
+           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
+                / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
+                AS BIGINT) AS verified_recall_e6
+    FROM j
+"""
+
+
+def staged_oracle(con: duckdb.DuckDBPyConnection, key: str):
+    """Evaluate the registered oracle via staged temp tables; returns
+    (columns, rows)."""
+    if key == "x61_semdedup":
+        # bespoke staging: the suffix references the prefix CTE `asg`
+        # (the k-means assignment — also the expensive stage), so
+        # materialize it once as a temp table and restate the rest of
+        # the registered oracle around it verbatim.
+        from fanstats_producer_spark.operators.dedup import _X61_THRESHOLD
+
+        _ds(
+            con,
+            "asg",
+            "SELECT vec_id, cluster_id AS cid, dist2_e6"
+            f" FROM ({registry.ORACLE['x24_kmeans']})",
+        )
+        _ds(
+            con,
+            "edges",
+            f"""
+            WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
+                       FROM embeddings),
+            pairs AS (
+              SELECT a.vec_id AS id_a, b.vec_id AS id_b
+              FROM asg a JOIN asg b ON a.cid = b.cid
+                                   AND a.vec_id < b.vec_id
+              JOIN v va ON va.vec_id = a.vec_id
+              JOIN v vb ON vb.vec_id = b.vec_id
+              WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD})
+            SELECT id_a AS src, id_b AS dst FROM pairs
+            UNION SELECT id_b, id_a FROM pairs
+            """,
+        )
+        _iterative_closure(con)
+        return fetch(
+            con,
+            """
+            WITH cl AS (SELECT node, MIN(r) AS cluster_id FROM reach
+                        GROUP BY node),
+            merged AS (
+              SELECT asg.vec_id,
+                     COALESCE(cl.cluster_id, asg.vec_id) AS sem_cluster,
+                     asg.dist2_e6
+              FROM asg LEFT JOIN cl ON cl.node = asg.vec_id),
+            ranked AS (
+              SELECT vec_id, sem_cluster, dist2_e6,
+                     row_number() OVER (PARTITION BY sem_cluster
+                                        ORDER BY dist2_e6 DESC, vec_id)
+                       AS rn
+              FROM merged)
+            SELECT vec_id, CAST(sem_cluster AS BIGINT) AS sem_cluster,
+                   dist2_e6, (rn = 1) AS is_kept
+            FROM ranked ORDER BY vec_id
+            """,
+        )
+
+    if key == "x60_verify_gate_effect":
+        # no closure — the OOM risk is the three quadratic pair sets;
+        # materialize each once (the registered oracle recomputes the
+        # banding inside both x04d and x47) and run the tiny final
+        # aggregation over them.
+        for name, src in (("exact_pairs", "x04_neardup_jaccard"),
+                          ("banded", "x04d_minhash_native"),
+                          ("verified", "x47_edit_verify")):
+            _ds(con, name, f"SELECT id_a, id_b FROM ({registry.ORACLE[src]})")
+        return fetch(con, _X60_FINAL)
+
+    # x04e / x59 / x96: generic surgery — their suffixes reference only
+    # `reach` and base views, never a prefix CTE.
+    edges_query, _ = _split_edges_prefix(registry.ORACLE[key])
+    _ds(con, "edges", edges_query)
+    _iterative_closure(con)
+    return _closure_suffix(con, key)
+
 
 # --- staged restatements for PLAIN keys whose registered oracle has a
 # shape that cannot finish at the probe SF (same protocol as the
@@ -119,11 +372,6 @@ STAGED_PLAIN = {"s26b_stream_decontam_large_eval": _s26b_staged_sql}
 # verifies bit_count(xor()) <= 8 on the bounded candidate list.
 # Protocol unchanged: every deep restatement is pinned row-identical to
 # the REGISTERED oracle at sf0.01 before any scale run.
-
-
-def _ds(con, name: str, sql: str) -> None:
-    con.execute(f"DROP TABLE IF EXISTS {name}")
-    con.execute(f"CREATE TEMP TABLE {name} AS {sql}")
 
 
 def _stage_sigl(con) -> None:
@@ -315,107 +563,33 @@ def _stage_phash_pairs(con) -> None:
     con.execute("DROP TABLE t_hashes")
 
 
-def _run_suffix(con, key: str):
-    """Run the registered oracle's post-closure suffix against the
-    staged `reach` temp table (same mechanics as the sf1 harness)."""
-    from sf1_closure_check import _split_edges_prefix
-
-    _, suffix = _split_edges_prefix(registry.ORACLE[key])
-    if suffix.lstrip().startswith(","):
-        final = "WITH " + suffix.lstrip().lstrip(",")
-    else:
-        final = suffix
-    res = con.execute(final)
-    return [d[0] for d in res.description], res.fetchall()
-
-
 def _deep_x59(con):
-    from sf1_closure_check import _iterative_closure
-
     _stage_sigl(con)
     _stage_banded(con)
     _stage_verified(con)
     con.execute("DROP TABLE t_sigl")
-    _ds(
-        con,
-        "edges",
-        "SELECT id_a AS src, id_b AS dst FROM verified"
-        " UNION SELECT id_b, id_a FROM verified",
-    )
-    _iterative_closure(con)
-    return _run_suffix(con, "x59_verified_dedup")
+    return _close_over(con, "verified", "x59_verified_dedup")
 
 
 def _deep_x04e(con):
-    from sf1_closure_check import _iterative_closure
-
     _stage_exact(con)
-    _ds(
-        con,
-        "edges",
-        "SELECT id_a AS src, id_b AS dst FROM exact_pairs"
-        " UNION SELECT id_b, id_a FROM exact_pairs",
-    )
-    _iterative_closure(con)
-    return _run_suffix(con, "x04e_dedup_clusters")
+    return _close_over(con, "exact_pairs", "x04e_dedup_clusters")
 
 
 def _deep_x96(con):
-    from sf1_closure_check import _iterative_closure
-
     _stage_phash_pairs(con)
-    _ds(
-        con,
-        "edges",
-        "SELECT id_a AS src, id_b AS dst FROM t_vp"
-        " UNION SELECT id_b, id_a FROM t_vp",
-    )
-    con.execute("DROP TABLE t_vp")
-    _iterative_closure(con)
-    return _run_suffix(con, "x96_image_cluster_dedup")
+    return _close_over(con, "t_vp", "x96_image_cluster_dedup")
 
 
 def _deep_x60(con):
-    # three staged pair sets, then the tiny final aggregation (verbatim
-    # from the sf1 harness's x60 branch, which reads these table names)
+    # three staged pair sets, then the same final aggregation as the
+    # staged x60 restatement
     _stage_exact(con)
     _stage_sigl(con)
     _stage_banded(con)
     _stage_verified(con)
     con.execute("DROP TABLE t_sigl")
-    res = con.execute(
-        """
-        WITH base AS (
-          SELECT COALESCE(e.id_a, b.id_a) AS id_a,
-                 COALESCE(e.id_b, b.id_b) AS id_b,
-                 (e.id_a IS NOT NULL) AS in_exact,
-                 (b.id_a IS NOT NULL) AS in_banded
-          FROM exact_pairs e
-          FULL OUTER JOIN banded b
-            ON e.id_a = b.id_a AND e.id_b = b.id_b),
-        j AS (
-          SELECT base.in_exact, base.in_banded,
-                 (v.id_a IS NOT NULL) AS in_ver
-          FROM base LEFT JOIN verified v
-            ON base.id_a = v.id_a AND base.id_b = v.id_b)
-        SELECT COUNT(*) FILTER (WHERE in_banded) AS n_banded,
-               COUNT(*) FILTER (WHERE in_ver) AS n_verified,
-               CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_banded) AS DOUBLE)
-                    / greatest(COUNT(*) FILTER (WHERE in_banded), 1) * 1e6 + 0.5)
-                    AS BIGINT) AS banded_precision_e6,
-               CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
-                    / greatest(COUNT(*) FILTER (WHERE in_ver), 1) * 1e6 + 0.5)
-                    AS BIGINT) AS verified_precision_e6,
-               CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_banded) AS DOUBLE)
-                    / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
-                    AS BIGINT) AS banded_recall_e6,
-               CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
-                    / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
-                    AS BIGINT) AS verified_recall_e6
-        FROM j
-        """
-    )
-    return [d[0] for d in res.description], res.fetchall()
+    return fetch(con, _X60_FINAL)
 
 
 DEEP_STAGED = {
@@ -425,86 +599,82 @@ DEEP_STAGED = {
     "x60_verify_gate_effect": _deep_x60,
 }
 
+# record field holding each oracle arm's seconds
+ORACLE_SEC = {
+    "staged": "staged_oracle_sec",
+    "deep-staged": "deep_staged_oracle_sec",
+    "staged-plain": "staged_plain_oracle_sec",
+    "registered": "oracle_sec",
+}
 
-def validate_deep_staged(keys: list[str]) -> bool:
-    """Pin each deep restatement row-identical to the REGISTERED oracle
-    at sf0.01."""
-    import sf1_closure_check as s1
 
-    ok = True
-    for key in keys:
-        if key not in DEEP_STAGED:
-            continue
-        con = _connect(s1.SF001)
+def oracle_kind(key: str, closure: bool, deep: bool) -> str:
+    """Which oracle arm key runs: a closure key its (deep-)staged
+    restatement, a plain key its staged-plain one or the registered
+    oracle."""
+    if closure:
+        return "deep-staged" if deep and key in DEEP_STAGED else "staged"
+    return "staged-plain" if key in STAGED_PLAIN else "registered"
+
+
+def restated(con, kind: str, key: str):
+    """(columns, rows) of key's oracle arm `kind` on con."""
+    if kind == "staged":
+        return staged_oracle(con, key)
+    if kind == "deep-staged":
+        return DEEP_STAGED[key](con)
+    if kind == "staged-plain":
+        return fetch(con, STAGED_PLAIN[key]())
+    return fetch(con, registry.ORACLE[key])
+
+
+def pin(sf_dir: str, arms) -> dict:
+    """The pin loop: each (kind, key) restatement against the REGISTERED
+    oracle at sf_dir, compared as canon_rows.  Returns
+    {(kind, key): (equal, rows)}."""
+    out = {}
+    for kind, key in arms:
+        t0 = time.time()
+        con = _connect(sf_dir)
         try:
-            t0 = time.time()
-            sc, sr = canon_rows(*DEEP_STAGED[key](con))
-            res = con.execute(registry.ORACLE[key])
-            rc, rr = canon_rows(
-                [d[0] for d in res.description], res.fetchall()
-            )
+            sc, sr = canon_rows(*restated(con, kind, key))
+            rc, rr = canon_rows(*fetch(con, registry.ORACLE[key]))
         finally:
             con.close()
         good = sc == rc and sr == rr
-        ok &= good
+        out[kind, key] = (good, len(sr))
         print(
-            f"{'PIN-OK' if good else 'PIN-FAIL'} {key}: deep-staged "
-            f"{'==' if good else '!='} registered at sf0.01 "
+            f"{'PIN-OK' if good else 'PIN-FAIL'} {key}: {kind} "
+            f"{'==' if good else '!='} registered at {sf_dir} "
             f"({len(sr)} rows, {time.time() - t0:.1f}s)"
         )
-    return ok
+    return out
 
 
-def validate_staged_plain(keys: list[str]) -> bool:
-    """Pin each staged-plain restatement against the REGISTERED oracle
-    at sf0.01 (where the registered shape still runs)."""
-    import sf1_closure_check as s1
-
-    ok = True
-    con = _connect(s1.SF001)
-    try:
-        for key in keys:
-            if key not in STAGED_PLAIN:
-                continue
-            res = con.execute(STAGED_PLAIN[key]())
-            sc, sr = canon_rows(
-                [d[0] for d in res.description], res.fetchall()
-            )
-            res = con.execute(registry.ORACLE[key])
-            rc, rr = canon_rows(
-                [d[0] for d in res.description], res.fetchall()
-            )
-            good = sc == rc and sr == rr
-            ok &= good
-            print(
-                f"{'PIN-OK' if good else 'PIN-FAIL'} {key}: staged-plain "
-                f"{'==' if good else '!='} registered at sf0.01"
-            )
-    finally:
-        con.close()
-    return ok
+def _err(e: Exception) -> str:
+    return f"{type(e).__name__}: {str(e)[:300]}"
 
 
-def run_key_phased(
-    spark,
-    sf_dir: str,
-    key: str,
-    staged: bool,
-    deep: bool,
-    phase: str,
-    canon_dir: str,
-) -> dict:
-    """Two-phase variant (round 13): --phase spark runs ONLY the Spark
-    arm and pickles its canonical rows + timing under canon_dir;
-    --phase oracle loads that pickle, runs the oracle arm, and emits
-    the final record.  Lets the hour-scale oracle grind be scheduled
-    away from quiet-host timing windows without losing the Spark
-    evidence (the r12 lesson: evidence must survive arm boundaries)."""
-    import pickle
+def run_key(spark, sf_dir: str, key: str, kind: str, phase: str = "both",
+            canon_dir: str = "") -> dict:
+    """Spark arm, then oracle arm, each timed and error-isolated: an
+    oracle that cannot finish at this SF (the x59-at-sf10 finding —
+    DuckDB OOM in the STAGED closure, one staging level past the
+    recursive-CTE OOM at sf1) must still leave the Spark side's
+    completion time and row count in the record, because 'Spark
+    finishes, the single-node oracle does not' IS the scale result.
 
-    os.makedirs(canon_dir, exist_ok=True)
+    Two-phase variant (round 13): phase 'spark' runs ONLY the Spark arm
+    and pickles its canonical rows + timing under canon_dir; phase
+    'oracle' loads that pickle, runs the oracle arm, and emits the final
+    record.  Lets the hour-scale oracle grind be scheduled away from
+    quiet-host timing windows without losing the Spark evidence (the r12
+    lesson: evidence must survive arm boundaries)."""
     pkl = os.path.join(canon_dir, f"{key}.pkl")
-    if phase == "spark":
+    if phase == "oracle":
+        with open(pkl, "rb") as f:
+            scols, srows, t_spark = pickle.load(f)
+    else:
         t0 = time.time()
         try:
             sdf = registry.QUERIES[key](spark, sf_dir)
@@ -514,155 +684,56 @@ def run_key_phased(
         except Exception as e:
             return {
                 "match": False,
-                "spark_error": f"{type(e).__name__}: {str(e)[:300]}",
+                "spark_error": _err(e),
                 "spark_sec": round(time.time() - t0, 1),
             }
         t_spark = time.time() - t0
-        with open(pkl, "wb") as f:
-            pickle.dump((scols, srows, t_spark), f)
-        return {
-            "match": "pending-oracle",
-            "rows": len(srows),
-            "spark_sec": round(t_spark, 1),
-        }
-    # phase == "oracle"
-    with open(pkl, "rb") as f:
-        scols, srows, t_spark = pickle.load(f)
-    deep = deep and key in DEEP_STAGED
-    okey = (
-        ("deep_staged_oracle_sec" if deep else "staged_oracle_sec")
-        if staged
-        else ("staged_plain_oracle_sec" if key in STAGED_PLAIN else "oracle_sec")
-    )
+        if phase == "spark":
+            os.makedirs(canon_dir, exist_ok=True)
+            with open(pkl, "wb") as f:
+                pickle.dump((scols, srows, t_spark), f)
+            return {
+                "match": "pending-oracle",
+                "rows": len(srows),
+                "spark_sec": round(t_spark, 1),
+            }
+    spark_rec = {"rows": len(srows), "spark_sec": round(t_spark, 1)}
     t0 = time.time()
-    try:
-        con = _connect(sf_dir)
-    except Exception as e:
-        return {
-            "match": False,
-            "rows": len(srows),
-            "spark_sec": round(t_spark, 1),
-            "oracle_error": f"{type(e).__name__}: {str(e)[:300]}",
-            okey: round(time.time() - t0, 1),
-        }
-    try:
-        if deep:
-            ocols, orows = canon_rows(*DEEP_STAGED[key](con))
-        elif staged:
-            ocols, orows = canon_rows(*staged_oracle(con, key))
-        else:
-            sql = (
-                STAGED_PLAIN[key]()
-                if key in STAGED_PLAIN
-                else registry.ORACLE[key]
-            )
-            res = con.execute(sql)
-            ocols, orows = canon_rows(
-                [d[0] for d in res.description], res.fetchall()
-            )
-    except Exception as e:
-        return {
-            "match": False,
-            "rows": len(srows),
-            "spark_sec": round(t_spark, 1),
-            "oracle_error": f"{type(e).__name__}: {str(e)[:300]}",
-            okey: round(time.time() - t0, 1),
-        }
-    finally:
-        con.close()
-    return {
-        "match": scols == ocols and srows == orows,
-        "rows": len(srows),
-        "spark_sec": round(t_spark, 1),
-        okey: round(time.time() - t0, 1),
-    }
-
-
-def run_key(spark, sf_dir: str, key: str, staged: bool, deep: bool = False) -> dict:
-    """Spark arm, then oracle arm, each timed and error-isolated: an
-    oracle that cannot finish at this SF (the x59-at-sf10 finding —
-    DuckDB OOM in the STAGED closure, one staging level past the
-    recursive-CTE OOM at sf1) must still leave the Spark side's
-    completion time and row count in the record, because 'Spark
-    finishes, the single-node oracle does not' IS the scale result."""
-    t0 = time.time()
-    try:
-        sdf = registry.QUERIES[key](spark, sf_dir)
-        scols, srows = canon_rows(
-            sdf.columns, [tuple(r) for r in sdf.collect()]
-        )
-    except Exception as e:
-        return {
-            "match": False,
-            "spark_error": f"{type(e).__name__}: {str(e)[:300]}",
-            "spark_sec": round(time.time() - t0, 1),
-        }
-    t_spark = time.time() - t0
-    t0 = time.time()
-    deep = deep and key in DEEP_STAGED
-    okey = (
-        ("deep_staged_oracle_sec" if deep else "staged_oracle_sec")
-        if staged
-        else ("staged_plain_oracle_sec" if key in STAGED_PLAIN else "oracle_sec")
-    )
     # _connect itself can fail under memory pressure (ADVICE r12: the
     # x59-at-sf10 record lost its spark_sec exactly this way) — treat a
     # connect failure like any other oracle-arm failure so the Spark
     # side's completion evidence survives.
     try:
         con = _connect(sf_dir)
+        try:
+            ocols, orows = canon_rows(*restated(con, kind, key))
+        finally:
+            con.close()
     except Exception as e:
         return {
             "match": False,
-            "rows": len(srows),
-            "spark_sec": round(t_spark, 1),
-            "oracle_error": f"{type(e).__name__}: {str(e)[:300]}",
-            okey: round(time.time() - t0, 1),
+            **spark_rec,
+            "oracle_error": _err(e),
+            ORACLE_SEC[kind]: round(time.time() - t0, 1),
         }
-    try:
-        if deep:
-            ocols, orows = canon_rows(*DEEP_STAGED[key](con))
-        elif staged:
-            ocols, orows = canon_rows(*staged_oracle(con, key))
-        else:
-            sql = (
-                STAGED_PLAIN[key]()
-                if key in STAGED_PLAIN
-                else registry.ORACLE[key]
-            )
-            res = con.execute(sql)
-            ocols, orows = canon_rows(
-                [d[0] for d in res.description], res.fetchall()
-            )
-    except Exception as e:
-        return {
-            "match": False,
-            "rows": len(srows),
-            "spark_sec": round(t_spark, 1),
-            "oracle_error": f"{type(e).__name__}: {str(e)[:300]}",
-            okey: round(time.time() - t0, 1),
-        }
-    finally:
-        con.close()
-    t_oracle = time.time() - t0
     return {
         "match": scols == ocols and srows == orows,
-        "rows": len(srows),
-        "spark_sec": round(t_spark, 1),
-        okey: round(t_oracle, 1),
+        **spark_rec,
+        ORACLE_SEC[kind]: round(time.time() - t0, 1),
     }
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/localdata/sf10")
-    ap.add_argument("--out", default="/root/repo/SF10_CLOSURE.json")
+    ap.add_argument("--sf-dir", default=os.path.join(ROOT, "localdata", "sf10"))
+    ap.add_argument("--out", default=os.path.join(ROOT, "SF10_CLOSURE.json"))
     ap.add_argument("--keys", default=",".join(CLOSURE_KEYS))
     ap.add_argument("--plain", default=",".join(PLAIN_KEYS))
     ap.add_argument(
         "--no-validate",
         action="store_true",
-        help="skip the sf0.01 staged==registered pin (already pinned)",
+        help="skip the sf0.01 staged==registered pin of the closure keys"
+        " (already pinned); staged-plain pins are cheap and always run",
     )
     ap.add_argument(
         "--deep",
@@ -680,31 +751,20 @@ def main() -> int:
     ap.add_argument("--canon-dir", default="/tmp/scale_canon")
     args = ap.parse_args()
 
-    closure = [k for k in args.keys.split(",") if k]
-    plain = [k for k in args.plain.split(",") if k]
-
-    os.makedirs("/tmp/duckdb_spill", exist_ok=True)
-    if closure and not args.no_validate:
-        if args.deep:
-            if not validate_deep_staged(closure):
-                print("deep-staged pin FAILED — not running the scale sweep")
-                return 1
-            shallow = [k for k in closure if k not in DEEP_STAGED]
-        else:
-            shallow = closure
-        if shallow and not validate_staged(shallow):
-            print("staged-oracle pin FAILED — not running the scale sweep")
-            return 1
-    # staged-plain pins are cheap and not covered by --no-validate's
-    # "already pinned" assumption — always run them
-    if not validate_staged_plain(plain):
-        print("staged-plain pin FAILED — not running the scale sweep")
+    arms = [
+        (k, oracle_kind(k, False, args.deep)) for k in args.plain.split(",") if k
+    ] + [(k, oracle_kind(k, True, args.deep)) for k in args.keys.split(",") if k]
+    pins = [
+        (kind, key)
+        for key, kind in arms
+        if kind == "staged-plain" or (kind != "registered" and not args.no_validate)
+    ]
+    if not all(good for good, _ in pin(PIN_SF, pins).values()):
+        print("restatement pin FAILED — not running the scale sweep")
         return 1
 
-    from fanstats_producer_spark.session import get_spark
-
     def _fresh_spark():
-        return get_spark("scale-closure-check")
+        return session("scale-closure-check")
 
     def _ensure_alive(spark):
         """A heap-OOM in one key's Spark arm shuts the whole
@@ -723,12 +783,13 @@ def main() -> int:
                 pass
             from pyspark.sql import SparkSession
 
-            # clear the cached session so get_spark builds a new JVM
+            # clear the cached session so session() builds a new JVM
             SparkSession._instantiatedSession = None
             SparkSession._activeSession = None
             return _fresh_spark()
 
-    spark = _fresh_spark()
+    # the oracle phase reads the Spark arm's pickles and needs no JVM
+    spark = _fresh_spark() if args.phase != "oracle" else None
     results: dict = {}
     if os.path.exists(args.out):
         with open(args.out) as f:
@@ -738,28 +799,16 @@ def main() -> int:
         with open(args.out, "w") as f:
             json.dump(results, f, indent=1)
 
-    for key, staged in [(k, False) for k in plain] + [
-        (k, True) for k in closure
-    ]:
+    for key, kind in arms:
         if key in results and results[key].get("match") is True:
             print(f"SKIP {key}: already green in {args.out}")
             continue
         try:
-            if args.phase != "both":
-                if args.phase == "spark":
-                    spark = _ensure_alive(spark)
-                results[key] = run_key_phased(
-                    spark,
-                    args.sf_dir,
-                    key,
-                    staged,
-                    args.deep,
-                    args.phase,
-                    args.canon_dir,
-                )
-            else:
+            if args.phase != "oracle":
                 spark = _ensure_alive(spark)
-                results[key] = run_key(spark, args.sf_dir, key, staged, args.deep)
+            results[key] = run_key(
+                spark, args.sf_dir, key, kind, args.phase, args.canon_dir
+            )
         except Exception as e:  # keep sweeping; record the failure
             results[key] = {"match": False, "error": f"{type(e).__name__}: {e}"}
         flush()

@@ -1,11 +1,15 @@
 """Per-key timing harness for optimization iteration: run the named
-keys (or a --top N slice of a pool record) through the bench's noop
+keys (or every registered key) through the bench's noop
 sink in ONE warm session, best-of-N, and print a compact table.
 
 Faster inner loop than a full bench.py run (no 260-key sweep, no
 sentinel battery) for before/after checks on a handful of keys; the
 committed BENCH_LOCAL pool record stays the round's evidence of
 record — this script is a screwdriver, not a gauge.
+
+The Spark side of BASELINE.md's tables: `--json` output is what
+`scripts/oracle_times.py --spark` prints the comparison against (e.g. a
+scaling-trend key list at a gen_sf.py SF).
 
 Usage:
     python scripts/time_keys.py x96_image_cluster_dedup x47_edit_verify
@@ -15,14 +19,22 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import atexit
 import json
+import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
-from fanstats_producer_spark.session import get_spark
+from fanstats_producer_spark.io import TABLES, load
+from fanstats_producer_spark.operators.layout import ensure_layout
+from fanstats_producer_spark.session import scratch_root, shuffle_partitions_for_bytes
+from scripts.check_oracle import TESTDATA, session
 
 registry.load_all()
 
@@ -31,7 +43,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("keys", nargs="*")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf-dir", default=os.path.join(TESTDATA, "sf0.1"))
     ap.add_argument("--json", default=None, help="also dump {key: best} JSON here")
     args = ap.parse_args()
 
@@ -41,22 +53,12 @@ def main() -> int:
         print(f"unknown keys: {unknown}", file=sys.stderr)
         return 2
 
-    import os
-
-    from fanstats_producer_spark.session import shuffle_partitions_for_bytes
-
     total_bytes = sum(
         os.path.getsize(os.path.join(args.sf_dir, f))
         for f in os.listdir(args.sf_dir)
         if f.endswith(".parquet")
     )
     # mirror bench.py's session exactly, or the numbers aren't comparable
-    import atexit
-    import shutil
-    import tempfile
-
-    from fanstats_producer_spark.session import scratch_root
-
     extra_conf: dict[str, str] = {}
     scr = scratch_root()
     if scr:
@@ -66,19 +68,15 @@ def main() -> int:
             "spark.local.dir": local,
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local}",
         }
-    spark = get_spark(
+    spark = session(
         "time-keys",
         shuffle_partitions=shuffle_partitions_for_bytes(total_bytes),
         extra_conf=extra_conf,
     )
     # same steady-state treatment as bench.py: warm codegen + the tables
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from fanstats_producer_spark.io import TABLES, load
-
     for t in TABLES:
         load(spark, args.sf_dir, t).write.format("noop").mode("overwrite").save()
-    from fanstats_producer_spark.operators.layout import ensure_layout
-
     ensure_layout(spark, args.sf_dir)
 
     out: dict[str, float] = {}

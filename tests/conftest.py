@@ -1,11 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.io import TABLES

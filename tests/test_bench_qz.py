@@ -8,6 +8,7 @@ stdout capture window."""
 
 import hashlib
 import json
+import os
 import random
 
 
@@ -85,7 +86,11 @@ def _run_compare(old_p, new_p, *extra):
     return subprocess.run(
         [
             sys.executable,
-            "/root/repo/scripts/bench_compare.py",
+            os.path.join(
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                "scripts",
+                "bench_compare.py",
+            ),
             str(old_p),
             str(new_p),
             *extra,

@@ -440,7 +440,7 @@ def test_ivfpq_recall_on_planted_neighbors(spark, tmp_path):
     ≈ 0.9+) per probe query, the composed IVF→ADC→rerank pipeline must
     find ≥90% of the exact top-5 at the registered defaults — and
     probing 8 of the 10 lists must recover the n_probe-routing loss
-    (full sweep: X57_SWEEP_r7.json / scripts/x57_sweep.py)."""
+    (full sweep: X57_SWEEP_r7.json / scripts/planted_sweep.py x57)."""
     from scripts.gen_sf import generate
     from fanstats_producer_spark.operators.similarity import ivfpq_recall
 
