@@ -28,6 +28,11 @@ from pyspark.sql import SparkSession
 #   dynamic allocation; we do NOT shrink it for local runs.
 
 
+#: The checkout root, put at the front of spark.executorEnv.PYTHONPATH:
+#: without it a Python worker finds the package only when the driver was
+#: started from the checkout, since workers inherit its working directory.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Free-space floor for auto-selecting the shared-memory scratch: a
 #: stream drain's state/checkpoint/landing payload at bench SFs is MBs,
 #: but refuse the tmpfs outright unless it has comfortable headroom so a
@@ -194,7 +199,10 @@ def get_spark(
         builder = builder.config("spark.local.dir", _local).config(
             "spark.driver.extraJavaOptions", f"-Djava.io.tmpdir={_local}"
         )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pythonpath = "spark.executorEnv.PYTHONPATH"
+    conf[pythonpath] = os.pathsep.join(filter(None, [_ROOT, conf.get(pythonpath)]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,8 +2,7 @@
 query on Spark and its DuckDB oracle side-by-side, compare row count,
 column names, and order-insensitive canonical values.
 
-Also what the other scripts share: `session` (a Spark session whose
-Python workers import this checkout), `connect` (a DuckDB view per
+Also what the other scripts share: `connect` (a DuckDB view per
 fixture table) and `canon_rows` (the order-insensitive row form).
 
 Usage: python scripts/check_oracle.py [sf_dir] [key ...]
@@ -31,15 +30,6 @@ registry.load_all()
 
 # the read-only sf0.001/sf0.01/sf0.1 fixtures (TESTDATA.md)
 TESTDATA = "/root/testdata"
-
-
-def session(name: str, **kw):
-    """get_spark with this checkout on the Python workers' path, so keys
-    that run Python UDFs work whatever the caller's working directory."""
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        filter(None, [ROOT, os.environ.get("PYTHONPATH")])
-    )
-    return get_spark(name, **kw)
 
 
 def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -76,7 +66,7 @@ def canon_rows(cols, rows):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(TESTDATA, "sf0.01")
     keys = sys.argv[2:] or sorted(registry.QUERIES)
-    spark = session("oracle-check")
+    spark = get_spark("oracle-check")
     con = connect(sf_dir)
 
     failures = 0
@@ -128,7 +118,7 @@ def audit_types() -> int:
     (the driver may compare schemas strictly; int32-vs-int64 drift is a
     silent correctness failure waiting to happen)."""
     sf_dir = os.path.join(TESTDATA, "sf0.01")
-    spark = session("type-audit")
+    spark = get_spark("type-audit")
     con = connect(sf_dir)
     dmap = {
         "BIGINT": "bigint", "INTEGER": "int", "DOUBLE": "double",

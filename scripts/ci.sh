@@ -45,6 +45,17 @@ for f in sf1_closure_check x57_sweep x84_sweep x103_sweep dump_key_plans \
     exit 1
   fi
 done
+# The producer has one crawl path (rest.paginate -> rest.fan_out ->
+# io.local_frame) and one sink (ndjson.write_partitioned).  The Python
+# DataSource crawl/upload fork and the Kafka arm, which no registered
+# key or run_pipeline ran, were deleted: a Python DataSource (the only
+# way to register a custom read/write format from Python) or a Kafka
+# scan in the package is a second producer path.
+if grep -rnF -e "pyspark.sql.datasource" -e 'format("kafka")' \
+  fanstats_producer_spark --include=*.py; then
+  echo "second producer path re-added in fanstats_producer_spark" >&2
+  exit 1
+fi
 python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names

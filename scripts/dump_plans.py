@@ -30,7 +30,8 @@ sys.path.insert(0, ROOT)
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.operators.layout import ensure_layout
 from fanstats_producer_spark.plans.checks import explain_str
-from scripts.check_oracle import TESTDATA, session
+from fanstats_producer_spark.session import get_spark
+from scripts.check_oracle import TESTDATA
 
 registry.load_all()
 
@@ -353,7 +354,7 @@ def main() -> int:
         return 2
     sf = args.sf_dir or os.path.join(TESTDATA, "sf0.1" if args.keys else "sf0.01")
 
-    spark = session("plan-dump")
+    spark = get_spark("plan-dump")
     ensure_layout(spark, sf)
     plans = {
         key: explain_str(registry.QUERIES[key](spark, sf), "formatted")

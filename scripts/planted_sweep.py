@@ -43,7 +43,8 @@ sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.operators import similarity
-from scripts.check_oracle import TESTDATA, connect, fetch, session
+from fanstats_producer_spark.session import get_spark
+from scripts.check_oracle import TESTDATA, connect, fetch
 from scripts.gen_sf import generate
 
 registry.load_all()
@@ -189,7 +190,7 @@ def main() -> int:
     args = ap.parse_args()
     sweep = SWEEPS[args.key]
 
-    spark = session(f"{args.key}-sweep")
+    spark = get_spark(f"{args.key}-sweep")
     dirs = {
         "planted": os.path.join(ROOT, "localdata", sweep.fixture.format(sf=args.sf)),
         "base": os.path.join(TESTDATA, f"sf{args.sf:g}"),

@@ -53,12 +53,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry  # noqa: E402
+from fanstats_producer_spark.session import get_spark  # noqa: E402
 from scripts.check_oracle import (  # noqa: E402
     TESTDATA,
     canon_rows,
     connect,
     fetch,
-    session,
 )
 
 registry.load_all()
@@ -764,7 +764,7 @@ def main() -> int:
         return 1
 
     def _fresh_spark():
-        return session("scale-closure-check")
+        return get_spark("scale-closure-check")
 
     def _ensure_alive(spark):
         """A heap-OOM in one key's Spark arm shuts the whole
@@ -783,7 +783,7 @@ def main() -> int:
                 pass
             from pyspark.sql import SparkSession
 
-            # clear the cached session so session() builds a new JVM
+            # clear the cached session so get_spark builds a new JVM
             SparkSession._instantiatedSession = None
             SparkSession._activeSession = None
             return _fresh_spark()

@@ -33,8 +33,12 @@ sys.path.insert(0, ROOT)
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.io import TABLES, load
 from fanstats_producer_spark.operators.layout import ensure_layout
-from fanstats_producer_spark.session import scratch_root, shuffle_partitions_for_bytes
-from scripts.check_oracle import TESTDATA, session
+from fanstats_producer_spark.session import (
+    get_spark,
+    scratch_root,
+    shuffle_partitions_for_bytes,
+)
+from scripts.check_oracle import TESTDATA
 
 registry.load_all()
 
@@ -68,7 +72,7 @@ def main() -> int:
             "spark.local.dir": local,
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local}",
         }
-    spark = session(
+    spark = get_spark(
         "time-keys",
         shuffle_partitions=shuffle_partitions_for_bytes(total_bytes),
         extra_conf=extra_conf,

@@ -182,25 +182,12 @@ def _scan_count(spark, factory) -> int:
     return PaginatedSource(spark, factory()).scan(["NBA"], "t0").count()
 
 
-def _reader_count(spark, factory) -> int:
-    from fanstats_producer_spark.sources import rest_datasource
-
-    rest_datasource.register(spark)
-    return (
-        spark.read.format("fanstats_rest")
-        .option("topics", "NBA")
-        .option("fetcher", f"tests.test_ingest:{factory.__name__}")
-        .load()
-        .count()
-    )
-
-
-@pytest.mark.parametrize("count", [_scan_count, _reader_count], ids=["scan", "reader"])
+@pytest.mark.parametrize("count", [_scan_count], ids=["scan"])
 @pytest.mark.parametrize(
     "factory, most", [(_repeating_cursor, 20), (_empty_pages, 0)], ids=["repeat", "empty"]
 )
 def test_pager_liveness_guards(spark, count, factory, most):
-    """Both Twitter crawls stop on a repeated cursor and on a page with
+    """The Twitter crawl stops on a repeated cursor and on a page with
     no rows, instead of paging to the cap or forever."""
     assert count(spark, factory) <= most
 
@@ -802,86 +789,3 @@ def test_corrupt_records_tolerated(spark, tmp_path):
     assert df.filter(F.col("_corrupt_record").isNotNull()).count() == 1
     assert df.filter(F.col("id").isNotNull()).count() == 2
     df.unpersist()
-
-
-def test_kafka_record_decode(spark):
-    """decode_kafka_records: Kafka wire rows decode through TWEET_SCHEMA;
-    corrupt payloads are dropped; lineage columns survive."""
-    import datetime
-
-    from fanstats_producer_spark.sources.kafka import decode_kafka_records
-
-    tweet = json.dumps(
-        {
-            "id": "1",
-            "text": "lakers win #nba",
-            "created_at": "2024-01-01T00:00:00.000Z",
-            "lang": "en",
-            "public_metrics": {
-                "retweet_count": 2,
-                "reply_count": 0,
-                "like_count": 5,
-                "quote_count": 1,
-            },
-        }
-    )
-    ts = datetime.datetime(2024, 1, 1, 0, 0, 1)
-    wire = spark.createDataFrame(
-        [
-            (b"k1", tweet.encode(), "posts", 0, 17, ts),
-            (b"k2", b"{not json", "posts", 1, 3, ts),
-        ],
-        "key binary, value binary, topic string, partition int, offset long, timestamp timestamp",
-    )
-    got = decode_kafka_records(wire).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r.id, r.lang, r.topic, r.kafka_partition, r.kafka_offset) == (
-        "1", "en", "posts", 0, 17,
-    )
-    assert r.public_metrics.like_count == 5
-
-    kept = decode_kafka_records(wire, drop_undecodable=False)
-    assert kept.count() == 2  # dead-letter path keeps the corrupt row
-
-
-def test_kafka_decode_does_not_mutate_shared_schema(spark):
-    """Calling the decoder twice must not grow TWEET_SCHEMA (StructType.add
-    mutates in place; the decoder must copy)."""
-    from fanstats_producer_spark.sources.kafka import decode_kafka_records
-    from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
-
-    n_before = len(TWEET_SCHEMA.fields)
-    wire = spark.createDataFrame(
-        [(b"k", b"{}", "t", 0, 0, None)],
-        "key binary, value binary, topic string, partition int, offset long, timestamp timestamp",
-    )
-    decode_kafka_records(wire).collect()
-    decode_kafka_records(wire).collect()
-    assert len(TWEET_SCHEMA.fields) == n_before
-    assert "_corrupt_record" not in [f.name for f in TWEET_SCHEMA.fields]
-
-
-def test_kafka_dead_letter_split(spark):
-    """split_decoded routes corrupt payloads to a quarantine frame with
-    lineage while good rows decode normally."""
-    import datetime
-
-    from fanstats_producer_spark.sources.kafka import split_decoded
-
-    ts = datetime.datetime(2024, 1, 1)
-    wire = spark.createDataFrame(
-        [
-            (b"k1", b'{"id": "7", "text": "ok", "lang": "en"}', "posts", 0, 1, ts),
-            (b"k2", b"<binary garbage>", "posts", 2, 9, ts),
-        ],
-        "key binary, value binary, topic string, partition int, offset long, timestamp timestamp",
-    )
-    good, dead = split_decoded(wire)
-    g = good.collect()
-    assert [r.id for r in g] == ["7"]
-    assert "_corrupt_record" not in good.columns
-    d = dead.collect()
-    assert len(d) == 1
-    assert d[0].raw_payload == "<binary garbage>"
-    assert (d[0].kafka_partition, d[0].kafka_offset) == (2, 9)

@@ -61,3 +61,53 @@ def test_every_query_has_an_oracle():
     path is unused (were a non-SQL-expressible key ever added, give it
     a dedicated execution test rather than a parametrized skip)."""
     assert set(registry.QUERIES) == set(registry.ORACLE)
+
+
+#: every module that materializes through io.disk_checkpoint, and the keys
+#: whose plans reach that call
+_CHECKPOINT_MODULES = (
+    "dedup",
+    "graph",
+    "multimodal",
+    "product_analytics",
+    "scd",
+    "similarity",
+)
+_CHECKPOINT_KEYS = (
+    "x61_semdedup",
+    "q65_pagerank",
+    "q59_basket_pairs",
+    "q80_merge_upsert",
+    "x82_sparse_text_topk",
+    "x88_image_neardup",
+    "x96_image_cluster_dedup",
+    "x103_jl_ann_recall",
+)
+
+
+def test_reliable_checkpoint_seam_keeps_results(spark, tmp_path, monkeypatch):
+    """`io.disk_checkpoint` is the seam a deployment swaps for a reliable
+    `df.checkpoint()` when it needs lineage-free intermediates to survive
+    executor loss: with every caller rebound to that arm, each key that
+    reaches the call returns the rows it returns unswapped."""
+    import importlib
+
+    def rows(key):
+        sdf = registry.QUERIES[key](spark, SF_DIR)
+        return _canon(sdf.columns, [tuple(r) for r in sdf.collect()])
+
+    want = {key: rows(key) for key in _CHECKPOINT_KEYS}
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    calls = []
+
+    def reliable(df, eager=True):
+        calls.append(df)
+        return df.checkpoint(eager=True)
+
+    for name in _CHECKPOINT_MODULES:
+        mod = importlib.import_module(f"fanstats_producer_spark.operators.{name}")
+        monkeypatch.setattr(mod, "disk_checkpoint", reliable)
+    for key in _CHECKPOINT_KEYS:
+        del calls[:]
+        assert rows(key) == want[key], key
+        assert calls, f"{key} did not reach disk_checkpoint"

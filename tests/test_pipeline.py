@@ -1,6 +1,4 @@
-"""End-to-end producer-pipeline tests (SURVEY.md §3.1 parity) and the
-Python DataSource REST connector.
-"""
+"""End-to-end producer-pipeline tests (SURVEY.md §3.1 parity)."""
 
 from __future__ import annotations
 
@@ -12,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from fanstats_producer_spark.pipeline import demo_fetcher, run_pipeline
-from fanstats_producer_spark.sources import rest_datasource
 
 
 @pytest.fixture()
@@ -57,63 +54,6 @@ def test_run_pipeline_unsupported_platform(spark, tmp_path, configs):
     with pytest.raises(ValueError, match="platform not supported"):
         run_pipeline(spark, data_file, str(bad), str(tmp_path / "x"),
                      fetch_page=demo_fetcher())
-
-
-def test_rest_datasource_parallel_topics(spark):
-    """The DataSourceV2-style connector: one input partition per topic,
-    cap + clamp as reader options, pinned schema."""
-    rest_datasource.register(spark)
-    df = (
-        spark.read.format("fanstats_rest")
-        .option("topics", "NBA,NFL,MLB")
-        .option("max_results", "60")
-        .load()
-    )
-    assert df.schema == rest_datasource.TWEET_SCHEMA
-    assert df.count() == 180  # 60-cap per topic x 3 topics
-    assert df.rdd.getNumPartitions() == 3  # one partition per topic
-    texts = df.select("text").limit(5).collect()
-    assert all("game update" in r.text for r in texts)
-
-
-def test_rest_datasource_custom_fetcher_via_import_spec(spark):
-    """A custom fetcher must work although the reader is constructed in
-    a plan-time Python worker and run on executor workers — processes
-    that import rest_datasource fresh.  The cross-process path is an
-    importable 'module:attr' spec, resolved in __init__ and pickled
-    with the reader."""
-    rest_datasource.register(spark)
-    df = (
-        spark.read.format("fanstats_rest")
-        .option("topics", "NBA,NFL")
-        .option("max_results", "10")
-        .option("fetcher", "fanstats_producer_spark.pipeline:demo_fetcher")
-        .load()
-    )
-    rows = df.select("id", "text").collect()
-    assert len(rows) == 20  # 10-cap per topic × 2 topics
-    assert all("game update" in r.text for r in rows)
-
-    # A bare name that is not an import spec fails loudly at plan time.
-    with pytest.raises(Exception, match="unknown fetcher|KeyError"):
-        (
-            spark.read.format("fanstats_rest")
-            .option("topics", "NBA")
-            .option("fetcher", "nonexistent")
-            .load()
-            .count()
-        )
-
-
-def test_rest_datasource_cap_mid_page(spark):
-    rest_datasource.register(spark)
-    df = (
-        spark.read.format("fanstats_rest")
-        .option("topics", "NBA")
-        .option("max_results", "30")  # demo pages are 25 rows → cap mid-page 2
-        .load()
-    )
-    assert df.count() == 30
 
 
 def test_landed_data_supports_athena_style_analytics(spark, configs, tmp_path):
@@ -181,42 +121,6 @@ def test_pipeline_second_platform_collector(spark, configs, tmp_path):
     assert lake.filter(F.col("upvotes").isNotNull()).count() == 2
 
 
-def test_rest_stream_source_resumes_from_checkpoint(spark, tmp_path):
-    """Streaming REST source: micro-batches advance the per-topic cursor,
-    the offset persists in the checkpoint, and a restarted query resumes
-    without re-reading pages (exactly-once crawl)."""
-    rest_datasource.register(spark)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (
-            spark.readStream.format("fanstats_rest")
-            .option("topics", "NBA")
-            .option("pages_per_batch", "2")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", out)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # demo fetcher: 3 pages x 25 rows; 2 pages per batch → each run picks
-    # up exactly where the checkpointed cursor left off
-    run_once()
-    assert spark.read.parquet(out).count() == 50  # pages 0-1
-    run_once()
-    after2 = spark.read.parquet(out)
-    assert after2.count() == 75  # page 2; cursor now exhausted
-    assert after2.select("id").distinct().count() == 75  # no page re-read
-    run_once()  # restart on a drained cursor: nothing re-read
-    assert spark.read.parquet(out).count() == 75
-
-
 def test_scd2_merge_closes_and_opens(spark):
     """Matched keys emit a closed old row + an open new row; unmatched
     keys pass through current; point-in-time lookup works."""
@@ -247,78 +151,6 @@ def test_scd2_merge_closes_and_opens(spark):
         & (F.col("valid_to").isNull() | (F.lit("1993-01-01").cast("date") < F.col("valid_to")))
     )
     assert {(r.k, r.segment) for r in asof.collect()} == {(1, "AUTO"), (2, "BIKE")}
-
-
-def test_upload_sink_commit_protocol(spark, tmp_path):
-    """The custom sink stages per-task output and only promotes it on job
-    commit: committed files + _SUCCESS manifest appear, empty partitions
-    upload nothing, the staging area drains."""
-    import json as _json
-    import os
-
-    from fanstats_producer_spark.sources.rest_datasource import RestDataSource
-
-    spark.dataSource.register(RestDataSource)
-    dest = tmp_path / "up"
-    dest.mkdir()
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id long, v string"
-    ).repartition(8)  # most partitions empty -> empty-result guard per task
-    df.write.format("fanstats_rest").mode("append").option("dest", str(dest)).save()
-
-    manifest = _json.loads((dest / "_SUCCESS").read_text())
-    parts = sorted(p for p in os.listdir(dest) if p.startswith("part-"))
-    assert manifest["rows"] == 3
-    assert manifest["files"] == len(parts) <= 3  # empties not uploaded
-    got = sorted(
-        _json.loads(line)["id"]
-        for p in parts
-        for line in (dest / p).read_text().splitlines()
-    )
-    assert got == [1, 2, 3]
-    assert os.listdir(dest / "_staging") == []  # staged files all promoted
-
-    # overwrite mode replaces previously committed objects
-    df2 = spark.createDataFrame([(9, "z")], "id long, v string")
-    df2.write.format("fanstats_rest").mode("overwrite").option("dest", str(dest)).save()
-    manifest2 = _json.loads((dest / "_SUCCESS").read_text())
-    assert manifest2["rows"] == 1
-    rows = [
-        _json.loads(line)
-        for p in os.listdir(dest)
-        if p.startswith("part-")
-        for line in (dest / p).read_text().splitlines()
-    ]
-    assert [r["id"] for r in rows] == [9]
-
-
-def test_upload_sink_arrow_arm(spark, tmp_path):
-    """Arrow-batch writer stages parquet per task under the same commit
-    protocol; committed files read back as the original rows."""
-    import json as _json
-    import os
-
-    from fanstats_producer_spark.sources.rest_datasource import RestDataSource
-
-    spark.dataSource.register(RestDataSource)
-    dest = tmp_path / "up"
-    dest.mkdir()
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(100)], "id long, v string"
-    ).repartition(4)
-    (
-        df.write.format("fanstats_rest")
-        .mode("append")
-        .option("dest", str(dest))
-        .option("format", "arrow-parquet")
-        .save()
-    )
-    manifest = _json.loads((dest / "_SUCCESS").read_text())
-    assert manifest["rows"] == 100
-    back = spark.read.parquet(str(dest))  # committed part-*.parquet files
-    assert back.count() == 100
-    assert sorted(r.id for r in back.collect()) == list(range(100))
-    assert os.listdir(dest / "_staging") == []
 
 
 def test_observed_metrics_batch(spark):

@@ -1,5 +1,7 @@
-"""The scripts/ tools: each one finds its checkout from its own file, and
-the closure harness's restatements equal the registered oracles."""
+"""The scripts/ tools: each one finds its checkout from its own file, a
+`get_spark` session's Python workers import the package from any working
+directory, and the closure harness's restatements equal the registered
+oracles."""
 
 from __future__ import annotations
 
@@ -41,6 +43,35 @@ def test_script_imports_its_own_checkout(script, tmp_path):
     pkg = os.path.realpath(r.stdout.splitlines()[-1])
     root = os.path.realpath(ROOT)
     assert os.path.commonpath([pkg, root]) == root, pkg
+
+
+# A driver that found the package through its own sys.path runs a pandas
+# UDF defined in the package; its workers have only what get_spark gives.
+_UDF_PROBE = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from fanstats_producer_spark.operators.dedup import simhash_udf
+from fanstats_producer_spark.session import get_spark
+spark = get_spark("foreign-cwd")
+print(spark.sql("SELECT 'a b c' AS t").select(simhash_udf("t")).first()[0])
+"""
+
+
+def test_workers_import_package_from_foreign_cwd(tmp_path):
+    from fanstats_producer_spark.operators.dedup import _simhash64
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _UDF_PROBE, ROOT],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert int(r.stdout.splitlines()[-1]) == _simhash64(["a", "b", "c"])
 
 
 def test_closure_restatements_equal_registered_oracles():

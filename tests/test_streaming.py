@@ -524,90 +524,6 @@ def test_streaming_windowed_distinct_users(spark, landing):
     assert by_win == {"2024-01-01 00:00:00": 2, "2024-01-02 00:00:00": 1}
 
 
-def test_stream_upload_sink_per_batch_commit(spark, landing, tmp_path):
-    """Streaming committing sink: each micro-batch promotes its staged
-    files under batch-stamped names with a per-batch manifest; a second
-    batch appends without disturbing the first."""
-    import json as _json
-    import os
-
-    from fanstats_producer_spark.sources.rest_datasource import RestDataSource
-
-    spark.dataSource.register(RestDataSource)
-    dest = tmp_path / "up"
-    dest.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_once():
-        q = (
-            jobs.read_event_stream(spark, str(landing))
-            .select("event_id", "event_type")
-            .writeStream.format("fanstats_rest")
-            .option("dest", str(dest))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    _write_batch(landing, "b1.json", [_event(1, "2024-01-01T10:00:00Z")])
-    run_once()
-    _write_batch(landing, "b2.json", [_event(2, "2024-01-01T11:00:00Z")])
-    run_once()
-
-    manifests = sorted(p for p in os.listdir(dest) if p.endswith(".manifest"))
-    assert len(manifests) == 2
-    assert sum(_json.loads((dest / m).read_text())["rows"] for m in manifests) == 2
-    ids = sorted(
-        _json.loads(line)["event_id"]
-        for p in os.listdir(dest)
-        if p.startswith("batch-")
-        for line in (dest / p).read_text().splitlines()
-    )
-    assert ids == [1, 2]
-    assert os.listdir(dest / "_staging") == []
-
-
-def test_stream_upload_sink_clears_stale_replay_parts(spark, landing, tmp_path):
-    """A replayed micro-batch that produces fewer parts than a previously
-    half-committed attempt must not leave stale higher-numbered parts
-    behind — commit clears every batch-<id> file before promoting."""
-    import json as _json
-    import os
-
-    from fanstats_producer_spark.sources.rest_datasource import RestDataSource
-
-    spark.dataSource.register(RestDataSource)
-    dest = tmp_path / "up"
-    dest.mkdir()
-    # Plant leftovers of a half-committed batch 0: two parts + manifest.
-    (dest / "batch-00000-part-00000.json").write_text('{"event_id": 900}\n')
-    (dest / "batch-00000-part-00099.json").write_text('{"event_id": 901}\n')
-    (dest / "_batch-00000.manifest").write_text('{"batch": 0, "rows": 2, "files": 2}')
-
-    _write_batch(landing, "b1.json", [_event(1, "2024-01-01T10:00:00Z")])
-    q = (
-        jobs.read_event_stream(spark, str(landing))
-        .select("event_id", "event_type")
-        .writeStream.format("fanstats_rest")
-        .option("dest", str(dest))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    parts = sorted(p for p in os.listdir(dest) if p.startswith("batch-00000"))
-    ids = [
-        _json.loads(line)["event_id"]
-        for p in parts
-        for line in (dest / p).read_text().splitlines()
-    ]
-    assert ids == [1]  # stale 900/901 gone, only the replayed batch's rows
-    manifest = _json.loads((dest / "_batch-00000.manifest").read_text())
-    assert manifest["rows"] == 1 and manifest["files"] == len(parts)
-
-
 def test_streaming_windowed_trending(spark, landing):
     """s14 stream arm: per-window top items rank correctly on a real
     file stream."""
