@@ -89,21 +89,19 @@ def x17_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUDGET = 256
 
 
-def pack_documents(
-    docs: DataFrame, budget: int = _BUDGET, shard_col: str = "lang"
-) -> DataFrame:
+def pack_documents(docs: DataFrame, budget: int = _BUDGET) -> DataFrame:
     """Assign docs to ~budget-token packs: deterministic doc order per
-    shard, pack = floor(tokens-before-this-doc / budget)."""
+    `lang` shard, pack = floor(tokens-before-this-doc / budget)."""
     n_tok = F.size(F.split("text", " "))
     w = (
-        Window.partitionBy(shard_col)
+        Window.partitionBy("lang")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     before = F.coalesce(F.sum(n_tok).over(w), F.lit(0))
     return docs.select(
         "doc_id",
-        F.col(shard_col).alias("shard"),
+        F.col("lang").alias("shard"),
         n_tok.cast("long").alias("n_tokens"),
         F.floor(before / budget).cast("long").alias("pack_id"),
     )
@@ -143,9 +141,10 @@ _CDC_DIV = 16       # boundary when hash % DIV == 0 → avg chunk ≈ DIV tokens
 _CDC_MOD = 1_000_000_007
 
 
-def cdc_chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, chunk_no, n_tokens, chunk): content-defined segments."""
-    toks = F.split(F.col(text_col), " ")
+def cdc_chunks(docs: DataFrame) -> DataFrame:
+    """(doc_id, chunk_no, n_tokens, chunk): content-defined segments of
+    `text`."""
+    toks = F.split(F.col("text"), " ")
     # Materialize toks/vals/n as REAL columns in their own projection
     # before the boundary probe references them.  Inlining `vals` into
     # the filter lambda would re-evaluate the whole token-hash transform

@@ -96,13 +96,13 @@ def sql_qint(expr: str, scale: int = 6) -> str:
     return f"CAST(floor(CAST(({expr}) AS DOUBLE) * 1e{scale} + 0.5) AS BIGINT)"
 
 
-def qavg_pos(col: Column | str, scale: int = 6) -> Column:
+def qavg_pos(col: Column | str) -> Column:
     """Integer-quantized exact average over :func:`dsum_pos` (nonnegative
     fast path)."""
     c = F.col(col) if isinstance(col, str) else col
-    return qint(dsum_pos(c) / F.count(c), scale)
+    return qint(dsum_pos(c) / F.count(c))
 
 
-def sql_qavg_pos(expr: str, scale: int = 6) -> str:
+def sql_qavg_pos(expr: str) -> str:
     """DuckDB mirror of :func:`qavg_pos`."""
-    return sql_qint(f"{sql_dsum_pos(expr)} / COUNT({expr})", scale)
+    return sql_qint(f"{sql_dsum_pos(expr)} / COUNT({expr})")

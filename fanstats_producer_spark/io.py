@@ -59,23 +59,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None and cached[0] is spark:
         return cached[1]
     if name == "events":
+        from pyspark.sql.types import LongType
+
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        # Fixture generators have shipped ts as either TIMESTAMP(NANOS)
-        # (read as long via nanosAsLong) or TIMESTAMP(MICROS) without UTC
-        # adjustment (TIMESTAMP_NTZ); normalize both to session-TZ (UTC)
-        # microsecond TIMESTAMP so downstream epoch math (cast to long,
-        # unix_timestamp, window()) behaves identically.  Integer `div`,
-        # not `/`: epoch-nanos overflow double's exact range.
-        from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
+        if isinstance(df.schema["ts"].dataType, LongType):
             # Only TIMESTAMP(NANOS) reads as long under nanosAsLong; an
             # unannotated INT64 epoch-micros column would too, and the
-            # div-1000 below would silently shift it 1000x.  Check one
+            # div-1000 would silently shift it 1000x.  Check one
             # sample's magnitude (2001..2262 in nanos is ~1e18..9.2e18)
-            # before trusting the nanos interpretation.
+            # before trusting the nanos interpretation.  A stream cannot
+            # run this action, so stream readers call load first.
             sample = df.select("ts").first()
             if sample is not None and sample[0] is not None and not (
                 1_000_000_000_000_000_000 <= abs(sample[0])
@@ -84,17 +78,34 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                     f"events.ts read as INT64 with magnitude {sample[0]}: "
                     "not epoch-nanos; refusing to guess the unit"
                 )
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif isinstance(ts_type, TimestampNTZType):
-            # session TZ is pinned to UTC above, so this is a pure
-            # type-tag change, bit-identical values
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        elif not isinstance(ts_type, TimestampType):
-            raise ValueError(f"events.ts has unrecognized type {ts_type}")
+        df = normalize_events_ts(df)
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _LOAD_CACHE[key] = (spark, df)
     return df
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Events `ts` as session-TZ (UTC) microsecond TIMESTAMP, for a
+    batch or a stream frame alike.  Fixture generators have shipped ts
+    as TIMESTAMP(NANOS) (read as long under nanosAsLong),
+    TIMESTAMP(MICROS) without UTC adjustment (TIMESTAMP_NTZ) or UTC
+    TIMESTAMP; downstream epoch math (cast to long, unix_timestamp,
+    window()) needs one type.  Integer `div`, not `/` (epoch-nanos
+    overflow double's exact range) and not cast('timestamp') (which
+    reads a long as epoch SECONDS)."""
+    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if isinstance(ts_type, TimestampNTZType):
+        # load pins the session TZ to UTC, so this is a pure type-tag
+        # change, bit-identical values
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if isinstance(ts_type, TimestampType):
+        return df
+    raise ValueError(f"events.ts has unrecognized type {ts_type}")
 
 
 def local_frame(
@@ -146,7 +157,7 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df
 
 
-def disk_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+def disk_checkpoint(df: DataFrame) -> DataFrame:
     """Materialized reuse point for a CORPUS/GRAPH-SCALE frame feeding
     multiple consumers (r14, VERDICT r13 item 5; guide §5).
 
@@ -161,8 +172,8 @@ def disk_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     that is result reuse the bench contract bans (every key must compute
     from the parquet inputs), and within one key a lazy persist lets two
     concurrent stages race to double-compute the subtree.  localCheckpoint
-    keeps the materialization private to this plan and eager=True makes
-    it exactly-once.
+    keeps the materialization private to this plan and the eager
+    checkpoint makes it exactly-once.
 
     Caveat (unchanged from localCheckpoint): no lineage — losing an
     executor at cluster scale kills the query instead of recomputing.
@@ -172,7 +183,7 @@ def disk_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     localCheckpoint default where memory residency is the point."""
     from pyspark.storagelevel import StorageLevel
 
-    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -67,9 +67,9 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_assignments(emb: DataFrame, k: int = _K) -> DataFrame:
-    """Seed → refit once (exact decimal means) → reassign."""
-    seeds = emb.orderBy("vec_id").limit(k).select(
+def kmeans_assignments(emb: DataFrame) -> DataFrame:
+    """Seed (_K centroids) → refit once (exact decimal means) → reassign."""
+    seeds = emb.orderBy("vec_id").limit(_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cent")
     )
     asg1 = _assign(emb, seeds).select("vec_id", "cid")

@@ -32,11 +32,11 @@ from fanstats_producer_spark.io import load
 from fanstats_producer_spark.registry import query
 
 
-def language_quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_quality_gate(docs: DataFrame) -> DataFrame:
     """The x08 language filter + x09 quality gate as pure row filters
-    (stateless → usable verbatim on a stream): stopword density says
-    'en', 10 ≤ tokens ≤ 1000, type-token-ratio > 0.15."""
-    toks = F.split(text_col, " ")
+    over `text` (stateless → usable verbatim on a stream): stopword
+    density says 'en', 10 ≤ tokens ≤ 1000, type-token-ratio > 0.15."""
+    toks = F.split("text", " ")
     n_tokens = F.size(toks)
     ttr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
     stop_ratio = (
@@ -52,7 +52,6 @@ def prepare_corpus(
     chunk_size: int = _CHUNK,
     stride: int = _STRIDE,
     budget: int = _BUDGET,
-    shard_col: str = "lang",
 ) -> DataFrame:
     """Raw documents → deduped, filtered, chunked, pack-assigned rows.
 
@@ -61,8 +60,8 @@ def prepare_corpus(
     2. language filter: stopword-density heuristic says 'en';
     3. quality gate: 10 ≤ tokens ≤ 1000 and type-token-ratio > 0.15;
     4. chunk: overlapping token windows (tail kept);
-    5. pack: floor(running-tokens-before / budget) per shard, over the
-       deterministic (doc_id, chunk_idx) order.
+    5. pack: floor(running-tokens-before / budget) per `lang` shard,
+       over the deterministic (doc_id, chunk_idx) order.
     """
     dedup_w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
     clean = language_quality_gate(
@@ -70,10 +69,10 @@ def prepare_corpus(
     )
 
     chunks = chunk_documents(
-        clean, chunk_size=chunk_size, stride=stride, passthrough=(shard_col,)
+        clean, chunk_size=chunk_size, stride=stride, passthrough=("lang",)
     )
     pack_w = (
-        Window.partitionBy(shard_col)
+        Window.partitionBy("lang")
         .orderBy("doc_id", "chunk_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -81,7 +80,7 @@ def prepare_corpus(
     return chunks.select(
         "doc_id",
         "chunk_idx",
-        F.col(shard_col).alias("shard"),
+        F.col("lang").alias("shard"),
         "chunk_text",
         "n_chunk_tokens",
         F.floor(before / budget).cast("long").alias("pack_id"),

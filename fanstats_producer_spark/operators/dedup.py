@@ -57,8 +57,8 @@ def x03_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- shared: token shingles -----------------------------------------------------
-def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
-    """Add a `shingles` column: distinct k-token shingles of the text.
+def with_shingles(df: DataFrame, k: int = 3) -> DataFrame:
+    """Add a `shingles` column: distinct k-token shingles of `text`.
 
     Built as zip_with over k shifted slices of the token array — stays in
     Tungsten's vectorized array kernels, ~7x faster than the naive
@@ -74,7 +74,7 @@ def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFram
     unlocks N-way compute on the expensive explode (no-op once inputs
     arrive in many splits).
     """
-    base = spread(df).withColumn("__toks", F.split(F.col(text_col), " "))
+    base = spread(df).withColumn("__toks", F.split(F.col("text"), " "))
     toks = F.col("__toks")
     n = F.size(toks)
     acc = toks
@@ -90,12 +90,7 @@ def with_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFram
 _JACCARD_HOT_DF = 1024
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    k: int = 3,
-) -> DataFrame:
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 3) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs via inverted-index join.
 
     Plan shape: ONE shuffle (groupBy shingle), then candidate pairs are
@@ -110,7 +105,7 @@ def jaccard_pairs(
     - each posting carries its doc's shingle-count, so the union sizes
       are available at pair-expansion time and no size-join is needed.
     """
-    sh = with_shingles(docs, k=k).select(F.col(id_col).alias("doc_id"), "shingles")
+    sh = with_shingles(docs, k=k).select("doc_id", "shingles")
     postings = sh.select(
         "doc_id",
         F.size("shingles").alias("n_sh"),
@@ -221,12 +216,12 @@ def x04_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- x04b: MinHash + LSH (T4, approximate scale arm; rows-only check) ------------
+#: OR-amplified MinHashLSH tables (see minhash_lsh_pairs).
+_X04B_TABLES = 4
+
+
 def minhash_lsh_pairs(
-    spark: SparkSession,
-    docs: DataFrame,
-    jaccard_distance: float = 0.5,
-    num_hash_tables: int = 4,
-    k: int = 3,
+    spark: SparkSession, docs: DataFrame, jaccard_distance: float = 0.5
 ) -> tuple[DataFrame, DataFrame]:
     """Approximate near-dup pairs via MinHashLSH banding.
 
@@ -236,18 +231,19 @@ def minhash_lsh_pairs(
     contract silently dropped the handle on any transformation).
 
     shingle → sparse count vector (HashingTF) → min-hash signatures →
-    bucket join (approxSimilarityJoin).  Sub-quadratic: only candidate
+    bucket join (approxSimilarityJoin), over the same _X04_K-word
+    shingles as the exact x04 arm.  Sub-quadratic: only candidate
     pairs sharing an LSH bucket are scored.  Seeded ⇒ deterministic.
-    4 OR-amplified tables measure full recall on the fixture corpus at
-    the 0.4-distance test bar at BOTH sf0.001 (tests/test_xlayer.py)
-    and sf0.1 (measured: recall 1.0 even at 3 tables — fixture
-    near-dups are strong), and cut the fit+join ~35% versus 6; this
-    MLlib arm is the COMPARISON baseline — x04d's native banding is
-    the production path (SQL-reproducible signatures).
+    _X04B_TABLES = 4 OR-amplified tables measure full recall on the
+    fixture corpus at the 0.4-distance test bar at BOTH sf0.001
+    (tests/test_xlayer.py) and sf0.1 (measured: recall 1.0 even at 3
+    tables — fixture near-dups are strong), and cut the fit+join ~35%
+    versus 6; this MLlib arm is the COMPARISON baseline — x04d's native
+    banding is the production path (SQL-reproducible signatures).
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = with_shingles(docs, k=k).select("doc_id", "shingles").filter(
+    sh = with_shingles(docs, k=_X04_K).select("doc_id", "shingles").filter(
         F.size("shingles") > 0
     )
     tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18)
@@ -257,7 +253,7 @@ def minhash_lsh_pairs(
     # available for recompute on executor loss.)
     feats = tf.transform(sh).persist()
     lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
+        inputCol="features", outputCol="hashes", numHashTables=_X04B_TABLES, seed=42
     )
     model = lsh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, jaccard_distance, distCol="dist")
@@ -312,7 +308,7 @@ def x04b_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sub = docs.join(F.broadcast(ids), "doc_id", "left_semi")
-    sh = with_shingles(sub, k=3).select("doc_id", "shingles")
+    sh = with_shingles(sub, k=_X04_K).select("doc_id", "shingles")
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     joined = b.join(
@@ -414,6 +410,14 @@ def x04c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: every product a_i * w below 2^62 (no signed-64 overflow on any
 #: engine) while leaving component collisions at the harmless ~1/2^31.
 _MH_P = 2147483647
+#: Signature geometry shared by the batch signature (minhash_native_pairs)
+#: and the per-row stream signature (streaming_band_keys): 64 components
+#: banded 16 x 4 over word 3-shingles.  Both read these, so the two
+#: formulations cannot drift apart; the x04d oracle states the same
+#: numbers as SQL literals.
+_MH_HASHES = 64
+_MH_BANDS = 16
+_MH_K = 3
 
 
 def _mh_ab(i: int) -> tuple[int, int]:
@@ -424,7 +428,7 @@ def _mh_ab(i: int) -> tuple[int, int]:
     return (i * 2654435761 + 1) % _MH_P, (i * 40503 + 12345) % _MH_P
 
 
-def _mh_est(sig_a: str, sig_b: str, n_hashes: int):
+def _mh_est(sig_a: str, sig_b: str):
     """Estimated-Jaccard e6 column: fraction of equal signature
     components (one zip_with compare over the two int arrays)."""
     return qint(
@@ -432,23 +436,18 @@ def _mh_est(sig_a: str, sig_b: str, n_hashes: int):
             f"size(filter(zip_with({sig_a}, {sig_b}, (a, b) -> a = b),"
             " eq -> eq))"
         ).cast("double")
-        / n_hashes
+        / _MH_HASHES
     )
 
 
-def minhash_native_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-) -> DataFrame:
+def minhash_native_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash signatures and LSH banding as pure DataFrame expressions.
 
     Signature: each shingle is hashed ONCE with md5; a 60-bit word is
     carved from the digest (hex[1:15]) and reduced mod P = 2^31-1; the
     i-th component is min over shingles of the universal hash
-    h_i(w) = (a_i*w + b_i) mod P with per-i constants (_mh_ab).  An
+    h_i(w) = (a_i*w + b_i) mod P with per-i constants (_mh_ab), over
+    _MH_K-word shingles and i < _MH_HASHES.  An
     earlier revision used the Kirsch-Mitzenmacher linear combination
     h_i = w1 + i*w2 — WRONG for MinHash-with-banding: the minimizing
     shingle of a linear-in-i function changes only at envelope
@@ -461,12 +460,13 @@ def minhash_native_pairs(
     1.0 on the same fixture; the n=16 -> 64 budget raise alone cannot
     do that — with correlated components more hashes repeat the same
     bias).  h_i(doc) = min over shingles — one groupBy computes all
-    n_hashes mins (JVM-side, codegen'd; no Python, no MLlib sparse
+    _MH_HASHES mins (JVM-side, codegen'd; no Python, no MLlib sparse
     vectors).  md5 instead of xxhash64 makes the whole signature
     engine-independent — the same bit-math that made x04c's SimHash
     oracle-checkable — so this approximate operator still gets a full
     value-hash oracle, not a rows-only check.
-    Banding: signatures split into `bands` rows of n_hashes/bands values;
+    Banding: signatures split into _MH_BANDS rows of
+    _MH_HASHES/_MH_BANDS values;
     docs sharing any band-hash become candidates (map-side combo
     expansion, same pattern as jaccard_pairs).  The band key stays
     xxhash64 — it is a shuffle-key compaction detail, invisible in the
@@ -476,8 +476,8 @@ def minhash_native_pairs(
     fraction of equal signature components; pairs below `threshold` are
     dropped.
 
-    The full signature rides along through the band shuffle (bands ×
-    n_hashes×4 B per doc — array<int>, guide §2.3), so the estimate is
+    The full signature rides along through the band shuffle (_MH_BANDS
+    × _MH_HASHES×4 B per doc — array<int>, guide §2.3), so the estimate is
     computed right at pair expansion — no signature join (measured
     1.4x at sf0.1), and since r14 the below-threshold flood is dropped
     BEFORE the cross-band dedupe so that exchange carries 20-byte
@@ -495,8 +495,8 @@ def minhash_native_pairs(
     therefore the results, are identical either way (pinned by the
     oracle and the r13 A/B).
     """
-    r = n_hashes // bands
-    sh = with_shingles(docs, k=k).select("doc_id", "shingles").filter(
+    r = _MH_HASHES // _MH_BANDS
+    sh = with_shingles(docs, k=_MH_K).select("doc_id", "shingles").filter(
         F.size("shingles") > 0
     )
     postings = sh.select("doc_id", F.explode("shingles").alias("shingle"))
@@ -519,16 +519,16 @@ def minhash_native_pairs(
         return f"cast(min(({a} * wm + {b}) % {_MH_P}) as int) as h{i}"
 
     sig = hashed.groupBy("doc_id").agg(
-        *[F.expr(_h_sql(i)) for i in range(n_hashes)]
+        *[F.expr(_h_sql(i)) for i in range(_MH_HASHES)]
     )
     # band hashes reference the h-columns directly (no sig[i] array
     # indexing for the optimizer to re-inline); the sig array is built
     # once, in the same projection
     band_arr = ", ".join(
         "xxhash64(%d, %s)" % (b, ", ".join(f"h{b * r + j}" for j in range(r)))
-        for b in range(bands)
+        for b in range(_MH_BANDS)
     )
-    sig_arr = "array(" + ", ".join(f"h{i}" for i in range(n_hashes)) + ")"
+    sig_arr = "array(" + ", ".join(f"h{i}" for i in range(_MH_HASHES)) + ")"
     banded = sig.select(
         "doc_id",
         F.expr(sig_arr).alias("sig"),
@@ -550,7 +550,7 @@ def minhash_native_pairs(
         .select(
             F.col("p.id_a").alias("id_a"),
             F.col("p.id_b").alias("id_b"),
-            _mh_est("p.sig_a", "p.sig_b", n_hashes).alias(
+            _mh_est("p.sig_a", "p.sig_b").alias(
                 "est_jaccard_e6"
             ),
         )
@@ -739,17 +739,6 @@ def connected_components(
             break
         prev_sum = cur_sum
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
-def dedup_corpus(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fuzzy-dedup decision: keep the min-id representative of every
-    near-dup cluster, plus all unpaired docs."""
-    clusters = connected_components(pairs)
-    tagged = docs.join(clusters, on=id_col, how="left")
-    keep = tagged.filter(
-        F.col("cluster_id").isNull() | (F.col(id_col) == F.col("cluster_id"))
-    )
-    return keep.drop("cluster_id")
 
 
 # Deterministic despite being iterative (exact pairs + min-label
@@ -1002,10 +991,18 @@ def _x47_oracle() -> str:
     """
 
 
+#: x47's relative-edit-distance gate, edit_dist / maxlen <= 2/5, as an
+#: integer compare.  The batch gate (edit_verified_pairs) and the online
+#: one (jobs.streaming_verified_near_dup, s22) both read it; the x47 and
+#: s22 oracles state it as SQL literals.
+_X47_REL_NUM = 2
+_X47_REL_DEN = 5
+
+
 def edit_verified_pairs(
     docs: DataFrame,
-    rel_num: int = 2,
-    rel_den: int = 5,
+    rel_num: int = _X47_REL_NUM,
+    rel_den: int = _X47_REL_DEN,
     cands: DataFrame | None = None,
 ) -> DataFrame:
     """Confirmed near-dups: x04d's banded-MinHash candidates whose exact
@@ -1244,7 +1241,7 @@ def x60_verify_gate_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     both against exact-Jaccard ground truth.  The gate can only remove
     pairs, so verified precision >= banded precision and verified
     recall <= banded recall — the monitor states the trade a production
-    owner tunes rel_num/rel_den against."""
+    owner tunes _X47_REL_NUM/_X47_REL_DEN against."""
     docs = load(spark, sf_dir, "documents")
     exact = jaccard_pairs(docs, threshold=_X04_THRESHOLD, k=_X04_K).select(
         "id_a", "id_b", F.lit(True).alias("in_exact")
@@ -1610,13 +1607,7 @@ def x61_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup(spark, sf_dir)
 
 
-def streaming_band_keys(
-    docs: DataFrame,
-    n_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
+def streaming_band_keys(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Per-ROW MinHash signature + LSH band keys — the streaming-safe
     formulation of minhash_native_pairs' signature stage (s21).
 
@@ -1624,21 +1615,21 @@ def streaming_band_keys(
     over exploded shingle hashes; a stream can't re-aggregate a
     document across micro-batches, so here the whole signature is a
     single projection: the shingle array maps once through the md5
-    word (one digest per shingle), and each of the `n_hashes`
+    word (one digest per shingle), and each of the _MH_HASHES
     components is array_min over the per-component universal hash —
-    identical constants and bit-math to the batch/or oracle formula
-    (_mh_ab, mod P), so the two formulations produce byte-identical
-    signatures (asserted in tests).  Everything is JVM array kernels:
-    no UDF, no shuffle, no state — the stateless prefix of the online
-    dedup.
+    identical constants, geometry and bit-math to the batch/oracle
+    formula (_mh_ab, mod P, _MH_HASHES/_MH_BANDS/_MH_K), so the two
+    formulations produce byte-identical signatures (asserted in tests).
+    Everything is JVM array kernels: no UDF, no shuffle, no state — the
+    stateless prefix of the online dedup.
 
     As in minhash_native_pairs, the 64-component projection is built
     as ONE SQL expression string, not a per-component Column loop —
     the loop form costs seconds of driver-side py4j chatter per
     invocation (and this function runs inside foreachBatch setup on
     every streaming key that uses it)."""
-    r = n_hashes // bands
-    sh = with_shingles(docs, k=k).filter(F.size("shingles") > 0)
+    r = _MH_HASHES // _MH_BANDS
+    sh = with_shingles(docs, k=_MH_K).filter(F.size("shingles") > 0)
     sh = sh.withColumn(
         "__wms",
         F.expr(
@@ -1660,13 +1651,13 @@ def streaming_band_keys(
         )
 
     sig_arr = (
-        "array(" + ", ".join(_component(i) for i in range(n_hashes)) + ")"
+        "array(" + ", ".join(_component(i) for i in range(_MH_HASHES)) + ")"
     )
     sh = sh.withColumn("sig", F.expr(sig_arr))
     band_arr = ", ".join(
         "xxhash64(%d, %s)"
         % (b2, ", ".join(f"sig[{b2 * r + j}]" for j in range(r)))
-        for b2 in range(bands)
+        for b2 in range(_MH_BANDS)
     )
     # `carry` columns (s22: text for the edit gate) ride the exploded
     # rows; callers that need them once per doc re-distinct inside the

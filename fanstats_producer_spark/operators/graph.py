@@ -79,7 +79,6 @@ def _oracle_sql() -> str:
 
 def pagerank_ranks(
     edges: DataFrame,
-    n_iter: int = _ITER,
     driver_threshold: int | None = 4_000_000,
 ) -> DataFrame:
     """Integer-exact PageRank ranks over a symmetric edge list
@@ -89,7 +88,7 @@ def pagerank_ranks(
     dedup.py union-find pattern):
 
     - |edges| <= ``driver_threshold``: the edge list rides to
-      the driver ONCE (Arrow) and the n_iter rounds run as vectorized
+      the driver ONCE (Arrow) and the _ITER rounds run as vectorized
       int64 numpy (np.add.at scatter-sum, // division) — exactly the
       engine arithmetic (`div` on nonnegative int64 == floor
       division), so ranks are bit-identical.  Each distributed round
@@ -122,7 +121,7 @@ def pagerank_ranks(
                 np.int64
             )
             rank = np.full(len(nodes), _SCALE, np.int64)
-            for _ in range(n_iter):
+            for _ in range(_ITER):
                 vals = rank[src_idx] // outdeg[src_idx]
                 contrib = np.zeros(len(nodes), np.int64)
                 np.add.at(contrib, dst_idx, vals)
@@ -140,7 +139,7 @@ def pagerank_ranks(
         F.lit(_SCALE).cast("long").alias("rank"),
         "outdeg",
     )
-    for _ in range(n_iter):
+    for _ in range(_ITER):
         contribs = (
             edges.join(F.broadcast(ranks), ranks.node == edges.src)
             .select("dst", F.expr("rank div outdeg").alias("c"))
@@ -194,7 +193,7 @@ def q65_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once: 5 iterations must not re-derive the join+distinct
     edges = disk_checkpoint(edges)
     # the checkpointed edge list is bounded by |cust|x|supp|; under the
-    # default 4M edges the n_iter rounds run as exact int64 numpy on the
+    # default 4M edges the _ITER rounds run as exact int64 numpy on the
     # driver (r13 — see pagerank_ranks), above it the broadcast arm.
     ranks = pagerank_ranks(edges)
     return (

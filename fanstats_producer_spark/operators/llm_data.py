@@ -598,21 +598,15 @@ def x35_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- contamination gate: the x27 decision as a batch/stream-shared filter -------
 # x27 REPORTS contamination; this applies it.  Stateless per-row form —
 # shingle the document, intersect with the benchmark shingle set, drop on
-# >= min_shared overlap — so the SAME function body runs in a batch job
+# >= _X27_MIN_SHARED overlap — so the SAME function body runs in a batch job
 # and inside a Structured Streaming micro-batch with append output (the
 # s12 one-codepath pattern).  The benchmark set rides along as DATA in
 # a one-row broadcast frame — NOT as an array literal, which grows the
 # plan by one expression node per shingle (measured: seconds of pure
 # plan compilation at a 9k-shingle suite; see the docstring below).
-def contamination_gate(
-    docs: DataFrame,
-    eval_shingles: list[str],
-    k: int = 5,
-    min_shared: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
-    """Drop docs sharing >= min_shared distinct k-grams with the eval
-    suite.
+def contamination_gate(docs: DataFrame, eval_shingles: list[str]) -> DataFrame:
+    """Drop docs sharing >= _X27_MIN_SHARED distinct _X27_K-grams of
+    `text` with the eval suite (x27's gate, made streamable for s24).
 
     The shared-count runs in an ITERATOR pandas UDF that builds the
     eval-shingle set ONCE PER TASK and probes each doc's (already
@@ -640,25 +634,19 @@ def contamination_gate(
                 lambda arr: len(ev.intersection(arr))
             ).astype("int32")
 
-    sh = with_shingles(docs, text_col=text_col, k=k)
-    return sh.filter(_n_shared(F.col("shingles")) < min_shared).drop(
+    sh = with_shingles(docs, k=_X27_K)
+    return sh.filter(_n_shared(F.col("shingles")) < _X27_MIN_SHARED).drop(
         "shingles"
     )
 
 
-def eval_shingle_set(
-    docs: DataFrame, k: int = 5, text_col: str = "text"
-) -> list[str]:
-    """Collect the benchmark side's distinct shingles (driver-side: the
-    eval suite is small by construction).  One narrow job — the per-doc
-    shingle arrays come back whole and dedup in Python; the previous
-    explode+distinct paid a full shuffle round-trip (~1.5 s of the s24
-    drain) to dedup a benchmark-sized set."""
-    rows = (
-        with_shingles(docs, text_col=text_col, k=k)
-        .select("shingles")
-        .collect()
-    )
+def eval_shingle_set(docs: DataFrame) -> list[str]:
+    """Collect the benchmark side's distinct _X27_K-gram shingles of
+    `text` (driver-side: the eval suite is small by construction).  One
+    narrow job — the per-doc shingle arrays come back whole and dedup in
+    Python; the previous explode+distinct paid a full shuffle round-trip
+    (~1.5 s of the s24 drain) to dedup a benchmark-sized set."""
+    rows = with_shingles(docs, k=_X27_K).select("shingles").collect()
     return sorted({s for r in rows for s in r.shingles})
 
 
@@ -1360,15 +1348,14 @@ def _bpe_merge_seg(s: tuple, a: str, b: str) -> tuple:
 
 def bpe_train(
     df: DataFrame,
-    col: str = "text",
     n_merges: int = 16,
     min_count: int = 1,
     max_types: int | None = None,
 ) -> list[tuple[str, str]]:
-    """Train BPE merges over a text column.  One distributed word-count
-    pass, then the deterministic merge loop on the type table (highest
-    weighted pair count, ties to the lexicographically smallest pair).
-    Returns the ordered merge list.
+    """Train BPE merges over the `text` column.  One distributed
+    word-count pass, then the deterministic merge loop on the type
+    table (highest weighted pair count, ties to the lexicographically
+    smallest pair).  Returns the ordered merge list.
 
     ``min_count``/``max_types`` bound the DRIVER collect: the raw
     space-split type table of a 100 TB web crawl is NOT Heaps'-law
@@ -1381,7 +1368,7 @@ def bpe_train(
     prunes run BEFORE .collect(), inside the aggregation pipeline; the
     driver never sees a row they remove.  Scale note in BASELINE.md."""
     words = (
-        df.select(F.explode(F.split(F.col(col), " ")).alias("w"))
+        df.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
@@ -1410,12 +1397,8 @@ def bpe_train(
     return merges
 
 
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    col: str = "text",
-) -> DataFrame:
-    """Apply a trained BPE merge list to a text column, distributed.
+def bpe_encode(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """Apply a trained BPE merge list to the `text` column, distributed.
 
     Adds `bpe_tokens` (array<string>) and `n_bpe_tokens`.  The merge
     list rides the UDF closure (broadcast by Spark automatically —
@@ -1449,7 +1432,7 @@ def bpe_encode(
             else [tok for w in t.split(" ") if w for tok in seg_word(w)]
         )
 
-    return df.withColumn("bpe_tokens", _encode(F.col(col))).withColumn(
+    return df.withColumn("bpe_tokens", _encode(F.col("text"))).withColumn(
         "n_bpe_tokens", F.size("bpe_tokens")
     )
 
@@ -2303,7 +2286,8 @@ def x94_kneser_ney_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bpe_train): everything corpus-sized is distributed (word-type counts,
 # candidate-substring frequencies, the per-type Viterbi E-step runs in
 # mapInPandas on executors); only the PRUNED piece-count table ever
-# reaches the driver (min_count/max_types/max_cands gates), where the
+# reaches the driver (_X95_MIN_COUNT/_X95_MAX_TYPES/_X95_MAX_CANDS
+# gates), where the
 # M-step is a normalization over it.  Encode never touches the driver:
 # the type->segmentation map is computed distributed and broadcast-
 # joined to the corpus token stream (the x89 word-cache shape).
@@ -2326,6 +2310,7 @@ _X95_MAX_PIECE = 8
 _X95_VOCAB_MULTI = 40
 _X95_EM_ITERS = 2
 _X95_CHAR_PENALTY = 10_000_000
+_X95_MIN_COUNT = 1
 _X95_MAX_TYPES = 100_000
 _X95_MAX_CANDS = 1_000_000
 
@@ -2336,18 +2321,17 @@ def _x95_qlog2(c: int, total: int) -> int:
     return int(math.floor(math.log2(c / total) * 1e7 + 0.5))
 
 
-def viterbi_unigram(
-    word: str, scores: dict, max_piece: int = _X95_MAX_PIECE
-):
+def viterbi_unigram(word: str, scores: dict):
     """Max-likelihood segmentation of `word` under integer piece
-    scores; ties -> minimum cut mask.  Returns (pieces, score, mask)
+    scores, pieces at most _X95_MAX_PIECE long (the candidate set's
+    bound); ties -> minimum cut mask.  Returns (pieces, score, mask)
     or None if the word cannot be covered by scored pieces."""
     n = len(word)
     best: list = [None] * (n + 1)
     best[0] = (0, 0)
     for i in range(1, n + 1):
         cand = None
-        for j in range(max(0, i - max_piece), i):
+        for j in range(max(0, i - _X95_MAX_PIECE), i):
             if best[j] is None:
                 continue
             s = scores.get(word[j:i])
@@ -2371,41 +2355,30 @@ def viterbi_unigram(
     return pieces, score, mask
 
 
-def _x95_gated_types(
-    docs: DataFrame, min_count: int, max_types: int
-) -> DataFrame:
+def _x95_gated_types(docs: DataFrame) -> DataFrame:
     """The gated word-type table (word, cnt) — ONE definition shared by
     the trainer and the encode map so the two can never diverge on
     which types exist (and so the encode-side broadcast stays bounded
-    by max_types, the same driver/executor-memory contract as
+    by _X95_MAX_TYPES, the same driver/executor-memory contract as
     bpe_train's collect gate)."""
     return (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= _X95_MIN_COUNT)
         .orderBy(F.desc("cnt"), F.asc("word"))
-        .limit(max_types)
+        .limit(_X95_MAX_TYPES)
     )
 
 
-def unigram_train(
-    docs: DataFrame,
-    vocab_multi: int = _X95_VOCAB_MULTI,
-    em_iters: int = _X95_EM_ITERS,
-    min_count: int = 1,
-    max_types: int = _X95_MAX_TYPES,
-    max_cands: int = _X95_MAX_CANDS,
-) -> dict:
+def unigram_train(docs: DataFrame) -> dict:
     """Train the unigram-LM piece table; returns {piece: score_e7}.
     See the x95 block comment for the EM formulation and gates."""
     import pandas as pd
 
     spark = docs.sparkSession
-    types = _x95_gated_types(docs, min_count, max_types).localCheckpoint(
-        eager=True
-    )
+    types = _x95_gated_types(docs).localCheckpoint(eager=True)
     subs = types.select(
         "cnt",
         F.explode(
@@ -2421,15 +2394,15 @@ def unigram_train(
         subs.groupBy("piece")
         .agg(F.sum("cnt").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("piece"))
-        .limit(max_cands)
+        .limit(_X95_MAX_CANDS)
         .collect()  # pruned SMALL side only (the bpe_train gate)
     )
     total = sum(r["freq"] for r in cand)
     scores = {r["piece"]: _x95_qlog2(r["freq"], total) for r in cand}
-    # em_iters=0 degrades to the raw candidate-frequency vocab (the
-    # counts the final selection reads are then the substring freqs)
+    # with no EM round the vocab is the raw candidate-frequency one
+    # (the counts the final selection reads are the substring freqs)
     counts_d = {r["piece"]: r["freq"] for r in cand}
-    for _ in range(em_iters):
+    for _ in range(_X95_EM_ITERS):
         b_scores = spark.sparkContext.broadcast(scores)
 
         def estep(batches):
@@ -2459,7 +2432,7 @@ def unigram_train(
     multi = sorted(
         (p for p in counts_d if len(p) > 1),
         key=lambda p: (-counts_d[p], p),
-    )[:vocab_multi]
+    )[:_X95_VOCAB_MULTI]
     chars = {r["piece"] for r in cand if len(r["piece"]) == 1}
     floor_s = min(scores.values()) - _X95_CHAR_PENALTY
     vocab = {p: scores[p] for p in multi}
@@ -2607,10 +2580,8 @@ def x95_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_vocab = spark.sparkContext.broadcast(vocab)
     # the SAME gated type table as the trainer/oracle — an ungated one
     # would encode (and broadcast) types the model never saw past the
-    # max_types boundary, silently diverging from the oracle's `gated`
-    types = _x95_gated_types(
-        spread(docs, "doc_id"), min_count=1, max_types=_X95_MAX_TYPES
-    )
+    # _X95_MAX_TYPES boundary, silently diverging from the oracle's `gated`
+    types = _x95_gated_types(spread(docs, "doc_id"))
 
     def enc(batches):
         for pdf in batches:

@@ -809,13 +809,15 @@ def _gif_subblocks(data: bytes) -> bytes:
     return bytes(out)
 
 
-def encode_gif(frames, delays_cs, w: int = _GIF_W, h: int = _GIF_H) -> bytes:
+def encode_gif(frames, delays_cs) -> bytes:
     """Minimal REAL animated-GIF89a encoder (stdlib only): frames are
-    (h, w) uint8 index arrays over a 256-entry grayscale global color
-    table; each frame carries a graphic-control delay (centiseconds).
+    (_GIF_H, _GIF_W) uint8 index arrays over a 256-entry grayscale
+    global color table; each frame carries a graphic-control delay
+    (centiseconds).
     Includes the Netscape looping extension, so the output is the exact
     grammar browsers animate."""
     out = bytearray(b"GIF89a")
+    w, h = _GIF_W, _GIF_H
     out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)  # GCT: 256 entries
     for i in range(256):
         out += bytes((i, i, i))

@@ -30,9 +30,14 @@ def hash_bucket(col: Column, n_buckets: int = 16) -> Column:
     ) % n_buckets
 
 
-def hash_sample(df: DataFrame, col: str, keep_buckets: int, n_buckets: int = 16) -> DataFrame:
-    """Keep rows whose hash bucket < keep_buckets (rate ≈ keep/n)."""
-    return df.filter(hash_bucket(F.col(col), n_buckets) < keep_buckets)
+#: Bucket count hash_sample draws from: the sample rate steps in 1/16ths.
+_SAMPLE_BUCKETS = 16
+
+
+def hash_sample(df: DataFrame, col: str, keep_buckets: int) -> DataFrame:
+    """Keep rows whose hash bucket < keep_buckets (rate ≈
+    keep_buckets / _SAMPLE_BUCKETS)."""
+    return df.filter(hash_bucket(F.col(col), _SAMPLE_BUCKETS) < keep_buckets)
 
 
 def stratified_topk(df: DataFrame, stratum: str, key: str, k: int) -> DataFrame:

@@ -29,36 +29,33 @@ def scd2_merge(
     updates: DataFrame,
     key: str,
     attr: str,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
-    eff_col: str = "eff_date",
 ) -> DataFrame:
     """Apply one batch of attribute updates to a current-state dimension.
 
     ``dim`` must carry (key, attr, valid_from) with valid_from the date
     each current row became effective; ``updates`` carries (key, attr,
-    eff_col) — at most one row per key.  Returns the full type-2 table:
+    eff_date) — at most one row per key.  Returns the full type-2 table:
     (key, attr, valid_from, valid_to, is_current).
     """
     upd = F.broadcast(
         updates.select(
             F.col(key),
             F.col(attr).alias("_new_attr"),
-            F.col(eff_col).alias("_eff"),
+            F.col("eff_date").alias("_eff"),
         )
     )
     joined = dim.join(upd, key, "left")
     matched = F.col("_eff").isNotNull()
     mk = lambda a, vf, vt, cur: F.struct(  # noqa: E731
         a.alias(attr),
-        vf.alias(valid_from_col),
-        vt.alias(valid_to_col),
+        vf.alias("valid_from"),
+        vt.alias("valid_to"),
         cur.alias("is_current"),
     )
     null_date = F.lit(None).cast("date")
-    closed = mk(F.col(attr), F.col(valid_from_col), F.col("_eff"), F.lit(False))
+    closed = mk(F.col(attr), F.col("valid_from"), F.col("_eff"), F.lit(False))
     opened = mk(F.col("_new_attr"), F.col("_eff"), null_date, F.lit(True))
-    current = mk(F.col(attr), F.col(valid_from_col), null_date, F.lit(True))
+    current = mk(F.col(attr), F.col("valid_from"), null_date, F.lit(True))
     return joined.select(
         key,
         F.explode(

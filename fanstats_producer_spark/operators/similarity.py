@@ -256,11 +256,12 @@ def x06_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- x06b: LSH-bucketed similarity self-join (scale arm; rows-only) --------------
+#: BucketedRandomProjectionLSH bucket width, in Euclidean units.
+_X06B_BUCKET = 0.5
+
+
 def lsh_simjoin(
-    spark: SparkSession,
-    emb: DataFrame,
-    euclid_threshold: float = 1.2,
-    bucket_length: float = 0.5,
+    spark: SparkSession, emb: DataFrame, euclid_threshold: float = 1.2
 ) -> DataFrame:
     """BucketedRandomProjectionLSH self-join: all pairs within a Euclidean
     threshold via bucket join (for unit-norm vectors, Euclidean distance
@@ -274,7 +275,7 @@ def lsh_simjoin(
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
-        bucketLength=bucket_length,
+        bucketLength=_X06B_BUCKET,
         numHashTables=4,
         seed=42,
     )
@@ -1255,13 +1256,14 @@ def decontam_blas(
     )
 
 
-def eval_matrix_row(emb: DataFrame, n_eval: int = _X66_N_EVAL) -> DataFrame:
-    """The broadcastable one-row eval matrix for semantic_decontam_gate:
+def eval_matrix_row(emb: DataFrame) -> DataFrame:
+    """The broadcastable one-row eval matrix (vec_id < _X66_N_EVAL) for
+    semantic_decontam_gate:
     array_sort(collect_list(struct(eval_id, ev))) — deterministic
     content, no driver collect (the aggregation stays distributed and
     only the single array row broadcasts)."""
     return (
-        emb.filter(F.col("vec_id") < n_eval)
+        emb.filter(F.col("vec_id") < _X66_N_EVAL)
         .select(
             F.struct(
                 F.col("vec_id").alias("eval_id"),
@@ -1619,23 +1621,23 @@ def x93_int8_embed_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate multiply-add — NO shuffle at all (plan: scan → generate →
 # broadcast join → project), embarrassingly parallel at 100 TB.
 _X98_OUT = 16
+#: The fixture's embedding width, the projection's input dimension.
+_X98_IN = 64
 
 
-def jl_project(
-    vectors: DataFrame, out_dim: int = _X98_OUT, in_dim: int = 64
-) -> DataFrame:
+def jl_project(vectors: DataFrame, out_dim: int = _X98_OUT) -> DataFrame:
     """(vec_id, dim, comp_e6): integer-exact ±1 random projection of
     `embedding` into `out_dim` components.
 
-    Assumes every embedding has exactly ``in_dim`` components (the
+    Assumes every embedding has exactly ``_X98_IN`` components (the
     fixture's 64): the ±1 sign matrix is built ONCE from the
-    (out_dim × in_dim) coordinate grid and broadcast — a pure function
+    (out_dim × _X98_IN) coordinate grid and broadcast — a pure function
     of (j, i), never sampled from the data (an earlier draft read the
     length off ``vectors.limit(1)``, an arbitrary row).  A per-row
     assert_true trips the job on any mismatched row rather than
     letting zip_with pad a silent NULL component."""
     spark = vectors.sparkSession
-    # sign row per output dim j: [s(j,0) … s(j,in_dim-1)]
+    # sign row per output dim j: [s(j,0) … s(j,_X98_IN-1)]
     sign = lambda j, i: (
         F.lit(1)
         - F.lit(2)
@@ -1662,7 +1664,7 @@ def jl_project(
         .select(
             "dim",
             F.transform(
-                F.sequence(F.lit(0), F.lit(in_dim - 1)),
+                F.sequence(F.lit(0), F.lit(_X98_IN - 1)),
                 lambda i: sign(F.col("dim"), i),
             ).alias("signs"),
         )
@@ -1674,8 +1676,8 @@ def jl_project(
         ),
     )
     guard = F.assert_true(
-        F.size("embedding") == in_dim,
-        F.lit(f"jl_project: embedding length != in_dim={in_dim}"),
+        F.size("embedding") == _X98_IN,
+        F.lit(f"jl_project: embedding length != {_X98_IN}"),
     )
     return (
         vectors.select("vec_id", F.when(guard.isNull(), q).alias("q"))
@@ -1756,28 +1758,22 @@ _X102_POOL = 12
 _X102_K = 4
 
 
-def mmr_rerank(
-    emb: DataFrame,
-    n_queries: int = _X102_QUERIES,
-    pool: int = _X102_POOL,
-    k: int = _X102_K,
-    driver_threshold: int = 100_000,
-) -> DataFrame:
+def mmr_rerank(emb: DataFrame, driver_threshold: int = 100_000) -> DataFrame:
     """(query_id, rnk, picked_id, mmr_score_e6): the greedy MMR
-    selection trajectory over each query's top-`pool` cosine
-    candidates.
+    selection trajectory (_X102_K picks) over each of the first
+    _X102_QUERIES queries' top-_X102_POOL cosine candidates.
 
     Size-gated driver fast path (the connected_components pattern):
-    the greedy loop operates on n_queries x pool scored rows — integer
-    state only (rel_e6/sim_e6 are Spark-computed quantized ints, the
-    updates are int max/multiply) — so when that bounded frame fits on
-    the driver the k selection steps run as pure-Python integer math
-    instead of ~3k tiny checkpointed Spark jobs (measured 1.9 s ->
-    ~0.5 s at the x102 constants).  Identical output by induction: the
-    same (7*rel - 3*ms, cand_id) argmax over the same integers.  Past
-    the threshold the distributed loop below runs unchanged — the
-    100 TB arm."""
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    the greedy loop operates on _X102_QUERIES x _X102_POOL scored rows
+    — integer state only (rel_e6/sim_e6 are Spark-computed quantized
+    ints, the updates are int max/multiply) — so when that bounded
+    frame fits on the driver the _X102_K selection steps run as
+    pure-Python integer math instead of ~3k tiny checkpointed Spark
+    jobs (measured 1.9 s -> ~0.5 s at the x102 constants).  Identical
+    output by induction: the same (7*rel - 3*ms, cand_id) argmax over
+    the same integers.  Past the threshold the distributed loop below
+    runs unchanged — the 100 TB arm."""
+    q = emb.filter(F.col("vec_id") < _X102_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     scored = (
@@ -1790,11 +1786,11 @@ def mmr_rerank(
     )
     pool_df = (
         scored.withColumn("prnk", F.row_number().over(wp))
-        .filter(F.col("prnk") <= pool)
+        .filter(F.col("prnk") <= _X102_POOL)
         .select("query_id", "cand_id", "rel_e6", "cv")
         .localCheckpoint(eager=True)  # P rows/query feed every step
     )
-    if n_queries * pool <= driver_threshold:
+    if _X102_QUERIES * _X102_POOL <= driver_threshold:
         spark = emb.sparkSession
         psim_rows = (
             pool_df.alias("a")
@@ -1815,7 +1811,7 @@ def mmr_rerank(
         out_rows = []
         for qid in sorted(state):
             cands = state[qid]
-            for j in range(1, k + 1):
+            for j in range(1, _X102_K + 1):
                 if not cands:
                     break
                 picked, mmr = None, None
@@ -1862,7 +1858,7 @@ def mmr_rerank(
         "query_id", "cand_id", "rel_e6", F.lit(0).cast("long").alias("ms")
     )
     picks = []
-    for j in range(1, k + 1):
+    for j in range(1, _X102_K + 1):
         sc = state.withColumn(
             "mmr", 7 * F.col("rel_e6") - 3 * F.col("ms")
         )
@@ -1881,7 +1877,7 @@ def mmr_rerank(
         )
         pick = pick.localCheckpoint(eager=True)  # reused twice below
         picks.append(pick)
-        if j < k:
+        if j < _X102_K:
             newsim = psim.join(
                 pick.select("query_id", F.col("picked_id").alias("b_id")),
                 ["query_id", "b_id"],

@@ -29,13 +29,15 @@ from fanstats_producer_spark.io import load
 from fanstats_producer_spark.registry import query
 
 
-def sketch_distinct(
-    df: DataFrame, key: str, grain: list[str], lg_config_k: int = 18
-) -> DataFrame:
+#: HLL lgConfigK of every persisted sketch (see sketch_distinct).
+_HLL_LG_K = 18
+
+
+def sketch_distinct(df: DataFrame, key: str, grain: list[str]) -> DataFrame:
     """Finest-grain partial sketches: one fixed-size HLL blob of ``key``
     per ``grain`` group.  This is the state you persist.
 
-    Default lgConfigK=18: the DataSketches HLL stays in its exact
+    lgConfigK = _HLL_LG_K = 18: the DataSketches HLL stays in its exact
     (coupon) regime well past the fixtures' cardinalities — measured
     exact through 15 000 distinct keys (localdata sf1), where the old
     default 12 already drifted at 1 500 (sf0.1: 1480-1499 vs 1500).
@@ -44,7 +46,7 @@ def sketch_distinct(
     DOWN (12) at true billion-key scale where a 1% estimate is the
     point and 256 KB dense registers per group are not."""
     return df.groupBy(*grain).agg(
-        F.hll_sketch_agg(key, F.lit(lg_config_k)).alias("sketch")
+        F.hll_sketch_agg(key, F.lit(_HLL_LG_K)).alias("sketch")
     )
 
 

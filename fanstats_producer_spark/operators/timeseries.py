@@ -31,39 +31,30 @@ from fanstats_producer_spark.operators.sampling import hash_bucket
 from fanstats_producer_spark.registry import query
 
 
-def gapfill_interpolate(
-    daily: DataFrame,
-    key_col: str = "event_type",
-    date_col: str = "d",
-    value_col: str = "avg_v",
-    n_col: str = "n",
-) -> DataFrame:
-    """Densify (key, day, value) to the full key × calendar grid and
-    impute gaps: `v_ffill` carries the last observation forward,
-    `v_interp` linearly interpolates between the flanking observations
-    (falling back to the nearest one at series edges)."""
-    bounds = daily.agg(
-        F.min(date_col).alias("lo"), F.max(date_col).alias("hi")
-    )
-    days = bounds.select(
-        F.explode(F.sequence("lo", "hi")).alias(date_col)
-    )
-    keys = daily.select(key_col).distinct()
+def gapfill_interpolate(daily: DataFrame) -> DataFrame:
+    """Densify (event_type, d, avg_v) to the full event_type × calendar
+    grid and impute gaps: `v_ffill` carries the last observation
+    forward, `v_interp` linearly interpolates between the flanking
+    observations (falling back to the nearest one at series edges);
+    `n` is the day's count, 0 on a filled day."""
+    bounds = daily.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
+    days = bounds.select(F.explode(F.sequence("lo", "hi")).alias("d"))
+    keys = daily.select("event_type").distinct()
     grid = keys.crossJoin(F.broadcast(days))
-    j = grid.join(daily, [key_col, date_col], "left")
+    j = grid.join(daily, ["event_type", "d"], "left")
 
     back = (
-        Window.partitionBy(key_col)
-        .orderBy(date_col)
+        Window.partitionBy("event_type")
+        .orderBy("d")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     fwd = (
-        Window.partitionBy(key_col)
-        .orderBy(date_col)
+        Window.partitionBy("event_type")
+        .orderBy("d")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    v = F.col(value_col)
-    obs_day = F.when(v.isNotNull(), F.col(date_col))
+    v = F.col("avg_v")
+    obs_day = F.when(v.isNotNull(), F.col("d"))
     pv = F.last(v, ignorenulls=True).over(back)
     pd_ = F.last(obs_day, ignorenulls=True).over(back)
     nv = F.first(v, ignorenulls=True).over(fwd)
@@ -74,14 +65,14 @@ def gapfill_interpolate(
         .when(nv.isNull(), pv)
         .otherwise(
             pv
-            + ((nv - pv) * F.datediff(F.col(date_col), pd_))
+            + ((nv - pv) * F.datediff(F.col("d"), pd_))
             / F.datediff(nd, pd_)
         )
     )
     return j.select(
-        key_col,
-        date_col,
-        F.coalesce(F.col(n_col), F.lit(0)).cast("long").alias(n_col),
+        "event_type",
+        "d",
+        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
         pv.alias("v_ffill"),
         interp.alias("v_interp"),
     )

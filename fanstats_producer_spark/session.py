@@ -122,7 +122,7 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
-def shuffle_partitions_for_bytes(total_bytes: int, cores: int | None = None) -> int:
+def shuffle_partitions_for_bytes(total_bytes: int) -> int:
     """Size the static shuffle-partition count to the data: target
     ~64 MiB per post-shuffle partition, floored at 8 and capped at
     3x cores (the healthy task:core ratio).  At 100 TB this yields
@@ -130,20 +130,18 @@ def shuffle_partitions_for_bytes(total_bytes: int, cores: int | None = None) -> 
     being scheduled as 32 near-empty tasks.  AQE still coalesces
     per-stage below this bound at runtime.
     """
-    cores = cores or _default_parallelism()
     by_size = max(total_bytes // (64 << 20), 1)
-    return int(max(8, min(cores * 3, by_size)))
+    return int(max(8, min(_default_parallelism() * 3, by_size)))
 
 
 def get_spark(
     app_name: str = "fanstats-producer-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session with the engine's standard config."""
     cores = _default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
 

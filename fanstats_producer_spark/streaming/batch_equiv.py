@@ -18,7 +18,9 @@ from pyspark.sql import functions as F
 
 from fanstats_producer_spark.functions.num import dsum_pos, sql_dsum_pos
 from fanstats_producer_spark.io import load
+from fanstats_producer_spark.operators.sketches import _HLL_LG_K
 from fanstats_producer_spark.registry import query
+from fanstats_producer_spark.streaming.jobs import SESSION_GAP
 
 _FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -81,11 +83,12 @@ def s03_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_hourly(load(spark, sf_dir, "events"))
 
 
-def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Per-user session windows (fan activity bursts): events closer than
-    `gap` merge; session end = last event + gap."""
+    SESSION_GAP (shared with the s04 stream) merge; session end = last
+    event + SESSION_GAP."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), dsum_pos("value").alias("sum_value"))
         .select(
             "user_id",
@@ -158,7 +161,7 @@ def windowed_distinct_users(events: DataFrame) -> DataFrame:
     the x20 mergeable-sketch pattern inside a window aggregation.  On a
     stream this runs with a watermark and fixed per-window state (a KB
     blob), where exact distinct would hold every key seen; exact
-    through sf0.1 cardinality at lgConfigK=18 (measured), so the batch
+    through sf0.1 cardinality at sketches._HLL_LG_K (measured), so the batch
     arm oracle-checks.  Measured boundary: at sf1 (~5.3k distinct per
     window) 15 of 150 windows sit exactly -1 — a coupon-hash collision
     pair, PRECISION-INDEPENDENT (identical at lg 18/20/21) — the
@@ -169,8 +172,7 @@ def windowed_distinct_users(events: DataFrame) -> DataFrame:
         events.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
             F.hll_sketch_estimate(
-                # lgConfigK=18: exact-regime margin (see sketches.py)
-                F.hll_sketch_agg("user_id", F.lit(18))
+                F.hll_sketch_agg("user_id", F.lit(_HLL_LG_K))
             ).alias("n_users")
         )
         .select(
@@ -195,7 +197,11 @@ def s13_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_distinct_users(load(spark, sf_dir, "events"))
 
 
-def windowed_trending(events: DataFrame, k: int = 5) -> DataFrame:
+#: s14's per-day heavy-hitter tracker size (approx_top_k's k).
+_S14_TOP_K = 5
+
+
+def windowed_trending(events: DataFrame) -> DataFrame:
     """s14: trending items per day — the reference's core analytic (top
     topics per day) as a windowed heavy-hitter sketch.  approx_top_k
     keeps fixed per-window state on a stream (vs a full count map);
@@ -203,7 +209,7 @@ def windowed_trending(events: DataFrame, k: int = 5) -> DataFrame:
     oracle-checks against plain GROUP BY counts."""
     return (
         events.groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(F.expr(f"approx_top_k(event_type, {k})").alias("top"))
+        .agg(F.expr(f"approx_top_k(event_type, {_S14_TOP_K})").alias("top"))
         .select(
             F.date_format("w.start", _FMT_SPARK).alias("window_start"),
             F.explode("top").alias("e"),

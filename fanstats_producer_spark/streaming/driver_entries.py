@@ -231,29 +231,16 @@ def _link_landing(spark: SparkSession, path: str, prefix: str) -> DataFrame:
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the fixture events table (s01's P1-made-
-    continuous source, parquet flavor), staged by _link_landing."""
-    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+    continuous source, parquet flavor), staged by _link_landing, with
+    io.load's events-ts normalization (event-time ops need TIMESTAMP)."""
+    from fanstats_producer_spark.io import load, normalize_events_ts
 
-    from fanstats_producer_spark.io import load as _load
-
-    # Validate on the batch side FIRST: io.load raises on unrecognized or
-    # magnitude-implausible ts types, so reaching the stream read means
-    # the raw type is one of the three known fixture flavors — and the
-    # session confs (UTC, nanosAsLong) it pins also govern this stream.
-    _load(spark, sf_dir, "events")
+    # Validate on the batch side FIRST: io.load runs the nanos-magnitude
+    # sample check a stream cannot run — and the session confs (UTC,
+    # nanosAsLong) it pins also govern this stream.
+    load(spark, sf_dir, "events")
     stream = _link_landing(spark, f"{sf_dir}/events.parquet", "s_landing_")
-    # Mirror io.load's normalization exactly (event-time ops need
-    # TIMESTAMP): TIMESTAMP(NANOS) reads as long under nanosAsLong —
-    # integer div to micros, NOT cast('timestamp') which would interpret
-    # the long as epoch SECONDS and silently corrupt every drain.
-    ts_type = stream.schema["ts"].dataType
-    if isinstance(ts_type, LongType):
-        return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if isinstance(ts_type, TimestampNTZType):
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    if isinstance(ts_type, TimestampType):
-        return stream
-    raise ValueError(f"events.ts has unrecognized type {ts_type}")
+    return normalize_events_ts(stream)
 
 
 _DOC_LANDING_CACHE: dict[tuple, str] = {}
@@ -781,7 +768,7 @@ def s04b_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states; cross-batch merging is pytest-verified
     (tests/test_streaming.py::test_session_window_stream)."""
     stream = _read_events_stream(spark, sf_dir)
-    sessions = jobs.sessionized(stream, gap="30 minutes")
+    sessions = jobs.sessionized(stream)
     return _drain_memory(spark, sessions, "complete").select(
         "user_id",
         F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -1250,7 +1237,9 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") % 2 == 0)
         .select(
             "event_type",
-            F.floor(F.col("value") / 8.0).cast("long").alias("bucket"),
+            F.floor(F.col("value") / jobs.PSI_BUCKET_WIDTH)
+            .cast("long")
+            .alias("bucket"),
         )
         .groupBy("event_type", "bucket")
         .agg(F.count("*").alias("n_ref"))

@@ -8,8 +8,9 @@ transforms as the batch layer (streaming/batch_equiv.py) → checkpointed
 partitioned sink.  Checkpointing upgrades the reference's blind
 at-least-once append (main.py:151) to exactly-once.
 
-The 30-minute watermark mirrors the reference's implicit lateness
-allowance (producer at 05:00, crawler at 05:30 — main.tf:217 vs 309).
+The 30-minute watermark (WATERMARK) mirrors the reference's implicit
+lateness allowance (producer at 05:00, crawler at 05:30 — main.tf:217
+vs 309).
 
 Design follows the Structured Streaming model (Armbrust et al.,
 "Structured Streaming: A Declarative API for Real-Time Applications in
@@ -29,6 +30,14 @@ EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+
+WATERMARK = "30 minutes"
+#: Fan-session inactivity gap, shared by s04 (sessionized) and its batch
+#: arm (batch_equiv.sessionize).
+SESSION_GAP = "30 minutes"
+#: s23's value-histogram bucket width, shared by the live stream
+#: (streaming_psi_drift) and its static reference histogram.
+PSI_BUCKET_WIDTH = 8.0
 
 
 class _StagedState:
@@ -243,7 +252,7 @@ def read_event_stream(
 def windowed_counts(
     events: DataFrame,
     window: str = "1 hour",
-    watermark: str = "30 minutes",
+    watermark: str = WATERMARK,
 ) -> DataFrame:
     """s05/s15/s16: watermarked tumbling window aggregation.
     sum_value uses the split-accumulator exact sum (functions/num.py):
@@ -260,19 +269,18 @@ def windowed_counts(
     )
 
 
-def sessionized(events: DataFrame, gap: str = "30 minutes",
-                watermark: str = "30 minutes") -> DataFrame:
-    """s04: session windows over the stream (same expression as the
-    batch arm in streaming/batch_equiv.py::sessionize)."""
+def sessionized(events: DataFrame) -> DataFrame:
+    """s04: session windows over the stream (same expression and
+    SESSION_GAP as the batch arm in streaming/batch_equiv.py::sessionize)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select("w.start", "w.end", "user_id", "n_events")
     )
 
 
-def deduped_stream(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+def deduped_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """s06: streaming dedup bounded by the watermark (state stays
     finite — the 100 TB requirement for any stateful op)."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
@@ -393,8 +401,6 @@ def streaming_verified_near_dup(
     state_dir: str,
     verdict_dir: str,
     checkpoint_dir: str,
-    rel_num: int = 2,
-    rel_den: int = 5,
 ) -> StreamingQuery:
     """s22: s21's online banded-MinHash detector with the x59 PRECISION
     GATE wired into the stream — the online counterpart of
@@ -405,10 +411,10 @@ def streaming_verified_near_dup(
     non-duplicate.  Here each batch additionally CONFIRMS candidates
     with the exact relative-edit-distance gate before the verdict is
     written: per doc, partner = its colliding bucket's minimum id, and
-    `is_dup` requires levenshtein(text, partner_text) * rel_den <=
-    max(len) * rel_num (x47's integer gate).  `is_candidate` keeps the
-    raw banded verdict so the stream doubles as its own x60-style gate
-    monitor (candidates vs confirmed, per batch).
+    `is_dup` requires levenshtein(text, partner_text) * _X47_REL_DEN <=
+    max(len) * _X47_REL_NUM (x47's integer gate, read from dedup).
+    `is_candidate` keeps the raw banded verdict so the stream doubles as
+    its own x60-style gate monitor (candidates vs confirmed, per batch).
 
     State = TWO compacted parquet tables under state_dir, promoted
     together by staged_merge: `buckets/`
@@ -425,7 +431,11 @@ def streaming_verified_near_dup(
     the minimum only — the one partner an online filter with 8-B
     bucket state can name.  The s22 oracle states exactly this rule;
     x59 remains the batch answer over ALL banded pairs."""
-    from fanstats_producer_spark.operators.dedup import streaming_band_keys
+    from fanstats_producer_spark.operators.dedup import (
+        _X47_REL_DEN,
+        _X47_REL_NUM,
+        streaming_band_keys,
+    )
 
     def live_texts(texts: DataFrame, buckets: DataFrame) -> DataFrame:
         # only CURRENT bucket minima can partner future docs
@@ -468,11 +478,11 @@ def streaming_verified_near_dup(
                 "ok",
                 (
                     F.levenshtein("text_a", "text_b").cast("long")
-                    * F.lit(rel_den)
+                    * F.lit(_X47_REL_DEN)
                     <= F.greatest(
                         F.length("text_a"), F.length("text_b"), F.lit(1)
                     ).cast("long")
-                    * F.lit(rel_num)
+                    * F.lit(_X47_REL_NUM)
                 ).cast("int"),
             )
             .groupBy("doc_id")
@@ -726,20 +736,19 @@ def upsert_latest_per_key(
     df: DataFrame,
     state_dir: str,
     checkpoint_dir: str,
-    key: str = "user_id",
 ) -> StreamingQuery:
-    """s09: foreachBatch upsert sink — maintain "latest event per key"
-    as a compacted parquet state table.
+    """s09: foreachBatch upsert sink — maintain "latest event per
+    user_id" as a compacted parquet state table.
 
     foreachBatch is the escape hatch for sinks Structured Streaming
     can't express declaratively (MERGE/upsert semantics): each
     micro-batch is a *batch* DataFrame, merged with the current state
-    by key, keeping the max-ts row.  Idempotent per batch (overwrite of
+    by user_id, keeping the max-ts row.  Idempotent per batch (overwrite of
     the compacted state), exactly-once via the checkpoint.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(
+    w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
 
@@ -938,14 +947,12 @@ def user_session_close_tws(
 DOCUMENT_SCHEMA = "doc_id long, ts timestamp, text string, lang string"
 
 
-def read_document_stream(
-    spark: SparkSession, landing_dir: str, schema: str = DOCUMENT_SCHEMA
-) -> DataFrame:
+def read_document_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     """Document landing-dir stream (the x-layer corpus made continuous)."""
-    return spark.readStream.schema(schema).json(landing_dir)
+    return spark.readStream.schema(DOCUMENT_SCHEMA).json(landing_dir)
 
 
-def corpus_prep_stream(docs: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+def corpus_prep_stream(docs: DataFrame) -> DataFrame:
     """s12: the streamable prefix of the x19 corpus pipeline — content
     dedup (watermark-bounded digest state), the x08/x09 language+quality
     gates, and chunking, all running continuously on arriving documents.
@@ -965,14 +972,13 @@ def corpus_prep_stream(docs: DataFrame, watermark: str = "30 minutes") -> DataFr
 
     deduped = (
         docs.withColumn("content_hash", F.sha2(F.col("text"), 256))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["content_hash"])
     )
     return chunk_documents(language_quality_gate(deduped), passthrough=("lang",))
 
 
-def deduped_by_content(events_or_docs: DataFrame, text_col: str = "props",
-                       watermark: str = "30 minutes") -> DataFrame:
+def deduped_by_content(events_or_docs: DataFrame, text_col: str = "props") -> DataFrame:
     """Streaming exact content dedup (the x03 hash dedup made
     continuous): first arrival of each content digest within the
     watermark wins; digest state evicts with the watermark, so memory
@@ -980,7 +986,7 @@ def deduped_by_content(events_or_docs: DataFrame, text_col: str = "props",
     with_hash = events_or_docs.withColumn(
         "content_hash", F.sha2(F.col(text_col).cast("string"), 256)
     )
-    return with_hash.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return with_hash.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["content_hash"]
     )
 
@@ -991,7 +997,6 @@ def streaming_psi_drift(
     state_dir: str,
     monitor_dir: str,
     checkpoint_dir: str,
-    bucket_width: float = 8.0,
 ) -> StreamingQuery:
     """s23: ONLINE distribution-drift monitor — x63's PSI gate running
     continuously against a static reference distribution.
@@ -1013,7 +1018,7 @@ def streaming_psi_drift(
     integer sum, so the monitor value-hash-matches the batch oracle."""
     bucketed = events.select(
         "event_type",
-        F.floor(F.col("value") / bucket_width).cast("long").alias("bucket"),
+        F.floor(F.col("value") / PSI_BUCKET_WIDTH).cast("long").alias("bucket"),
     )
 
     def emit(combined):

@@ -19,12 +19,9 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import atexit
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -33,11 +30,7 @@ sys.path.insert(0, ROOT)
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.io import TABLES, load
 from fanstats_producer_spark.operators.layout import ensure_layout
-from fanstats_producer_spark.session import (
-    get_spark,
-    scratch_root,
-    shuffle_partitions_for_bytes,
-)
+from fanstats_producer_spark.session import get_spark, shuffle_partitions_for_bytes
 from scripts.check_oracle import TESTDATA
 
 registry.load_all()
@@ -63,19 +56,9 @@ def main() -> int:
         if f.endswith(".parquet")
     )
     # mirror bench.py's session exactly, or the numbers aren't comparable
-    extra_conf: dict[str, str] = {}
-    scr = scratch_root()
-    if scr:
-        local = tempfile.mkdtemp(prefix="timekeys_local_", dir=scr)
-        atexit.register(shutil.rmtree, local, ignore_errors=True)
-        extra_conf = {
-            "spark.local.dir": local,
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={local}",
-        }
+    # (get_spark puts the local dir on the scratch, as for bench.py)
     spark = get_spark(
-        "time-keys",
-        shuffle_partitions=shuffle_partitions_for_bytes(total_bytes),
-        extra_conf=extra_conf,
+        "time-keys", shuffle_partitions=shuffle_partitions_for_bytes(total_bytes)
     )
     # same steady-state treatment as bench.py: warm codegen + the tables
     spark.range(1_000_000).selectExpr("sum(id)").collect()

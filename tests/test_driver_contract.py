@@ -1,10 +1,12 @@
 """Driver-contract invariants that live outside any single operator:
 the README's advertised query count must track the registry (ADVICE r9
-— the count drifted 227 vs 228 when q82 landed after the README edit).
+— the count drifted 227 vs 228 when q82 landed after the README edit),
+and a default no caller overrides is a constant, stated once.
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -24,3 +26,168 @@ def test_readme_count_matches():
         f"README claims {m.group(0)} but registry has {n} keys — "
         "update the README count"
     )
+
+
+# --- Defaulted-parameter audit ------------------------------------------------
+# A defaulted parameter of a package function (not _pbshim/) that no call
+# in the package, scripts/, perfbench/, bench.py or __spark_entry__.py sets,
+# by keyword or by position, is a constant in disguise: state it once as a
+# module constant (or a literal, for a column name) instead.  Calls are
+# matched by function name (`f(...)`, `mod.f(...)`, `partial(f, ...)`); a
+# `*args`/`**kwargs` call sets everything it could reach.  Only functions
+# some non-test code calls by name are audited, so constructors (a call
+# names the class) and functions nothing calls fall outside the rule.
+#
+# The exceptions are the seams tests set: a forced-path arm or a
+# parametrized case.  Each entry names a test that sets the parameter,
+# and the audit checks that test still does.
+_AUDIT_CALLERS = (
+    "fanstats_producer_spark",
+    "scripts",
+    "perfbench",
+    "bench.py",
+    "__spark_entry__.py",
+)
+_TEST_SET = {
+    "streaming.jobs.streaming_sequence_packing.seq_len":
+        "test_streaming.py::test_s27_packing_carries_offset_and_absorbs_replay",
+    "streaming.jobs.streaming_weighted_sample.k":
+        "test_streaming.py::test_s30_weighted_reservoir_slicing_invariant_and_replay_safe",
+    "streaming.jobs.streaming_quantile_monitor.k":
+        "test_streaming.py::test_s31_quantile_monitor_slicing_invariant_and_replay_safe",
+    "operators.dedup.minhash_lsh_pairs.jaccard_distance":
+        "test_xlayer.py::test_minhash_lsh_recall_vs_exact",
+    "operators.dedup.minhash_native_pairs.threshold":
+        "test_xlayer.py::test_minhash_native_recall_vs_exact",
+    "operators.dedup.connected_components.max_iterations":
+        "test_xlayer.py::test_connected_components_long_chain_pointer_jumping",
+    "operators.dedup.connected_components.driver_threshold":
+        "test_xlayer.py::test_connected_components_chain_and_clique",
+    "operators.dedup.edit_verified_pairs.rel_num":
+        "test_xlayer.py::test_edit_verify_zero_threshold_keeps_only_exact",
+    "operators.dedup.edit_verified_pairs.rel_den":
+        "test_xlayer.py::test_edit_verify_zero_threshold_keeps_only_exact",
+    "operators.dedup.semdedup.scorer":
+        "test_xlayer.py::test_semdedup_blas_scorer_matches_fold",
+    "operators.quality_checks._exact_tail_quantile.exact_tail_limit":
+        "test_corpus_extra.py::test_tail_quantile_approx_fallback",
+    "operators.multimodal.encode_wav.rate":
+        "test_xlayer.py::test_wav_codec_roundtrip_and_wave_module_interop",
+    "operators.multimodal.encode_avi.fps":
+        "test_xlayer.py::test_avi_codec_roundtrip_and_dispatch",
+    "operators.graph.pagerank_ranks.driver_threshold":
+        "test_corpus_extra.py::test_pagerank_driver_fast_path_matches_broadcast",
+    "operators.joins.interval_overlap_join.bin_size":
+        "test_scale.py::test_interval_overlap_join_bins_emit_each_pair_once",
+    "operators.corpus.prepare_corpus.chunk_size":
+        "test_xlayer.py::test_corpus_pipeline_stages",
+    "operators.corpus.prepare_corpus.stride":
+        "test_xlayer.py::test_corpus_pipeline_stages",
+    "operators.corpus.prepare_corpus.budget":
+        "test_xlayer.py::test_corpus_pipeline_stages",
+    "operators.similarity.lsh_simjoin.euclid_threshold":
+        "test_xlayer.py::test_lsh_simjoin_contains_closest_pairs",
+    "operators.similarity.decontam_blas.band":
+        "test_streaming.py::test_s26b_blas_arm_matches_hof_arm_bitwise",
+    "operators.similarity.mmr_rerank.driver_threshold":
+        "test_xlayer.py::test_x102_mmr_driver_fast_path_matches_distributed_arm",
+    "operators.sketches.sketch_topk.k":
+        "test_xlayer.py::test_topk_sketch_merge_matches_exact_counts",
+    "operators.llm_data.bpe_train.max_types":
+        "test_llm_data.py::test_bpe_train_prunes_type_table_before_collect",
+    "functions.chunking.pack_documents.budget":
+        "test_xlayer.py::test_packing_budget_respected",
+}
+
+
+def _py_files(*names: str):
+    for name in names:
+        path = REPO / name
+        files = [path] if path.is_file() else sorted(path.rglob("*.py"))
+        for f in files:
+            if "_pbshim" not in f.parts:
+                yield f, ast.parse(f.read_text())
+
+
+def _defaulted(fn: ast.FunctionDef):
+    """(name, position or None if keyword-only) per defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, first + i) for i, p in enumerate(pos[first:])]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+    return out
+
+
+def _calls(tree: ast.AST):
+    """(called name, call node, positional args) for every call."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        func, args = node.func, node.args
+        if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
+            func, args = args[0], args[1:]
+        name = getattr(func, "id", getattr(func, "attr", None))
+        if name:
+            yield name, node, args
+
+
+def _sets(fn: ast.FunctionDef, param: str, pos, node: ast.Call, args) -> bool:
+    if any(k.arg in (param, None) for k in node.keywords):
+        return True
+    if pos is None:
+        return False
+    if any(isinstance(a, ast.Starred) for a in args):
+        return True
+    bound = fn.args.posonlyargs + fn.args.args
+    method = bound and bound[0].arg in ("self", "cls")
+    return len(args) + (1 if method else 0) > pos
+
+
+def _unset_defaults() -> dict[str, tuple]:
+    """`module.function.param` -> (def node, position) for each defaulted
+    parameter the audit rule flags."""
+    calls: dict[str, list] = {}
+    for _, tree in _py_files(*_AUDIT_CALLERS):
+        for name, node, args in _calls(tree):
+            calls.setdefault(name, []).append((node, args))
+    found = {}
+    pkg = REPO / "fanstats_producer_spark"
+    for path, tree in _py_files("fanstats_producer_spark"):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if fn.name == "__init__" or fn.name not in calls:
+                continue
+            for param, pos in _defaulted(fn):
+                if not any(_sets(fn, param, pos, *c) for c in calls[fn.name]):
+                    found[f"{mod}.{fn.name}.{param}"] = (fn, pos)
+    return found
+
+
+def test_every_defaulted_parameter_has_a_caller_that_sets_it():
+    found = _unset_defaults()
+    unlisted = sorted(set(found) - set(_TEST_SET))
+    assert not unlisted, (
+        f"{len(unlisted)} defaulted parameters no non-test caller sets; "
+        "make each a module constant (or a literal column name):\n"
+        + "\n".join(unlisted)
+    )
+    assert len(_TEST_SET) <= 24
+    stale = sorted(set(_TEST_SET) - set(found))
+    assert not stale, f"allowlisted but set by a non-test caller: {stale}"
+    for key, where in _TEST_SET.items():
+        fn, pos = found[key]
+        param = key.rsplit(".", 1)[1]
+        file, test = where.split("::")
+        tree = ast.parse((REPO / "tests" / file).read_text())
+        body = [
+            t for t in ast.walk(tree)
+            if isinstance(t, ast.FunctionDef) and t.name == test
+        ]
+        assert body, f"{key}: {where} does not exist"
+        assert any(
+            name == fn.name and _sets(fn, param, pos, node, args)
+            for name, node, args in _calls(body[0])
+        ), f"{key}: {where} no longer sets it"

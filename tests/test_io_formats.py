@@ -5,9 +5,12 @@ partition discovery, and a hypothesis property for NDJSON round-trips.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
 from conftest import SF_DIR
 
@@ -159,3 +162,50 @@ try:
             assert sorted(map(tuple, back.collect())) == sorted(rows)
 except ImportError:  # pragma: no cover
     pass
+
+
+_TS_US = [1_700_000_000_123_456, 1_700_000_060_000_001, 1_700_086_400_999_999]
+
+
+@pytest.mark.parametrize(
+    "arrow_type, raw_type",
+    [
+        (pa.timestamp("ns"), LongType()),
+        (pa.timestamp("us"), TimestampNTZType()),
+        (pa.timestamp("us", tz="UTC"), TimestampType()),
+    ],
+    ids=["nanos", "ntz-micros", "utc-micros"],
+)
+def test_events_ts_flavours_load_and_stream_alike(
+    spark, tmp_path, arrow_type, raw_type
+):
+    """Each events.ts flavour a fixture generator has shipped lands as
+    the same UTC microsecond TIMESTAMP through io.load and through the
+    drained events stream (driver_entries._read_events_stream)."""
+    from fanstats_producer_spark.streaming.driver_entries import (
+        _drain_memory,
+        _read_events_stream,
+    )
+
+    scale = 1000 if arrow_type.unit == "ns" else 1
+    table = pa.table(
+        {
+            "event_id": pa.array(range(len(_TS_US)), pa.int64()),
+            "ts": pa.array([t * scale for t in _TS_US], arrow_type),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    sf_dir = str(tmp_path)
+    batch = load(spark, sf_dir, "events")  # pins nanosAsLong
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
+    assert raw == raw_type  # the case reaches its own branch
+    stream = _drain_memory(spark, _read_events_stream(spark, sf_dir), "append")
+
+    def micros(df):
+        assert df.schema["ts"].dataType == TimestampType()
+        return sorted(
+            tuple(r)
+            for r in df.select("event_id", F.unix_micros("ts")).collect()
+        )
+
+    assert micros(batch) == micros(stream) == list(enumerate(_TS_US))

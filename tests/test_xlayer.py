@@ -527,10 +527,7 @@ def test_minhash_skew_arms_identical_and_wide(spark):
 def test_connected_components_chain_and_clique(spark):
     """A chain a-b-c-d collapses to one cluster even though a-d never
     paired directly (transitive near-dup), separate clique separate."""
-    from fanstats_producer_spark.operators.dedup import (
-        connected_components,
-        dedup_corpus,
-    )
+    from fanstats_producer_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2, 0.9), (2, 3, 0.9), (3, 4, 0.9), (10, 11, 0.8)],
@@ -546,12 +543,6 @@ def test_connected_components_chain_and_clique(spark):
         for r in connected_components(pairs, driver_threshold=None).collect()
     }
     assert got_dist == want
-
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in [1, 2, 3, 4, 10, 11, 99]], "doc_id long, text string"
-    )
-    kept = sorted(r.doc_id for r in dedup_corpus(docs, pairs).collect())
-    assert kept == [1, 10, 99]  # one rep per cluster + the unpaired doc
 
 
 def test_connected_components_long_chain_pointer_jumping(spark):
