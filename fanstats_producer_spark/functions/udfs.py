@@ -21,7 +21,7 @@ from fanstats_producer_spark.registry import query
 
 
 # --- u01: scalar Python UDF ---------------------------------------------------
-@F.udf(returnType=StringType())
+@F.udf(returnType=StringType(), useArrow=False)
 def _shout(s: str | None) -> str | None:
     return None if s is None else s.upper() + "!"
 

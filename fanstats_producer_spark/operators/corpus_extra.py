@@ -717,7 +717,7 @@ def x72_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snapshots are parquet keyed by doc_id: the diff is ONE co-partitioned
 # full-outer join on the key comparing 32-byte content digests — never
 # the texts — plus a map-side-combinable rollup; with both snapshots
-# bucketed by doc_id (operators/skew.py write_bucketed) the join is
+# written bucketed by doc_id (DataFrameWriter.bucketBy) the join is
 # exchange-free.
 @query(
     "x73_snapshot_diff",

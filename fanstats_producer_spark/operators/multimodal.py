@@ -447,45 +447,6 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     return encode_png(resized)
 
 
-def read_binary_assets(
-    spark: SparkSession,
-    asset_dir: str,
-    glob: str | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Ingest raw media files as a binary-column DataFrame via Spark's
-    built-in `binaryFile` source — the on-disk half of the T7 column
-    model (with_payload manufactures payloads from text; this reads
-    real files: images, audio, video stills).
-
-    Columns: (path, modificationTime, length, content binary).  At
-    100 TB the wins are source-side: `pathGlobFilter` prunes by
-    extension during listing, a `length` predicate is evaluated against
-    file metadata (oversized media never reaches an executor), and
-    `recursiveFileLookup` walks nested asset layouts without a manifest.
-    Output feeds extract_features / mapInPandas unchanged.
-    """
-    reader = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-    )
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(asset_dir)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= max_bytes)
-    return df.select(
-        F.col("path"),
-        F.col("length").cast("long").alias("n_bytes"),
-        F.col("content").alias("payload"),
-        F.struct(
-            F.element_at(F.split(F.col("path"), r"\."), -1).alias("format"),
-            F.col("length").cast("long").alias("n_bytes"),
-            F.col("modificationTime").alias("modified"),
-        ).alias("meta"),
-    )
-
-
 # --- x42: video frame sampling (T7 temporal-media arm) --------------------------
 # A video stage samples every S-th frame before feature extraction (the
 # standard decode-cost lever).  x42 treats the payload as fixed-size

@@ -144,10 +144,10 @@ def x21_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # words (m=65536 bits, k=4) it broadcasts to the probe side — the
 # semi-join-reduction primitive that drops most of a 100 TB fact scan
 # before its shuffle.  Catalyst's own runtime version of this exists
-# behind spark.sql.optimizer.runtime.bloomFilter.* (see
-# skew.runtime_bloom_filters); this operator is the PORTABLE, persistable
-# arm: identical md5 bit positions on any engine, so a filter built by
-# Spark today can gate a different system's scan tomorrow.
+# behind spark.sql.optimizer.runtime.bloomFilter.*; this operator is the
+# PORTABLE, persistable arm: identical md5 bit positions on any engine,
+# so a filter built by Spark today can gate a different system's scan
+# tomorrow.
 # FP math at the registered shape: n≈1.1k keys, m=65536, k=4 →
 # (1-e^{-kn/m})^4 ≈ 1e-5, so the fixture probe sees zero false
 # positives; the pytest shrinks m to force and count FPs.

@@ -6,9 +6,6 @@ nba.yaml:1-7, platforms.yaml:1-5).  Handlers dispatch on version
 (main.py:170, 233) and reject unknown versions — the reference `raise`s
 a bare string there (main.py:196-200, 241), which is itself a TypeError;
 we raise real ValueErrors (SURVEY.md §2A quirks note).
-
-Topics become a small broadcast-ready dimension DataFrame: the Spark
-mapping of the reference's config-driven topic loop (main.py:214-217).
 """
 
 from __future__ import annotations
@@ -16,11 +13,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import yaml
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from fanstats_producer_spark.io import local_frame
 
 SUPPORTED_VERSIONS = ("1.0",)
 
@@ -89,17 +81,3 @@ def load_platforms(path: str) -> PlatformsConfig:
     v = _check_version(version_doc.get("version"), "platformfile")
     return PlatformsConfig(version=v, platforms=list(data.get("Platforms") or []))
 
-
-def topics_dimension(spark: SparkSession, cfgs: list[DataFileConfig]) -> DataFrame:
-    """Topics + alias expansion as a broadcastable dimension DataFrame —
-    the alias IN-list predicate the reference loads but never uses
-    (main.py:173, nba.yaml:6-7), made queryable."""
-    rows = [
-        dict(topic=c.topic, type=c.type, partition_key=c.partition_key, alias=alias)
-        for c in cfgs
-        for alias in dict.fromkeys([c.topic, *c.aliases])
-    ]
-    df = local_frame(
-        spark, rows, "topic string, type string, partition_key string, alias string"
-    )
-    return F.broadcast(df)

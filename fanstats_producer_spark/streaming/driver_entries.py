@@ -423,9 +423,7 @@ def s05_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch, so the drained table holds the final per-window
     aggregates after AvailableNow finishes."""
     stream = _read_events_stream(spark, sf_dir)
-    counts = jobs.windowed_counts(
-        stream, window="1 day", watermark="30 minutes"
-    )
+    counts = jobs.windowed_counts(stream, window="1 day")
     return (
         _drain_memory(spark, counts, "update")
         .groupBy(
@@ -860,9 +858,7 @@ def s16_append_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result — exactly-once emission, not completeness, is append
     mode's contract."""
     stream = _read_events_stream(spark, sf_dir)
-    counts = jobs.windowed_counts(
-        stream, window="1 hour", watermark="30 minutes"
-    )
+    counts = jobs.windowed_counts(stream, window="1 hour")
     return _drain_memory(spark, counts, "append", tick=True).select(
         F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -887,7 +883,7 @@ def s15_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     default is an OOM, and this entry proves the engine runs unchanged
     on the spill-to-disk provider."""
     stream = _read_events_stream(spark, sf_dir)
-    counts = jobs.windowed_counts(stream, window="1 day", watermark="30 minutes")
+    counts = jobs.windowed_counts(stream, window="1 day")
     # 2 partitions, not the drain-default 8: RocksDB pays a native DB
     # instance + snapshot upload PER partition per batch (measured 12 s
     # at n=8 vs ~1 s at n=2 for identical results) — at 100 TB that
@@ -998,8 +994,8 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
         # MIN across the two operators, so a lagging source holds the line
         # (a single post-union watermark would track the global max and drop
         # the lagging source's rows as late once batches separate)
-        unioned = clicks.withWatermark("ts", "30 minutes").union(
-            purchases.withWatermark("ts", "30 minutes")
+        unioned = clicks.withWatermark("ts", jobs.WATERMARK).union(
+            purchases.withWatermark("ts", jobs.WATERMARK)
         )
         agg = unioned.groupBy(
             F.window("ts", "1 day").alias("w"), "event_type"

@@ -249,11 +249,7 @@ def read_event_stream(
     return reader.json(landing_dir)
 
 
-def windowed_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = WATERMARK,
-) -> DataFrame:
+def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     """s05/s15/s16: watermarked tumbling window aggregation.
     sum_value uses the split-accumulator exact sum (functions/num.py):
     in streaming the partials land in the state store per window, and
@@ -262,7 +258,7 @@ def windowed_counts(
     from fanstats_producer_spark.functions.num import dsum_pos
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count("*").alias("n"), dsum_pos("value").alias("sum_value"))
         .select("w.start", "w.end", "event_type", "n", "sum_value")
@@ -277,14 +273,6 @@ def sessionized(events: DataFrame) -> DataFrame:
         .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select("w.start", "w.end", "user_id", "n_events")
-    )
-
-
-def deduped_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """s06: streaming dedup bounded by the watermark (state stays
-    finite — the 100 TB requirement for any stateful op)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
     )
 
 
@@ -1097,7 +1085,7 @@ def streaming_bloom_dedup(
 ) -> StreamingQuery:
     """s25: approximate streaming dedup with CONSTANT state — the x79
     Bloom sketch maintained online.  Every exact streaming dedup
-    (s06/s11/s21) keeps state proportional to distinct content; at
+    (s11/s21) keeps state proportional to distinct content; at
     100 TB/day that index eventually doesn't fit anywhere.  The Bloom
     arm fixes state at m bits FOREVER and accepts a quantified false-
     positive rate (drops a small amount of novel content) in exchange —

@@ -1,7 +1,8 @@
 """Driver-contract invariants that live outside any single operator:
 the README's advertised query count must track the registry (ADVICE r9
 — the count drifted 227 vs 228 when q82 landed after the README edit),
-and a default no caller overrides is a constant, stated once.
+the package imports without warnings, a default no caller overrides is
+a constant, stated once, and every package def runs from a program.
 """
 
 from __future__ import annotations
@@ -9,6 +10,8 @@ from __future__ import annotations
 import ast
 import pathlib
 import re
+import subprocess
+import sys
 
 from fanstats_producer_spark import registry
 
@@ -28,6 +31,22 @@ def test_readme_count_matches():
     )
 
 
+def test_registry_loads_without_warnings():
+    """Loading every query module warns nothing, so a real warning in a
+    tier-1 summary or a sweep log is never lost among known ones."""
+    registry.load_all()
+    out = subprocess.run(
+        [
+            sys.executable, "-W", "error::UserWarning", "-c",
+            "from fanstats_producer_spark import registry; "
+            "registry.load_all(); print(len(registry.QUERIES))",
+        ],
+        cwd=REPO, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) == len(registry.QUERIES) == 260
+
+
 # --- Defaulted-parameter audit ------------------------------------------------
 # A defaulted parameter of a package function (not _pbshim/) that no call
 # in the package, scripts/, perfbench/, bench.py or __spark_entry__.py sets,
@@ -36,7 +55,8 @@ def test_readme_count_matches():
 # matched by function name (`f(...)`, `mod.f(...)`, `partial(f, ...)`); a
 # `*args`/`**kwargs` call sets everything it could reach.  Only functions
 # some non-test code calls by name are audited, so constructors (a call
-# names the class) and functions nothing calls fall outside the rule.
+# names the class) fall outside the rule; a function nothing outside
+# tests/ reaches is the reachability audit's case (below).
 #
 # The exceptions are the seams tests set: a forced-path arm or a
 # parametrized case.  Each entry names a test that sets the parameter,
@@ -191,3 +211,134 @@ def test_every_defaulted_parameter_has_a_caller_that_sets_it():
             name == fn.name and _sets(fn, param, pos, node, args)
             for name, node, args in _calls(body[0])
         ), f"{key}: {where} no longer sets it"
+
+
+# --- Reachability audit -------------------------------------------------------
+# Every top-level function or class in the package (not _pbshim/) runs from
+# a program entry.  The roots are the registered @query builders,
+# module-level code (with decorators, defaults and base classes, so
+# pipeline's `__main__` guard reaches `main`), and everything scripts/,
+# perfbench/ (not its tests), bench.py and __spark_entry__.py reference.
+# A reached def reaches the names, attributes and import aliases it
+# references; a reached class reaches its methods.  Names match bare, as
+# the defaulted-parameter audit matches calls: a collision can keep a def
+# alive, but a live def is never flagged.  A def only tests reach is a
+# capability no program runs: delete it, or wire it into a program.
+#
+# The exceptions are the probes tests drive.  Each entry names a test
+# that calls the def, and the audit checks that test still does.
+_PROGRAMS = ("scripts", "perfbench", "bench.py", "__spark_entry__.py")
+_TEST_PROBES = {
+    "plans.checks.pushed_filters":
+        "test_plans.py::test_filter_pushdown_reaches_scan",
+    "plans.checks.read_schema":
+        "test_plans.py::test_column_pruning_reaches_scan",
+    "plans.checks.has_broadcast_join":
+        "test_plans.py::test_small_dim_join_broadcasts",
+    "plans.checks.has_sort_merge_join":
+        "test_plans.py::test_small_dim_join_broadcasts",
+    "plans.checks.n_shuffle_exchanges":
+        "test_plans.py::test_decontaminate_is_single_pass_inverted_index",
+    "plans.checks.partition_filters":
+        "test_plans.py::test_partition_pruning",
+    "plans.checks.scan_metrics":
+        "test_plans.py::test_partition_pruning",
+    "plans.checks.whole_stage_codegen_ids":
+        "test_plans.py::test_whole_stage_codegen_covers_agg",
+    "streaming.jobs.read_event_stream":
+        "test_streaming.py::test_stream_ingest_to_partitioned_sink",
+    "sources.ndjson.read_tweets":
+        "test_ingest.py::test_read_pinned_schema",
+}
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names(*nodes: ast.AST) -> set[str]:
+    """Every name, attribute and import alias the nodes reference."""
+    out = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out |= {n.name.rsplit(".", 1)[-1], n.asname or n.name}
+    return out
+
+
+def _import_time(stmts: list[ast.stmt]):
+    """The nodes a module evaluates when it is imported: all but def
+    bodies and import statements."""
+    for st in stmts:
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from st.decorator_list
+            yield from st.args.defaults
+            yield from filter(None, st.args.kw_defaults)
+        elif isinstance(st, ast.ClassDef):
+            yield from st.decorator_list + st.bases + st.keywords
+            yield from _import_time(st.body)
+        elif not isinstance(st, (ast.Import, ast.ImportFrom)):
+            yield st
+
+
+def _unreached() -> dict[str, ast.AST]:
+    """`module.def` -> node for each top-level package def no program
+    entry reaches."""
+    defs: dict[str, list] = {}
+    aliases: dict[str, set] = {}
+    roots: set[str] = set()
+    pkg = REPO / "fanstats_producer_spark"
+    for path, tree in _py_files("fanstats_producer_spark"):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for st in tree.body:
+            if isinstance(st, _DEF):
+                defs.setdefault(st.name, []).append((mod, st))
+                if "query" in _names(*st.decorator_list):
+                    roots.add(st.name)
+            elif isinstance(st, ast.ImportFrom):
+                for a in st.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(a.name)
+        roots |= _names(*_import_time(tree.body))
+    for path, tree in _py_files(*_PROGRAMS):
+        if "tests" not in path.relative_to(REPO).parts:
+            roots |= _names(tree)
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += aliases.get(name, ())
+            for _, node in defs.get(name, ()):
+                todo += _names(node)
+    return {
+        f"{mod}.{name}": node
+        for name, nodes in defs.items() if name not in reached
+        for mod, node in nodes
+    }
+
+
+def test_every_package_def_is_reached_from_a_program_entry():
+    found = _unreached()
+    unlisted = sorted(set(found) - set(_TEST_PROBES))
+    assert not unlisted, (
+        f"{len(unlisted)} package defs no key, producer run or script "
+        "reaches; delete each, or run it from a program:\n"
+        + "\n".join(unlisted)
+    )
+    assert len(_TEST_PROBES) <= 10
+    stale = sorted(set(_TEST_PROBES) - set(found))
+    assert not stale, f"allowlisted but reached or gone: {stale}"
+    for key, where in _TEST_PROBES.items():
+        file, test = where.split("::")
+        tree = ast.parse((REPO / "tests" / file).read_text())
+        body = [
+            t for t in ast.walk(tree)
+            if isinstance(t, ast.FunctionDef) and t.name == test
+        ]
+        assert body, f"{key}: {where} does not exist"
+        assert any(
+            name == found[key].name for name, _, _ in _calls(body[0])
+        ), f"{key}: {where} no longer calls it"

@@ -198,15 +198,14 @@ def _write_yaml(path, text):
     return str(path)
 
 
-def test_datafile_load(spark, tmp_path):
+def test_datafile_load(tmp_path):
     p = _write_yaml(
         tmp_path / "nba.yaml",
         "version: 1.0\n---\nTopic: NBA\nType: League\nAliases:\n  - National Basketball Association\n",
     )
     c = cfg.load_data_file(p)
     assert (c.topic, c.type, c.partition_key) == ("NBA", "League", "NBA")
-    dim = cfg.topics_dimension(spark, [c])
-    assert dim.count() == 2  # topic + 1 alias
+    assert c.aliases == ["National Basketball Association"]
 
 
 def test_team_type_requires_league(tmp_path):
@@ -625,21 +624,9 @@ def _mmr_landing(spark):
     return df
 
 
-def _topics_landing(spark):
-    c = cfg.DataFileConfig(
-        version="1.0", topic="NBA", type="League", aliases=["NBA", "Hoops"]
-    )
-    df = cfg.topics_dimension(spark, [c])
-    assert sorted(map(tuple, df.collect())) == [
-        ("NBA", "League", "NBA", "Hoops"),
-        ("NBA", "League", "NBA", "NBA"),
-    ]
-    return df
-
-
 # every frame the driver builds from Python rows: the three collectors'
-# scans and the driver arms of connected_components, PageRank and MMR,
-# plus the topics dimension; each case checks its values, then returns it
+# scans and the driver arms of connected_components, PageRank and MMR;
+# each case checks its values, then returns it
 _DRIVER_LANDINGS = {
     "Twitter": _twitter_landing,
     "Reddit": _reddit_landing,
@@ -647,7 +634,6 @@ _DRIVER_LANDINGS = {
     "union_find": _union_find_landing,
     "pagerank": _pagerank_landing,
     "mmr": _mmr_landing,
-    "topics": _topics_landing,
 }
 
 

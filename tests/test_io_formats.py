@@ -1,6 +1,6 @@
 """Source/sink format coverage (SURVEY.md §2B scans/sinks table):
-CSV and JSON round-trips, mergeSchema evolution, catalog tables with
-partition discovery, and a hypothesis property for NDJSON round-trips.
+CSV and JSON round-trips, mergeSchema evolution, and a hypothesis
+property for NDJSON round-trips.
 """
 
 from __future__ import annotations
@@ -15,10 +15,6 @@ from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 from conftest import SF_DIR
 
 from fanstats_producer_spark.io import load
-from fanstats_producer_spark.sources.catalog import (
-    crawl_landing_dir,
-    register_partitioned_table,
-)
 
 
 def test_csv_roundtrip(spark, tmp_path):
@@ -98,34 +94,6 @@ def test_merge_schema_evolution(spark, tmp_path):
     merged = spark.read.option("mergeSchema", True).parquet(out)
     assert set(merged.columns) == {"id", "old_col", "new_col", "batch"}
     assert merged.filter(F.col("new_col").isNull()).count() == 3
-
-
-def test_register_partitioned_table(spark, tmp_path):
-    ev = load(spark, SF_DIR, "events").withColumn("event_date", F.to_date("ts"))
-    register_partitioned_table(ev, "t_events", ["event_date"])
-    back = spark.table("t_events")
-    assert back.count() == ev.count()
-    assert "event_date" in back.columns
-    spark.sql("DROP TABLE t_events")
-
-
-def test_crawl_landing_dir_discovers_partitions(spark, tmp_path):
-    """P14: external table over a landed layout + MSCK-style discovery;
-    a re-crawl picks up partitions that arrived later."""
-    lake = str(tmp_path / "lake")
-    df1 = spark.range(5).select(F.col("id"), F.lit("x").alias("v"))
-    df1.write.json(lake + "/day=2024-01-01")
-    crawl_landing_dir(spark, lake, "t_landed")
-    assert spark.table("t_landed").count() == 5
-    # new partition lands outside Spark's writer → re-crawl discovers it
-    spark.range(3).select(F.col("id"), F.lit("y").alias("v")).write.json(
-        lake + "/day=2024-01-02"
-    )
-    crawl_landing_dir(spark, lake, "t_landed")
-    assert spark.table("t_landed").count() == 8
-    days = {r.day for r in spark.table("t_landed").select("day").distinct().collect()}
-    assert days == {"2024-01-01", "2024-01-02"}
-    spark.sql("DROP TABLE t_landed")
 
 
 # --- hypothesis: NDJSON round-trip property (SURVEY.md §5.5) --------------------

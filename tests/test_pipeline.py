@@ -151,55 +151,3 @@ def test_scd2_merge_closes_and_opens(spark):
         & (F.col("valid_to").isNull() | (F.lit("1993-01-01").cast("date") < F.col("valid_to")))
     )
     assert {(r.k, r.segment) for r in asof.collect()} == {(1, "AUTO"), (2, "BIKE")}
-
-
-def test_observed_metrics_batch(spark):
-    """observe() metrics are computed during the action — no second scan
-    — and report the ingest counters the reference printed to stdout."""
-    from fanstats_producer_spark.observability import with_observation
-
-    df = spark.range(100).selectExpr(
-        "CASE WHEN id % 10 = 0 THEN NULL ELSE id END AS id",
-        "CASE WHEN id % 4 = 0 THEN '' ELSE 'txt' END AS text",
-    )
-    observed, obs = with_observation(df, "ingest", text_col="text")
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["n_rows"] == 100
-    assert got["n_null_id"] == 10
-    assert got["n_empty_text"] == 25
-
-
-def test_observed_metrics_stream(spark, tmp_path):
-    """Streaming arm: the same metric exprs surface per micro-batch in
-    the progress event's observedMetrics."""
-    import time
-
-    from fanstats_producer_spark.observability import with_stream_metrics
-
-    staging = tmp_path / "staging"
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.range(50).selectExpr("id", "'t' AS text").coalesce(1).write.parquet(
-        str(staging)
-    )
-    # the file-stream source wants FILES in the landing dir (the s01
-    # staging trick), not a nested parquet directory
-    import shutil
-
-    part = next(staging.glob("part-*.parquet"))
-    shutil.copy(part, src / "batch0.parquet")
-    schema = spark.read.parquet(str(staging)).schema
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    metered = with_stream_metrics(stream, "ingest_stream", text_col="text")
-    q = (
-        metered.writeStream.format("noop")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progress = [p for p in q.recentProgress if p.get("observedMetrics")]
-    assert progress, "no progress event carried observedMetrics"
-    m = progress[-1]["observedMetrics"]["ingest_stream"]
-    assert m["n_rows"] == 50 and m["n_null_id"] == 0 and m["n_empty_text"] == 0

@@ -1,5 +1,5 @@
-"""Scale-lever tests (SURVEY.md §4): salting correctness, bucketed
-exchange-free joins, AQE behavior — the properties that matter at
+"""Scale-lever tests (SURVEY.md §4): AQE behavior, write layout, exact
+float sums, global ranks and percentiles — the properties that matter at
 100 TB, asserted at test scale from real plans and results.
 """
 
@@ -12,74 +12,7 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 
 from fanstats_producer_spark.io import load
-from fanstats_producer_spark.operators.skew import (
-    salted_groupby_count,
-    salted_join,
-    write_bucketed,
-)
 from fanstats_producer_spark.plans import checks
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    """99% of rows share one key — the hot-key shape."""
-    hot = spark.range(2000).select(F.lit(1).alias("k"), F.col("id").alias("v"))
-    tail = spark.range(20).select((F.col("id") + 2).alias("k"), F.col("id").alias("v"))
-    return hot.unionByName(tail)
-
-
-def test_salted_join_matches_plain_join(spark, skewed):
-    dim = spark.range(30).select(F.col("id").alias("k"), (F.col("id") * 10).alias("w"))
-    plain = skewed.join(dim, "k").groupBy("k").agg(F.count("*").alias("n"))
-    salted = salted_join(skewed, dim, "k").groupBy("k").agg(F.count("*").alias("n"))
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_rejects_right_outer(spark, skewed):
-    """Salting replicates the right side n_salts ways, so join types that
-    emit unmatched right rows would duplicate them — rejected up front."""
-    import pytest
-
-    dim = spark.range(30).select(F.col("id").alias("k"), (F.col("id") * 10).alias("w"))
-    for how in ("right", "full_outer", "full", "right_outer"):
-        with pytest.raises(ValueError, match="unsupported"):
-            salted_join(skewed, dim, "k", how=how)
-    # left-family types stay allowed (semi: one row per matching left row)
-    semi = salted_join(skewed, dim, "k", how="left_semi")
-    assert semi.count() == skewed.join(dim, "k", "left_semi").count()
-
-
-def test_salted_groupby_matches_plain(spark, skewed):
-    plain = skewed.groupBy("k").agg(F.count("*").cast("long").alias("n"))
-    salted = salted_groupby_count(skewed, "k")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Both sides bucketed by the key → sort-merge join with zero
-    shuffles (the plan must contain no Exchange)."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load(spark, SF_DIR, "orders")
-        lineitem = load(spark, SF_DIR, "lineitem")
-        write_bucketed(orders, "b_orders", "o_orderkey", n_buckets=8)
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem", "o_orderkey", n_buckets=8,
-        )
-        joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
-        plan = checks.explain_str(joined, "simple")
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: no shuffle on either side
-        # and it still computes the right thing
-        expected = lineitem.join(
-            orders, lineitem.l_orderkey == orders.o_orderkey
-        ).count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_aqe_coalesces_small_shuffle(spark):
@@ -122,99 +55,6 @@ def test_coalesce_controls_file_count(spark, tmp_path):
     assert len(glob.glob(out + "/part-*.parquet")) == 1
 
 
-def test_compact_partitions(spark, tmp_path):
-    """Small-files compaction: many files per partition → 1, same rows,
-    other partitions untouched by the dynamic overwrite."""
-    from fanstats_producer_spark.operators.maintenance import compact_partitions
-    import glob
-
-    lake = str(tmp_path / "lake")
-    ev = load(spark, SF_DIR, "events").withColumn("event_date", F.to_date("ts"))
-    # simulate many small files: 8 files per partition
-    ev.repartition(8).write.partitionBy("event_date").parquet(lake)
-    before_rows = spark.read.parquet(lake).count()
-    one_dir = sorted(glob.glob(lake + "/event_date=*"))[0]
-    assert len(glob.glob(one_dir + "/*.parquet")) > 1
-
-    compact_partitions(spark, lake, "event_date")
-    after = glob.glob(one_dir + "/*.parquet")
-    assert len(after) == 1
-    assert spark.read.parquet(lake).count() == before_rows
-
-
-def test_cluster_within_partitions_rowgroup_stats(spark, tmp_path):
-    """Clustered+sorted files → parquet min/max actually selective:
-    a value filter reads fewer rows than a full scan would."""
-    from fanstats_producer_spark.operators.maintenance import (
-        cluster_within_partitions,
-    )
-
-    import glob
-
-    out = str(tmp_path / "clustered")
-    ev = load(spark, SF_DIR, "events").withColumn("event_date", F.to_date("ts"))
-    cluster_within_partitions(ev, "event_date", ["user_id"]).write.parquet(out)
-    files = glob.glob(out + "/part-*.parquet")
-    assert len(files) == 4
-    # each file covers a narrow, mostly-disjoint user_id range → parquet
-    # min/max stats make a user_id predicate skip whole row groups
-    ranges = sorted(
-        tuple(
-            spark.read.parquet(f)
-            .agg(F.min("user_id"), F.max("user_id"))
-            .collect()[0]
-        )
-        for f in files
-    )
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next  # range-clustered, not interleaved
-
-
-def test_analyze_table_feeds_cbo(spark):
-    from fanstats_producer_spark.operators.maintenance import analyze_table
-
-    load(spark, SF_DIR, "customer").write.mode("overwrite").saveAsTable("t_stats")
-    analyze_table(spark, "t_stats", ["c_custkey", "c_mktsegment"])
-    desc = spark.sql("DESCRIBE EXTENDED t_stats c_custkey").collect()
-    info = {r.info_name: r.info_value for r in desc}
-    assert info.get("distinct_count") not in (None, "NULL")
-    spark.sql("DROP TABLE t_stats")
-
-
-def test_runtime_bloom_filter_prunes_before_shuffle(spark):
-    """With the lever on, a selective shuffle join injects a bloom probe
-    on the fact side (bloom_filter_agg build + might_contain probe in the
-    physical plan) and the join result is unchanged."""
-    import pyspark.sql.functions as F
-
-    from fanstats_producer_spark.operators.skew import runtime_bloom_filters
-
-    sf = "/root/testdata/sf0.01"
-    def q():
-        li = spark.read.parquet(f"{sf}/lineitem.parquet")
-        o = spark.read.parquet(f"{sf}/orders.parquet").filter(
-            F.col("o_totalprice") > 400000
-        )
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(F.count("*").alias("n"))
-        )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force shuffle join
-    try:
-        baseline = {(r.o_orderstatus, r.n) for r in q().collect()}
-        with runtime_bloom_filters(spark, application_side_threshold="0"):
-            df = q()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "bloom_filter_agg" in plan
-            assert "might_contain" in plan
-            assert {(r.o_orderstatus, r.n) for r in df.collect()} == baseline
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_interval_overlap_join_bins_emit_each_pair_once(spark):
     """Binned interval join: multi-bin spans emit one row per pair,
     half-open endpoints do not touch-overlap, disjoint bins still pair
@@ -237,54 +77,6 @@ def test_interval_overlap_join_bins_emit_each_pair_once(spark):
     # a2=[95,105): overlaps b11, b12 (spans bins 9-10, emitted once each)
     # a3=[200,210): NOT b13 (touch at 210)
     assert got == [(1, 10), (1, 11), (2, 11), (2, 12)]
-
-
-def test_zorder_layout_localizes_both_columns(spark, tmp_path):
-    """Z-ordered files cover hypercubes of the key space: the AVERAGE
-    per-file min/max span shrinks on BOTH columns (file boundaries are
-    row-count quantiles of the z curve, so a boundary-straddling file can
-    still span widely — locality is an aggregate property).  A
-    lexicographic sort leaves the second column spanning the full range
-    in EVERY file."""
-    import pyspark.sql.functions as F
-
-    from fanstats_producer_spark.operators.maintenance import zorder_by
-
-    grid = (
-        spark.range(64)
-        .selectExpr("id AS a")
-        .crossJoin(spark.range(64).selectExpr("id AS b"))
-    )
-    out = str(tmp_path / "z")
-    zorder_by(grid, ["a", "b"], n_files=16, bits=6).write.parquet(out)
-
-    spans = (
-        spark.read.parquet(out)
-        .withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg(
-            (F.max("a") - F.min("a")).alias("span_a"),
-            (F.max("b") - F.min("b")).alias("span_b"),
-        )
-        .collect()
-    )
-    assert len(spans) == 16
-    avg_a = sum(r.span_a for r in spans) / len(spans)
-    avg_b = sum(r.span_b for r in spans) / len(spans)
-    assert avg_a < 40, avg_a  # measured ~28.6; global span 63
-    assert avg_b < 32, avg_b  # measured ~19.4
-
-    # contrast: lexicographic clustering leaves b unpruned in every file
-    lex = str(tmp_path / "lex")
-    grid.repartitionByRange(16, "a", "b").sortWithinPartitions("a", "b").write.parquet(lex)
-    lex_spans = (
-        spark.read.parquet(lex)
-        .withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg((F.max("b") - F.min("b")).alias("span_b"))
-        .collect()
-    )
-    assert all(r.span_b == 63 for r in lex_spans)
 
 
 def test_dsum_pos_matches_decimal_dsum(spark):
@@ -516,47 +308,6 @@ try:
             .collect()
         }
         got = {r["g"]: r["pctl"] for r in sort_percentile(df, "g", "v", p).collect()}
-        assert got == want
-except ImportError:  # pragma: no cover
-    pass
-
-
-# --- hypothesis: salted join equals the plain join ------------------------------
-try:
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    @given(
-        left_keys=st.lists(st.integers(min_value=0, max_value=5), min_size=1, max_size=40),
-        right_keys=st.lists(st.integers(min_value=0, max_value=5), min_size=0, max_size=8),
-        n_salts=st.integers(min_value=2, max_value=8),
-        how=st.sampled_from(["inner", "left", "left_semi", "left_anti"]),
-    )
-    @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-    def test_salted_join_property(left_keys, right_keys, n_salts, how):
-        """Random skewed key sets, salt counts, and join types: the
-        salted join's multiset of result keys equals the plain join's."""
-        from collections import Counter
-
-        from fanstats_producer_spark.operators.skew import salted_join
-        from fanstats_producer_spark.session import get_spark
-
-        spark = get_spark("fanstats-tests")
-        left = spark.createDataFrame(
-            [(k, i) for i, k in enumerate(left_keys)], "k int, lv int"
-        )
-        right = spark.createDataFrame(
-            [(k, i * 10) for i, k in enumerate(right_keys)], "k int, rv int"
-        )
-        want = Counter(
-            tuple(r) for r in left.join(right, "k", how).select("k", "lv").collect()
-        )
-        got = Counter(
-            tuple(r)
-            for r in salted_join(left, right, "k", n_salts=n_salts, how=how)
-            .select("k", "lv")
-            .collect()
-        )
         assert got == want
 except ImportError:  # pragma: no cover
     pass

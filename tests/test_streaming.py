@@ -115,27 +115,16 @@ def test_watermark_drops_late_rows(spark, landing, tmp_path):
         _event(1, "2024-01-01T10:00:00Z"),
         _event(2, "2024-01-01T10:10:00Z"),
     ])
-    _run_sink(spark, landing, out, ckpt, window="30 minutes", watermark="30 minutes")
+    _run_sink(spark, landing, out, ckpt, window="30 minutes")
     # advance event time far ahead → watermark 13:30 persisted at ckpt
     _write_batch(landing, "b2.json", [_event(3, "2024-01-01T14:00:00Z")])
-    _run_sink(spark, landing, out, ckpt, window="30 minutes", watermark="30 minutes")
+    _run_sink(spark, landing, out, ckpt, window="30 minutes")
     # very late row, behind the persisted watermark
     _write_batch(landing, "b3.json", [_event(4, "2024-01-01T10:05:00Z")])
-    got = _run_sink(spark, landing, out, ckpt, window="30 minutes", watermark="30 minutes")
+    got = _run_sink(spark, landing, out, ckpt, window="30 minutes")
     closed = {(r.start.isoformat(), r.n) for r in got.collect()}
     assert ("2024-01-01T10:00:00", 2) in closed  # late event 4 dropped
     assert ("2024-01-01T10:00:00", 3) not in closed
-
-
-def test_stream_dedup_within_watermark(spark, landing):
-    _write_batch(landing, "b.json", [
-        _event(1, "2024-01-01T10:00:00Z"),
-        _event(1, "2024-01-01T10:01:00Z"),  # duplicate id within watermark
-        _event(2, "2024-01-01T10:02:00Z"),
-    ])
-    stream = jobs.read_event_stream(spark, str(landing))
-    got = _run_to_memory(spark, jobs.deduped_stream(stream), "s06_test", "append")
-    assert sorted(r.event_id for r in got.collect()) == [1, 2]
 
 
 def test_stateful_running_totals(spark, landing):
@@ -561,7 +550,7 @@ def test_append_window_emits_on_watermark_and_evicts(spark, landing):
     stream = jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1)
     got = _run_to_memory(
         spark,
-        jobs.windowed_counts(stream, window="1 hour", watermark="30 minutes"),
+        jobs.windowed_counts(stream, window="1 hour"),
         "s16_test",
         "append",
     )
@@ -688,7 +677,6 @@ def test_stateful_crash_recovery_parity(spark, landing, tmp_path):
         df = jobs.windowed_counts(
             jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1),
             window="1 hour",
-            watermark="30 minutes",
         )
         return (
             df.writeStream.format("parquet")
@@ -1358,35 +1346,36 @@ def test_streaming_audio_near_dup_shares_gate_machinery(
 
 
 def test_dedup_within_watermark_readmits_after_eviction(spark, landing):
-    """s06/s11 semantics pin: dropDuplicatesWithinWatermark only
-    guarantees dedup of occurrences within the watermark delay — once
-    the watermark passes a key's expiry the state evicts, and a much
-    later duplicate of the same key is RE-ADMITTED (the bounded-state
-    trade every watermark-bounded dedup makes).  A near duplicate
-    inside the delay stays dropped."""
+    """s11 semantics pin: dropDuplicatesWithinWatermark only guarantees
+    dedup of occurrences within the WATERMARK delay (30 minutes) — once
+    the watermark passes a digest's expiry the state evicts, and a much
+    later duplicate of the same content is RE-ADMITTED (the bounded-state
+    trade every watermark-bounded dedup makes).  A near duplicate inside
+    the delay stays dropped.  `_event` derives `props` from the event id,
+    so a repeated id is repeated content."""
     import os as _os
     import time as _time
 
     batches = {
-        # key 1 first seen; key 2 control
+        # key 1 first seen (digest expires 10:30); key 2 control
         "b1.json": [
             _event(1, "2024-01-01T10:00:00Z"),
             _event(2, "2024-01-01T10:01:00Z"),
         ],
-        # near-dup of key 1 inside the 10-min delay -> dropped; plus an
-        # advancing event (watermark -> 10:52)
+        # near-dup of key 1 inside the 30-min delay -> dropped; plus an
+        # advancing event (watermark -> 11:00)
         "b2.json": [
-            _event(1, "2024-01-01T10:05:00Z"),
-            _event(3, "2024-01-01T11:02:00Z"),
+            _event(1, "2024-01-01T10:15:00Z"),
+            _event(3, "2024-01-01T11:30:00Z"),
         ],
         # watermark advance only (eviction applies a batch AFTER the
         # watermark passes a key's expiry, so give it its own batch)
         "b3.json": [
-            _event(4, "2024-01-01T12:00:00Z"),
+            _event(4, "2024-01-01T12:30:00Z"),
         ],
         # far dup of key 1 after its state evicted -> re-admitted
         "b4.json": [
-            _event(1, "2024-01-01T12:01:00Z"),
+            _event(1, "2024-01-01T12:31:00Z"),
         ],
     }
     for i, (name, rs) in enumerate(batches.items()):
@@ -1394,78 +1383,13 @@ def test_dedup_within_watermark_readmits_after_eviction(spark, landing):
         t = _time.time() - 100 + i * 10
         _os.utime(landing / name, (t, t))
     stream = jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1)
-    deduped = jobs.deduped_stream(stream, watermark="10 minutes")
-    got = _run_to_memory(spark, deduped, "s06_readmit", "append")
+    got = _run_to_memory(spark, jobs.deduped_by_content(stream), "s11_readmit", "append")
     per_key = sorted(
         (r.event_id, str(r.ts)) for r in got.select("event_id", "ts").collect()
     )
     ids = [k for k, _ in per_key]
     # key 1 appears TWICE (original + re-admitted far dup), near-dup gone
     assert ids == [1, 1, 2, 3, 4]
-
-
-def test_streaming_query_listener_lifecycle(spark, landing):
-    """P16 observability, listener arm: a registered
-    StreamingQueryListener receives started / progress (with per-batch
-    row counts and the observe()-attached metrics) / terminated events
-    for a real drain — the hook a metrics shipper (CloudWatch-style,
-    main.tf's alarm posture) attaches to in production."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    from fanstats_producer_spark.observability import with_stream_metrics
-
-    events_seen = {"started": [], "progress": [], "terminated": []}
-
-    class Capture(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            events_seen["started"].append(event.id)
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            events_seen["progress"].append(
-                (p.numInputRows, dict(p.observedMetrics))
-            )
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            events_seen["terminated"].append(event.id)
-
-    listener = Capture()
-    spark.streams.addListener(listener)
-    try:
-        _write_batch(
-            landing,
-            "b1.json",
-            [_event(i, f"2024-01-01T10:0{i}:00Z") for i in range(4)],
-        )
-        stream = jobs.read_event_stream(spark, str(landing))
-        observed = with_stream_metrics(stream, "ingest")
-        q = (
-            observed.writeStream.format("memory")
-            .queryName("lst_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # listener events deliver asynchronously; wait for terminated
-        import time as _time
-
-        deadline = _time.time() + 30
-        while _time.time() < deadline and (
-            not events_seen["terminated"] or not events_seen["progress"]
-        ):
-            _time.sleep(0.1)
-    finally:
-        spark.streams.removeListener(listener)
-    assert events_seen["started"]
-    data_batches = [p for p in events_seen["progress"] if p[0] > 0]
-    assert sum(p[0] for p in data_batches) == 4  # all rows observed
-    # the observe() metrics ride the progress events
-    assert any("ingest" in m for _, m in data_batches)
-    assert events_seen["terminated"]
 
 
 def test_tws_batch_mode_matches_stream_drain(spark, landing):

@@ -916,49 +916,6 @@ def test_zscore_flags_planted_outlier(spark, tmp_path):
     assert all(abs(r.z_e4) > 3.0 * 1e4 for r in flagged)
 
 
-# --- T7: binaryFile asset ingestion ----------------------------------------------
-def test_binary_asset_ingestion(spark, tmp_path):
-    """Real files → binary column + typed metadata; glob prunes at
-    listing time, size cap filters on file metadata, and the frame
-    feeds the same mapInPandas feature stage as manufactured payloads."""
-    import os
-
-    from fanstats_producer_spark.operators.multimodal import (
-        read_binary_assets,
-    )
-
-    root = tmp_path / "assets" / "nested"
-    os.makedirs(root)
-    (root / "a.png").write_bytes(b"\x89PNG-fake-bytes")
-    (root / "b.png").write_bytes(b"\x89PNG" + b"x" * 10_000)  # oversized
-    (root / "c.wav").write_bytes(b"RIFF-fake")
-
-    df = read_binary_assets(
-        spark, str(tmp_path / "assets"), glob="*.png", max_bytes=1000
-    )
-    rows = df.collect()
-    assert len(rows) == 1  # c.wav pruned by glob, b.png by size
-    r = rows[0]
-    assert r.path.endswith("a.png")
-    assert r.meta.format == "png"
-    assert bytes(r.payload) == b"\x89PNG-fake-bytes"
-
-    # plumb into the shared feature stage (doc_id keyed on n_bytes here)
-    import pyspark.sql.functions as SF
-
-    from fanstats_producer_spark.operators.multimodal import extract_features
-
-    feats = (
-        df.select(SF.lit(1).alias("doc_id"), "payload")
-        .mapInPandas(
-            extract_features,
-            "doc_id long, n_bytes long, payload_sha string, head_byte long",
-        )
-        .collect()
-    )
-    assert feats[0].n_bytes == len(b"\x89PNG-fake-bytes")
-
-
 # --- x26: content-defined chunking ------------------------------------------------
 def test_cdc_chunking_shift_robust(spark):
     """The CDC selling point: a prefix edit disturbs only chunks before
