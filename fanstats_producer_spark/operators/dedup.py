@@ -30,6 +30,7 @@ from pyspark.storagelevel import StorageLevel as _SL
 #: iterative lineage-truncation checkpoints are DISK_ONLY too — label/
 #: rank vectors scale with the corpus (rationale: io.disk_checkpoint)
 _DISK_ONLY = _SL.DISK_ONLY
+from fanstats_producer_spark import registry as _registry
 from fanstats_producer_spark.registry import query
 
 
@@ -82,6 +83,18 @@ def with_shingles(df: DataFrame, k: int = 3) -> DataFrame:
         acc = F.zip_with(acc, F.slice(toks, j + 1, n), lambda x, y: F.concat_ws(" ", x, y))
     shingles = F.slice(acc, 1, F.greatest(n - (k - 1), F.lit(0)))
     return base.withColumn("shingles", F.array_distinct(shingles)).drop("__toks")
+
+
+def _shingles_sql(k: int) -> str:
+    """The DuckDB twin of with_shingles: the distinct k-token shingles
+    of a `toks` token list, as one expression (each oracle keeps its
+    own FROM clause and carried columns)."""
+    words = " || ' ' || ".join(
+        f"toks[i+{j}]" if j else "toks[i]" for j in range(k)
+    )
+    return f"""list_distinct(list_transform(
+               range(1, greatest(len(toks) - {k - 2}, 1)),
+               i -> {words}))"""
 
 
 # Posting lists at or below this df expand pairs map-side (one array
@@ -187,10 +200,7 @@ _X04_K = 3
     "x04_neardup_jaccard",
     oracle=f"""
     WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
+      SELECT doc_id, {_shingles_sql(_X04_K)} AS shingles
       FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
     post AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     sizes AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
@@ -410,22 +420,27 @@ def x04c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: every product a_i * w below 2^62 (no signed-64 overflow on any
 #: engine) while leaving component collisions at the harmless ~1/2^31.
 _MH_P = 2147483647
-#: Signature geometry shared by the batch signature (minhash_native_pairs)
-#: and the per-row stream signature (streaming_band_keys): 64 components
-#: banded 16 x 4 over word 3-shingles.  Both read these, so the two
-#: formulations cannot drift apart; the x04d oracle states the same
-#: numbers as SQL literals.
+#: Signature geometry shared by the batch signature (minhash_native_pairs),
+#: the per-row stream signature (streaming_band_keys) and the oracle
+#: chain (_MH_CHAIN): 64 components banded 16 x 4 over word 3-shingles.
+#: All three read these, so the formulations cannot drift apart.
 _MH_HASHES = 64
 _MH_BANDS = 16
 _MH_K = 3
+#: a_i = (i * _MH_A_MUL + _MH_A_ADD) mod P and b_i likewise: the Knuth
+#: multiplier scrambles i into a_i.  _mh_ab and _MH_CHAIN read these.
+_MH_A_MUL, _MH_A_ADD = 2654435761, 1
+_MH_B_MUL, _MH_B_ADD = 40503, 12345
 
 
 def _mh_ab(i: int) -> tuple[int, int]:
     """Per-component multiplier/offset of the universal hash family
-    h_i(w) = (a_i * w + b_i) mod P.  The Knuth multiplier scrambles i
-    into a_i; none of the first 1024 a_i are 0 mod P (asserted in
-    tests).  MUST stay bit-identical to the SQL oracle's formula."""
-    return (i * 2654435761 + 1) % _MH_P, (i * 40503 + 12345) % _MH_P
+    h_i(w) = (a_i * w + b_i) mod P; none of the first 1024 a_i are
+    0 mod P (asserted in tests)."""
+    return (
+        (i * _MH_A_MUL + _MH_A_ADD) % _MH_P,
+        (i * _MH_B_MUL + _MH_B_ADD) % _MH_P,
+    )
 
 
 def _mh_est(sig_a: str, sig_b: str):
@@ -569,37 +584,44 @@ def minhash_native_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     return cands
 
 
-# The oracle reproduces the signature bit-for-bit (md5-derived word mod
-# P, same universal-hash constants) and does banding by joining on the raw
-# band r-tuples — band-hash equality on the Spark side is tuple equality
-# here, so the candidate sets agree modulo a 64-bit hash collision.
+#: The DuckDB twin of minhash_native_pairs' signature and banding, as
+#: (CTE name, body) pairs: shingles (`sh`), md5-derived words mod P
+#: (`post`), the _MH_HASHES universal-hash minima per doc (`sig`, rolled
+#: up into `sigl`), and the _MH_BANDS band r-tuples (`bands`).  x04d,
+#: s21 and s22 state it as one WITH list (_MH_CHAIN_SQL);
+#: scripts/scale_closure_check.py stages each body as a temp table of
+#: the same name.
+_MH_CHAIN = (
+    ("sh", f"""SELECT doc_id, {_shingles_sql(_MH_K)} AS shingles
+      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+      WHERE len(toks) >= {_MH_K}"""),
+    ("post", f"""SELECT doc_id,
+             CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % {_MH_P}
+               AS wm
+      FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh)"""),
+    ("sig", f"""SELECT doc_id, i,
+             MIN(((i * {_MH_A_MUL} + {_MH_A_ADD}) % {_MH_P} * wm
+                  + (i * {_MH_B_MUL} + {_MH_B_ADD}) % {_MH_P}) % {_MH_P}) AS h
+      FROM post CROSS JOIN range({_MH_HASHES}) AS t(i)
+      GROUP BY doc_id, i"""),
+    ("sigl", "SELECT doc_id, list(h ORDER BY i) AS sig FROM sig GROUP BY doc_id"),
+    ("bands", "SELECT doc_id, b, " + ", ".join(
+        f"sig[{_MH_HASHES // _MH_BANDS} * b + {j}] AS v{j}"
+        for j in range(1, _MH_HASHES // _MH_BANDS + 1)
+    ) + f"""
+      FROM sigl CROSS JOIN range({_MH_BANDS}) AS t(b)"""),
+)
+_MH_CHAIN_SQL = ",\n    ".join(f"{n} AS (\n      {b})" for n, b in _MH_CHAIN)
+
+
+# The oracle reproduces the signature bit-for-bit (_MH_CHAIN) and does
+# banding by joining on the raw band r-tuples — band-hash equality on
+# the Spark side is tuple equality here, so the candidate sets agree
+# modulo a 64-bit hash collision.
 @query(
     "x04d_minhash_native",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-      WHERE len(toks) >= 3),
-    post AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % 2147483647
-               AS wm
-      FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh)),
-    sig AS (
-      SELECT doc_id, i,
-             MIN(((i * 2654435761 + 1) % 2147483647 * wm
-                  + (i * 40503 + 12345) % 2147483647) % 2147483647) AS h
-      FROM post CROSS JOIN range(64) AS t(i)
-      GROUP BY doc_id, i),
-    sigl AS (
-      SELECT doc_id, list(h ORDER BY i) AS sig FROM sig GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, b, sig[4 * b + 1] AS v1, sig[4 * b + 2] AS v2,
-             sig[4 * b + 3] AS v3, sig[4 * b + 4] AS v4
-      FROM sigl CROSS JOIN range(16) AS t(b)),
+    oracle=f"""
+    WITH {_MH_CHAIN_SQL},
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
       FROM bands a JOIN bands c
@@ -609,7 +631,8 @@ def minhash_native_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     est AS (
       SELECT id_a, id_b,
              round(len(list_filter(list_zip(sa.sig, sb.sig),
-                                   p -> p[1] = p[2])) / 64.0, 6) AS est_jaccard
+                                   p -> p[1] = p[2])) / {_MH_HASHES}.0, 6)
+               AS est_jaccard
       FROM cand
       JOIN sigl sa ON sa.doc_id = id_a
       JOIN sigl sb ON sb.doc_id = id_b)
@@ -741,46 +764,33 @@ def connected_components(
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
-# Deterministic despite being iterative (exact pairs + min-label
-# convergence), so it IS oracle-checkable: the DuckDB side re-derives the
-# x04 pair set and closes it with a recursive transitive-reachability CTE
-# (closure size is Σ component², fine for near-dup graphs whose components
-# are tiny cliques/stars — the same property that bounds our iteration
-# count).
-@query(
-    "x04e_dedup_clusters",
-    oracle=f"""
-    WITH RECURSIVE sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-    post AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-      FROM post a JOIN post b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-      -- quantize-then-compare, exactly like the Spark side's qint and
-      -- x04's own oracle: a knife-edge ratio in [t - 5e-7, t) must land
-      -- on the same side in both engines
-      WHERE CAST(floor(CAST(n_inter AS DOUBLE)
-                       / (sa.n_sh + sb.n_sh - n_inter) * 1e6 + 0.5)
-                 AS BIGINT) >= {int(_X04_THRESHOLD * 1e6)}),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
+#: The DuckDB twin of connected_components over a `pairs(id_a, id_b)`
+#: CTE: undirected `edges` (_EDGES_SQL), then the recursive
+#: transitive closure `reach(node, r)`, every node with every node it
+#: reaches.  x04e, x04f, x59, x61 and x96 take MIN(r) per node as the
+#: cluster id; scripts/scale_closure_check.py splits an oracle at this
+#: text to swap in an iterative closure at scale.
+_EDGES_SQL = """SELECT id_a AS src, id_b AS dst FROM pairs
+      UNION SELECT id_b, id_a FROM pairs"""
+_CLOSURE_SQL = f"""edges AS (
+      {_EDGES_SQL}),
     reach(node, r) AS (
       SELECT src, src FROM edges
       UNION
-      SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.node)
+      SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.node)"""
+
+
+# Deterministic despite being iterative (exact pairs + min-label
+# convergence), so it IS oracle-checkable: the DuckDB side takes the
+# registered x04 pair set and closes it with _CLOSURE_SQL (closure size
+# is Σ component², fine for near-dup graphs whose components are tiny
+# cliques/stars — the same property that bounds our iteration count).
+@query(
+    "x04e_dedup_clusters",
+    oracle=f"""
+    WITH RECURSIVE pairs AS (
+      SELECT id_a, id_b FROM ({_registry.ORACLE['x04_neardup_jaccard']})),
+    {_CLOSURE_SQL}
     SELECT node AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
     FROM reach GROUP BY node ORDER BY doc_id
     """,
@@ -818,13 +828,7 @@ _X04F_THRESHOLD = 0.35
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM v a JOIN v b ON a.vec_id < b.vec_id
       WHERE list_cosine_similarity(a.v, b.v) >= {_X04F_THRESHOLD}),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    reach(node, r) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.node),
+    {_CLOSURE_SQL},
     cl AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node)
     SELECT v.vec_id AS doc_id,
            CAST(COALESCE(cl.cluster_id, v.vec_id) AS BIGINT) AS cluster_id,
@@ -895,8 +899,6 @@ def x04f_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # already have bit-exact SQL mirrors, so the metric itself is fully
 # oracle-checkable: the oracle simply composes the two registered
 # queries (pulled from the registry at import time — no duplicated SQL).
-from fanstats_producer_spark import registry as _registry
-
 
 def _x45_oracle() -> str:
     x04 = _registry.ORACLE["x04_neardup_jaccard"]
@@ -971,6 +973,14 @@ def x45_neardup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark's on any input.
 
 
+#: x47's relative-edit-distance gate, edit_dist / maxlen <= 2/5, as an
+#: integer compare.  The batch gate (edit_verified_pairs), the online
+#: one (jobs.streaming_verified_near_dup, s22) and the x47 and s22
+#: oracles all read it.
+_X47_REL_NUM = 2
+_X47_REL_DEN = 5
+
+
 def _x47_oracle() -> str:
     x04d = _registry.ORACLE["x04d_minhash_native"]
     return f"""
@@ -986,17 +996,9 @@ def _x47_oracle() -> str:
            CAST(edit_dist AS BIGINT) AS edit_dist,
            CAST(floor(edit_dist * 1e6 / maxlen + 0.5) AS BIGINT) AS rel_edit_e6
     FROM p
-    WHERE 5 * edit_dist <= 2 * maxlen
+    WHERE {_X47_REL_DEN} * edit_dist <= {_X47_REL_NUM} * maxlen
     ORDER BY id_a, id_b
     """
-
-
-#: x47's relative-edit-distance gate, edit_dist / maxlen <= 2/5, as an
-#: integer compare.  The batch gate (edit_verified_pairs) and the online
-#: one (jobs.streaming_verified_near_dup, s22) both read it; the x47 and
-#: s22 oracles state it as SQL literals.
-_X47_REL_NUM = 2
-_X47_REL_DEN = 5
 
 
 def edit_verified_pairs(
@@ -1077,11 +1079,10 @@ def x47_edit_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-hash-checked end to end.
 
 
-def _x52_oracle() -> str:
-    x04e = _registry.ORACLE["x04e_dedup_clusters"]
-    return f"""
-    WITH cl AS (SELECT doc_id, cluster_id FROM ({x04e})),
-    q AS (
+#: The DuckDB twin of keep_best over a `cl(doc_id, cluster_id)` CTE: the
+#: integer ttr score per doc (`q`), members ranked per cluster
+#: (`ranked`), then one row per cluster.  x52, x59 and x96 end with it.
+_KEEP_BEST_SQL = """q AS (
       SELECT doc_id,
              CAST(floor(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
                         * 1e6 + 0.5) AS BIGINT) AS ttr_e6
@@ -1091,13 +1092,20 @@ def _x52_oracle() -> str:
              row_number() OVER (PARTITION BY cl.cluster_id
                                 ORDER BY q.ttr_e6 DESC, cl.doc_id) AS rn
       FROM cl JOIN q USING (doc_id))
-    SELECT cluster_id,
+    SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
            MIN(CASE WHEN rn = 1 THEN doc_id END) AS kept_doc_id,
            MIN(CASE WHEN rn = 1 THEN ttr_e6 END) AS kept_ttr_e6,
            COUNT(*) AS n_members
     FROM ranked
     GROUP BY cluster_id
-    ORDER BY cluster_id
+    ORDER BY cluster_id"""
+
+
+def _x52_oracle() -> str:
+    x04e = _registry.ORACLE["x04e_dedup_clusters"]
+    return f"""
+    WITH cl AS (SELECT doc_id, cluster_id FROM ({x04e})),
+    {_KEEP_BEST_SQL}
     """
 
 
@@ -1153,32 +1161,10 @@ def x52_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _x59_oracle() -> str:
     x47 = _registry.ORACLE["x47_edit_verify"]
     return f"""
-    WITH RECURSIVE vp AS (SELECT id_a, id_b FROM ({x47})),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM vp
-      UNION SELECT id_b, id_a FROM vp),
-    reach(node, r) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.node),
+    WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ({x47})),
+    {_CLOSURE_SQL},
     cl AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node),
-    q AS (
-      SELECT doc_id,
-             CAST(floor(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-                        * 1e6 + 0.5) AS BIGINT) AS ttr_e6
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-    ranked AS (
-      SELECT cl.cluster_id, cl.doc_id, q.ttr_e6,
-             row_number() OVER (PARTITION BY cl.cluster_id
-                                ORDER BY q.ttr_e6 DESC, cl.doc_id) AS rn
-      FROM cl JOIN q USING (doc_id))
-    SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
-           MIN(CASE WHEN rn = 1 THEN doc_id END) AS kept_doc_id,
-           MIN(CASE WHEN rn = 1 THEN ttr_e6 END) AS kept_ttr_e6,
-           COUNT(*) AS n_members
-    FROM ranked
-    GROUP BY cluster_id
-    ORDER BY cluster_id
+    {_KEEP_BEST_SQL}
     """
 
 
@@ -1196,15 +1182,10 @@ def x59_verified_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- x60: what the gate buys (x45-style monitor over BOTH pair sets) ------------
-def _x60_oracle() -> str:
-    x04 = _registry.ORACLE["x04_neardup_jaccard"]
-    x04d = _registry.ORACLE["x04d_minhash_native"]
-    x47 = _registry.ORACLE["x47_edit_verify"]
-    return f"""
-    WITH exact_pairs AS (SELECT id_a, id_b FROM ({x04})),
-    banded AS (SELECT id_a, id_b FROM ({x04d})),
-    verified AS (SELECT id_a, id_b FROM ({x47})),
-    base AS (
+#: x60's final aggregation over its three pair sets (exact_pairs,
+#: banded, verified); scripts/scale_closure_check.py runs it over the
+#: same three names staged as temp tables.
+_X60_FINAL = """base AS (
       SELECT COALESCE(e.id_a, b.id_a) AS id_a,
              COALESCE(e.id_b, b.id_b) AS id_b,
              (e.id_a IS NOT NULL) AS in_exact,
@@ -1230,7 +1211,18 @@ def _x60_oracle() -> str:
            CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
                 / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
                 AS BIGINT) AS verified_recall_e6
-    FROM j
+    FROM j"""
+
+
+def _x60_oracle() -> str:
+    x04 = _registry.ORACLE["x04_neardup_jaccard"]
+    x04d = _registry.ORACLE["x04d_minhash_native"]
+    x47 = _registry.ORACLE["x47_edit_verify"]
+    return f"""
+    WITH exact_pairs AS (SELECT id_a, id_b FROM ({x04})),
+    banded AS (SELECT id_a, id_b FROM ({x04d})),
+    verified AS (SELECT id_a, id_b FROM ({x47})),
+    {_X60_FINAL}
     """
 
 
@@ -1381,13 +1373,7 @@ def _x61_oracle() -> str:
       JOIN v va ON va.vec_id = a.vec_id
       JOIN v vb ON vb.vec_id = b.vec_id
       WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD}),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs
-      UNION SELECT id_b, id_a FROM pairs),
-    reach(node, r) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.node),
+    {_CLOSURE_SQL},
     cl AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
     merged AS (
       SELECT asg.vec_id,

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from fanstats_producer_spark.functions.num import qint, sql_qint
 from fanstats_producer_spark.io import load, spread
-from fanstats_producer_spark.operators.dedup import with_shingles
+from fanstats_producer_spark.operators.dedup import _shingles_sql, with_shingles
 from fanstats_producer_spark.operators.sampling import hash_bucket
 from fanstats_producer_spark.registry import query
 
@@ -30,9 +30,9 @@ from fanstats_producer_spark.registry import query
 # --- x27: benchmark decontamination (n-gram overlap train vs eval) --------------
 # GPT-3-style decontamination: any training document sharing >= T distinct
 # n-grams with an evaluation document is flagged.  Here the "benchmark" is
-# a deterministic held-out slice (doc_id % 50 == 0) so the op is closed
-# over the fixtures; in production the eval side is the external benchmark
-# suite.  Plan: shingle both sides once, explode, one shuffle on the
+# a deterministic held-out slice (doc_id % _X27_EVAL_MOD == 0) so the op
+# is closed over the fixtures; in production the eval side is the external
+# benchmark suite.  Plan: shingle both sides once, explode, one shuffle on the
 # shingle key, hash-aggregate the (train, eval) pair counts.  The eval
 # side is tiny (a benchmark, not a corpus) — Catalyst broadcasts it, so
 # the 100 TB train side is never shuffled by shingle; only its exploded
@@ -41,23 +41,21 @@ from fanstats_producer_spark.registry import query
 # lever) so the probe key is 8 bytes.
 _X27_K = 5
 _X27_MIN_SHARED = 3
+#: The held-out eval slice is doc_id % _X27_EVAL_MOD == 0 (x27 and s24).
+_X27_EVAL_MOD = 50
 
 
 @query(
     "x27_decontaminate",
     oracle=f"""
     WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 3, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-                    || toks[i+3] || ' ' || toks[i+4])) AS shingles
+      SELECT doc_id, {_shingles_sql(_X27_K)} AS shingles
       FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
     post AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
     hits AS (
       SELECT t.doc_id AS train_id, e.doc_id AS eval_id, COUNT(*) AS n_shared
       FROM post t JOIN post e ON t.shingle = e.shingle
-      WHERE t.doc_id % 50 <> 0 AND e.doc_id % 50 = 0
+      WHERE t.doc_id % {_X27_EVAL_MOD} <> 0 AND e.doc_id % {_X27_EVAL_MOD} = 0
       GROUP BY 1, 2)
     SELECT train_id, eval_id, n_shared
     FROM hits WHERE n_shared >= {_X27_MIN_SHARED}
@@ -89,10 +87,10 @@ def decontaminate_hits(docs: DataFrame) -> DataFrame:
         post.groupBy("shingle")
         .agg(
             F.collect_list(
-                F.when(F.col("doc_id") % 50 != 0, F.col("doc_id"))
+                F.when(F.col("doc_id") % _X27_EVAL_MOD != 0, F.col("doc_id"))
             ).alias("train_ids"),
             F.collect_list(
-                F.when(F.col("doc_id") % 50 == 0, F.col("doc_id"))
+                F.when(F.col("doc_id") % _X27_EVAL_MOD == 0, F.col("doc_id"))
             ).alias("eval_ids"),
         )
         .filter((F.size("train_ids") > 0) & (F.size("eval_ids") > 0))
@@ -755,11 +753,7 @@ def _x46_split_sql() -> str:
     WITH tagged AS (
       SELECT doc_id, text, {{split}} AS split FROM documents),
     sh AS (
-      SELECT doc_id, split,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 3, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-                    || toks[i+3] || ' ' || toks[i+4])) AS shingles
+      SELECT doc_id, split, {_shingles_sql(_X27_K)} AS shingles
       FROM (SELECT doc_id, split, string_split(text, ' ') AS toks FROM tagged)),
     post AS (SELECT doc_id, split, unnest(shingles) AS shingle FROM sh),
     hits AS (
@@ -787,13 +781,12 @@ def x46_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split fraction at every tested SF stays far under the 8 GB
     # broadcast ceiling and the simpler plan is 2x faster at bench SF.
     from fanstats_producer_spark.operators.corpus_extra import _x44_split_col
-    from fanstats_producer_spark.operators.dedup import with_shingles
 
     docs = load(spark, sf_dir, "documents").withColumn(
         "split", _x44_split_col()
     )
     post = (
-        with_shingles(docs, k=5)
+        with_shingles(docs, k=_X27_K)
         .select("doc_id", "split", F.explode("shingles").alias("sh"))
         .select("doc_id", "split", F.xxhash64("sh").alias("shingle"))
     )

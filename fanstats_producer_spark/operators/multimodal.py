@@ -42,6 +42,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fanstats_producer_spark.io import disk_checkpoint, load, spread
+from fanstats_producer_spark.operators.dedup import (
+    _CLOSURE_SQL,
+    _KEEP_BEST_SQL,
+    connected_components,
+    keep_best,
+)
 from fanstats_producer_spark.registry import query
 
 
@@ -2329,44 +2335,23 @@ def x90_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # registered machinery (phash_near_dup_pairs -> dedup.connected_
 # components -> dedup.keep_best), so what it pins is the END-TO-END
 # image dedup decision: which images a 100 TB multimodal corpus keeps.
-# The oracle writes the x59 closure idiom verbatim (recursive reach ->
-# min-label clusters -> ttr keep rule) on top of the shared pHash CTE
-# chain, so scripts/scale_closure_check.py's staged iterative closure
-# covers it at sf1 where the recursive CTE cannot run (CLOSURE_KEYS
-# there includes x96).
+# The oracle is the pHash CTE chain, then the same closure and keep
+# rule as x59 (dedup._CLOSURE_SQL -> min-label clusters ->
+# dedup._KEEP_BEST_SQL), so scripts/scale_closure_check.py's staged
+# iterative closure covers it at sf1 where the recursive CTE cannot run
+# (CLOSURE_KEYS there includes x96).
 
 
 def _x96_oracle() -> str:
     return f"""
     WITH RECURSIVE {_phash_hash_ctes()},
-    vp AS (
+    pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b
       FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
       WHERE bit_count(xor(a.ph, b.ph)) <= {_X88_HAMMING}),
-    edges AS (
-      SELECT id_a AS src, id_b AS dst FROM vp
-      UNION SELECT id_b, id_a FROM vp),
-    reach(node, r) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.r FROM edges e JOIN reach r ON e.dst = r.node),
+    {_CLOSURE_SQL},
     cl AS (SELECT node AS doc_id, min(r) AS cluster_id FROM reach GROUP BY node),
-    q AS (
-      SELECT doc_id,
-             CAST(floor(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks)
-                        * 1e6 + 0.5) AS BIGINT) AS ttr_e6
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-    ranked AS (
-      SELECT cl.cluster_id, cl.doc_id, q.ttr_e6,
-             row_number() OVER (PARTITION BY cl.cluster_id
-                                ORDER BY q.ttr_e6 DESC, cl.doc_id) AS rn
-      FROM cl JOIN q USING (doc_id))
-    SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
-           MIN(CASE WHEN rn = 1 THEN doc_id END) AS kept_doc_id,
-           MIN(CASE WHEN rn = 1 THEN ttr_e6 END) AS kept_ttr_e6,
-           COUNT(*) AS n_members
-    FROM ranked
-    GROUP BY cluster_id
+    {_KEEP_BEST_SQL}
     """
 
 
@@ -2377,10 +2362,5 @@ def x96_image_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min-label propagation with the size-gated union-find fast path),
     keep_best picks one representative per cluster by the integer ttr
     quality rule.  The image twin of x52/x59's production last mile."""
-    from fanstats_producer_spark.operators.dedup import (
-        connected_components,
-        keep_best,
-    )
-
     pairs = phash_near_dup_pairs(document_features(spark, sf_dir, phash_features))
     return keep_best(load(spark, sf_dir, "documents"), connected_components(pairs))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from fanstats_producer_spark.functions.num import qint
 from fanstats_producer_spark.io import disk_checkpoint, load
 from fanstats_producer_spark.registry import query
+from fanstats_producer_spark.streaming.jobs import SESSION_GAP_MINUTES
 
 
 # --- q55: conversion funnel ----------------------------------------------------
@@ -154,7 +155,6 @@ def q56_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- q57: batch sessionization --------------------------------------------------
-_GAP_MIN = 30
 
 
 @query(
@@ -162,7 +162,8 @@ _GAP_MIN = 30
     oracle=f"""
     WITH flagged AS (
       SELECT user_id, ts, event_id,
-             CASE WHEN ts - lag(ts) OVER w <= INTERVAL {_GAP_MIN} MINUTE
+             CASE WHEN ts - lag(ts) OVER w
+                       <= INTERVAL {SESSION_GAP_MINUTES} MINUTE
                   THEN 0 ELSE 1 END AS new_session
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
@@ -197,7 +198,7 @@ def q57_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.unix_micros(F.col("ts"))
             - F.lag(F.unix_micros(F.col("ts"))).over(w)
-            <= _GAP_MIN * 60 * 1_000_000,
+            <= SESSION_GAP_MINUTES * 60 * 1_000_000,
             0,
         ).otherwise(1),
     )

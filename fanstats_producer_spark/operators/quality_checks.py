@@ -481,13 +481,18 @@ def x105_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x105: exact KS distance between every pair of event-type value
     distributions — integer cross-multiplied suprema (see block
     comment), one row per unordered type pair."""
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
+    return ks_matrix_from_counts(value_counts(load(spark, sf_dir, "events")))
+
+
+def value_counts(events: DataFrame) -> DataFrame:
+    """The (t, v, c) count table: rows per event type and non-null value.
+    x105 and x107 read it, and it is the state the s33/s34 online
+    monitors keep (jobs.streaming_value_counts_monitor)."""
+    return (
+        events.filter(F.col("value").isNotNull())
         .select(F.col("event_type").alias("t"), F.col("value").alias("v"))
-    )
-    return ks_matrix_from_counts(
-        ev.groupBy("t", "v").agg(F.count("*").alias("c"))
+        .groupBy("t", "v")
+        .agg(F.count("*").alias("c"))
     )
 
 
@@ -605,14 +610,7 @@ def x107_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled-midrank integer arithmetic (see block comment), one row
     per unordered pair.  Shares :func:`auc_matrix_from_counts` with
     the s34 online monitor (the x105/s33 pattern)."""
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("value").isNotNull())
-        .select(F.col("event_type").alias("t"), F.col("value").alias("v"))
-    )
-    return auc_matrix_from_counts(
-        ev.groupBy("t", "v").agg(F.count("*").alias("c"))
-    )
+    return auc_matrix_from_counts(value_counts(load(spark, sf_dir, "events")))
 
 
 def auc_matrix_from_counts(cnts: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ from fanstats_producer_spark.functions.num import dsum_pos, sql_dsum_pos
 from fanstats_producer_spark.io import load
 from fanstats_producer_spark.operators.sketches import _HLL_LG_K
 from fanstats_producer_spark.registry import query
-from fanstats_producer_spark.streaming.jobs import SESSION_GAP
+from fanstats_producer_spark.streaming.jobs import SESSION_GAP, SESSION_GAP_MINUTES
 
 _FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 _FMT_DUCK = "%Y-%m-%d %H:%M:%S"
@@ -106,7 +106,7 @@ def sessionize(events: DataFrame) -> DataFrame:
     WITH marked AS (
       SELECT user_id, ts, value,
              CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+                    OR ts - lag(ts) OVER w >= INTERVAL {gap} MINUTE
                   THEN 1 ELSE 0 END AS new_session
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
@@ -117,12 +117,14 @@ def sessionize(events: DataFrame) -> DataFrame:
       FROM marked)
     SELECT user_id,
            strftime(MIN(ts), '{fmt}') AS session_start,
-           strftime(MAX(ts) + INTERVAL 30 MINUTE, '{fmt}') AS session_end,
+           strftime(MAX(ts) + INTERVAL {gap} MINUTE, '{fmt}') AS session_end,
            COUNT(*) AS n_events,
            {sum_value} AS sum_value
     FROM numbered
     GROUP BY user_id, sid
-    """.format(fmt=_FMT_DUCK, sum_value=sql_dsum_pos("value")),
+    """.format(
+        fmt=_FMT_DUCK, gap=SESSION_GAP_MINUTES, sum_value=sql_dsum_pos("value")
+    ),
 )
 def s04_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load(spark, sf_dir, "events"))

@@ -39,6 +39,17 @@ from fanstats_producer_spark.functions.num import sql_dsum_pos
 from fanstats_producer_spark.functions.text import _STOP_SQL
 # imported EXPLICITLY at module level (not composed inside the oracle
 # builder) so standalone worker imports see it — the x61/x24 gotcha
+from fanstats_producer_spark.operators.dedup import (
+    _MH_CHAIN_SQL,
+    _X47_REL_DEN,
+    _X47_REL_NUM,
+    _shingles_sql,
+)
+from fanstats_producer_spark.operators.llm_data import (
+    _X27_EVAL_MOD,
+    _X27_K,
+    _X27_MIN_SHARED,
+)
 from fanstats_producer_spark.operators.multimodal import (
     _phash_hash_ctes,
     _x90_fp_ctes,
@@ -46,7 +57,7 @@ from fanstats_producer_spark.operators.multimodal import (
 from fanstats_producer_spark.functions import text_extra
 from fanstats_producer_spark.operators import quality_checks, sampling, sketches
 from fanstats_producer_spark.operators.similarity import _X66_THRESH_E6
-from fanstats_producer_spark.registry import query
+from fanstats_producer_spark.registry import ORACLE, query
 from fanstats_producer_spark.session import scratch_dir
 from fanstats_producer_spark.streaming import jobs
 
@@ -675,15 +686,17 @@ def s10_tws_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s10b_tws_timers",
-    oracle="""
-    WITH wm AS (SELECT epoch_ms(max(ts)) - 600000 AS w FROM events),
+    oracle=f"""
+    WITH wm AS (SELECT epoch_ms(max(ts))
+                       - {jobs.SESSION_CLOSE_WATERMARK_MINUTES * 60_000} AS w
+                FROM events),
     per_user AS (
       SELECT user_id, COUNT(*) AS n_events,
              epoch_ms(min(ts)) AS first_ms, epoch_ms(max(ts)) AS last_ms
       FROM events GROUP BY 1)
     SELECT user_id, n_events, first_ms, last_ms
     FROM per_user, wm
-    WHERE last_ms + 1800000 <= wm.w
+    WHERE last_ms + {jobs.SESSION_GAP_MINUTES * 60_000} <= wm.w
     """,
 )
 def s10b_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -699,9 +712,7 @@ def s10b_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately absent, which the oracle states exactly."""
     _require_protobuf(spark)
     stream = _read_events_stream(spark, sf_dir)
-    closed = jobs.user_session_close_tws(
-        stream, gap_seconds=1800, watermark="10 minutes"
-    )
+    closed = jobs.user_session_close_tws(stream)
     # 8 partitions: socket-parallel TWS protocol (see s10's note).
     return _drain_memory(spark, closed, "append", tick=True, rocksdb=True)
 
@@ -721,7 +732,7 @@ def s11_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic part: input size and the number of kept (distinct-
     content) rows."""
     stream = _read_events_stream(spark, sf_dir)
-    deduped = jobs.deduped_by_content(stream, text_col="props")
+    deduped = jobs.deduped_by_content(stream)
     kept = _drain_memory(spark, deduped, "append")
     from fanstats_producer_spark.io import load as _load
 
@@ -733,11 +744,12 @@ def s11_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s04b_session_stream",
-    oracle="""
+    oracle=f"""
     WITH marked AS (
       SELECT user_id, ts, event_id,
              CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+                    OR ts - lag(ts) OVER w
+                       >= INTERVAL {jobs.SESSION_GAP_MINUTES} MINUTE
                   THEN 1 ELSE 0 END AS new_session
       FROM events
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
@@ -751,7 +763,8 @@ def s11_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM marked)
     SELECT user_id,
            strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           strftime(MAX(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S')
+           strftime(MAX(ts) + INTERVAL {jobs.SESSION_GAP_MINUTES} MINUTE,
+                    '%Y-%m-%d %H:%M:%S')
              AS session_end,
            COUNT(*) AS n_events
     FROM numbered GROUP BY user_id, sid
@@ -835,14 +848,14 @@ def s12_stream_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "s16_append_window",
     oracle="""
-    WITH wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
+    WITH wm AS (SELECT max(ts) - INTERVAL {wm} MINUTE AS w FROM events)
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
              AS window_start,
            event_type, COUNT(*) AS n, {sum_value} AS sum_value
     FROM events, wm
     WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= wm.w
     GROUP BY 1, 2
-    """.format(sum_value=sql_dsum_pos("value")),
+    """.format(wm=jobs.WATERMARK_MINUTES, sum_value=sql_dsum_pos("value")),
 )
 def s16_append_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s16: APPEND-mode watermarked tumbling-window aggregation — the
@@ -869,11 +882,7 @@ def s16_append_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s15_rocksdb_state",
-    oracle="""
-    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, COUNT(*) AS n, {sum_value} AS sum_value
-    FROM events GROUP BY 1, 2
-    """.format(sum_value=sql_dsum_pos("value")),
+    oracle=ORACLE["s05_watermark"],
 )
 def s15_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s05's watermarked windowed aggregation drained on the ROCKSDB
@@ -1012,31 +1021,8 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s21_stream_near_dup",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-      WHERE len(toks) >= 3),
-    post AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % 2147483647
-               AS wm
-      FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh)),
-    sig AS (
-      SELECT doc_id, i,
-             MIN(((i * 2654435761 + 1) % 2147483647 * wm
-                  + (i * 40503 + 12345) % 2147483647) % 2147483647) AS h
-      FROM post CROSS JOIN range(64) AS t(i)
-      GROUP BY doc_id, i),
-    sigl AS (
-      SELECT doc_id, list(h ORDER BY i) AS sig FROM sig GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, b, sig[4 * b + 1] AS v1, sig[4 * b + 2] AS v2,
-             sig[4 * b + 3] AS v3, sig[4 * b + 4] AS v4
-      FROM sigl CROSS JOIN range(16) AS t(b)),
+    oracle=f"""
+    WITH {_MH_CHAIN_SQL},
     dup AS (
       SELECT DISTINCT a.doc_id
       FROM bands a JOIN bands c
@@ -1084,31 +1070,8 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s22_stream_verified_near_dup",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 1, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS shingles
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-      WHERE len(toks) >= 3),
-    post AS (
-      SELECT doc_id,
-             CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % 2147483647
-               AS wm
-      FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh)),
-    sig AS (
-      SELECT doc_id, i,
-             MIN(((i * 2654435761 + 1) % 2147483647 * wm
-                  + (i * 40503 + 12345) % 2147483647) % 2147483647) AS h
-      FROM post CROSS JOIN range(64) AS t(i)
-      GROUP BY doc_id, i),
-    sigl AS (
-      SELECT doc_id, list(h ORDER BY i) AS sig FROM sig GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, b, sig[4 * b + 1] AS v1, sig[4 * b + 2] AS v2,
-             sig[4 * b + 3] AS v3, sig[4 * b + 4] AS v4
-      FROM sigl CROSS JOIN range(16) AS t(b)),
+    oracle=f"""
+    WITH {_MH_CHAIN_SQL},
     bmin AS (
       SELECT b, v1, v2, v3, v4, MIN(doc_id) AS m
       FROM bands GROUP BY b, v1, v2, v3, v4),
@@ -1122,8 +1085,8 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cand c
       JOIN documents ta ON ta.doc_id = c.doc_id
       JOIN documents tb ON tb.doc_id = c.partner
-      WHERE levenshtein(ta.text, tb.text) * 5
-            <= greatest(length(ta.text), length(tb.text), 1) * 2)
+      WHERE levenshtein(ta.text, tb.text) * {_X47_REL_DEN}
+            <= greatest(length(ta.text), length(tb.text), 1) * {_X47_REL_NUM})
     SELECT s.doc_id,
            CAST(CASE WHEN c.doc_id IS NULL THEN 0 ELSE 1 END AS INT)
              AS is_candidate,
@@ -1145,7 +1108,8 @@ def s22_stream_verified_near_dup(
     pipeline.  The oracle states the online rule exactly: a doc's
     partner is its colliding bucket's MINIMUM id (the one doc an 8-B
     bucket state can name), and is_dup requires the x47 integer gate
-    levenshtein * 5 <= maxlen * 2 against that partner's text.  Text
+    levenshtein * _X47_REL_DEN <= maxlen * _X47_REL_NUM against that
+    partner's text.  Text
     state is bounded by live bucket minima, not stream length.
 
     ORACLE PRECONDITION (single-batch equivalence): the oracle's
@@ -1261,17 +1225,13 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s24_stream_contamination_gate",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(toks) - 3, 1)),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-                    || toks[i+3] || ' ' || toks[i+4])) AS shingles
+      SELECT doc_id, {_shingles_sql(_X27_K)} AS shingles
       FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
     ev AS (
       SELECT DISTINCT unnest(shingles) AS shingle FROM sh
-      WHERE doc_id % 50 = 0),
+      WHERE doc_id % {_X27_EVAL_MOD} = 0),
     cnt AS (
       SELECT p.doc_id, COUNT(*) AS n
       FROM (SELECT doc_id, unnest(shingles) AS shingle FROM sh) p
@@ -1279,7 +1239,7 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY 1)
     SELECT s.doc_id
     FROM sh s LEFT JOIN cnt c ON c.doc_id = s.doc_id
-    WHERE COALESCE(c.n, 0) < 3
+    WHERE COALESCE(c.n, 0) < {_X27_MIN_SHARED}
     """,
 )
 def s24_stream_contamination_gate(
@@ -1310,7 +1270,7 @@ def s24_stream_contamination_gate(
         # re-collecting it per drain was pure waste (the _doc_landing
         # rationale applied to the gate's constant side)
         ev_docs = _load(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 50 == 0
+            F.col("doc_id") % _X27_EVAL_MOD == 0
         )
         shingles = _EVAL_SHINGLES_CACHE[key] = eval_shingle_set(ev_docs)
     landing = _doc_landing(spark, sf_dir)  # shared, read-only
@@ -1785,7 +1745,8 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("s33_stream_ks_monitor", oracle=quality_checks.X105_ORACLE)
 def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s33: ONLINE exact-KS drift matrix — the cumulative (type,
-    value) count state merged per batch (jobs.streaming_ks_monitor),
+    value) count state merged per batch
+    (jobs.streaming_value_counts_monitor),
     the KS matrix rebuilt from
     the drained state with the SAME shared downstream as batch x105
     (quality_checks.ks_matrix_from_counts).  Counts are sums, so the
@@ -1797,7 +1758,12 @@ def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "ckpt")
         stream = _read_events_stream(spark, sf_dir)
-        _drain(spark, lambda: jobs.streaming_ks_monitor(stream, state_dir, ckpt))
+        _drain(
+            spark,
+            lambda: jobs.streaming_value_counts_monitor(
+                stream, state_dir, ckpt, job_name="streaming_ks_monitor"
+            ),
+        )
         out = quality_checks.ks_matrix_from_counts(
             spark.read.parquet(state_dir)
         )

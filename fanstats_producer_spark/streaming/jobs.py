@@ -31,10 +31,17 @@ EVENT_SCHEMA = (
     "value double, props string"
 )
 
-WATERMARK = "30 minutes"
-#: Fan-session inactivity gap, shared by s04 (sessionized) and its batch
-#: arm (batch_equiv.sessionize).
-SESSION_GAP = "30 minutes"
+#: Event-time lateness allowance of the watermarked streams, in minutes.
+WATERMARK_MINUTES = 30
+WATERMARK = f"{WATERMARK_MINUTES} minutes"
+#: Fan-session inactivity gap in minutes, shared by s04 (sessionized),
+#: its batch arm (batch_equiv.sessionize), q57, s10b's timers and their
+#: oracles.
+SESSION_GAP_MINUTES = 30
+SESSION_GAP = f"{SESSION_GAP_MINUTES} minutes"
+#: s10b's watermark in minutes: a session closes once the watermark
+#: passes its last event + SESSION_GAP_MINUTES.
+SESSION_CLOSE_WATERMARK_MINUTES = 10
 #: s23's value-histogram bucket width, shared by the live stream
 #: (streaming_psi_drift) and its static reference histogram.
 PSI_BUCKET_WIDTH = 8.0
@@ -818,11 +825,7 @@ def user_value_stats_tws(events: DataFrame) -> DataFrame:
     )
 
 
-def user_session_close_tws(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def user_session_close_tws(events: DataFrame) -> DataFrame:
     """s10b: typed-state sessionization with EVENT-TIME TIMERS and
     ListState — the two transformWithStateInPandas capabilities that
     applyInPandasWithState has no analogue for (s07/s04b emulate
@@ -849,7 +852,7 @@ def user_session_close_tws(
         StatefulProcessorHandle,
     )
 
-    gap_ms = gap_seconds * 1000
+    gap_ms = SESSION_GAP_MINUTES * 60_000
 
     class SessionCloser(StatefulProcessor):
         # Protocol-cost note (every state/timer call is one synchronous
@@ -919,7 +922,7 @@ def user_session_close_tws(
             pass
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", f"{SESSION_CLOSE_WATERMARK_MINUTES} minutes")
         .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=SessionCloser(),
@@ -966,13 +969,13 @@ def corpus_prep_stream(docs: DataFrame) -> DataFrame:
     return chunk_documents(language_quality_gate(deduped), passthrough=("lang",))
 
 
-def deduped_by_content(events_or_docs: DataFrame, text_col: str = "props") -> DataFrame:
+def deduped_by_content(events: DataFrame) -> DataFrame:
     """Streaming exact content dedup (the x03 hash dedup made
     continuous): first arrival of each content digest within the
     watermark wins; digest state evicts with the watermark, so memory
     stays bounded no matter how long the stream runs."""
-    with_hash = events_or_docs.withColumn(
-        "content_hash", F.sha2(F.col(text_col).cast("string"), 256)
+    with_hash = events.withColumn(
+        "content_hash", F.sha2(F.col("props").cast("string"), 256)
     )
     return with_hash.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         ["content_hash"]
@@ -1312,33 +1315,16 @@ def streaming_value_counts_monitor(
     (quality_checks.ks_matrix_from_counts / auc_matrix_from_counts) —
     republishing per batch costs |grid| work, never a rescan of the
     stream; ONE state table serves every rank/CDF statistic at once."""
+    from fanstats_producer_spark.operators.quality_checks import value_counts
+
     return staged_merge(
         events.select("event_type", "value"),
         state_dir,
         checkpoint_dir,
-        partial=lambda b: (
-            b.filter(F.col("value").isNotNull())
-            .select(F.col("event_type").alias("t"), F.col("value").alias("v"))
-            .groupBy("t", "v")
-            .agg(F.count("*").alias("c"))
-        ),
+        partial=value_counts,
         combine=lambda u: u.groupBy("t", "v").agg(F.sum("c").alias("c")),
         idempotent=False,
         name=job_name,
-    )
-
-
-def streaming_ks_monitor(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """s33: ONLINE exact-KS drift — x105's pairwise sup-CDF matrix
-    over the shared value-counts state (see
-    streaming_value_counts_monitor); kept as a named wrapper so the
-    s33 call sites read as what they compute."""
-    return streaming_value_counts_monitor(
-        events, state_dir, checkpoint_dir, job_name="streaming_ks_monitor"
     )
 
 

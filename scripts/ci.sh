@@ -56,9 +56,10 @@ if grep -rnF -e "pyspark.sql.datasource" -e 'format("kafka")' \
   echo "second producer path re-added in fanstats_producer_spark" >&2
   exit 1
 fi
-# The two AST audits start no Spark: an unset default or a package def
-# no program reaches fails here in seconds, before the Spark suite.
-python -m pytest tests/test_driver_contract.py -q -k "defaulted or reached"
+# The two AST audits and the stated-once scan start no Spark: an unset
+# default, a package def no program reaches or a restated oracle rule
+# fails here in seconds, before the Spark suite.
+python -m pytest tests/test_driver_contract.py -q -k "defaulted or reached or stated_once"
 python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names

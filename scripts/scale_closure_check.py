@@ -53,6 +53,17 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry  # noqa: E402
+from fanstats_producer_spark.operators.dedup import (  # noqa: E402
+    _CLOSURE_SQL,
+    _EDGES_SQL,
+    _MH_CHAIN,
+    _MH_CHAIN_SQL,
+    _X04_K,
+    _X04_THRESHOLD,
+    _X60_FINAL,
+    _X61_THRESHOLD,
+    _shingles_sql,
+)
 from fanstats_producer_spark.session import get_spark  # noqa: E402
 from scripts.check_oracle import (  # noqa: E402
     TESTDATA,
@@ -108,21 +119,15 @@ def _connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _split_edges_prefix(oracle_sql: str) -> tuple[str, str]:
-    """Split a registered closure oracle into (edges-producing query,
-    suffix after the recursive reach block).  The four oracles share
-    the exact `edges AS (...)` / `reach(node, r) AS (...)` idiom."""
-    pre, rest = oracle_sql.split("edges AS (", 1)
-    body, rest2 = rest.split("),\n    reach", 1)
-    edges_query = (
-        pre.replace("WITH RECURSIVE", "WITH", 1)
-        + "edges AS ("
-        + body
-        + ")\n    SELECT src, dst FROM edges"
+def _split_closure(oracle_sql: str) -> tuple[str, str]:
+    """Split a registered closure oracle at dedup._CLOSURE_SQL into (the
+    query producing its `pairs` CTE, the suffix after the closure)."""
+    pre, suffix = oracle_sql.split(_CLOSURE_SQL)
+    pairs_query = (
+        pre.replace("WITH RECURSIVE", "WITH", 1).rstrip().rstrip(",")
+        + "\n    SELECT id_a, id_b FROM pairs"
     )
-    # rest2 = "(node, r) AS ( ... ON e.dst = r.node)<suffix>"
-    _, suffix = rest2.split("ON e.dst = r.node)", 1)
-    return edges_query, suffix
+    return pairs_query, suffix
 
 
 def _iterative_closure(con: duckdb.DuckDBPyConnection) -> int:
@@ -177,7 +182,7 @@ def _iterative_closure(con: duckdb.DuckDBPyConnection) -> int:
 def _closure_suffix(con, key: str):
     """Run the registered oracle's post-closure suffix against the
     staged `reach` temp table."""
-    _, suffix = _split_edges_prefix(registry.ORACLE[key])
+    _, suffix = _split_closure(registry.ORACLE[key])
     if suffix.lstrip().startswith(","):
         final = "WITH " + suffix.lstrip().lstrip(",")
     else:
@@ -190,66 +195,23 @@ def _ds(con, name: str, sql: str) -> None:
     con.execute(f"CREATE TEMP TABLE {name} AS {sql}")
 
 
-def _close_over(con, pairs: str, key: str):
-    """Undirected edges from the temp pair table `pairs(id_a, id_b)`
-    (dropped once read), the iterative closure, then key's registered
-    suffix."""
-    _ds(
-        con,
-        "edges",
-        f"SELECT id_a AS src, id_b AS dst FROM {pairs}"
-        f" UNION SELECT id_b, id_a FROM {pairs}",
-    )
-    con.execute(f"DROP TABLE {pairs}")
+def _close_over(con, key: str):
+    """Undirected edges (dedup._EDGES_SQL) from the temp pair table
+    `pairs(id_a, id_b)`, dropped once read, the iterative closure, then
+    key's registered suffix."""
+    _ds(con, "edges", _EDGES_SQL)
+    con.execute("DROP TABLE pairs")
     _iterative_closure(con)
     return _closure_suffix(con, key)
-
-
-# x60's final aggregation over its three materialized pair sets
-# (exact_pairs, banded, verified) — shared by its staged and deep-staged
-# restatements, which differ only in how they build those tables.
-_X60_FINAL = """
-    WITH base AS (
-      SELECT COALESCE(e.id_a, b.id_a) AS id_a,
-             COALESCE(e.id_b, b.id_b) AS id_b,
-             (e.id_a IS NOT NULL) AS in_exact,
-             (b.id_a IS NOT NULL) AS in_banded
-      FROM exact_pairs e
-      FULL OUTER JOIN banded b
-        ON e.id_a = b.id_a AND e.id_b = b.id_b),
-    j AS (
-      SELECT base.in_exact, base.in_banded,
-             (v.id_a IS NOT NULL) AS in_ver
-      FROM base LEFT JOIN verified v
-        ON base.id_a = v.id_a AND base.id_b = v.id_b)
-    SELECT COUNT(*) FILTER (WHERE in_banded) AS n_banded,
-           COUNT(*) FILTER (WHERE in_ver) AS n_verified,
-           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_banded) AS DOUBLE)
-                / greatest(COUNT(*) FILTER (WHERE in_banded), 1) * 1e6 + 0.5)
-                AS BIGINT) AS banded_precision_e6,
-           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
-                / greatest(COUNT(*) FILTER (WHERE in_ver), 1) * 1e6 + 0.5)
-                AS BIGINT) AS verified_precision_e6,
-           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_banded) AS DOUBLE)
-                / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
-                AS BIGINT) AS banded_recall_e6,
-           CAST(floor(CAST(COUNT(*) FILTER (WHERE in_exact AND in_ver) AS DOUBLE)
-                / greatest(COUNT(*) FILTER (WHERE in_exact), 1) * 1e6 + 0.5)
-                AS BIGINT) AS verified_recall_e6
-    FROM j
-"""
 
 
 def staged_oracle(con: duckdb.DuckDBPyConnection, key: str):
     """Evaluate the registered oracle via staged temp tables; returns
     (columns, rows)."""
     if key == "x61_semdedup":
-        # bespoke staging: the suffix references the prefix CTE `asg`
-        # (the k-means assignment — also the expensive stage), so
-        # materialize it once as a temp table and restate the rest of
-        # the registered oracle around it verbatim.
-        from fanstats_producer_spark.operators.dedup import _X61_THRESHOLD
-
+        # the suffix reads the prefix CTE `asg` (the k-means assignment,
+        # also the expensive stage): materialize it once as a temp table
+        # and restate the pair CTEs around it.
         _ds(
             con,
             "asg",
@@ -258,43 +220,19 @@ def staged_oracle(con: duckdb.DuckDBPyConnection, key: str):
         )
         _ds(
             con,
-            "edges",
+            "pairs",
             f"""
             WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                       FROM embeddings),
-            pairs AS (
-              SELECT a.vec_id AS id_a, b.vec_id AS id_b
-              FROM asg a JOIN asg b ON a.cid = b.cid
-                                   AND a.vec_id < b.vec_id
-              JOIN v va ON va.vec_id = a.vec_id
-              JOIN v vb ON vb.vec_id = b.vec_id
-              WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD})
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION SELECT id_b, id_a FROM pairs
+                       FROM embeddings)
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b
+            FROM asg a JOIN asg b ON a.cid = b.cid
+                                 AND a.vec_id < b.vec_id
+            JOIN v va ON va.vec_id = a.vec_id
+            JOIN v vb ON vb.vec_id = b.vec_id
+            WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD}
             """,
         )
-        _iterative_closure(con)
-        return fetch(
-            con,
-            """
-            WITH cl AS (SELECT node, MIN(r) AS cluster_id FROM reach
-                        GROUP BY node),
-            merged AS (
-              SELECT asg.vec_id,
-                     COALESCE(cl.cluster_id, asg.vec_id) AS sem_cluster,
-                     asg.dist2_e6
-              FROM asg LEFT JOIN cl ON cl.node = asg.vec_id),
-            ranked AS (
-              SELECT vec_id, sem_cluster, dist2_e6,
-                     row_number() OVER (PARTITION BY sem_cluster
-                                        ORDER BY dist2_e6 DESC, vec_id)
-                       AS rn
-              FROM merged)
-            SELECT vec_id, CAST(sem_cluster AS BIGINT) AS sem_cluster,
-                   dist2_e6, (rn = 1) AS is_kept
-            FROM ranked ORDER BY vec_id
-            """,
-        )
+        return _close_over(con, key)
 
     if key == "x60_verify_gate_effect":
         # no closure — the OOM risk is the three quadratic pair sets;
@@ -305,14 +243,12 @@ def staged_oracle(con: duckdb.DuckDBPyConnection, key: str):
                           ("banded", "x04d_minhash_native"),
                           ("verified", "x47_edit_verify")):
             _ds(con, name, f"SELECT id_a, id_b FROM ({registry.ORACLE[src]})")
-        return fetch(con, _X60_FINAL)
+        return fetch(con, "WITH " + _X60_FINAL)
 
     # x04e / x59 / x96: generic surgery — their suffixes reference only
     # `reach` and base views, never a prefix CTE.
-    edges_query, _ = _split_edges_prefix(registry.ORACLE[key])
-    _ds(con, "edges", edges_query)
-    _iterative_closure(con)
-    return _closure_suffix(con, key)
+    _ds(con, "pairs", _split_closure(registry.ORACLE[key])[0])
+    return _close_over(con, key)
 
 
 # --- staged restatements for PLAIN keys whose registered oracle has a
@@ -374,112 +310,30 @@ STAGED_PLAIN = {"s26b_stream_decontam_large_eval": _s26b_staged_sql}
 # the REGISTERED oracle at sf0.01 before any scale run.
 
 
-def _stage_sigl(con) -> None:
-    """documents -> t_sigl(doc_id, sig) — the x04d 64-perm MinHash
-    signature list, staged as hash table then signature rollup.
-    Expressions verbatim from the registered x04d oracle."""
-    _ds(
-        con,
-        "t_post",
-        """
-        SELECT doc_id,
-               CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)
-                 % 2147483647 AS wm
-        FROM (
-          SELECT doc_id, unnest(shingles) AS shingle FROM (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                     range(1, greatest(len(toks) - 1, 1)),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-                     AS shingles
-            FROM (SELECT doc_id, string_split(text, ' ') AS toks
-                  FROM documents)
-            WHERE len(toks) >= 3))
-        """,
-    )
-    _ds(
-        con,
-        "t_sigl",
-        """
-        SELECT doc_id, list(h ORDER BY i) AS sig FROM (
-          SELECT doc_id, i,
-                 MIN(((i * 2654435761 + 1) % 2147483647 * wm
-                      + (i * 40503 + 12345) % 2147483647) % 2147483647) AS h
-          FROM t_post CROSS JOIN range(64) AS t(i)
-          GROUP BY doc_id, i)
-        GROUP BY doc_id
-        """,
-    )
-    con.execute("DROP TABLE t_post")
-
-
 def _stage_banded(con) -> None:
-    """t_sigl -> banded(id_a, id_b, est_jaccard_e6) — the x04d result
-    (16 bands x 4 rows, distinct candidates, signature-estimate filter
-    est >= 0.5), each stage its own table."""
-    _ds(
-        con,
-        "t_bands",
-        """
-        SELECT doc_id, b, sig[4 * b + 1] AS v1, sig[4 * b + 2] AS v2,
-               sig[4 * b + 3] AS v3, sig[4 * b + 4] AS v4
-        FROM t_sigl CROSS JOIN range(16) AS t(b)
-        """,
-    )
-    _ds(
-        con,
-        "t_cand",
-        """
-        SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-        FROM t_bands a JOIN t_bands c
-          ON a.b = c.b AND a.v1 = c.v1 AND a.v2 = c.v2
-             AND a.v3 = c.v3 AND a.v4 = c.v4
-             AND a.doc_id < c.doc_id
-        """,
-    )
-    con.execute("DROP TABLE t_bands")
-    _ds(
-        con,
-        "banded",
-        """
-        SELECT id_a, id_b,
-               CAST(floor(est_jaccard * 1e6 + 0.5) AS BIGINT)
-                 AS est_jaccard_e6
-        FROM (
-          SELECT id_a, id_b,
-                 round(len(list_filter(list_zip(sa.sig, sb.sig),
-                                       p -> p[1] = p[2])) / 64.0, 6)
-                   AS est_jaccard
-          FROM t_cand
-          JOIN t_sigl sa ON sa.doc_id = id_a
-          JOIN t_sigl sb ON sb.doc_id = id_b)
-        WHERE est_jaccard >= 0.5
-        """,
-    )
-    con.execute("DROP TABLE t_cand")
+    """documents -> banded(id_a, id_b, est_jaccard_e6), the x04d result:
+    each CTE of dedup._MH_CHAIN staged as a temp table of its own name,
+    then the registered x04d oracle's candidate and estimate tail over
+    them."""
+    prev = None
+    for name, body in _MH_CHAIN:
+        _ds(con, name, body)
+        if prev in ("sh", "post", "sig"):  # read only by the next stage
+            con.execute(f"DROP TABLE {prev}")
+        prev = name
+    x04d = registry.ORACLE["x04d_minhash_native"]
+    _ds(con, "banded", "WITH " + x04d.split(_MH_CHAIN_SQL + ",", 1)[1])
+    con.execute("DROP TABLE bands")
+    con.execute("DROP TABLE sigl")
 
 
 def _stage_verified(con) -> None:
-    """banded -> verified — the x47 levenshtein gate over the bounded
-    candidate list (expressions verbatim from the registered x47)."""
-    _ds(
-        con,
-        "verified",
-        """
-        SELECT id_a, id_b, est_jaccard_e6,
-               CAST(edit_dist AS BIGINT) AS edit_dist,
-               CAST(floor(edit_dist * 1e6 / maxlen + 0.5) AS BIGINT)
-                 AS rel_edit_e6
-        FROM (
-          SELECT c.id_a, c.id_b, c.est_jaccard_e6,
-                 levenshtein(da.text, db.text) AS edit_dist,
-                 greatest(len(da.text), len(db.text), 1) AS maxlen
-          FROM banded c
-          JOIN documents da ON da.doc_id = c.id_a
-          JOIN documents db ON db.doc_id = c.id_b)
-        WHERE 5 * edit_dist <= 2 * maxlen
-        """,
-    )
+    """banded -> verified: the registered x47 oracle, with the x04d
+    oracle it embeds replaced by the staged `banded` table."""
+    x04d = f"({registry.ORACLE['x04d_minhash_native']})"
+    x47 = registry.ORACLE["x47_edit_verify"]
+    assert x47.count(x04d) == 1
+    _ds(con, "verified", x47.replace(x04d, "banded"))
 
 
 def _stage_exact(con) -> None:
@@ -489,12 +343,8 @@ def _stage_exact(con) -> None:
     _ds(
         con,
         "t_shsz",
-        """
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 range(1, greatest(len(toks) - 1, 1)),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-                 AS shingles
+        f"""
+        SELECT doc_id, {_shingles_sql(_X04_K)} AS shingles
         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
         """,
     )
@@ -504,7 +354,7 @@ def _stage_exact(con) -> None:
     _ds(
         con,
         "exact_pairs",
-        """
+        f"""
         SELECT id_a, id_b FROM (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
           FROM t_postx a JOIN t_postx b
@@ -514,7 +364,7 @@ def _stage_exact(con) -> None:
         JOIN t_sizes sb ON sb.doc_id = id_b
         WHERE CAST(floor(CAST(n_inter AS DOUBLE)
                          / (sa.n_sh + sb.n_sh - n_inter) * 1e6 + 0.5)
-                   AS BIGINT) >= 500000
+                   AS BIGINT) >= {int(_X04_THRESHOLD * 1e6)}
         """,
     )
     con.execute("DROP TABLE t_postx")
@@ -522,14 +372,14 @@ def _stage_exact(con) -> None:
 
 
 def _stage_phash_pairs(con) -> None:
-    """documents -> t_vp(id_a, id_b) — x96's hamming<=8 pair set.  The
+    """documents -> pairs(id_a, id_b) — x96's hamming<=8 pair set.  The
     DCT/pHash prefix is reused VERBATIM from the registered oracle
-    (sliced at its vp CTE); the all-pairs join is replaced by the
+    (sliced at its pairs CTE); the all-pairs join is replaced by the
     pigeonhole-exact 9-band candidate pre-filter (8+7x8 = 64 bits;
     hamming <= 8 can touch at most 8 bands, so >= 1 band is equal) and
     the registered bit_count(xor()) <= 8 verify on the candidates."""
     o = registry.ORACLE["x96_image_cluster_dedup"]
-    pre = o.split("vp AS (")[0].rstrip().rstrip(",")
+    pre = o.split("pairs AS (")[0].rstrip().rstrip(",")
     hashes_sql = (
         pre.replace("WITH RECURSIVE", "WITH", 1)
         + "\n    SELECT doc_id, ph FROM hashes"
@@ -551,7 +401,7 @@ def _stage_phash_pairs(con) -> None:
     )
     _ds(
         con,
-        "t_vp",
+        "pairs",
         """
         SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
         FROM t_hbands a JOIN t_hbands c
@@ -564,32 +414,30 @@ def _stage_phash_pairs(con) -> None:
 
 
 def _deep_x59(con):
-    _stage_sigl(con)
     _stage_banded(con)
     _stage_verified(con)
-    con.execute("DROP TABLE t_sigl")
-    return _close_over(con, "verified", "x59_verified_dedup")
+    con.execute("DROP TABLE banded")
+    con.execute("ALTER TABLE verified RENAME TO pairs")
+    return _close_over(con, "x59_verified_dedup")
 
 
 def _deep_x04e(con):
     _stage_exact(con)
-    return _close_over(con, "exact_pairs", "x04e_dedup_clusters")
+    con.execute("ALTER TABLE exact_pairs RENAME TO pairs")
+    return _close_over(con, "x04e_dedup_clusters")
 
 
 def _deep_x96(con):
     _stage_phash_pairs(con)
-    return _close_over(con, "t_vp", "x96_image_cluster_dedup")
+    return _close_over(con, "x96_image_cluster_dedup")
 
 
 def _deep_x60(con):
-    # three staged pair sets, then the same final aggregation as the
-    # staged x60 restatement
+    # three staged pair sets, then x60's registered final aggregation
     _stage_exact(con)
-    _stage_sigl(con)
     _stage_banded(con)
     _stage_verified(con)
-    con.execute("DROP TABLE t_sigl")
-    return fetch(con, _X60_FINAL)
+    return fetch(con, "WITH " + _X60_FINAL)
 
 
 DEEP_STAGED = {

@@ -342,3 +342,34 @@ def test_every_package_def_is_reached_from_a_program_entry():
         assert any(
             name == found[key].name for name, _, _ in _calls(body[0])
         ), f"{key}: {where} no longer calls it"
+
+
+# --- Shared oracle rules ------------------------------------------------------
+# Each near-dup rule's DuckDB oracle SQL is stated once, by a builder in
+# operators/dedup.py next to the Spark code it mirrors and built from the
+# constants that code reads: the MinHash chain (_MH_CHAIN), the closure
+# (_CLOSURE_SQL) and the k-shingle expression (_shingles_sql).  The fan-session
+# gap is one integer in streaming/jobs.py, so no oracle writes it as a literal.
+# A second copy of any of these lets the two engines drift apart.
+_STATED_ONCE = (
+    "2654435761",
+    "reach(node, r) AS (",
+    "range(1, greatest(len(toks) -",
+)
+_STATED_NOWHERE = ("INTERVAL 30 MINUTE", "1800000")
+
+
+def test_shared_oracle_rules_are_stated_once():
+    files = sorted((REPO / "fanstats_producer_spark").rglob("*.py"))
+    files += sorted((REPO / "scripts").glob("*.py"))
+    texts = {str(f.relative_to(REPO)): f.read_text() for f in files}
+    bad = []
+    for frag in _STATED_ONCE + _STATED_NOWHERE:
+        hits = {path: t.count(frag) for path, t in texts.items() if frag in t}
+        want = 1 if frag in _STATED_ONCE else 0
+        if sum(hits.values()) != want:
+            bad.append(f"{frag!r} x{sum(hits.values())}, want {want}: {hits}")
+    assert not bad, (
+        "shared oracle rules restated; build each from its one builder "
+        "or constant:\n" + "\n".join(bad)
+    )

@@ -284,7 +284,8 @@ _STAGED_USERS = {
                 s, st, ck, k=5),
             True),
     "s33": (jobs.EVENT_SCHEMA, _EVENTS,
-            lambda s, st, ck, o: jobs.streaming_ks_monitor(s, st, ck),
+            lambda s, st, ck, o: jobs.streaming_value_counts_monitor(
+                s, st, ck, job_name="streaming_ks_monitor"),
             False),
     "s35": (_DOC_SCHEMA, _DOCS,
             lambda s, st, ck, o: jobs.streaming_contingency_monitor(
@@ -592,7 +593,7 @@ def test_tws_event_time_timers_close_sessions(spark, landing):
     stream = jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1)
     got = _run_to_memory(
         spark,
-        jobs.user_session_close_tws(stream, gap_seconds=1800, watermark="10 minutes"),
+        jobs.user_session_close_tws(stream),
         "s10b_test",
         "append",
     )
@@ -742,7 +743,7 @@ def test_tws_timer_boundary_at_exact_watermark(spark, landing):
     stream = jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1)
     got = _run_to_memory(
         spark,
-        jobs.user_session_close_tws(stream, gap_seconds=1800, watermark="10 minutes"),
+        jobs.user_session_close_tws(stream),
         "s10b_boundary_test",
         "append",
     )
@@ -1043,8 +1044,6 @@ def test_tws_crash_recovery_parity(spark, landing, tmp_path):
             jobs.read_event_stream(
                 spark, str(landing), max_files_per_trigger=1
             ),
-            gap_seconds=1800,
-            watermark="10 minutes",
         )
         return (
             df.writeStream.format("parquet")
@@ -2304,12 +2303,13 @@ def test_s33_ks_monitor_slicing_invariant_and_stale_state_raises(
     state = str(tmp_path / "state")
 
     def _drain(ckpt):
-        q = jobs.streaming_ks_monitor(
+        q = jobs.streaming_value_counts_monitor(
             jobs.read_event_stream(
                 spark, str(landing), max_files_per_trigger=1
             ),
             state,
             str(tmp_path / ckpt),
+            job_name="streaming_ks_monitor",
         )
         q.awaitTermination(120)
         return q
