@@ -147,8 +147,11 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     thousands of splits and this is a no-op.
     """
     if df.isStreaming:
-        # partition introspection is illegal on streaming plans; micro-
-        # batch sources control their own split count (maxFilesPerTrigger)
+        # partition introspection is illegal on streaming plans.  A file
+        # stream's micro-batch plans its splits from the landing's file
+        # layout (maxFilesPerTrigger bounds how many files make up a
+        # batch, not how many splits it has), so a stream gets its
+        # N-way compute where its landing is staged (_doc_landing).
         return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

@@ -254,7 +254,7 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(stream)
 
 
-_DOC_LANDING_CACHE: dict[tuple, str] = {}
+_DOC_LANDING_CACHE: dict[tuple, tuple[str, list[str]]] = {}
 #: s24's eval-suite shingles, collected once per (fixture, session) —
 #: the suite is static across drains (same rationale as _doc_landing)
 _EVAL_SHINGLES_CACHE: dict[tuple, list[str]] = {}
@@ -349,26 +349,45 @@ def _stage_parity_landing(spark: SparkSession, sf_dir: str) -> str:
 def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
     """Staged document landing dir — (doc_id, ts, text, lang) JSON with
     the deterministic doc_id-derived event time — shared by every
-    document-stream drain (s12/s21/s22).  The distributed JSON stage
-    costs ~1 s per key at bench SF and the content is identical across
-    drains, so ONE write serves the whole session (the r6-verdict
-    stream-floor ask: share the warmed setup, keep the drains real).
-    The dir is read-only after staging; per-key state/checkpoint dirs
-    stay private.  Removal defers to interpreter exit so no in-flight
-    stream races the cleanup."""
+    document-stream drain (s12, s21, s22, s24, s28, s29, s30, s32).
+
+    Staged SPREAD, one part file per core: the file source plans one
+    input split per small file, so the landing's file layout IS each
+    drain's task count.  The fixture's documents.parquet is one row
+    group; written as-is it lands as ONE part file, and every drain's
+    per-row kernels (MinHash band keys, the pHash/audio workers, the
+    keyword tagger) run in one task.  A producer landing is already
+    multi-file (ndjson.write_partitioned writes one file per writing
+    task), so the spread gives the fixture production's layout.
+    AvailableNow with no maxFilesPerTrigger still drains every part file
+    in ONE micro-batch.
+
+    The content is identical across drains, so ONE write serves the
+    whole session; the dir is read-only after staging and per-key
+    state/checkpoint dirs stay private.  A cached landing is trusted
+    only while Spark's _SUCCESS marker and every staged part file still
+    exist: a partly reaped landing would drain fewer rows silently.
+    Removal defers to interpreter exit so no in-flight stream races the
+    cleanup."""
     import atexit
+    import glob as _glob
     import os
     import shutil
 
     from fanstats_producer_spark.io import load as _load
+    from fanstats_producer_spark.io import spread
 
     key = _fixture_cache_key(sf_dir)
     cached = _DOC_LANDING_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
+    if cached is not None:
+        landing, parts = cached
+        if parts and all(
+            os.path.isfile(f) for f in (os.path.join(landing, "_SUCCESS"), *parts)
+        ):
+            return landing
     landing = scratch_dir("doc_landing_")
     atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    docs = _load(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = spread(_load(spark, sf_dir, "documents"), "doc_id")
     # Stage DISTRIBUTED (executor-side JSON write, not a driver
     # collect — at 100 TB the corpus never fits on the driver).  Event
     # time is synthetic and deterministic: doc_id seconds laid out
@@ -387,7 +406,7 @@ def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .json(landing)
     )
-    _DOC_LANDING_CACHE[key] = landing
+    _DOC_LANDING_CACHE[key] = (landing, _glob.glob(os.path.join(landing, "part-*")))
     return landing
 
 

@@ -64,15 +64,20 @@ python -m pytest tests/ -q
 # perfbench imports driver-entry helpers (_few_partitions, _skip_nodata_batch,
 # _rocksdb_state, the landing caches): its tests gate their names
 python -m pytest perfbench/tests -q
-# Short ingest smoke through the producer path.  perfbench exits 0 even
-# when a run fails, so the gate is its last line: correct and no failures.
-python3 perfbench/run.py --workload ingest --seed 1 --seconds 2 --trace 0 | tail -n 1 |
-  python3 -c '
+# Short smokes: the producer path (ingest), and the stream drains over
+# the real sf0.1 landings (stream: s12/s15/s21/s25/s32 against their
+# fingerprints).  perfbench exits 0 even when a run fails, so the gate is
+# its last line: correct and no failures.
+for workload in ingest stream; do
+  python3 perfbench/run.py --workload "$workload" --seed 1 --seconds 2 --trace 0 |
+    tail -n 1 | python3 -c '
 import json, sys
+w = sys.argv[1]
 r = json.loads(sys.stdin.read())
 if r.get("correct") is not True or r.get("failed") != 0:
-    sys.exit(f"ingest smoke failed: {r}")
-print("ingest smoke OK")'
+    sys.exit(f"{w} smoke failed: {r}")
+print(f"{w} smoke OK")' "$workload"
+done
 python scripts/check_oracle.py /root/testdata/sf0.01
 # bench-SF sweep: catches cardinality-regime drift the sf0.01 gate
 # misses (r6: HLL lgConfigK default was exact at sf0.01, wrong at sf0.1)

@@ -355,7 +355,7 @@ def main() -> int:
     sf = args.sf_dir or os.path.join(TESTDATA, "sf0.1" if args.keys else "sf0.01")
 
     spark = get_spark("plan-dump")
-    ensure_layout(spark, sf)
+    layout = os.path.dirname(ensure_layout(spark, sf))
     plans = {
         key: explain_str(registry.QUERIES[key](spark, sf), "formatted")
         for key in args.keys or HEADLINERS
@@ -377,12 +377,18 @@ def main() -> int:
            "property each plan is designed around.  Regenerate after any",
            "plan-affecting change: `python scripts/dump_plans.py`.",
            ""]
+    # The same plan must write the same file on any host: the partitioned
+    # layout copy lives under a per-host temp dir, and Catalyst numbers
+    # expression ids per session.  PushedFilters print source filters,
+    # which carry no ids but may hold '#' in a literal (q74's Brand#4).
     for key, note in HEADLINERS.items():
         plan = plans[key]
         # keep the operator tree + scan metadata, drop the verbose field lists
         tree = plan.split("\n\n")[0]
         details = "\n".join(
-            line for line in plan.splitlines()
+            line if line.startswith("PushedFilters")
+            else re.sub(r"#\d+", "#N", line.replace(layout, "<fanstats_layout>"))
+            for line in plan.splitlines()
             if re.search(r"PushedFilters|PartitionFilters|ReadSchema|Location", line)
         )
         out += [f"## {key}", "", note, "", "```", tree, "", details, "```", ""]

@@ -2626,6 +2626,58 @@ def test_driver_entries_harness_imports():
         assert callable(cm)
 
 
+def _landing_rows(spark, landing):
+    return sorted(
+        spark.read.schema(jobs.DOCUMENT_SCHEMA)
+        .json(landing)
+        .select("doc_id", "text", "lang")
+        .collect()
+    )
+
+
+def test_doc_landing_splits_across_cores(spark):
+    """The shared document landing is staged one part file per core, so
+    every doc-stream drain plans one split per file and runs its per-row
+    kernels on every core, not in one task over a one-file landing."""
+    import glob
+    import os
+
+    from conftest import SF_DIR
+
+    from fanstats_producer_spark.io import load
+    from fanstats_producer_spark.streaming.driver_entries import _doc_landing
+
+    landing = _doc_landing(spark, SF_DIR)
+    if spark.sparkContext.defaultParallelism >= 2:
+        assert len(glob.glob(os.path.join(landing, "part-*"))) >= 2
+        scan = spark.read.schema(jobs.DOCUMENT_SCHEMA).json(landing)
+        assert scan.rdd.getNumPartitions() >= 2
+    fixture = load(spark, SF_DIR, "documents").select("doc_id", "text", "lang")
+    assert _landing_rows(spark, landing) == sorted(fixture.collect())
+
+
+@pytest.mark.parametrize("victim", ["part", "_SUCCESS"])
+def test_doc_landing_restages_a_partly_reaped_landing(spark, victim):
+    """A cached landing that lost a part file or Spark's _SUCCESS marker
+    (an age-based /tmp reaper, say) is staged again, not drained short."""
+    import glob
+    import os
+
+    from conftest import SF_DIR
+
+    from fanstats_producer_spark.streaming.driver_entries import _doc_landing
+
+    landing = _doc_landing(spark, SF_DIR)
+    rows = _landing_rows(spark, landing)
+    parts = sorted(glob.glob(os.path.join(landing, "part-*")))
+    os.remove(parts[0] if victim == "part" else os.path.join(landing, "_SUCCESS"))
+    again = _doc_landing(spark, SF_DIR)
+    assert again != landing
+    assert os.path.isfile(os.path.join(again, "_SUCCESS"))
+    assert _landing_rows(spark, again) == rows
+    assert _doc_landing(spark, SF_DIR) == again
+
+
 def test_drain_batch_precondition_and_conf_restore(spark, landing):
     """`_drain` owns the batch-count precondition and the drain confs:
     a two-file landing read one file per trigger drains as 2 data
