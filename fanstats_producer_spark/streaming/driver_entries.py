@@ -15,8 +15,12 @@ state — watermark eviction across many micro-batches, state recovery
 
 The drain policy lives in ONE place, `_drain`: shuffle width, the
 trailing no-data tick, the state backend, the AvailableNow run and the
-batch-count precondition.  `_drain_memory` adds the memory sink.  Each
-key states only what differs from the defaults.
+batch-count precondition.  Two sink combinators wrap it:
+`_drain_memory` drains into a memory sink, and `_drain_files` drains
+a file sink in a private work dir and reads its table back.  Every
+landing a stream reads, bar s20's two per-call source dirs, is staged
+ONCE per session by `_landing`, which returns the stream.  Each key
+states only what differs from the defaults.
 
 Everything is bounded: checkpoints, state and file sinks live in a
 private scratch dir removed after the drain (`_work_dir`), output rows
@@ -27,7 +31,11 @@ don't collide.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import glob
+import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,6 +71,17 @@ from fanstats_producer_spark.streaming import jobs
 
 
 @contextlib.contextmanager
+def _conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the enclosed block; the prior value is
+    restored on exit, even when the block raises."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _few_partitions(spark: SparkSession, n: int = 8):
     """Stateful-stream state stores are per-shuffle-partition (HDFS-
     backed store init + commit per partition per micro-batch); at bench
@@ -74,32 +93,18 @@ def _few_partitions(spark: SparkSession, n: int = 8):
     this knob goes UP, not down.  (Purely a parallelism knob: skipping
     the no-data micro-batch is a SEPARATE, semantic choice — `_drain`'s
     `tick`.)"""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return _conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
-@contextlib.contextmanager
 def _skip_nodata_batch(spark: SparkSession):
     """Skip the trailing no-data micro-batch for the enclosed drain.
     Only drains whose OUTPUT does not depend on it may use this; the
     rule is `_drain`'s `tick`.  Eviction-across-batches itself stays
     pytest-verified with multi-batch file streams
     (tests/test_streaming.py)."""
-    prev = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev
-        )
+    return _conf(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false")
 
 
-@contextlib.contextmanager
 def _rocksdb_state(spark: SparkSession):
     """Run the enclosed drain on the RocksDB state store provider — the
     production backend once state outgrows the JVM heap (the default
@@ -107,17 +112,12 @@ def _rocksdb_state(spark: SparkSession):
     RocksDB spills to local SSD and bounds memory, which is the only
     viable posture for 100 TB keyed state).  Results are provider-
     independent — only the storage engine changes."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key,
+    return _conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
     )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _drain(
@@ -187,6 +187,20 @@ def _drain_memory(
     return spark.table(name)
 
 
+def _drain_files(spark: SparkSession, start, read, **kw) -> DataFrame:
+    """`_drain` a query that writes parquet tables, in a private work
+    dir removed on return.  `start(out, state, ckpt)` starts the query
+    on three dirs inside it: `out`, the table the key returns; `state`,
+    a side table the sink keeps; `ckpt`, the checkpoint.  A key whose
+    result IS its state table passes `out` as that state.  Returns
+    `read(spark.read.parquet(out))`, materialized before the dir goes.
+    `kw` goes to `_drain`."""
+    with _work_dir("drain_") as work:
+        out, state, ckpt = (os.path.join(work, d) for d in ("out", "state", "ckpt"))
+        _drain(spark, lambda: start(out, state, ckpt), **kw)
+        return read(spark.read.parquet(out)).localCheckpoint(eager=True)
+
+
 def _require_protobuf(spark: SparkSession) -> None:
     """transformWithStateInPandas (s10, s10b) speaks protobuf between
     the JVM and Python; see s10 for how compat.ensure_protobuf provides
@@ -206,8 +220,6 @@ def _work_dir(prefix: str):
     """A private scratch dir for one drain's state, checkpoint and
     outputs, removed on exit — so results must be read back eagerly
     inside the block."""
-    import shutil
-
     work = scratch_dir(prefix)
     try:
         yield work
@@ -215,29 +227,84 @@ def _work_dir(prefix: str):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _link_landing(spark: SparkSession, path: str, prefix: str) -> DataFrame:
-    """File-stream source over ONE fixture parquet file.  The
-    file-stream source requires a directory landing zone, so the file
-    is staged into a fresh dir by hard link (fallback copy) — zero data
-    movement, and the stream sees it as one arriving file.  The schema
-    comes from a static read so the stream never infers.  The dir must
-    outlive this call (the caller drains later), so removal defers to
-    interpreter exit — bounds /tmp growth across a long bench/driver
-    session without racing any in-flight stream."""
-    import atexit
-    import os
-    import shutil
+#: staged landings, one entry per landing dir: cache key -> (dir, the
+#: files staged into it).  The document and parity landings key on
+#: _fixture_cache_key, a linked landing on its source file's _file_key.
+_DOC_LANDING_CACHE: dict[tuple, tuple[str, list[str]]] = {}
+_PARITY_LANDING_CACHE: dict[tuple, tuple[str, list[str]]] = {}
+_LINK_LANDING_CACHE: dict[tuple, tuple[str, list[str]]] = {}
+#: s24's eval-suite shingles, collected once per (fixture, session) —
+#: the suite is static across drains (same rationale as _landing)
+_EVAL_SHINGLES_CACHE: dict[tuple, list[str]] = {}
+
+
+def _landing(cache: dict, key: tuple, prefix: str, stage, read) -> DataFrame:
+    """File-stream source over a landing dir staged ONCE per session.
+
+    The file-stream source reads a directory, and a landing's content
+    is fixed by its source files, so the first drain stages it into a
+    scratch dir, `stage(landing)` returning the files it wrote, and
+    every later drain reads that dir (per-key state and checkpoint
+    dirs stay private).  `key` fingerprints the source files, so a
+    fixture regenerated mid-session gets a fresh landing.  A cached
+    landing is trusted only while every staged file still exists: an
+    age-based /tmp reaper that took one would have a drain read fewer
+    rows silently.  The dir must outlive the caller's drain, so its
+    removal defers to interpreter exit.  Returns `read(landing)`."""
+    landing, files = cache.get(key, (None, []))
+    if not files or not all(os.path.isfile(f) for f in files):
+        landing = scratch_dir(prefix)
+        atexit.register(shutil.rmtree, landing, ignore_errors=True)
+        files = stage(landing)
+        cache[key] = (landing, files)
+    return read(landing)
+
+
+def _file_key(path: str) -> tuple:
+    """(abspath, mtime_ns, size) of one file, or (abspath, 0, 0) when
+    it is missing.  A stat, no data read."""
+    path = os.path.abspath(path)
+    try:
+        st = os.stat(path)
+        return (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        return (path, 0, 0)
+
+
+def _fixture_cache_key(sf_dir: str) -> tuple:
+    """Cache key for per-fixture session caches: abspath PLUS the
+    documents.parquet (mtime_ns, size) fingerprint, so regenerating the
+    fixture into the same directory mid-session (gen_sf.py) invalidates
+    the staged landings / collected shingles instead of silently serving
+    stale content (ADVICE r9)."""
+    path = os.path.abspath(sf_dir)
+    return (path, *_file_key(os.path.join(path, "documents.parquet"))[1:])
+
+
+def _link_landing(spark: SparkSession, path: str) -> DataFrame:
+    """File-stream source over ONE fixture parquet file, staged into a
+    landing dir by hard link (fallback copy) — zero data movement, and
+    the stream sees it as one arriving file.  Every drain over the same
+    file reads one landing.  The schema comes from a static read so the
+    stream never infers."""
+
+    def stage(landing: str) -> list[str]:
+        name = os.path.basename(path).replace(".parquet", "-000.parquet")
+        dst = os.path.join(landing, name)
+        try:
+            os.link(path, dst)
+        except OSError:
+            shutil.copy(path, dst)
+        return [dst]
 
     schema = spark.read.parquet(path).schema
-    landing = scratch_dir(prefix)
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    name = os.path.basename(path).replace(".parquet", "-000.parquet")
-    dst = os.path.join(landing, name)
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    return spark.readStream.schema(schema).parquet(landing)
+    return _landing(
+        _LINK_LANDING_CACHE,
+        _file_key(path),
+        "link_landing_",
+        stage,
+        lambda landing: spark.readStream.schema(schema).parquet(landing),
+    )
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,106 +317,74 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample check a stream cannot run — and the session confs (UTC,
     # nanosAsLong) it pins also govern this stream.
     load(spark, sf_dir, "events")
-    stream = _link_landing(spark, f"{sf_dir}/events.parquet", "s_landing_")
-    return normalize_events_ts(stream)
+    return normalize_events_ts(_link_landing(spark, f"{sf_dir}/events.parquet"))
 
 
-_DOC_LANDING_CACHE: dict[tuple, tuple[str, list[str]]] = {}
-#: s24's eval-suite shingles, collected once per (fixture, session) —
-#: the suite is static across drains (same rationale as _doc_landing)
-_EVAL_SHINGLES_CACHE: dict[tuple, list[str]] = {}
-
-
-#: staged parity landings, one per fixture per session (the _doc_landing
-#: rationale: the content is identical across drains, so s25 and s27
-#: share ONE staging; measured ~2 s per avoided restage at bench SF)
-_PARITY_LANDING_CACHE: dict[tuple, str] = {}
-
-
-def _fixture_cache_key(sf_dir: str) -> tuple:
-    """Cache key for per-fixture session caches: abspath PLUS the
-    documents.parquet (mtime_ns, size) fingerprint, so regenerating the
-    fixture into the same directory mid-session (gen_sf.py) invalidates
-    the staged landings / collected shingles instead of silently serving
-    stale content (ADVICE r9).  Stat of one file — no data read."""
-    import os
-
-    path = os.path.abspath(sf_dir)
-    doc = os.path.join(path, "documents.parquet")
-    try:
-        st = os.stat(doc)
-        return (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (path, 0, 0)
-
-
-def _stage_parity_landing(spark: SparkSession, sf_dir: str) -> str:
-    """Two-micro-batch document landing, staged DISTRIBUTED (the
-    _doc_landing pattern — VERDICT r8 item 3: the corpus never touches
-    the driver): two doc_id-parity filtered executor-side JSON writes,
-    each coalesced to ONE part file (the demo contract is exactly two
-    file-stream batches — batch A seeds state, batch B exercises it;
-    the coalesce(1) is that contract's shape, not an engine limit),
-    renamed into the landing with distinct mtimes so the file-stream
-    source orders them.  Used by s25 (Bloom dedup) and s27 (packing);
-    cached per sf_dir (read-only after staging — each key's
-    state/checkpoint dirs stay private under its own `work`)."""
-    import atexit
-    import glob as _glob
-    import os
-    import shutil
-
+def _parity_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-micro-batch document stream, read one file per trigger from
+    a landing staged DISTRIBUTED (the _doc_landing pattern — VERDICT r8
+    item 3: the corpus never touches the driver): two doc_id-parity
+    filtered executor-side JSON writes, each coalesced to ONE part file
+    (the demo contract is exactly two file-stream batches — batch A
+    seeds state, batch B exercises it; the coalesce(1) is that
+    contract's shape, not an engine limit), renamed into the landing
+    with distinct mtimes so the file-stream source orders them.  Used
+    by s25 (Bloom dedup) and s27 (packing), which share ONE staging
+    (measured ~2 s per avoided restage at bench SF).  Both staged files
+    are checked before reuse — their deliberately-old epoch mtimes
+    (batch ordering) make them prime targets for age-based /tmp
+    reapers."""
     from fanstats_producer_spark.io import load as _load
 
-    key = _fixture_cache_key(sf_dir)
-    cached = _PARITY_LANDING_CACHE.get(key)
-    if cached is not None and all(
-        # both staged files must still exist — their deliberately-old
-        # epoch mtimes (batch ordering) make them prime targets for
-        # age-based /tmp reapers; a dir-only check could hand a drain
-        # an empty landing and return zero verdicts silently
-        os.path.isfile(os.path.join(cached, f))
-        for f in ("a.json", "b.json")
-    ):
-        return cached
-    landing = scratch_dir("parity_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    docs = _load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
-        "text",
-        "lang",
-    )
-    for half, fname, mtime in (
-        (0, "a.json", 1_000_000_000),
-        (1, "b.json", 1_000_000_100),
-    ):
-        stage = landing + f".half{half}"
-        (
-            docs.filter(F.col("doc_id") % 2 == half)
-            .coalesce(1)
-            .write.json(stage)
+    def stage(landing: str) -> list[str]:
+        docs = _load(spark, sf_dir, "documents").select(
+            "doc_id",
+            F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
+            "text",
+            "lang",
         )
-        parts = _glob.glob(os.path.join(stage, "part-*.json"))
-        if len(parts) != 1:
-            # data-dependent gate (empty parity partition, changed part
-            # naming) — must survive python -O, so raise, don't assert
-            raise ValueError(
-                f"parity stage half={half} expected exactly one part "
-                f"file, got {parts!r} in {stage}"
+        staged = []
+        for half, fname, mtime in (
+            (0, "a.json", 1_000_000_000),
+            (1, "b.json", 1_000_000_100),
+        ):
+            part_dir = landing + f".half{half}"
+            (
+                docs.filter(F.col("doc_id") % 2 == half)
+                .coalesce(1)
+                .write.json(part_dir)
             )
-        dst = os.path.join(landing, fname)
-        os.rename(parts[0], dst)
-        os.utime(dst, (mtime, mtime))
-        shutil.rmtree(stage, ignore_errors=True)
-    _PARITY_LANDING_CACHE[key] = landing
-    return landing
+            parts = glob.glob(os.path.join(part_dir, "part-*.json"))
+            if len(parts) != 1:
+                # data-dependent gate (empty parity partition, changed part
+                # naming) — must survive python -O, so raise, don't assert
+                raise ValueError(
+                    f"parity stage half={half} expected exactly one part "
+                    f"file, got {parts!r} in {part_dir}"
+                )
+            dst = os.path.join(landing, fname)
+            os.rename(parts[0], dst)
+            os.utime(dst, (mtime, mtime))
+            shutil.rmtree(part_dir, ignore_errors=True)
+            staged.append(dst)
+        return staged
+
+    return _landing(
+        _PARITY_LANDING_CACHE,
+        _fixture_cache_key(sf_dir),
+        "parity_landing_",
+        stage,
+        lambda landing: spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(landing),
+    )
 
 
-def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
-    """Staged document landing dir — (doc_id, ts, text, lang) JSON with
-    the deterministic doc_id-derived event time — shared by every
-    document-stream drain (s12, s21, s22, s24, s28, s29, s30, s32).
+def _doc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document stream over the staged document landing — (doc_id, ts,
+    text, lang) JSON with the deterministic doc_id-derived event time —
+    shared by every document-stream drain (s12, s21, s22, s24, s28,
+    s29, s30, s32).
 
     Staged SPREAD, one part file per core: the file source plans one
     input split per small file, so the landing's file layout IS each
@@ -360,54 +395,43 @@ def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
     multi-file (ndjson.write_partitioned writes one file per writing
     task), so the spread gives the fixture production's layout.
     AvailableNow with no maxFilesPerTrigger still drains every part file
-    in ONE micro-batch.
-
-    The content is identical across drains, so ONE write serves the
-    whole session; the dir is read-only after staging and per-key
-    state/checkpoint dirs stay private.  A cached landing is trusted
-    only while Spark's _SUCCESS marker and every staged part file still
-    exist: a partly reaped landing would drain fewer rows silently.
-    Removal defers to interpreter exit so no in-flight stream races the
-    cleanup."""
-    import atexit
-    import glob as _glob
-    import os
-    import shutil
-
+    in ONE micro-batch.  The staged files are Spark's _SUCCESS marker
+    and every part file."""
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.io import spread
 
-    key = _fixture_cache_key(sf_dir)
-    cached = _DOC_LANDING_CACHE.get(key)
-    if cached is not None:
-        landing, parts = cached
-        if parts and all(
-            os.path.isfile(f) for f in (os.path.join(landing, "_SUCCESS"), *parts)
-        ):
-            return landing
-    landing = scratch_dir("doc_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    docs = spread(_load(spark, sf_dir, "documents"), "doc_id")
-    # Stage DISTRIBUTED (executor-side JSON write, not a driver
-    # collect — at 100 TB the corpus never fits on the driver).  Event
-    # time is synthetic and deterministic: doc_id seconds laid out
-    # across epoch-day 2024-01-01, computed as a column so every
-    # writer task derives it locally.
-    (
-        docs.withColumn(
-            "ts",
-            F.expr(
-                "timestamp_seconds(to_unix_timestamp("
-                "timestamp'2024-01-01 00:00:00') + (doc_id div 3600) % 24 * 3600"
-                " + (doc_id div 60) % 60 * 60 + doc_id % 60)"
-            ),
+    def stage(landing: str) -> list[str]:
+        docs = spread(_load(spark, sf_dir, "documents"), "doc_id")
+        # Stage DISTRIBUTED (executor-side JSON write, not a driver
+        # collect — at 100 TB the corpus never fits on the driver).  Event
+        # time is synthetic and deterministic: doc_id seconds laid out
+        # across epoch-day 2024-01-01, computed as a column so every
+        # writer task derives it locally.
+        (
+            docs.withColumn(
+                "ts",
+                F.expr(
+                    "timestamp_seconds(to_unix_timestamp("
+                    "timestamp'2024-01-01 00:00:00') + (doc_id div 3600) % 24 * 3600"
+                    " + (doc_id div 60) % 60 * 60 + doc_id % 60)"
+                ),
+            )
+            .select("doc_id", "ts", "text", "lang")
+            .write.mode("overwrite")
+            .json(landing)
         )
-        .select("doc_id", "ts", "text", "lang")
-        .write.mode("overwrite")
-        .json(landing)
+        return [
+            os.path.join(landing, "_SUCCESS"),
+            *glob.glob(os.path.join(landing, "part-*")),
+        ]
+
+    return _landing(
+        _DOC_LANDING_CACHE,
+        _fixture_cache_key(sf_dir),
+        "doc_landing_",
+        stage,
+        lambda landing: jobs.read_document_stream(spark, landing),
     )
-    _DOC_LANDING_CACHE[key] = (landing, _glob.glob(os.path.join(landing, "part-*")))
-    return landing
 
 
 @query(
@@ -423,19 +447,13 @@ def s01_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     per event_date partition with its row count — the sink's manifest,
     not the raw echo, so the result stays tiny at any scale."""
     stream = _read_events_stream(spark, sf_dir)
-    with _work_dir("s01_") as work:
-        out = f"{work}/out"
-        _drain(
-            spark,
-            lambda: jobs.write_partitioned_stream(stream, out, f"{work}/ckpt"),
-        )
-        return (
-            spark.read.parquet(out)
-            .groupBy("event_date")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("event_date").cast("string").alias("event_date"), "n")
-            .localCheckpoint(eager=True)
-        )
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.write_partitioned_stream(stream, out, ckpt),
+        lambda landed: landed.groupBy("event_date")
+        .agg(F.count("*").alias("n"))
+        .select(F.col("event_date").cast("string").alias("event_date"), "n"),
+    )
 
 
 @query(
@@ -637,21 +655,15 @@ def s09_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax the oracle states (ties broken by event_id, so the merge is
     deterministic across any batching)."""
     stream = _read_events_stream(spark, sf_dir)
-    with _work_dir("s09_") as work:
-        state = f"{work}/state"
-        _drain(
-            spark,
-            lambda: jobs.upsert_latest_per_key(stream, state, f"{work}/ckpt"),
-        )
-        return (
-            spark.read.parquet(state)
-            .select(
-                "user_id",
-                F.col("event_id").alias("last_event_id"),
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.upsert_latest_per_key(stream, out, ckpt),
+        lambda state: state.select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+        ),
+    )
 
 
 @query(
@@ -853,9 +865,7 @@ def s12_stream_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maxFilesPerTrigger drains every staged part file in ONE
     # micro-batch, so the 30-min watermark never drops rows regardless
     # of part-file order.
-    landing = _doc_landing(spark, sf_dir)
-    stream = jobs.read_document_stream(spark, landing)
-    prepped = jobs.corpus_prep_stream(stream)
+    prepped = jobs.corpus_prep_stream(_doc_landing(spark, sf_dir))
     return _drain_memory(spark, prepped, "append").agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count("*").alias("n_chunks"),
@@ -998,8 +1008,6 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics a multi-source production ingest relies on.  Drained in
     update mode; the final emission per key equals the batch aggregate
     over both event types."""
-    import os
-
     from fanstats_producer_spark.functions.num import dsum_pos
     from fanstats_producer_spark.io import load
 
@@ -1067,24 +1075,14 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets a 100 TB/day crawl dedup online instead of re-running batch
     LSH over history; jobs.streaming_near_dup documents why the merge
     is JVM-side foreachBatch rather than per-bucket Python state."""
-    import os
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    with _work_dir("s21_work_") as work:
-        state_dir = os.path.join(work, "state")
-        verdict_dir = os.path.join(work, "verdicts")
-        ckpt = os.path.join(work, "ckpt")
-        stream = jobs.read_document_stream(spark, landing)
-        _drain(
-            spark,
-            lambda: jobs.streaming_near_dup(stream, state_dir, verdict_dir, ckpt),
-        )
-        # one verdict row per doc (a doc's band keys ride one input row,
-        # so they never split across micro-batches); materialize before
-        # the temp dirs go away
-        out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
-        out = out.localCheckpoint(eager=True)
-        return out
+    stream = _doc_landing(spark, sf_dir)
+    # one verdict row per doc (a doc's band keys ride one input row, so
+    # they never split across micro-batches)
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_near_dup(stream, state, out, ckpt),
+        lambda verdicts: verdicts.select("doc_id", "is_dup"),
+    )
 
 
 @query(
@@ -1141,26 +1139,15 @@ def s22_stream_verified_near_dup(
     at most one data batch (none, an empty landing, is trivially
     oracle-consistent) and fails loudly if a trigger change ever splits
     it."""
-    import os
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    with _work_dir("s22_work_") as work:
-        state_dir = os.path.join(work, "state")
-        verdict_dir = os.path.join(work, "verdicts")
-        ckpt = os.path.join(work, "ckpt")
-        stream = jobs.read_document_stream(spark, landing)
-        _drain(
-            spark,
-            lambda: jobs.streaming_verified_near_dup(
-                stream, state_dir, verdict_dir, ckpt
-            ),
-            batches=(0, 1),
-        )
-        out = spark.read.parquet(verdict_dir).select(
-            "doc_id", "is_candidate", "is_dup"
-        )
-        out = out.localCheckpoint(eager=True)
-        return out
+    stream = _doc_landing(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_verified_near_dup(
+            stream, state, out, ckpt
+        ),
+        lambda verdicts: verdicts.select("doc_id", "is_candidate", "is_dup"),
+        batches=(0, 1),
+    )
 
 
 @query(
@@ -1207,8 +1194,6 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PSI is recomputed from totals, the drained monitor equals the
     batch formulation for ANY batch slicing — the oracle states that
     batch value directly (no single-batch precondition, unlike s22)."""
-    import os
-
     from fanstats_producer_spark.io import load as _load
 
     ref_counts = (
@@ -1226,20 +1211,13 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_events_stream(spark, sf_dir).filter(
         F.col("event_id") % 2 == 1
     )
-    with _work_dir("s23_work_") as work:
-        state_dir = os.path.join(work, "state")
-        monitor_dir = os.path.join(work, "monitor")
-        ckpt = os.path.join(work, "ckpt")
-        _drain(
-            spark,
-            lambda: jobs.streaming_psi_drift(
-                stream, ref_counts, state_dir, monitor_dir, ckpt
-            ),
-        )
-        out = spark.read.parquet(monitor_dir).select(
-            "event_type", "psi_e9", "n_ref", "n_live"
-        )
-        return out.localCheckpoint(eager=True)
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_psi_drift(
+            stream, ref_counts, state, out, ckpt
+        ),
+        lambda monitor: monitor.select("event_type", "psi_e9", "n_ref", "n_live"),
+    )
 
 
 @query(
@@ -1292,9 +1270,7 @@ def s24_stream_contamination_gate(
             F.col("doc_id") % _X27_EVAL_MOD == 0
         )
         shingles = _EVAL_SHINGLES_CACHE[key] = eval_shingle_set(ev_docs)
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    stream = jobs.read_document_stream(spark, landing)
-    kept = contamination_gate(stream, shingles).select("doc_id")
+    kept = contamination_gate(_doc_landing(spark, sf_dir), shingles).select("doc_id")
     return _drain_memory(spark, kept, "append").localCheckpoint(eager=True)
 
 
@@ -1331,26 +1307,12 @@ def s25_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact duplicates (the corpus plants them) and the FP count is 0,
     matching the (1-e^{-kn/m})^k ≈ 4e-4 expectation at n=2.5k — the
     number a capacity planner reads off before sizing m."""
-    import os
-
-    with _work_dir("s25_work_") as work:
-        landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
-        state_dir = os.path.join(work, "state")
-        verdict_dir = os.path.join(work, "verdicts")
-        ckpt = os.path.join(work, "ckpt")
-        stream = (
-            spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-        )
-        _drain(
-            spark,
-            lambda: jobs.streaming_bloom_dedup(
-                stream, state_dir, verdict_dir, ckpt
-            ),
-        )
-        out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
-        return out.localCheckpoint(eager=True)
+    stream = _parity_landing(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_bloom_dedup(stream, state, out, ckpt),
+        lambda verdicts: verdicts.select("doc_id", "is_dup"),
+    )
 
 
 def _s26_oracle() -> str:
@@ -1392,9 +1354,9 @@ def s26_stream_semantic_decontam(
 
     emb = _load(spark, sf_dir, "embeddings")
     evs = eval_matrix_row(emb)
-    stream = _link_landing(
-        spark, f"{sf_dir}/embeddings.parquet", "s26_landing_"
-    ).filter(F.col("vec_id") >= _X66_N_EVAL)
+    stream = _link_landing(spark, f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") >= _X66_N_EVAL
+    )
     return (
         _drain_memory(spark, semantic_decontam_gate(stream, evs), "append")
         .select("vec_id", "nearest_eval_id", "max_sim_e6", "contaminated")
@@ -1448,8 +1410,6 @@ def s26b_stream_decontam_large_eval(
     entries whose fast sim lands within 1e-10 of an e6 floor boundary
     are recomputed with the fold's exact scalar sequence, so no ulp
     class remains."""
-    import os
-
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import _as_double
 
@@ -1459,23 +1419,17 @@ def s26b_stream_decontam_large_eval(
         _as_double(F.col("embedding")).alias("ev"),
     )
     stream = (
-        _link_landing(spark, f"{sf_dir}/embeddings.parquet", "s26b_landing_")
+        _link_landing(spark, f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    with _work_dir("s26b_work_") as work:
-        verdict_dir = os.path.join(work, "verdicts")
-        ckpt = os.path.join(work, "ckpt")
-        _drain(
-            spark,
-            lambda: jobs.streaming_decontam_blas(
-                stream, evals, verdict_dir, ckpt
-            ),
-        )
-        out = spark.read.parquet(verdict_dir).select(
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_decontam_blas(stream, evals, out, ckpt),
+        lambda verdicts: verdicts.select(
             "vec_id", "nearest_eval_id", "max_sim_e6", "contaminated"
-        )
-        return out.localCheckpoint(eager=True)
+        ),
+    )
 
 
 @query(
@@ -1512,35 +1466,23 @@ def s27_stream_sequence_packing(
     order: ORDER BY (doc_id % 2), doc_id — batch A then batch B, each
     in doc_id order.  The cross-batch carry is the thing under test:
     batch B's offsets continue exactly where batch A's total ended."""
-    import os
-
-    with _work_dir("s27_work_") as work:
-        landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
-        manifest_dir = os.path.join(work, "manifest")
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        stream = (
-            spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-        )
-        # the oracle states the two-parity-batch arrival order
-        _drain(
-            spark,
-            lambda: jobs.streaming_sequence_packing(
-                stream, manifest_dir, state_dir, ckpt
-            ),
-            batches=(2,),
-        )
-        out = spark.read.parquet(manifest_dir).select(
+    stream = _parity_landing(spark, sf_dir)
+    # the oracle states the two-parity-batch arrival order
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_sequence_packing(
+            stream, out, state, ckpt
+        ),
+        lambda manifest: manifest.select(
             "doc_id",
             "n_tokens",
             "start_offset",
             "first_seq",
             "last_seq",
             "n_seqs",
-        )
-        return out.localCheckpoint(eager=True)
+        ),
+        batches=(2,),
+    )
 
 
 @query(
@@ -1585,25 +1527,15 @@ def s28_stream_image_near_dup(
     "partner = global bucket minimum" equals the stream's
     first-arrival verdict only because the drain below consumes the
     whole landing in ONE data micro-batch — asserted loudly."""
-    import os
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    with _work_dir("s28_work_") as work:
-        state_dir = os.path.join(work, "state")
-        verdict_dir = os.path.join(work, "verdicts")
-        ckpt = os.path.join(work, "ckpt")
-        stream = jobs.read_document_stream(spark, landing)
-        _drain(
-            spark,
-            lambda: jobs.streaming_phash_near_dup(
-                stream, state_dir, verdict_dir, ckpt
-            ),
-            batches=(0, 1),
-        )
-        out = spark.read.parquet(verdict_dir).select(
-            "doc_id", "is_candidate", "is_dup"
-        )
-        return out.localCheckpoint(eager=True)
+    stream = _doc_landing(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_phash_near_dup(
+            stream, state, out, ckpt
+        ),
+        lambda verdicts: verdicts.select("doc_id", "is_candidate", "is_dup"),
+        batches=(0, 1),
+    )
 
 
 @query(
@@ -1644,33 +1576,19 @@ def s29_stream_audio_near_dup(
 
     ORACLE PRECONDITION: single-batch drain (the s22/s28 rationale),
     asserted loudly below."""
-    import os
-
     from fanstats_producer_spark.operators.multimodal import (
         audio_fp_features,
     )
 
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    with _work_dir("s29_work_") as work:
-        state_dir = os.path.join(work, "state")
-        verdict_dir = os.path.join(work, "verdicts")
-        ckpt = os.path.join(work, "ckpt")
-        stream = jobs.read_document_stream(spark, landing)
-        _drain(
-            spark,
-            lambda: jobs.streaming_phash_near_dup(
-                stream,
-                state_dir,
-                verdict_dir,
-                ckpt,
-                features=audio_fp_features,
-            ),
-            batches=(0, 1),
-        )
-        out = spark.read.parquet(verdict_dir).select(
-            "doc_id", "is_candidate", "is_dup"
-        )
-        return out.localCheckpoint(eager=True)
+    stream = _doc_landing(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, state, ckpt: jobs.streaming_phash_near_dup(
+            stream, state, out, ckpt, features=audio_fp_features
+        ),
+        lambda verdicts: verdicts.select("doc_id", "is_candidate", "is_dup"),
+        batches=(0, 1),
+    )
 
 
 @query("s30_stream_weighted_sample", oracle=sampling.X92_ORACLE)
@@ -1685,20 +1603,12 @@ def s30_stream_weighted_sample(
     ANY micro-batch slicing and no single-batch precondition exists —
     unlike the first-arrival gates (s22/s28/s29), this key is
     batching-invariant by algebra, not by drain shape."""
-    import os
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    with _work_dir("s30_work_") as work:
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        stream = jobs.read_document_stream(spark, landing)
-        _drain(
-            spark, lambda: jobs.streaming_weighted_sample(stream, state_dir, ckpt)
-        )
-        out = spark.read.parquet(state_dir).select(
-            "doc_id", "n_tokens", "key_e9"
-        )
-        return out.localCheckpoint(eager=True)
+    stream = _doc_landing(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_weighted_sample(stream, out, ckpt),
+        lambda sample: sample.select("doc_id", "n_tokens", "key_e9"),
+    )
 
 
 @query("s31_stream_quantile_monitor", oracle=sketches.X97_ORACLE)
@@ -1712,17 +1622,12 @@ def s31_stream_quantile_monitor(
     is x97's verbatim: min-k merges exactly (min-k(A∪B) =
     min-k(min-k(A)∪min-k(B)) — pytest-pinned), so the online sketch is
     batching-invariant by algebra and no drain precondition exists."""
-    import os
-
-    with _work_dir("s31_work_") as work:
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        stream = _read_events_stream(spark, sf_dir)
-        _drain(
-            spark, lambda: jobs.streaming_quantile_monitor(stream, state_dir, ckpt)
-        )
-        out = sketches.quantile_estimates(spark.read.parquet(state_dir))
-        return out.localCheckpoint(eager=True)
+    stream = _read_events_stream(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_quantile_monitor(stream, out, ckpt),
+        sketches.quantile_estimates,
+    )
 
 
 @query("s32_stream_keyword_tags", oracle=text_extra.X101_ORACLE)
@@ -1734,31 +1639,22 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     are batch-slicing-invariant by construction and the oracle is
     x101's VERBATIM (the naive every-start-position probe), with no
     drain precondition."""
-    import os
-
     from fanstats_producer_spark.functions.text_extra import (
         _X101_TERMS,
         keyword_tags,
     )
 
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    with _work_dir("s32_work_") as work:
-        out_dir = os.path.join(work, "tags")
-        ckpt = os.path.join(work, "ckpt")
-        stream = jobs.read_document_stream(spark, landing)
-        _drain(
-            spark,
-            lambda: keyword_tags(stream, _X101_TERMS)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start(),
-        )
-        out = spark.read.parquet(out_dir).select(
-            "doc_id", "term", "n_hits"
-        )
-        return out.localCheckpoint(eager=True)
+    stream = _doc_landing(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: keyword_tags(stream, _X101_TERMS)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start(),
+        lambda tags: tags.select("doc_id", "term", "n_hits"),
+    )
 
 
 @query("s33_stream_ks_monitor", oracle=quality_checks.X105_ORACLE)
@@ -1771,22 +1667,14 @@ def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quality_checks.ks_matrix_from_counts).  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the
     oracle is x105's VERBATIM with no drain precondition."""
-    import os
-
-    with _work_dir("s33_work_") as work:
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        stream = _read_events_stream(spark, sf_dir)
-        _drain(
-            spark,
-            lambda: jobs.streaming_value_counts_monitor(
-                stream, state_dir, ckpt, job_name="streaming_ks_monitor"
-            ),
-        )
-        out = quality_checks.ks_matrix_from_counts(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
+    stream = _read_events_stream(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_value_counts_monitor(
+            stream, out, ckpt, job_name="streaming_ks_monitor"
+        ),
+        quality_checks.ks_matrix_from_counts,
+    )
 
 
 @query("s34_stream_auc_monitor", oracle=quality_checks.X107_ORACLE)
@@ -1803,22 +1691,14 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to batch x107 on any input.  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the oracle
     is x107's VERBATIM with no drain precondition."""
-    import os
-
-    with _work_dir("s34_work_") as work:
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        stream = _read_events_stream(spark, sf_dir)
-        _drain(
-            spark,
-            lambda: jobs.streaming_value_counts_monitor(
-                stream, state_dir, ckpt, job_name="streaming_auc_monitor"
-            ),
-        )
-        out = quality_checks.auc_matrix_from_counts(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
+    stream = _read_events_stream(spark, sf_dir)
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_value_counts_monitor(
+            stream, out, ckpt, job_name="streaming_auc_monitor"
+        ),
+        quality_checks.auc_matrix_from_counts,
+    )
 
 
 @query("s35_stream_chi2_monitor", oracle=quality_checks.X109_ORACLE)
@@ -1834,24 +1714,14 @@ def s35_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell expression reads only the counts).  Counts are sums, so
     the monitor is batch-slicing-invariant by commutativity and the
     oracle is x109's VERBATIM with no drain precondition."""
-    import os
-
     # the shared _doc_landing JSON staging drops the source column, so
     # stage the parquet directly
-    stream = _link_landing(
-        spark, f"{sf_dir}/documents.parquet", "s35_landing_"
+    stream = _link_landing(spark, f"{sf_dir}/documents.parquet")
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_contingency_monitor(stream, out, ckpt),
+        quality_checks.chi2_from_counts,
     )
-    with _work_dir("s35_work_") as work:
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        _drain(
-            spark,
-            lambda: jobs.streaming_contingency_monitor(stream, state_dir, ckpt),
-        )
-        out = quality_checks.chi2_from_counts(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
 
 
 @query("s36_stream_embedding_drift", oracle=quality_checks.X114_ORACLE)
@@ -1867,21 +1737,12 @@ def s36_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_checks.embedding_drift_from_sums, bit-identical to batch
     x114 (integer sums are batch-slicing-invariant by commutativity),
     so the oracle is x114's VERBATIM with no drain precondition."""
-    import os
-
-    stream = _link_landing(
-        spark, f"{sf_dir}/embeddings.parquet", "s36_landing_"
+    stream = _link_landing(spark, f"{sf_dir}/embeddings.parquet")
+    return _drain_files(
+        spark,
+        lambda out, _, ckpt: jobs.streaming_embedding_drift_monitor(
+            stream, out, ckpt
+        ),
+        quality_checks.embedding_drift_from_sums,
     )
-    with _work_dir("s36_work_") as work:
-        state_dir = os.path.join(work, "state")
-        ckpt = os.path.join(work, "ckpt")
-        _drain(
-            spark,
-            lambda: jobs.streaming_embedding_drift_monitor(
-                stream, state_dir, ckpt
-            ),
-        )
-        out = quality_checks.embedding_drift_from_sums(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
+

@@ -29,6 +29,20 @@ if awk '/^[^ #]/ { top = $0 }
   echo "batch loop outside multimodal.payload_worker" >&2
   exit 1
 fi
+# The stream keys drain through combinators: a file sink's private work
+# dir belongs to _drain_files (s20 stages its two sources in its own),
+# and a staged landing's exit-time removal to _landing.  A _work_dir( call
+# or an atexit.register( anywhere else in the module is a hand-copied
+# drain or landing stager again.
+if awk '/^[^ #]/ { top = $0 }
+  (/_work_dir\(/ && $0 !~ /^def _work_dir\(/ &&
+    top !~ /^def (_drain_files|s20_union_streams)\(/) ||
+  (/atexit\.register\(/ && top !~ /^def _landing\(/) {
+    print FILENAME ":" FNR ":" $0; bad = 1 }
+  END { exit !bad }' fanstats_producer_spark/streaming/driver_entries.py; then
+  echo "_work_dir( outside _drain_files/s20 or atexit.register( outside _landing" >&2
+  exit 1
+fi
 # Scripts and tests find their checkout from their own __file__: a
 # hard-coded checkout path makes a run from any other copy (a parent
 # copy for an A/B, say) silently import and measure that fixed checkout.

@@ -2627,12 +2627,36 @@ def test_driver_entries_harness_imports():
 
 
 def _landing_rows(spark, landing):
+    """The rows staged in a landing: a linked parquet file, or document
+    JSON."""
+    import glob
+    import os
+
+    if glob.glob(os.path.join(landing, "*.parquet")):
+        return sorted(spark.read.parquet(landing).collect(), key=repr)
     return sorted(
         spark.read.schema(jobs.DOCUMENT_SCHEMA)
         .json(landing)
         .select("doc_id", "text", "lang")
         .collect()
     )
+
+
+def _landing_dir(spark, kind):
+    """Stage (or reuse) one kind of landing and return its dir, as the
+    landing cache it is kept in records it."""
+    from conftest import SF_DIR
+
+    from fanstats_producer_spark.streaming import driver_entries as de
+
+    if kind == "doc":
+        de._doc_landing(spark, SF_DIR)
+        return de._DOC_LANDING_CACHE[de._fixture_cache_key(SF_DIR)][0]
+    if kind == "parity":
+        de._parity_landing(spark, SF_DIR)
+        return de._PARITY_LANDING_CACHE[de._fixture_cache_key(SF_DIR)][0]
+    de._read_events_stream(spark, SF_DIR)
+    return de._LINK_LANDING_CACHE[de._file_key(f"{SF_DIR}/events.parquet")][0]
 
 
 def test_doc_landing_splits_across_cores(spark):
@@ -2645,9 +2669,8 @@ def test_doc_landing_splits_across_cores(spark):
     from conftest import SF_DIR
 
     from fanstats_producer_spark.io import load
-    from fanstats_producer_spark.streaming.driver_entries import _doc_landing
 
-    landing = _doc_landing(spark, SF_DIR)
+    landing = _landing_dir(spark, "doc")
     if spark.sparkContext.defaultParallelism >= 2:
         assert len(glob.glob(os.path.join(landing, "part-*"))) >= 2
         scan = spark.read.schema(jobs.DOCUMENT_SCHEMA).json(landing)
@@ -2656,26 +2679,58 @@ def test_doc_landing_splits_across_cores(spark):
     assert _landing_rows(spark, landing) == sorted(fixture.collect())
 
 
-@pytest.mark.parametrize("victim", ["part", "_SUCCESS"])
-def test_doc_landing_restages_a_partly_reaped_landing(spark, victim):
-    """A cached landing that lost a part file or Spark's _SUCCESS marker
-    (an age-based /tmp reaper, say) is staged again, not drained short."""
+@pytest.mark.parametrize(
+    "kind, victim",
+    [
+        ("doc", "part-*"),
+        ("doc", "_SUCCESS"),
+        ("parity", "a.json"),
+        ("events", "events-000.parquet"),
+    ],
+    ids=["part", "_SUCCESS", "parity", "events"],
+)
+def test_doc_landing_restages_a_partly_reaped_landing(spark, kind, victim):
+    """A cached landing that lost one staged file (an age-based /tmp
+    reaper, say) is staged again, not drained short, and the next call
+    reuses the new landing.  The document landing stages its part files
+    and Spark's _SUCCESS marker, the parity landing its two batch files,
+    a linked landing the fixture file it links."""
     import glob
+    import os
+
+    landing = _landing_dir(spark, kind)
+    rows = _landing_rows(spark, landing)
+    os.remove(sorted(glob.glob(os.path.join(landing, victim)))[0])
+    again = _landing_dir(spark, kind)
+    assert again != landing
+    assert glob.glob(os.path.join(again, victim))
+    assert _landing_rows(spark, again) == rows
+    assert _landing_dir(spark, kind) == again
+
+
+def test_events_drains_share_one_landing(spark):
+    """Two events-stream drains in one session read ONE landing dir: the
+    events file is linked into a landing once per session, not into a
+    fresh dir on every drain."""
     import os
 
     from conftest import SF_DIR
 
-    from fanstats_producer_spark.streaming.driver_entries import _doc_landing
+    from fanstats_producer_spark.streaming.driver_entries import (
+        _drain_memory,
+        _read_events_stream,
+    )
 
-    landing = _doc_landing(spark, SF_DIR)
-    rows = _landing_rows(spark, landing)
-    parts = sorted(glob.glob(os.path.join(landing, "part-*")))
-    os.remove(parts[0] if victim == "part" else os.path.join(landing, "_SUCCESS"))
-    again = _doc_landing(spark, SF_DIR)
-    assert again != landing
-    assert os.path.isfile(os.path.join(again, "_SUCCESS"))
-    assert _landing_rows(spark, again) == rows
-    assert _doc_landing(spark, SF_DIR) == again
+    def landing_dirs():
+        files = _read_events_stream(spark, SF_DIR).select(
+            F.input_file_name().alias("f")
+        )
+        drained = _drain_memory(spark, files, "append")
+        return {os.path.dirname(r.f) for r in drained.distinct().collect()}
+
+    first = landing_dirs()
+    assert len(first) == 1
+    assert landing_dirs() == first
 
 
 def test_drain_batch_precondition_and_conf_restore(spark, landing):
@@ -2727,14 +2782,46 @@ def test_drain_batch_precondition_and_conf_restore(spark, landing):
 
 
 def test_s01_s09_leave_no_scratch(spark, tmp_path, monkeypatch):
-    """s01 and s09 drain into a private work dir removed on return (the
-    result is read back eagerly first), so repeated calls leave
-    no checkpoint or sink behind on the scratch root."""
+    """Every key that drains into a work dir (the file-sink keys, and
+    s20's two staged sources) removes it on return, after reading its
+    result back eagerly: repeated calls leave no checkpoint, state or
+    sink on the scratch root, only the session's cached landings."""
+    from pathlib import Path
+
     from conftest import SF_DIR
 
     from fanstats_producer_spark import registry
+    from fanstats_producer_spark.streaming import driver_entries as de
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
-    for key, prefix in (("s01_stream_ingest", "s01_"), ("s09_upsert_state", "s09_")):
-        assert registry.QUERIES[key](spark, SF_DIR).collect()
-        assert not [p.name for p in tmp_path.iterdir() if p.name.startswith(prefix)]
+    for key in (
+        "s01_stream_ingest",
+        "s09_upsert_state",
+        "s20_union_streams",
+        "s21_stream_near_dup",
+        "s22_stream_verified_near_dup",
+        "s23_stream_drift",
+        "s25_stream_bloom_dedup",
+        "s26b_stream_decontam_large_eval",
+        "s27_stream_sequence_packing",
+        "s28_stream_image_near_dup",
+        "s29_stream_audio_near_dup",
+        "s30_stream_weighted_sample",
+        "s31_stream_quantile_monitor",
+        "s32_stream_keyword_tags",
+        "s33_stream_ks_monitor",
+        "s34_stream_auc_monitor",
+        "s35_stream_chi2_monitor",
+        "s36_stream_embedding_drift",
+    ):
+        assert registry.QUERIES[key](spark, SF_DIR).collect(), key
+        landings = {
+            Path(landing)
+            for cache in (
+                de._DOC_LANDING_CACHE,
+                de._PARITY_LANDING_CACHE,
+                de._LINK_LANDING_CACHE,
+            )
+            for landing, _ in cache.values()
+        }
+        assert set(tmp_path.iterdir()) <= landings, key
