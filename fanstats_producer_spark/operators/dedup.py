@@ -196,27 +196,41 @@ _X04_THRESHOLD = 0.5
 _X04_K = 3
 
 
-@query(
-    "x04_neardup_jaccard",
-    oracle=f"""
-    WITH sh AS (
-      SELECT doc_id, {_shingles_sql(_X04_K)} AS shingles
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-    post AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    sizes AS (SELECT doc_id, len(shingles) AS n_sh FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+def _with_list(chain) -> str:
+    """A (CTE name, body) chain as the body of one WITH list."""
+    return ",\n    ".join(f"{n} AS (\n      {b})" for n, b in chain)
+
+
+#: x04's oracle as (CTE name, body) pairs: word shingles (`sh`), one row
+#: per (doc, shingle) (`post`), shingle-set sizes (`sizes`) and pairwise
+#: intersections (`inter`); _X04_FINAL quantizes and thresholds.
+#: scripts/scale_closure_check.py stages each body as a temp table of
+#: the same name.
+_X04_CHAIN = (
+    ("sh", f"""SELECT doc_id, {_shingles_sql(_X04_K)} AS shingles
+      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)"""),
+    ("post", "SELECT doc_id, unnest(shingles) AS shingle FROM sh"),
+    ("sizes", "SELECT doc_id, len(shingles) AS n_sh FROM sh"),
+    ("inter", """SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
       FROM post a JOIN post b
         ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2)
-    SELECT id_a, id_b,
+      GROUP BY 1, 2"""),
+)
+_X04_FINAL = f"""SELECT id_a, id_b,
            CAST(floor(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter)
                       * 1e6 + 0.5) AS BIGINT) AS jaccard_e6
     FROM inter
     JOIN sizes sa ON sa.doc_id = id_a
     JOIN sizes sb ON sb.doc_id = id_b
     WHERE CAST(floor(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter)
-                     * 1e6 + 0.5) AS BIGINT) >= {int(_X04_THRESHOLD * 1e6)}
+                     * 1e6 + 0.5) AS BIGINT) >= {int(_X04_THRESHOLD * 1e6)}"""
+
+
+@query(
+    "x04_neardup_jaccard",
+    oracle=f"""
+    WITH {_with_list(_X04_CHAIN)}
+    {_X04_FINAL}
     """,
 )
 def x04_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,7 +625,7 @@ _MH_CHAIN = (
     ) + f"""
       FROM sigl CROSS JOIN range({_MH_BANDS}) AS t(b)"""),
 )
-_MH_CHAIN_SQL = ",\n    ".join(f"{n} AS (\n      {b})" for n, b in _MH_CHAIN)
+_MH_CHAIN_SQL = _with_list(_MH_CHAIN)
 
 
 # The oracle reproduces the signature bit-for-bit (_MH_CHAIN) and does
@@ -1353,6 +1367,16 @@ def x55_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # within-group cosine pairs, connected components, and an argmax keep
 # window — so the whole composition is value-hash oracle-checked.
 _X61_THRESHOLD = 0.35
+#: x61's within-cluster cosine pairs over the k-means assignment `asg`
+#: (vec_id, cid): the `v` and `pairs` CTEs, which
+#: scripts/scale_closure_check.py runs over a staged `asg` table.
+_X61_PAIRS_SQL = f"""v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    pairs AS (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
+      JOIN v va ON va.vec_id = a.vec_id
+      JOIN v vb ON vb.vec_id = b.vec_id
+      WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD})"""
 
 
 def _x61_oracle() -> str:
@@ -1366,13 +1390,7 @@ def _x61_oracle() -> str:
     return f"""
     WITH RECURSIVE asg AS (
       SELECT vec_id, cluster_id AS cid, dist2_e6 FROM ({x24})),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    pairs AS (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b
-      FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
-      JOIN v va ON va.vec_id = a.vec_id
-      JOIN v vb ON vb.vec_id = b.vec_id
-      WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD}),
+    {_X61_PAIRS_SQL},
     {_CLOSURE_SQL},
     cl AS (SELECT node, MIN(r) AS cluster_id FROM reach GROUP BY node),
     merged AS (

@@ -2058,12 +2058,14 @@ def x91_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   model tables at |V|^n rows (<= 29,791 trigrams), so they broadcast
 #   at every reachable SF and the corpus stream never crosses a
 #   gram-keyed exchange to narrow.  Measured: x100 dictionary arm
-#   sf1 7.5 -> 9.1 s (worse); x94 distinct-gram score reshape
-#   sf0.1 1.0 -> 1.36 s, sf1 2.8 -> 5.4 s (worse — the broadcast
-#   chain builds its tiny model tables CONCURRENTLY, the reshape
-#   serializes them behind one build).  Both only pay off at
-#   unbounded (web-scale) vocabulary, unreachable on this fixture
-#   family; recorded in OPTIMIZATION_r14.md "Not yet optimized".
+#   sf1 7.5 -> 9.1 s (worse), so it only pays off at unbounded
+#   (web-scale) vocabulary, unreachable on this fixture family
+#   (OPTIMIZATION_r14.md "Not yet optimized").  x94's distinct-gram
+#   score is kn_bits' shape (one level table carrying its window
+#   counts, T a one-row broadcast), not the three-join reshape r14
+#   rejected: against the three-table broadcast chain, 5 alternating
+#   pairs on 4 cores (best of 2 warm calls each), x94's median went
+#   sf0.1 2.22 -> 1.40 s and sf1 7.69 -> 5.26 s, 5 of 5 pairs each.
 
 #: Bucket domain for deterministic id assignment.  1024 buckets keep
 #: the per-bucket rank sort at |vocab|/1024 rows (1e6 at a 1e9-type
@@ -2094,8 +2096,8 @@ def _x110_use_dictionary(sf_dir: str) -> bool:
         return False
 
 
-def _token_ids(tk: DataFrame) -> DataFrame:
-    """(tok, tid) dictionary over the distinct tokens of `tk.t` —
+def _token_ids(docs: DataFrame) -> DataFrame:
+    """(tok, tid) dictionary over the distinct tokens of `docs.text` —
     deterministic, parallel, collision-free (see block comment).
     Materialized once (localCheckpoint): the dictionary feeds one
     broadcast attach per gram position, and without materialization
@@ -2105,7 +2107,7 @@ def _token_ids(tk: DataFrame) -> DataFrame:
     pinning it is the same memory class as the broadcast itself."""
     w = Window.partitionBy("bkt").orderBy("tok")
     return (
-        tk.select(F.explode("t").alias("tok"))
+        docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .distinct()
         .withColumn(
             "bkt", F.pmod(F.xxhash64("tok"), F.lit(_TOKEN_ID_BUCKETS))
@@ -2140,132 +2142,284 @@ def _attach_token_ids(
     return out.select("doc_id", *positions.values())
 
 
-# --- x94: interpolated Kneser-Ney bigram LM scoring -------------------------------
+# --- x94 / x100 / x110: interpolated Kneser-Ney n-gram LM scoring ----------------
 # The quality battery's most-used real-world member: CCNet's deployed
-# filter is an n-gram LM (KenLM), not the unigram model x30/x43 mimic.
-# Interpolated Kneser-Ney (Kneser & Ney 1995; Chen & Goodman 1998) is
-# THE standard n-gram smoothing:
+# filter is an n-gram LM (KenLM, Heafield 2011; Wenzek et al. 2020), not
+# the unigram model x30/x43 mimic.  Interpolated Kneser-Ney (Kneser &
+# Ney 1995; Chen & Goodman 1998) is THE standard n-gram smoothing; x94
+# scores bigrams, x100 trigrams and x110 the deployed 5-gram order, all
+# with one recurrence over levels k = n..2 and absolute discount
+# D = 3/4:
 #
-#   P(w|v) = max(c(v,w) - D, 0)/c(v) + lambda(v) * Pcont(w)
-#   lambda(v) = D * N1+(v,.)/c(v)        (probability mass discounted)
-#   Pcont(w)  = N1+(.,w) / N1+(.,.)      (continuation probability:
-#                                          how many CONTEXTS w follows,
-#                                          not how often — the famous
-#                                          "San Francisco" correction)
+#   P_k(w|ctx) = max(c_k - D, 0)/ctx_k + lambda_k * P_{k-1}(w|ctx')
+#   p_k = (4*c_k - 3) / (4*ctx_k)    lambda_k = 3*N1_k / (4*ctx_k)
+#   P_1(w) = pcont(w) = ncont(w) / T  (continuation probability: how
+#            many CONTEXTS w follows, not how often — the famous "San
+#            Francisco" correction; T = number of distinct bigrams)
 #
-# Every ingredient is a grouped aggregate over the bigram table:
-# c(v,w) per bigram, c(v) + N1+(v,.) per context (one groupBy of the
-# already-grouped bigram counts), N1+(.,w) per successor, and the
-# distinct-bigram total T.  With the standard discount D = 3/4 the
-# whole probability is ONE exact integer rational (c >= 1 for every
-# scored in-corpus bigram, so the max() never clips):
+# The top level reads raw n-gram counts; every level below reads
+# CONTINUATION counts (distinct left extensions, Kneser-Ney's type
+# counting), each one more groupBy of the level above; ctx_k is a
+# level's total per context (its keys minus the last) and N1_k the
+# number of its types per context.  Scored in-corpus grams have c >= 1,
+# so the max() never clips.
 #
-#   P(w|v) = [(4*c(v,w) - 3) * T  +  3 * N1+(v,.) * N1+(.,w)]
-#            / (4 * c(v) * T)
+# Parity: both engines evaluate the SAME IEEE double expression in the
+# SAME parenthesization, p_n + lambda_n*(... + lambda_2*pcont), each
+# p/lambda one correctly-rounded division of exact int64 operands.
+# Division, multiply and add are correctly-rounded IEEE ops, so
+# identical inputs give bit-identical doubles on both engines (the x93
+# argument); the text is built once (_kn_prob_sql) and Spark parses the
+# same string.  The one libm call (log2) rides x30's e7-quantize-then-
+# exact-sum convention, so per-doc scores are value-checked, not
+# approximated.  One exact int64 rational per gram (order 2:
+# [(4c - 3)*T + 3*N1(v.)*N1(.w)] / (4*c(v)*T)) multiplies one more
+# count in per level and overflows past order 2 at sf1's envelope; the
+# nested form's largest int64 product is 4*c.
 #
-# Both engines build the identical int64 numerator/denominator and take
-# ONE log2 of the same rational — the x30 e7-quantize-then-exact-sum
-# parity convention, so per-doc scores are value-checked, not
-# approximated.  int64 envelope: the numerator needs 4*c(v,w)*T < 2^62
-# (fixture sf1: c*T ~ 5e4 * 4e5 = 2e10 — 8 orders of headroom); at a
-# true 100 TB corpus (c ~ 1e10, T ~ 1e12) move the two products to
-# DECIMAL(38,0) before the log, same expressions otherwise.
+# Scale shape: extraction is per-row array arithmetic (_word_grams —
+# NO window, NO shuffle).  Each level is a partial-agg groupBy with its
+# ctx and N1 columns as windows partitioned by the context; the bottom
+# ncont is a window on the level-2 table partitioned by the last token;
+# T is a one-row aggregate broadcast onto the score frame, never a
+# zero-arg window (that single-partitions its input, a real skew point
+# at web-scale vocabularies — the x104 lesson).  The probability is a
+# function of the gram alone, so it is assembled on the DISTINCT-gram
+# frame and the corpus-sized occurrence stream (the only frame carrying
+# doc_id) joins ONCE on the full gram key: the pre-r12 x100/x110 shape
+# joined the stream through every suffix table, one corpus-wide shuffle
+# per suffix key-set (VERDICT r11 item 3; pinned by
+# test_plans::test_x110_x100_score_join_is_per_distinct_gram).  Order
+# 2 needs no join to build its score.  Spark's static size estimate of
+# a joined frame is the product of its inputs: a joined `cont` table
+# plus a zero-arg T window (the pre-merge x110 shape) made x94 slower
+# at sf1 (5.79 -> 7.35 s, 7 of 7 pairs), because the bigram score join
+# lost its plan-time broadcast.  The same product decides which side
+# of the score join broadcasts: at fixture scale the cross-joined score
+# frame's estimate exceeds the occurrence stream's, so the stream is
+# the build side; past the broadcast threshold AQE picks from runtime
+# sizes.
 #
-# Scale shape: bigram extraction is per-row array arithmetic (slice +
-# zip_with — NO window, NO shuffle); the count tables are three
-# groupBys of the bigram-count table (partial-agg friendly); scoring
-# re-joins the per-occurrence stream on (v,w) then v then w — all
-# shuffle-partitioned joins AQE can plan (the model tables are
-# vocabulary-sized: |V|^2-bounded, so they BROADCAST at every
-# reachable SF and the occurrence stream never crosses a gram-keyed
-# exchange; T rides as a one-row broadcast).  r14 measured and
-# REJECTED both the distinct-bigram score reshape (the x100/x110
-# shape: serializes the model build behind one broadcast — sf0.1
-# 1.0 -> 1.36 s, sf1 2.8 -> 5.4 s) and the token dictionary (nothing
-# to narrow when no gram-keyed exchange exists) — see the _token_ids
-# block comment.  Docs with < 2 tokens have no bigram and drop from
-# the output in BOTH engines.
-@query(
-    "x94_kneser_ney_bits",
-    oracle=f"""
-    WITH tk AS (
+# Oracle hazard (measured): a one-row `CROSS JOIN tt` relation (or a
+# scalar subquery over it) sends DuckDB's join-order enumeration off a
+# cliff at SIX relations — minutes of optimizer time and ~30 GB RSS on
+# a 26k-row input, while the identical query with a T literal plans in
+# 0.1 s.  The oracle therefore carries ncont and T as windows on its
+# level-2 CTE (same values, zero extra relations), keeping the score
+# join at n <= 5 relations; parity is value-level, so the two plans may
+# differ.
+#
+# Fixture-sparsity measurement (recorded in BASELINE): at sf0.1 the
+# repeated-mass fractions are 2-gram 1.00 / 3-gram 0.999 / 4-gram
+# 0.327 / 5-gram 0.100 (sf0.01: 1.00 / 0.64 / 0.12 / 0.09) — the top
+# two orders ride the backoff for most tokens, which is precisely the
+# regime interpolated KN exists for; orders are NOT degenerate (a
+# third of sf0.1's 4-gram mass is repeated), so the deployed-order LM
+# is meaningful here, just backoff-heavy like any open-vocabulary
+# corpus.
+#
+# x110 alone dictionary-encodes its gram keys above the
+# _X110_DICT_MIN_BYTES corpus-size gate (see the _token_ids block
+# comment; measured worse for x94/x100 at this fixture's vocabulary).
+# Docs with fewer than n tokens have no n-gram and drop from the
+# output in BOTH engines.
+
+#: Gram position columns, first token first (the first n name an n-gram).
+_GRAM_COLS = ("a", "b", "c", "d", "e")
+
+
+def _word_grams(docs: DataFrame, n: int) -> DataFrame:
+    """doc_id plus one row per word n-gram of `docs.text`, its tokens in
+    _GRAM_COLS[:n]; docs with fewer than n tokens drop.  One SQL
+    expression zips n shifted slices of the token array: slice and
+    arrays_zip are code-generated, where a transform or zip_with lambda
+    is interpreted per element (measured in one session at sf0.1, the
+    gram frame's count job: 0.43 -> 0.30 s at n = 2, 1.15 -> 0.95 s at
+    n = 5 against transform(sequence(...))), and one expression string
+    is one py4j call where a Column-API zip_with chain cost ~150 at
+    n = 5."""
+    cols = _GRAM_COLS[:n]
+    shifted = ", ".join(f"slice(t, {j + 1}, size(t) - {n - 1})" for j in range(n))
+    return (
+        docs.selectExpr("doc_id", "split(text, ' ') AS t")
+        .filter(F.size("t") >= n)
+        .selectExpr("doc_id", f"explode(arrays_zip({shifted})) AS g")
+        .select(
+            "doc_id", *(F.col("g")[str(j)].alias(c) for j, c in enumerate(cols))
+        )
+    )
+
+
+def _word_grams_sql(n: int) -> str:
+    """DuckDB twin of _word_grams: the `tk` (token list) and `gf`
+    (doc_id + _GRAM_COLS[:n]) CTEs."""
+    cols = _GRAM_COLS[:n]
+    g = ", ".join(f"'{c}': t[i + {j}]" for j, c in enumerate(cols))
+    return f"""tk AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    bgf AS (
-      SELECT doc_id, b['v'] AS v, b['w'] AS w
+    gf AS (
+      SELECT doc_id, {", ".join(f"g['{c}'] AS {c}" for c in cols)}
       FROM (SELECT doc_id,
-                   unnest(list_transform(range(1, len(t)),
-                          i -> {{'v': t[i], 'w': t[i + 1]}})) AS b
-            FROM tk WHERE len(t) >= 2)),
-    cvw AS (SELECT v, w, COUNT(*) AS cvw FROM bgf GROUP BY 1, 2),
-    cv AS (
-      SELECT v, CAST(SUM(cvw) AS BIGINT) AS cv, COUNT(*) AS n1v
-      FROM cvw GROUP BY 1),
-    nc AS (SELECT w, COUNT(*) AS ncont FROM cvw GROUP BY 1),
-    tt AS (SELECT COUNT(*) AS T FROM cvw),
+                   unnest(list_transform(range(1, len(t) - {n - 2}),
+                          i -> {{{g}}})) AS g
+            FROM tk WHERE len(t) >= {n}))"""
+
+
+def _kn_prob_sql(n: int) -> str:
+    """The interpolated order-n probability as SQL text both engines
+    parse: level k's count c{k}, context total x{k} and context type
+    count n{k}, nested over pcont = ncont / T."""
+    p = "CAST(ncont AS DOUBLE) / CAST(T AS DOUBLE)"
+    for k in range(2, n + 1):
+        p = (
+            f"CAST(4 * c{k} - 3 AS DOUBLE) / CAST(4 * x{k} AS DOUBLE)"
+            f" + CAST(3 * n{k} AS DOUBLE) / CAST(4 * x{k} AS DOUBLE)"
+            f" * ({p})"
+        )
+    return p
+
+
+def kn_bits(
+    gf: DataFrame, keys: tuple[str, ...], count_col: str, bits_col: str
+) -> DataFrame:
+    """Per-document (n-gram count, e4 bits per token) under the
+    interpolated Kneser-Ney LM of order len(keys) trained on `gf`
+    (doc_id + the gram columns `keys`, first token first)."""
+    n = len(keys)
+    levels, src = {}, gf
+    for k in range(n, 1, -1):
+        lk = keys[n - k :]
+        ctx = Window.partitionBy(*lk[:-1])
+        src = (
+            src.groupBy(*lk)
+            .agg(F.count("*").alias(f"c{k}"))
+            .withColumn(f"x{k}", F.sum(f"c{k}").over(ctx).cast("long"))
+            .withColumn(f"n{k}", F.count("*").over(ctx).cast("long"))
+        )
+        levels[k] = src
+    tt = levels[2].agg(F.count("*").alias("T"))
+    levels[2] = levels[2].withColumn(
+        "ncont", F.count("*").over(Window.partitionBy(keys[-1])).cast("long")
+    )
+    score = levels[n]
+    for k in range(n - 1, 1, -1):
+        score = score.join(levels[k], list(keys[n - k :]))
+    score = score.crossJoin(F.broadcast(tt)).select(
+        *keys,
+        F.floor(
+            F.log2(F.expr(_kn_prob_sql(n))) * F.lit(1e7) + F.lit(0.5)
+        )
+        .cast("long")
+        .alias("lg"),
+    )
+    return (
+        gf.join(score, list(keys))
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias(count_col),
+            qint(
+                -F.sum("lg").cast("double") / F.lit(1e7) / F.count("*"), 4
+            ).alias(bits_col),
+        )
+    )
+
+
+def _kn_oracle(n: int, count_col: str, bits_col: str) -> str:
+    """DuckDB oracle of kn_bits over _word_grams_sql(n): one CTE per
+    level, ncont and T as windows on the level-2 CTE."""
+    ctes, src = [], "gf"
+    for k in range(n, 1, -1):
+        lk = _GRAM_COLS[n - k : n]
+        ctx = f"PARTITION BY {', '.join(lk[:-1])}"
+        bottom = (
+            f""",
+             CAST(COUNT(*) OVER (PARTITION BY {lk[-1]}) AS BIGINT) AS ncont,
+             CAST(COUNT(*) OVER () AS BIGINT) AS T"""
+            if k == 2
+            else ""
+        )
+        ctes.append(
+            f"""l{k} AS (
+      SELECT {', '.join(lk)}, COUNT(*) AS c{k},
+             CAST(SUM(COUNT(*)) OVER ({ctx}) AS BIGINT) AS x{k},
+             CAST(COUNT(*) OVER ({ctx}) AS BIGINT) AS n{k}{bottom}
+      FROM {src} GROUP BY {', '.join(lk)})"""
+        )
+        src = f"l{k}"
+    levels_sql = ",\n    ".join(ctes)
+    joins = " ".join(
+        f"JOIN l{k} USING ({', '.join(_GRAM_COLS[n - k : n])})"
+        for k in range(n, 1, -1)
+    )
+    return f"""
+    WITH {_word_grams_sql(n)},
+    {levels_sql},
     sc AS (
       SELECT doc_id,
-             CAST(floor(log2(
-               CAST((4 * cvw - 3) * T + 3 * n1v * ncont AS DOUBLE)
-               / CAST(4 * cv * T AS DOUBLE)) * 1e7 + 0.5) AS BIGINT) AS lg
-      FROM bgf JOIN cvw USING (v, w) JOIN cv USING (v) JOIN nc USING (w)
-           CROSS JOIN tt)
-    SELECT doc_id, COUNT(*) AS n_bigrams,
+             CAST(floor(log2({_kn_prob_sql(n)}) * 1e7 + 0.5) AS BIGINT) AS lg
+      FROM gf {joins})
+    SELECT doc_id, COUNT(*) AS {count_col},
            {sql_qint("-CAST(SUM(lg) AS DOUBLE) / 1e7 / COUNT(*)", 4)}
-             AS kn_bits_per_token_e4
+             AS {bits_col}
     FROM sc GROUP BY 1
-    """,
+    """
+
+
+@query(
+    "x94_kneser_ney_bits",
+    oracle=_kn_oracle(2, "n_bigrams", "kn_bits_per_token_e4"),
 )
 def x94_kneser_ney_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x94: per-document bits-per-token under an interpolated
     Kneser-Ney bigram LM trained on the corpus itself — the n-gram
-    upgrade of x30's unigram scorer (see block comment for the exact
-    integer-rational formulation both engines share)."""
-    t = F.split("text", " ")
-    bgf = (
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-        .select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("t"), 1, F.size("t") - 1),
-                    F.slice(F.col("t"), 2, F.size("t") - 1),
-                    lambda a, b: F.struct(a.alias("v"), b.alias("w")),
-                )
-            ).alias("b"),
-        )
-        .select("doc_id", "b.v", "b.w")
+    upgrade of x30's unigram scorer."""
+    docs = spread(load(spark, sf_dir, "documents"), "doc_id")
+    return kn_bits(
+        _word_grams(docs, 2),
+        _GRAM_COLS[:2],
+        "n_bigrams",
+        "kn_bits_per_token_e4",
     )
-    cvw = bgf.groupBy("v", "w").agg(F.count("*").alias("cvw"))
-    cv = cvw.groupBy("v").agg(
-        F.sum("cvw").alias("cv"), F.count("*").alias("n1v")
+
+
+@query(
+    "x100_kn_trigram_bits",
+    oracle=_kn_oracle(3, "n_trigrams", "kn3_bits_per_token_e4"),
+)
+def x100_kn_trigram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x100: x94's recursion one level deeper — the order where KN's
+    backoff structure (top level on raw counts, lower levels on
+    continuation counts) first fully appears."""
+    docs = spread(load(spark, sf_dir, "documents"), "doc_id")
+    return kn_bits(
+        _word_grams(docs, 3),
+        _GRAM_COLS[:3],
+        "n_trigrams",
+        "kn3_bits_per_token_e4",
     )
-    nc = cvw.groupBy("w").agg(F.count("*").alias("ncont"))
-    tt = cvw.agg(F.count("*").alias("T"))
-    num = (4 * F.col("cvw") - 3) * F.col("T") + 3 * F.col("n1v") * F.col(
-        "ncont"
-    )
-    den = 4 * F.col("cv") * F.col("T")
-    sc = (
-        bgf.join(cvw, ["v", "w"])
-        .join(cv, "v")
-        .join(nc, "w")
-        .crossJoin(F.broadcast(tt))
-        .withColumn(
-            "lg",
-            F.floor(
-                F.log2(num.cast("double") / den.cast("double")) * F.lit(1e7)
-                + F.lit(0.5)
-            ).cast("long"),
-        )
-    )
-    return sc.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"),
-        qint(
-            -F.sum("lg").cast("double") / F.lit(1e7) / F.count("*"), 4
-        ).alias("kn_bits_per_token_e4"),
-    )
+
+
+@query(
+    "x110_kn_5gram_bits",
+    oracle=_kn_oracle(5, "n_5grams", "kn5_bits_per_token_e4"),
+)
+def x110_kn_5gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x110: the recursion at the deployed CCNet/KenLM order 5, with
+    continuation counts at every interior level."""
+    docs = spread(load(spark, sf_dir, "documents"), "doc_id")
+    gf = _word_grams(docs, 5)
+    keys = _GRAM_COLS
+    if _x110_use_dictionary(sf_dir):
+        # dictionary-encode the 5-gram keys (r14, see _token_ids block
+        # comment): counts are invariant under the token<->id bijection
+        # and no token string crosses any downstream exchange.  Gated on
+        # corpus size — below the gate the fixed vocab-job/broadcast
+        # costs exceed the narrower-key savings (measured, see
+        # _X110_DICT_MIN_BYTES).
+        ids = ("ka", "kb", "kc", "kd", "ke")
+        gf = _attach_token_ids(gf, _token_ids(docs), dict(zip(keys, ids)))
+        keys = ids
+    return kn_bits(gf, keys, "n_5grams", "kn5_bits_per_token_e4")
 
 
 # --- x95: SentencePiece-style unigram-LM tokenizer (train + encode) ---------------
@@ -2616,377 +2770,6 @@ def x95_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- x100: interpolated Kneser-Ney TRIGRAM LM scoring ------------------------------
-# x94's recursion taken one level deeper — the order CCNet-class
-# filters actually deploy sits at n=3..5, and the trigram level is
-# where KN's backoff STRUCTURE (highest level on raw counts, every
-# lower level on CONTINUATION counts) first fully appears:
-#
-#   P(w|u,v) = max(c(uvw)-D,0)/c(uv) + lam(u,v) · Pkn(w|v)
-#   Pkn(w|v) = max(N1+(·vw)-D,0)/N1+(·v·) + lam2(v) · Pcont(w)
-#   Pcont(w) = N1+(··w among (v,w) types) / |distinct (v,w)|
-#
-# with lam(u,v) = D·N1+(uv·)/c(uv), lam2(v) = D·N1mid(v)/N1+(·v·),
-# D = 3/4.  Every count is a grouped aggregate over the trigram-count
-# table (c3 -> its three rollups; the middle level aggregates c3's
-# KEYS, not its counts — the continuation correction).  Scored
-# in-corpus trigrams have c>=1, so the max() never clips.
-#
-# Parity: unlike x94's single rational, the interpolated SUM of three
-# levels would need ~16·c·E·T int64 products (overflow at sf1's
-# envelope), so both engines compute the SAME IEEE double expression
-# in the SAME parenthesization — five exact-integer divisions, two
-# multiply-adds: p3 + lam3·(pmid + lam2·pcont).  Division, multiply,
-# and add are correctly-rounded IEEE ops, so identical inputs give
-# bit-identical doubles on both engines (the x93 argument); the one
-# libm call (log2) rides x94's e7-quantize convention.
-#
-# Scale shape: trigram extraction is per-row slice+zip_with (no
-# window, no shuffle); five count tables are groupBys of c3
-# (partial-agg friendly, vocabulary-sized); scoring re-joins the
-# occurrence stream on (u,v,w)/(u,v)/(v,w)/v/w — all AQE-plannable
-# equi-joins; the one-row total broadcasts on the Spark side.
-#
-# Oracle hazard (measured): x94's one-row `CROSS JOIN tt` idiom (and a
-# scalar subquery over tt) sends DuckDB's join-order enumeration off a
-# cliff at SIX relations — minutes of optimizer time and ~30 GB RSS on
-# a 26k-row input, while the identical query with a T literal plans in
-# 0.1 s.  The oracle therefore carries T as SUM(COUNT(*)) OVER () in
-# the `cont` CTE — same value, zero extra relations.
-@query(
-    "x100_kn_trigram_bits",
-    oracle=f"""
-    WITH tk AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    tgf AS (
-      SELECT doc_id, g['u'] AS u, g['v'] AS v, g['w'] AS w
-      FROM (SELECT doc_id,
-                   unnest(list_transform(range(1, len(t) - 1),
-                          i -> {{'u': t[i], 'v': t[i + 1],
-                                 'w': t[i + 2]}})) AS g
-            FROM tk WHERE len(t) >= 3)),
-    c3 AS (SELECT u, v, w, COUNT(*) AS c3 FROM tgf GROUP BY 1, 2, 3),
-    c2 AS (
-      SELECT u, v, CAST(SUM(c3) AS BIGINT) AS c2, COUNT(*) AS n1uv
-      FROM c3 GROUP BY 1, 2),
-    mid AS (SELECT v, w, COUNT(*) AS nmid FROM c3 GROUP BY 1, 2),
-    vlev AS (
-      SELECT v, CAST(SUM(nmid) AS BIGINT) AS dmid, COUNT(*) AS n1mid
-      FROM mid GROUP BY 1),
-    cont AS (
-      SELECT w, COUNT(*) AS ncont,
-             CAST(SUM(COUNT(*)) OVER () AS BIGINT) AS T
-      FROM mid GROUP BY 1),
-    sc AS (
-      SELECT doc_id,
-             CAST(floor(log2(
-               (CAST(4 * c3 - 3 AS DOUBLE) / CAST(4 * c2 AS DOUBLE))
-               + (CAST(3 * n1uv AS DOUBLE) / CAST(4 * c2 AS DOUBLE))
-                 * ((CAST(4 * nmid - 3 AS DOUBLE)
-                     / CAST(4 * dmid AS DOUBLE))
-                    + (CAST(3 * n1mid AS DOUBLE)
-                       / CAST(4 * dmid AS DOUBLE))
-                      * (CAST(ncont AS DOUBLE) / CAST(T AS DOUBLE)))
-             ) * 1e7 + 0.5) AS BIGINT) AS lg
-      FROM tgf JOIN c3 USING (u, v, w) JOIN c2 USING (u, v)
-           JOIN mid USING (v, w) JOIN vlev USING (v)
-           JOIN cont USING (w))
-    SELECT doc_id, COUNT(*) AS n_trigrams,
-           {sql_qint("-CAST(SUM(lg) AS DOUBLE) / 1e7 / COUNT(*)", 4)}
-             AS kn3_bits_per_token_e4
-    FROM sc GROUP BY 1
-    """,
-)
-def x100_kn_trigram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x100: per-document bits-per-token under an interpolated
-    Kneser-Ney TRIGRAM LM trained on the corpus itself — x94's bigram
-    recursion one level deeper, with the middle level on trigram
-    continuation counts (see block comment for the shared IEEE-double
-    formulation)."""
-    # single positional transform (the x110 batch-3 shape): no
-    # intermediate zipped arrays, one expression string
-    z = (
-        "transform(sequence(1, size(t) - 2), i -> struct("
-        "element_at(t, i) as u, element_at(t, i + 1) as v,"
-        " element_at(t, i + 2) as w))"
-    )
-    tgf = (
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-        .selectExpr("doc_id", "split(text, ' ') AS t")
-        .filter(F.size("t") >= 3)
-        .select("doc_id", F.expr(f"explode({z})").alias("g"))
-        .select("doc_id", "g.u", "g.v", "g.w")
-    )
-    c3 = tgf.groupBy("u", "v", "w").agg(F.count("*").alias("c3"))
-    c2 = c3.groupBy("u", "v").agg(
-        F.sum("c3").alias("c2"), F.count("*").alias("n1uv")
-    )
-    mid = c3.groupBy("v", "w").agg(F.count("*").alias("nmid"))
-    vlev = mid.groupBy("v").agg(
-        F.sum("nmid").alias("dmid"), F.count("*").alias("n1mid")
-    )
-    cont = mid.groupBy("w").agg(F.count("*").alias("ncont"))
-    tt = mid.agg(F.count("*").alias("T"))
-    p3 = (4 * F.col("c3") - 3).cast("double") / (4 * F.col("c2")).cast(
-        "double"
-    )
-    lam3 = (3 * F.col("n1uv")).cast("double") / (4 * F.col("c2")).cast(
-        "double"
-    )
-    pmid = (4 * F.col("nmid") - 3).cast("double") / (
-        4 * F.col("dmid")
-    ).cast("double")
-    lam2 = (3 * F.col("n1mid")).cast("double") / (4 * F.col("dmid")).cast(
-        "double"
-    )
-    pcont = F.col("ncont").cast("double") / F.col("T").cast("double")
-    # assemble the interpolated probability on the DISTINCT-trigram
-    # frame (c3 ⋈ c2 ⋈ mid ⋈ vlev ⋈ cont — all vocabulary-sized), then
-    # join the corpus-sized occurrence stream ONCE on the trigram key:
-    # the pre-r12 shape joined tgf through all five relations, shuffling
-    # the instance frame once per suffix key-set — 2 extra corpus-wide
-    # shuffles that only show at scale (VERDICT r11 item 3; plan pinned
-    # by test_plans::test_x110_x100_score_join_is_per_distinct_gram)
-    score3 = (
-        c3.join(c2, ["u", "v"])
-        .join(mid, ["v", "w"])
-        .join(vlev, "v")
-        .join(cont, "w")
-        .crossJoin(F.broadcast(tt))
-        .withColumn(
-            "lg",
-            F.floor(
-                F.log2(p3 + lam3 * (pmid + lam2 * pcont)) * F.lit(1e7)
-                + F.lit(0.5)
-            ).cast("long"),
-        )
-        .select("u", "v", "w", "lg")
-    )
-    sc = tgf.join(score3, ["u", "v", "w"])
-    return sc.groupBy("doc_id").agg(
-        F.count("*").alias("n_trigrams"),
-        qint(
-            -F.sum("lg").cast("double") / F.lit(1e7) / F.count("*"), 4
-        ).alias("kn3_bits_per_token_e4"),
-    )
-
-
-# --- x110: 5-gram interpolated Kneser-Ney bits per token -------------------------
-# x100's recursion extended to the DEPLOYED order: the CCNet/KenLM
-# quality filter the battery emulates scores with a 5-gram interpolated
-# KN LM (Wenzek et al. 2020; Heafield 2011 — both public).  Structure:
-# the highest level reads raw 5-gram counts against their 4-gram
-# context totals; every level below reads CONTINUATION counts (distinct
-# left extensions, Kneser-Ney's type-counting), each obtained by one
-# more groupBy of the level above; the bottom is the continuation
-# unigram ncont(e)/T over distinct-bigram types.  Per level k:
-# p_k = (4·c_k − 3)/(4·ctx_k) and λ_k = 3·n1_k/(4·ctx_k) — the D=3/4
-# absolute discount carried as EXACT int64 rationals (the x94/x100
-# convention), so every division is one correctly-rounded IEEE op and
-# the nested interpolation p5 + λ5·(p4 + λ4·(p3 + λ3·(p2 + λ2·pc)))
-# shares its parenthesization verbatim across engines; log2 is the one
-# libm call, e7-quantized per n-gram before the exact integer sum.
-#
-# Join-order hazard (the x100 lesson, memory-documented): ctx totals
-# and N1 context-type counts ride each count table as WINDOW columns
-# partitioned by the context keys — never separate one-row or
-# per-context relations — keeping the ORACLE's score join at 6
-# relations.  The bottom T total is a window over the |vocab|-sized
-# cont frame (domain-bounded, ~1e3 rows at every SF).  The Spark side
-# goes further (r12): the probability is assembled on the
-# distinct-5-gram frame and the corpus-sized instance stream joins
-# ONCE on the full 5-gram key — parity is value-level, so the two
-# plans may differ.
-#
-# Fixture-sparsity measurement (recorded in BASELINE): at sf0.1 the
-# repeated-mass fractions are 2-gram 1.00 / 3-gram 0.999 / 4-gram
-# 0.327 / 5-gram 0.100 (sf0.01: 1.00 / 0.64 / 0.12 / 0.09) — the top
-# two orders ride the backoff for most tokens, which is precisely the
-# regime interpolated KN exists for; orders are NOT degenerate (a
-# third of sf0.1's 4-gram mass is repeated), so the deployed-order LM
-# is meaningful here, just backoff-heavy like any open-vocabulary
-# corpus.
-@query(
-    "x110_kn_5gram_bits",
-    oracle=f"""
-    WITH tk AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    gf AS (
-      SELECT doc_id, g['a'] AS a, g['b'] AS b, g['c'] AS c,
-             g['d'] AS d, g['e'] AS e
-      FROM (SELECT doc_id,
-                   unnest(list_transform(range(1, len(t) - 3),
-                          i -> {{'a': t[i], 'b': t[i + 1],
-                                 'c': t[i + 2], 'd': t[i + 3],
-                                 'e': t[i + 4]}})) AS g
-            FROM tk WHERE len(t) >= 5)),
-    c5 AS (
-      SELECT a, b, c, d, e, COUNT(*) AS c5,
-             CAST(SUM(COUNT(*)) OVER (PARTITION BY a, b, c, d)
-                  AS BIGINT) AS ctx5,
-             CAST(COUNT(*) OVER (PARTITION BY a, b, c, d)
-                  AS BIGINT) AS n15
-      FROM gf GROUP BY 1, 2, 3, 4, 5),
-    m4 AS (
-      SELECT b, c, d, e, COUNT(*) AS m4,
-             CAST(SUM(COUNT(*)) OVER (PARTITION BY b, c, d)
-                  AS BIGINT) AS ctx4,
-             CAST(COUNT(*) OVER (PARTITION BY b, c, d)
-                  AS BIGINT) AS n14
-      FROM c5 GROUP BY 1, 2, 3, 4),
-    m3 AS (
-      SELECT c, d, e, COUNT(*) AS m3,
-             CAST(SUM(COUNT(*)) OVER (PARTITION BY c, d)
-                  AS BIGINT) AS ctx3,
-             CAST(COUNT(*) OVER (PARTITION BY c, d)
-                  AS BIGINT) AS n13
-      FROM m4 GROUP BY 1, 2, 3),
-    m2 AS (
-      SELECT d, e, COUNT(*) AS m2,
-             CAST(SUM(COUNT(*)) OVER (PARTITION BY d)
-                  AS BIGINT) AS ctx2,
-             CAST(COUNT(*) OVER (PARTITION BY d)
-                  AS BIGINT) AS n12
-      FROM m3 GROUP BY 1, 2),
-    cont AS (
-      SELECT e, COUNT(*) AS ncont,
-             CAST(SUM(COUNT(*)) OVER () AS BIGINT) AS T
-      FROM m2 GROUP BY 1),
-    sc AS (
-      SELECT doc_id,
-             CAST(floor(log2(
-               (CAST(4 * c5 - 3 AS DOUBLE) / CAST(4 * ctx5 AS DOUBLE))
-               + (CAST(3 * n15 AS DOUBLE) / CAST(4 * ctx5 AS DOUBLE))
-                 * ((CAST(4 * m4 - 3 AS DOUBLE)
-                     / CAST(4 * ctx4 AS DOUBLE))
-                    + (CAST(3 * n14 AS DOUBLE)
-                       / CAST(4 * ctx4 AS DOUBLE))
-                      * ((CAST(4 * m3 - 3 AS DOUBLE)
-                          / CAST(4 * ctx3 AS DOUBLE))
-                         + (CAST(3 * n13 AS DOUBLE)
-                            / CAST(4 * ctx3 AS DOUBLE))
-                           * ((CAST(4 * m2 - 3 AS DOUBLE)
-                               / CAST(4 * ctx2 AS DOUBLE))
-                              + (CAST(3 * n12 AS DOUBLE)
-                                 / CAST(4 * ctx2 AS DOUBLE))
-                                * (CAST(ncont AS DOUBLE)
-                                   / CAST(T AS DOUBLE)))))
-             ) * 1e7 + 0.5) AS BIGINT) AS lg
-      FROM gf JOIN c5 USING (a, b, c, d, e) JOIN m4 USING (b, c, d, e)
-           JOIN m3 USING (c, d, e) JOIN m2 USING (d, e)
-           JOIN cont USING (e))
-    SELECT doc_id, COUNT(*) AS n_5grams,
-           {sql_qint("-CAST(SUM(lg) AS DOUBLE) / 1e7 / COUNT(*)", 4)}
-             AS kn5_bits_per_token_e4
-    FROM sc GROUP BY 1
-    """,
-)
-def x110_kn_5gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x110: per-document bits-per-token under an interpolated
-    Kneser-Ney 5-GRAM LM trained on the corpus itself — x100's trigram
-    recursion at the deployed CCNet/KenLM order, with continuation
-    counts at every interior level (see block comment for the shared
-    IEEE-double formulation and the fixture-sparsity measurement)."""
-    # one positional transform, built as a single SQL expression: the
-    # previous 4-level zip_with chain allocated four intermediate
-    # struct arrays per row AND cost ~150 py4j calls to construct
-    # (batch-3 lesson); identical (a..e) rows by construction
-    z = (
-        "transform(sequence(1, size(t) - 4), i -> struct("
-        "element_at(t, i) as a, element_at(t, i + 1) as b,"
-        " element_at(t, i + 2) as c, element_at(t, i + 3) as d,"
-        " element_at(t, i + 4) as e))"
-    )
-    tk = (
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-        .selectExpr("doc_id", "split(text, ' ') AS t")
-        .filter(F.size("t") >= 5)
-    )
-    gf = tk.select("doc_id", F.expr(f"explode({z})").alias("g")).select(
-        "doc_id", "g.a", "g.b", "g.c", "g.d", "g.e"
-    )
-    if _x110_use_dictionary(sf_dir):
-        # dictionary-encode the 5-gram keys (r14, see _token_ids block
-        # comment): counts are invariant under the token<->id bijection
-        # and no token string crosses any downstream exchange.  Gated on
-        # corpus size — below the gate the fixed vocab-job/broadcast
-        # costs exceed the narrower-key savings (measured, see
-        # _X110_DICT_MIN_BYTES).
-        gf = _attach_token_ids(
-            gf,
-            _token_ids(tk),
-            {"a": "ka", "b": "kb", "c": "kc", "d": "kd", "e": "ke"},
-        )
-        keys = ["ka", "kb", "kc", "kd", "ke"]
-    else:
-        keys = ["a", "b", "c", "d", "e"]
-
-    def _level(df, keys, cnt_name, ctx_name, n1_name):
-        w = Window.partitionBy(*keys[:-1])
-        return (
-            df.groupBy(*keys)
-            .agg(F.count("*").alias(cnt_name))
-            .withColumn(
-                ctx_name, F.sum(cnt_name).over(w).cast("long")
-            )
-            .withColumn(n1_name, F.count("*").over(w).cast("long"))
-        )
-
-    c5 = _level(gf, keys, "c5", "ctx5", "n15")
-    m4 = _level(c5, keys[1:], "m4", "ctx4", "n14")
-    m3 = _level(m4, keys[2:], "m3", "ctx3", "n13")
-    m2 = _level(m3, keys[3:], "m2", "ctx2", "n12")
-    wall = Window.partitionBy()
-    cont = (
-        m2.groupBy(keys[4])
-        .agg(F.count("*").alias("ncont"))
-        .withColumn("T", F.sum("ncont").over(wall).cast("long"))
-    )
-
-    def _p(cnt, ctx):
-        return (4 * F.col(cnt) - 3).cast("double") / (
-            4 * F.col(ctx)
-        ).cast("double")
-
-    def _lam(n1, ctx):
-        return (3 * F.col(n1)).cast("double") / (4 * F.col(ctx)).cast(
-            "double"
-        )
-
-    pc = F.col("ncont").cast("double") / F.col("T").cast("double")
-    prob = _p("c5", "ctx5") + _lam("n15", "ctx5") * (
-        _p("m4", "ctx4")
-        + _lam("n14", "ctx4")
-        * (
-            _p("m3", "ctx3")
-            + _lam("n13", "ctx3")
-            * (_p("m2", "ctx2") + _lam("n12", "ctx2") * pc)
-        )
-    )
-    # same shape fix as x100 (VERDICT r11 item 3): the probability is a
-    # function of the 5-gram alone, so build it on the distinct-5-gram
-    # frame and join the corpus-sized gf ONCE — the pre-r12 plan
-    # shuffled gf per suffix key-set, 4 extra corpus-wide exchanges
-    score5 = (
-        c5.join(m4.select(*keys[1:], "m4", "ctx4", "n14"), keys[1:])
-        .join(m3.select(*keys[2:], "m3", "ctx3", "n13"), keys[2:])
-        .join(m2.select(*keys[3:], "m2", "ctx2", "n12"), keys[3:])
-        .join(cont, keys[4])
-        .withColumn(
-            "lg",
-            F.floor(F.log2(prob) * F.lit(1e7) + F.lit(0.5)).cast("long"),
-        )
-        .select(*keys, "lg")
-    )
-    sc = gf.join(score5, keys)
-    return sc.groupBy("doc_id").agg(
-        F.count("*").alias("n_5grams"),
-        qint(
-            -F.sum("lg").cast("double") / F.lit(1e7) / F.count("*"), 4
-        ).alias("kn5_bits_per_token_e4"),
-    )
-
-
 # --- x104: PMI collocation extraction --------------------------------------------
 # Pointwise mutual information over corpus bigrams (Church & Hanks
 # 1990, public) — the standard collocation detector: which word pairs
@@ -2999,15 +2782,15 @@ def x110_kn_5gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # e7-quantized by the x30 convention.  A min-count floor ({mc}) drops
 # the hapax pairs whose PMI is pure noise (the standard practice).
 #
-# Scale shape: bigram extraction is x94's per-row slice+zip_with (no
+# Scale shape: bigram extraction is _word_grams' per-row expression (no
 # window, no shuffle); marginals are two groupBys of the bigram-count
 # table; N is a one-row scalar aggregate BROADCAST onto the scored
-# frame (the x100 `tt` pattern) — a zero-arg window would single-
+# frame (kn_bits' `tt` pattern) — a zero-arg window would single-
 # partition the |vocab|-sized cL frame, a real skew point at 1e8+
 # types (VERDICT r11 item 4).  The ORACLE still carries N as
 # SUM(SUM(cvw)) OVER () inside the cl CTE: the one-row-relation form
 # is hazardous only to DuckDB's join-order enumeration (the measured
-# x100 blowup), and parity is value-level, not plan-level.  The final
+# KN-oracle blowup), and parity is value-level, not plan-level.  The final
 # top-{k} is orderBy+limit (TakeOrderedAndProject, never a global
 # sort).
 _X104_MIN_COUNT = 5
@@ -3017,14 +2800,8 @@ _X104_TOPK = 50
 @query(
     "x104_pmi_collocations",
     oracle=f"""
-    WITH tk AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    bgf AS (
-      SELECT b['v'] AS v, b['w'] AS w
-      FROM (SELECT unnest(list_transform(range(1, len(t)),
-                          i -> {{'v': t[i], 'w': t[i + 1]}})) AS b
-            FROM tk WHERE len(t) >= 2)),
-    cvw AS (SELECT v, w, COUNT(*) AS cvw FROM bgf GROUP BY 1, 2),
+    WITH {_word_grams_sql(2)},
+    cvw AS (SELECT a AS v, b AS w, COUNT(*) AS cvw FROM gf GROUP BY 1, 2),
     cl AS (
       SELECT v, CAST(SUM(cvw) AS BIGINT) AS cl,
              CAST(SUM(SUM(cvw)) OVER () AS BIGINT) AS N
@@ -3047,22 +2824,9 @@ def x104_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     e7-quantized PMI with a min-count floor of ``_X104_MIN_COUNT``
     (5) — see block comment for the exact integer-rational
     formulation."""
-    t = F.split("text", " ")
-    bgf = (
-        spread(load(spark, sf_dir, "documents"), "doc_id")
-        .select(t.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("t"), 1, F.size("t") - 1),
-                    F.slice(F.col("t"), 2, F.size("t") - 1),
-                    lambda a, b: F.struct(a.alias("v"), b.alias("w")),
-                )
-            ).alias("b")
-        )
-        .select("b.v", "b.w")
-    )
+    bgf = _word_grams(
+        spread(load(spark, sf_dir, "documents"), "doc_id"), 2
+    ).select(F.col("a").alias("v"), F.col("b").alias("w"))
     cvw = bgf.groupBy("v", "w").agg(F.count("*").alias("cvw"))
     cl = cvw.groupBy("v").agg(F.sum("cvw").alias("cl"))
     cr = cvw.groupBy("w").agg(F.sum("cvw").alias("cr"))

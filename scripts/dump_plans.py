@@ -319,12 +319,17 @@ HEADLINERS = {
         "per-partition k-heaps merged once, never a global sort."
     ),
     "x94_kneser_ney_bits": (
-        "Kneser-Ney bigram scoring: bigram extraction is per-row "
-        "slice+zip_with arithmetic (NO window, NO shuffle on the "
-        "corpus side); the three model tables are partial-agg "
-        "groupBys of the bigram-count table; scoring re-joins on "
-        "vocabulary-sized keys with the distinct-bigram total riding "
-        "as a one-row broadcast."
+        "Kneser-Ney bigram scoring (kn_bits at order 2): bigram "
+        "extraction is one per-row expression (arrays_zip of shifted "
+        "slices: NO window, NO shuffle on the corpus side); the model "
+        "is ONE partial-agg groupBy of the bigram frame, its context "
+        "totals, N1 and continuation counts riding as windows on that "
+        "table and the distinct-bigram total as a one-row broadcast; "
+        "the occurrence stream meets the distinct-bigram score in ONE "
+        "broadcast hash join.  At fixture scale the cross-joined score "
+        "frame's static size estimate (a product of its inputs) is the "
+        "larger, so the occurrence stream is the build side and the "
+        "per-doc aggregate adds one doc_id exchange."
     ),
     "x95_unigram_encode": (
         "Unigram-LM tokenizer encode: the type->segmentation map is "

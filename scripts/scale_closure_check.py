@@ -58,11 +58,10 @@ from fanstats_producer_spark.operators.dedup import (  # noqa: E402
     _EDGES_SQL,
     _MH_CHAIN,
     _MH_CHAIN_SQL,
-    _X04_K,
-    _X04_THRESHOLD,
+    _X04_CHAIN,
+    _X04_FINAL,
     _X60_FINAL,
-    _X61_THRESHOLD,
-    _shingles_sql,
+    _X61_PAIRS_SQL,
 )
 from fanstats_producer_spark.session import get_spark  # noqa: E402
 from scripts.check_oracle import (  # noqa: E402
@@ -211,27 +210,14 @@ def staged_oracle(con: duckdb.DuckDBPyConnection, key: str):
     if key == "x61_semdedup":
         # the suffix reads the prefix CTE `asg` (the k-means assignment,
         # also the expensive stage): materialize it once as a temp table
-        # and restate the pair CTEs around it.
+        # and run x61's own pair CTEs over it.
         _ds(
             con,
             "asg",
             "SELECT vec_id, cluster_id AS cid, dist2_e6"
             f" FROM ({registry.ORACLE['x24_kmeans']})",
         )
-        _ds(
-            con,
-            "pairs",
-            f"""
-            WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                       FROM embeddings)
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b
-            FROM asg a JOIN asg b ON a.cid = b.cid
-                                 AND a.vec_id < b.vec_id
-            JOIN v va ON va.vec_id = a.vec_id
-            JOIN v vb ON vb.vec_id = b.vec_id
-            WHERE list_cosine_similarity(va.v, vb.v) >= {_X61_THRESHOLD}
-            """,
-        )
+        _ds(con, "pairs", f"WITH {_X61_PAIRS_SQL} SELECT id_a, id_b FROM pairs")
         return _close_over(con, key)
 
     if key == "x60_verify_gate_effect":
@@ -310,17 +296,21 @@ STAGED_PLAIN = {"s26b_stream_decontam_large_eval": _s26b_staged_sql}
 # the REGISTERED oracle at sf0.01 before any scale run.
 
 
+def _stage_chain(con, chain, drops: dict) -> None:
+    """Stage each (name, body) CTE of a dedup.py oracle chain as a temp
+    table of its own name; `drops` maps a stage to the table it is the
+    last reader of, dropped as soon as that stage lands."""
+    for name, body in chain:
+        _ds(con, name, body)
+        if name in drops:
+            con.execute(f"DROP TABLE {drops[name]}")
+
+
 def _stage_banded(con) -> None:
     """documents -> banded(id_a, id_b, est_jaccard_e6), the x04d result:
-    each CTE of dedup._MH_CHAIN staged as a temp table of its own name,
-    then the registered x04d oracle's candidate and estimate tail over
-    them."""
-    prev = None
-    for name, body in _MH_CHAIN:
-        _ds(con, name, body)
-        if prev in ("sh", "post", "sig"):  # read only by the next stage
-            con.execute(f"DROP TABLE {prev}")
-        prev = name
+    dedup._MH_CHAIN staged, then the registered x04d oracle's candidate
+    and estimate tail over it."""
+    _stage_chain(con, _MH_CHAIN, {"post": "sh", "sig": "post", "sigl": "sig"})
     x04d = registry.ORACLE["x04d_minhash_native"]
     _ds(con, "banded", "WITH " + x04d.split(_MH_CHAIN_SQL + ",", 1)[1])
     con.execute("DROP TABLE bands")
@@ -337,38 +327,13 @@ def _stage_verified(con) -> None:
 
 
 def _stage_exact(con) -> None:
-    """documents -> exact_pairs(id_a, id_b) — the x04 exact-Jaccard
-    pair set (shared by x04e's edges: identical shingling, identical
-    quantize-then-compare threshold)."""
-    _ds(
-        con,
-        "t_shsz",
-        f"""
-        SELECT doc_id, {_shingles_sql(_X04_K)} AS shingles
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        """,
-    )
-    _ds(con, "t_postx", "SELECT doc_id, unnest(shingles) AS shingle FROM t_shsz")
-    _ds(con, "t_sizes", "SELECT doc_id, len(shingles) AS n_sh FROM t_shsz")
-    con.execute("DROP TABLE t_shsz")
-    _ds(
-        con,
-        "exact_pairs",
-        f"""
-        SELECT id_a, id_b FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-          FROM t_postx a JOIN t_postx b
-            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2) inter
-        JOIN t_sizes sa ON sa.doc_id = id_a
-        JOIN t_sizes sb ON sb.doc_id = id_b
-        WHERE CAST(floor(CAST(n_inter AS DOUBLE)
-                         / (sa.n_sh + sb.n_sh - n_inter) * 1e6 + 0.5)
-                   AS BIGINT) >= {int(_X04_THRESHOLD * 1e6)}
-        """,
-    )
-    con.execute("DROP TABLE t_postx")
-    con.execute("DROP TABLE t_sizes")
+    """documents -> exact_pairs(id_a, id_b), the x04 result (shared by
+    x04e's edges): dedup._X04_CHAIN staged, then x04's quantize-then-
+    compare tail over it."""
+    _stage_chain(con, _X04_CHAIN, {"sizes": "sh", "inter": "post"})
+    _ds(con, "exact_pairs", f"SELECT id_a, id_b FROM ({_X04_FINAL})")
+    con.execute("DROP TABLE inter")
+    con.execute("DROP TABLE sizes")
 
 
 def _stage_phash_pairs(con) -> None:

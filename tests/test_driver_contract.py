@@ -355,8 +355,19 @@ _STATED_ONCE = (
     "2654435761",
     "reach(node, r) AS (",
     "range(1, greatest(len(toks) -",
+    # one Kneser-Ney level, one word n-gram extractor (kn_bits, _word_grams)
+    "- 3 AS DOUBLE)",
+    "unnest(list_transform(range(1, len(t)",
+    # one x04 and one x61 pair rule (scale_closure_check reads both)
+    "ON a.shingle = b.shingle AND a.doc_id < b.doc_id",
+    "list_cosine_similarity(va.v, vb.v)",
 )
-_STATED_NOWHERE = ("INTERVAL 30 MINUTE", "1800000")
+_STATED_NOWHERE = (
+    "INTERVAL 30 MINUTE",
+    "1800000",
+    '- 3).cast("double")',
+    'F.slice(F.col("t"), 2, F.size("t") - 1)',
+)
 
 
 def test_shared_oracle_rules_are_stated_once():

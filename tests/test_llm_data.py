@@ -575,6 +575,59 @@ def test_x95_trained_vocab_and_encode_properties(spark):
     )
 
 
+def test_x94_kn_bigram_hand_recomputation(spark):
+    """x94's interpolated-KN bigram score recomputed in pure Python from
+    the closed-form rational P(w|v) = [(4c - 3)·T + 3·N1+(v·)·N1+(·w)]
+    / (4·c(v)·T), independent of the operator's nested double form:
+    per-doc bigram counts and quantized bits-per-token must match
+    exactly, and a <2-token doc must drop."""
+    import math
+    import tempfile
+    from collections import Counter
+
+    from fanstats_producer_spark.operators.llm_data import (
+        x94_kneser_ney_bits,
+    )
+
+    docs = [
+        (0, "a b a b c"),
+        (1, "b a c a b"),
+        (2, "x"),  # no bigram -> must drop
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(
+            [(i, t, "en", "s", len(t)) for i, t in docs],
+            "doc_id long, text string, lang string, source string,"
+            " n_chars long",
+        ).write.parquet(f"{d}/documents.parquet")
+        rows = {
+            r["doc_id"]: r for r in x94_kneser_ney_bits(spark, d).collect()
+        }
+
+    bg = {}
+    for i, t in docs:
+        toks = t.split(" ")
+        bg[i] = list(zip(toks, toks[1:]))
+    c = Counter(g for gs in bg.values() for g in gs)
+    cv, n1v, ncont = Counter(), Counter(), Counter()
+    for (v, w), n in c.items():
+        cv[v] += n
+        n1v[v] += 1
+        ncont[w] += 1
+    T = len(c)
+
+    def lg(v, w):
+        num = (4 * c[(v, w)] - 3) * T + 3 * n1v[v] * ncont[w]
+        return math.floor(math.log2(num / (4 * cv[v] * T)) * 1e7 + 0.5)
+
+    assert set(rows) == {0, 1}
+    for i in (0, 1):
+        lgs = [lg(*g) for g in bg[i]]
+        assert rows[i]["n_bigrams"] == len(lgs)
+        want = math.floor(-sum(lgs) / 1e7 / len(lgs) * 1e4 + 0.5)
+        assert rows[i]["kn_bits_per_token_e4"] == want, (i, lgs)
+
+
 def test_x100_kn_trigram_hand_recomputation(spark):
     """x100's full interpolated-KN trigram pipeline recomputed in pure
     Python on a controlled corpus (all five count tables + the exact

@@ -341,20 +341,25 @@ def test_x106_consumers_read_checkpoints_not_corpus(spark):
 
 
 def test_x110_x100_score_join_is_per_distinct_gram(spark):
-    """x110/x100 (VERDICT r11 item 3): the interpolated KN probability
-    is a function of the n-gram alone, so it is assembled on the
-    DISTINCT-n-gram frame and the corpus-sized occurrence stream (the
-    only frame carrying doc_id) is shuffled on gram keys AT MOST ONCE —
-    the single score join — never once per suffix key-set (the pre-r12
-    shape paid 4 extra corpus-wide exchanges at x110).  Auto-broadcast
-    is disabled so the shape is pinned even at SFs where the score
-    frame is small enough to broadcast."""
+    """x110/x100/x94 (VERDICT r11 item 3): the interpolated KN
+    probability is a function of the n-gram alone, so it is assembled
+    on the DISTINCT-n-gram frame and the corpus-sized occurrence stream
+    (the only frame carrying doc_id) is shuffled on gram keys AT MOST
+    ONCE — the single score join — never once per suffix key-set (the
+    pre-r12 shape paid 4 extra corpus-wide exchanges at x110; x94's
+    three-table bigram join paid 3).  Auto-broadcast is disabled so the
+    shape is pinned even at SFs where the score frame is small enough
+    to broadcast."""
     import re
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for key in ("x110_kn_5gram_bits", "x100_kn_trigram_bits"):
+        for key in (
+            "x110_kn_5gram_bits",
+            "x100_kn_trigram_bits",
+            "x94_kneser_ney_bits",
+        ):
             df = registry.QUERIES[key](spark, SF_DIR)
             plan = checks.explain_str(df, "formatted")
             details = re.findall(
