@@ -430,6 +430,7 @@ def x106_rouge2_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _X04_THRESHOLD,
         jaccard_pairs,
     )
+    from fanstats_producer_spark.operators.llm_data import _GRAM_COLS, _word_grams
 
     docs = spread(load(spark, sf_dir, "documents"), "doc_id")
     pairs = (
@@ -449,16 +450,8 @@ def x106_rouge2_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sub = docs.join(F.broadcast(ids), "doc_id", "left_semi")
     bg = (
-        sub.selectExpr("doc_id", "split(text, ' ') AS t")
-        .filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.expr(
-                "explode(zip_with(slice(t, 1, size(t) - 1),"
-                " slice(t, 2, size(t) - 1),"
-                " (a, b) -> concat(a, ' ', b)))"
-            ).alias("g"),
-        )
+        _word_grams(sub, 2)
+        .select("doc_id", F.concat_ws(" ", *_GRAM_COLS[:2]).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count("*").alias("c"))
         .localCheckpoint(eager=True)

@@ -19,6 +19,17 @@ engines upcast identically) so results are reproducible and
 oracle-checkable.  Top-k-search staging (cheap exact baseline + pruned
 approximate arm) follows the incremental top-k similarity-search
 framing of EDBT 2020 (PAPERS.md).
+
+One rank rule: every cosine top-k of the dense family — x05, x05b's
+within-list scan, x57's routing probes and re-rank, the x57b ground
+truth, x102's candidate pool and x103's re-rank — ranks on the
+e6-quantized cosine floor(cos·1e6 + 0.5), descending, ties to the
+smaller neighbour id.  :func:`_cosine_topk` states it for Spark and
+:func:`_cosine_topk_sql` for DuckDB.  The rank reads the same integer
+the row reports, so neighbours whose raw cosines differ only below
+1e-6 fall to the id on both engines instead of to a last-ulp
+difference.  Recall@k (:func:`_recall_at_k`) and the PQ sub-distance
+frame (:func:`_pq_subdist`) are likewise stated once per engine.
 """
 
 from __future__ import annotations
@@ -26,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fanstats_producer_spark.functions.num import qint
+from fanstats_producer_spark import registry as _registry
+from fanstats_producer_spark.functions.num import qint, sql_qint
 from fanstats_producer_spark.io import disk_checkpoint, load, local_frame, spread
 from fanstats_producer_spark.operators.sampling import hash_bucket
 from fanstats_producer_spark.registry import query
@@ -50,6 +62,113 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
+# --- the shared stages: exact pairs, cosine top-k, recall@k ----------------------
+#: The fixture's embedding width (FIXTURES.md), every dense key's input
+#: dimension.
+_DIM = 64
+#: The embeddings as DuckDB float64 lists, the `v` CTE the twins read.
+_V_SQL = "v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+
+def _vectors(emb: DataFrame) -> DataFrame:
+    """(vec_id, v): the embeddings as float64 arrays."""
+    return emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+
+
+def _id_range(v: DataFrame, lo: int, n: int) -> DataFrame:
+    """The rows of `v` with vec_id in [lo, lo + n): the fixed-id probe
+    queries, routing seeds and codebooks."""
+    return v.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + n))
+
+
+def _exact_pairs(v: DataFrame, lo: int, n: int) -> DataFrame:
+    """(query_id, neighbor_id, qv, cv): the queries vec_id in [lo, lo + n)
+    against every other vector.  The query set broadcasts and the
+    corpus streams through once, never shuffled."""
+    q = _id_range(v, lo, n).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    c = v.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
+    return c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+
+
+def _exact_pairs_sql(lo: int, n: int) -> str:
+    """DuckDB twin of _exact_pairs over the `v` CTE."""
+    return f"""SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+             q.v AS qv, c.v AS cv
+      FROM v q JOIN v c ON c.vec_id <> q.vec_id
+      WHERE q.vec_id >= {lo} AND q.vec_id < {lo + n}"""
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim_e6, rnk): the k best of each
+    query's (query_id, neighbor_id, qv, cv) `pairs` under the module's
+    one rank rule, by a window partitioned on query_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim_e6").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            qint(cosine(F.col("qv"), F.col("cv"))).alias("cos_sim_e6"),
+        )
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+    )
+
+
+def _cosine_topk_sql(pairs: str, k: int) -> str:
+    """DuckDB twin of _cosine_topk over the `pairs` SELECT."""
+    return f"""SELECT query_id, neighbor_id, cos_sim_e6, CAST(rnk AS INT) AS rnk
+    FROM (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+                                   ORDER BY cos_sim_e6 DESC, neighbor_id) AS rnk
+      FROM (SELECT query_id, neighbor_id,
+                   {sql_qint("list_cosine_similarity(qv, cv)")} AS cos_sim_e6
+            FROM ({pairs})))
+    WHERE rnk <= {k}"""
+
+
+def _recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, n_hit, n_exact, recall_e6): per query, how many of the
+    `exact` top-k (query_id, neighbor_id) rows `approx` also returns.
+    Counting is all-integer; recall is quantized to 1e-6 units."""
+    hit = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    hits = (
+        exact.select("query_id", "neighbor_id")
+        .join(hit, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count("hit").cast("long").alias("n_hit"),
+            F.count("*").cast("long").alias("n_exact"),
+        )
+    )
+    return hits.withColumn(
+        "recall_e6", qint(F.col("n_hit").cast("double") / F.col("n_exact"))
+    )
+
+
+def _recall_at_k_sql(exact: str, approx: str) -> str:
+    """DuckDB twin of _recall_at_k over two queries that return
+    (query_id, neighbor_id, ...)."""
+    return f"""
+    WITH exact_k AS (SELECT query_id, neighbor_id FROM ({exact})),
+    approx_k AS (SELECT query_id, neighbor_id FROM ({approx})),
+    hits AS (
+      SELECT e.query_id, COUNT(a.neighbor_id) AS n_hit,
+             COUNT(*) AS n_exact
+      FROM exact_k e
+      LEFT JOIN approx_k a
+        ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+      GROUP BY 1)
+    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
+           CAST(n_exact AS BIGINT) AS n_exact,
+           {sql_qint("CAST(n_hit AS DOUBLE) / n_exact")} AS recall_e6
+    FROM hits
+    """
+
+
 # --- x05: brute-force cosine top-k (T5 exact baseline) --------------------------
 _KNN_QUERIES = 3
 _KNN_K = 5
@@ -58,46 +177,21 @@ _KNN_K = 5
 @query(
     "x05_knn",
     oracle=f"""
-    WITH q AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-               WHERE vec_id < {_KNN_QUERIES}),
-         c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.v, c.v) AS sim
-           FROM q CROSS JOIN c
-           WHERE q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id,
-                  CAST(floor(sim * 1e6 + 0.5) AS BIGINT) AS cos_sim_e6,
-                  row_number() OVER (PARTITION BY query_id
-                                     ORDER BY sim DESC, neighbor_id) AS rnk
-           FROM scored)
-    SELECT query_id, neighbor_id, cos_sim_e6, CAST(rnk AS INT) AS rnk FROM ranked WHERE rnk <= {_KNN_K}
+    WITH {_V_SQL}
+    {_cosine_topk_sql(_exact_pairs_sql(0, _KNN_QUERIES), _KNN_K)}
     """,
 )
 def x05_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spread(load(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < _KNN_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    cands = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
-    scored = (
-        cands.join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            qint("sim").alias("cos_sim_e6"),
-            F.row_number().over(w).alias("rnk"),
-        )
-        .filter(F.col("rnk") <= _KNN_K)
-    )
+    v = _vectors(spread(load(spark, sf_dir, "embeddings")))
+    return _cosine_topk(_exact_pairs(v, 0, _KNN_QUERIES), _KNN_K)
 
 
 # --- x05b: IVF-style partition-pruned ANN (rows-only; recall tested in pytest) ---
+#: label_centroids' fixed-point unit: each centroid component is summed
+#: as an integer count of 2^-30 units.
+_CENTROID_SCALE = float(1 << 30)
+
+
 def label_centroids(emb: DataFrame) -> DataFrame:
     """(label, centroid): per-inverted-list centroid as integer-exact
     dim means.  Each value is floor-quantized to 2^-30 units (pure IEEE
@@ -109,15 +203,18 @@ def label_centroids(emb: DataFrame) -> DataFrame:
     dims = emb.select(
         F.posexplode(_as_double(F.col("embedding"))).alias("i", "x"), "label"
     )
-    _SC = float(1 << 30)
     return (
         dims.groupBy("label", "i")
         .agg(
             (
-                F.sum(F.floor(F.col("x") * F.lit(_SC) + F.lit(0.5)).cast("long"))
+                F.sum(
+                    F.floor(
+                        F.col("x") * F.lit(_CENTROID_SCALE) + F.lit(0.5)
+                    ).cast("long")
+                )
                 .cast("double")
                 / F.count("x")
-                / F.lit(_SC)
+                / F.lit(_CENTROID_SCALE)
             ).alias("cx")
         )
         .groupBy("label")
@@ -127,7 +224,6 @@ def label_centroids(emb: DataFrame) -> DataFrame:
 
 
 def ivf_topk(
-    spark: SparkSession,
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
@@ -154,21 +250,10 @@ def ivf_topk(
     cands = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), "label"
     )
-    scored = (
-        cands.join(F.broadcast(probes), "label")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    pairs = cands.join(F.broadcast(probes), "label").filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            qint("sim").alias("cos_sim_e6"),
-            F.row_number().over(w).alias("rnk"),
-        )
-        .filter(F.col("rnk") <= k)
-    )
+    return _cosine_topk(pairs, k)
 
 
 # IVF with fixed probes is approximate vs brute force but fully
@@ -178,8 +263,8 @@ def ivf_topk(
 # probabilistically stable), the
 # probe is the top-1 centroid by cosine, and the result is the exact
 # top-k WITHIN the probed list — so the whole operator gets a value-hash
-# oracle, not a rows-only check.  The fixture embedding width (64) is
-# pinned by TESTDATA.md.
+# oracle, not a rows-only check.  The probe ranks centroids on the raw
+# cosine: it picks a list, not a returned row.
 @query(
     "x05b_ivf_ann",
     oracle=f"""
@@ -187,9 +272,9 @@ def ivf_topk(
     q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {_KNN_QUERIES}),
     dims AS (
       SELECT label, i,
-             CAST(SUM(CAST(floor(v[i+1] * 1073741824.0 + 0.5) AS BIGINT))
-                  AS DOUBLE) / COUNT(*) / 1073741824.0 AS cx
-      FROM e CROSS JOIN range(64) AS t(i)
+             CAST(SUM(CAST(floor(v[i+1] * {_CENTROID_SCALE} + 0.5) AS BIGINT))
+                  AS DOUBLE) / COUNT(*) / {_CENTROID_SCALE} AS cx
+      FROM e CROSS JOIN range({_DIM}) AS t(i)
       GROUP BY 1, 2),
     cent AS (SELECT label, list(cx ORDER BY i) AS c FROM dims GROUP BY 1),
     probe AS (
@@ -200,19 +285,11 @@ def ivf_topk(
                                            DESC, cent.label) AS pr
         FROM q CROSS JOIN cent)
       WHERE pr = 1),
-    scored AS (
-      SELECT p.query_id, e.vec_id AS neighbor_id,
-             list_cosine_similarity(p.qv, e.v) AS sim
+    pairs AS (
+      SELECT p.query_id, e.vec_id AS neighbor_id, p.qv, e.v AS cv
       FROM probe p JOIN e ON e.label = p.label
-      WHERE e.vec_id <> p.query_id),
-    ranked AS (
-      SELECT query_id, neighbor_id,
-             CAST(floor(sim * 1e6 + 0.5) AS BIGINT) AS cos_sim_e6,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY sim DESC, neighbor_id) AS rnk
-      FROM scored)
-    SELECT query_id, neighbor_id, cos_sim_e6, CAST(rnk AS INT) AS rnk
-    FROM ranked WHERE rnk <= {_KNN_K} ORDER BY query_id, rnk
+      WHERE e.vec_id <> p.query_id)
+    {_cosine_topk_sql("SELECT * FROM pairs", _KNN_K)}
     """,
 )
 def x05b_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,7 +299,7 @@ def x05b_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # no trailing global sort (the x47 lesson): range-boundary sampling
     # re-executes the child pipeline; the driver compare is order-insensitive.
-    return ivf_topk(spark, emb, queries, k=_KNN_K, n_probe=1)
+    return ivf_topk(emb, queries, k=_KNN_K, n_probe=1)
 
 
 # --- x06: similarity self-join (T6; embedding-cosine near-dup) -------------------
@@ -260,9 +337,7 @@ def x06_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X06B_BUCKET = 0.5
 
 
-def lsh_simjoin(
-    spark: SparkSession, emb: DataFrame, euclid_threshold: float = 1.2
-) -> DataFrame:
+def lsh_simjoin(emb: DataFrame, euclid_threshold: float = 1.2) -> DataFrame:
     """BucketedRandomProjectionLSH self-join: all pairs within a Euclidean
     threshold via bucket join (for unit-norm vectors, Euclidean distance
     and cosine are monotonically related: d² = 2 − 2·cos)."""
@@ -310,7 +385,7 @@ def lsh_simjoin(
 )
 def x06b_lsh_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _X06_LIMIT)
-    pairs = lsh_simjoin(spark, emb)
+    pairs = lsh_simjoin(emb)
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     d2 = F.aggregate(
@@ -340,57 +415,15 @@ def x06b_lsh_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fully value-hash-checkable.  At 100 TB the probe set is a fixed sample
 # and the exact arm runs only over it — the cost is k·|probes| scans,
 # not a corpus-wide join.
-from fanstats_producer_spark import registry as _registry
-
-
-def _x50_oracle() -> str:
-    exact = _registry.ORACLE["x05_knn"]
-    ivf = _registry.ORACLE["x05b_ivf_ann"]
-    return f"""
-    WITH exact_k AS (SELECT query_id, neighbor_id FROM ({exact})),
-    ivf_k AS (SELECT query_id, neighbor_id FROM ({ivf})),
-    hits AS (
-      SELECT e.query_id,
-             COUNT(*) FILTER (WHERE i.neighbor_id IS NOT NULL) AS n_hit,
-             COUNT(*) AS n_exact
-      FROM exact_k e
-      LEFT JOIN ivf_k i
-        ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-      GROUP BY 1)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(floor(CAST(n_hit AS DOUBLE) / n_exact * 1e6 + 0.5) AS BIGINT)
-             AS recall_e6
-    FROM hits ORDER BY query_id
-    """
-
-
-@query("x50_ann_recall", oracle=_x50_oracle())
+@query(
+    "x50_ann_recall",
+    oracle=_recall_at_k_sql(
+        _registry.ORACLE["x05_knn"], _registry.ORACLE["x05b_ivf_ann"]
+    ),
+)
 def x50_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-probe-query recall@k of the IVF ANN arm vs the exact KNN arm
-    — all-integer counting over the two (query, neighbor) sets."""
-    exact = x05_knn(spark, sf_dir).select("query_id", "neighbor_id")
-    ivf = x05b_ivf_ann(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id").alias("ivf_neighbor")
-    )
-    j = exact.join(
-        ivf,
-        (exact.query_id == ivf.query_id)
-        & (exact.neighbor_id == ivf.ivf_neighbor),
-        "left",
-    ).select(exact.query_id, "neighbor_id", "ivf_neighbor")
-    hits = j.groupBy("query_id").agg(
-        F.sum(F.when(F.col("ivf_neighbor").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_hit"),
-        F.count("*").cast("long").alias("n_exact"),
-    )
-    return hits.select(
-        "query_id",
-        "n_hit",
-        "n_exact",
-        qint(F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall_e6"),
-    )
+    """Per-probe-query recall@k of the IVF ANN arm vs the exact KNN arm."""
+    return _recall_at_k(x05_knn(spark, sf_dir), x05b_ivf_ann(spark, sf_dir))
 
 
 # --- x56: product-quantization ANN (ADC scan over 8x compressed codes) ----------
@@ -406,93 +439,123 @@ def x50_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism (the oracle contract): the codebook is NOT a k-means fit
 # (k-means would need its own unrolled SQL mirror) — it is the first
 # _PQ_K vectors of the corpus, sliced per subspace.  Every distance is
-# an EXPLICIT 8-term left-associated chain of (a-b)*(a-b) doubles
+# an EXPLICIT left-associated chain of (a-b)*(a-b) doubles
 # (identical IEEE evaluation order on both engines — no fold, no
 # reassociation) quantized to 1e-9 units BEFORE any argmin/sum, so
 # codes, lookup tables, and ADC sums are integer-exact cross-engine.
 # The mechanics (encode -> LUT -> code-indexed sum -> top-k) are
-# exactly real PQ; only the trainer is simplified.
-_PQ_M = 8          # subspaces
-_PQ_DSUB = 8       # dims per subspace (64-dim fixture embeddings)
+# exactly real PQ; only the trainer is simplified.  One long
+# (vec_id, j, cid, d) sub-distance frame feeds both the codes (argmin
+# over cid) and the query LUTs, on both engines.
+_PQ_M = 8          # subspaces (8 dims each)
 _PQ_K = 16         # centroids per subspace
 _PQ_QUERIES = 3    # probe queries: vec_id in [_PQ_K, _PQ_K + _PQ_QUERIES)
 _PQ_TOPK = 5
 
 
-def _chain_dist2(
-    a: str, b: str, base_a: int, base_b: int, n: int = _PQ_DSUB
-) -> str:
-    """Explicit left-associated n-term squared-L2 chain (Spark SQL,
-    0-indexed arrays): identical evaluation order on any engine."""
-    terms = [
-        f"(({a}[{base_a + i}]-{b}[{base_b + i}])*({a}[{base_a + i}]-{b}[{base_b + i}]))"
+def _dist2_e9(a: str, b: str, base: str, n: int) -> str:
+    """SQL text both engines parse: the squared L2 distance between the
+    n components of arrays `a` and `b` from index `base` on, as one
+    explicit left-associated chain (the same IEEE evaluation order on
+    any engine), quantized to 1e-9 units.  `base` is SQL text: a
+    literal for Spark's 0-indexed arrays, an expression over the
+    subspace for DuckDB's 1-indexed lists."""
+    terms = " + ".join(
+        f"(({a}[{base} + {i}] - {b}[{base} + {i}])"
+        f" * ({a}[{base} + {i}] - {b}[{base} + {i}]))"
         for i in range(n)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def pq_encode(
-    emb: DataFrame,
-    m: int = _PQ_M,
-    dsub: int = _PQ_DSUB,
-    k: int = _PQ_K,
-    base: int = 0,
-) -> DataFrame:
-    """(vec_id, j, code): per-subspace nearest-codebook-entry codes.
-    Codebook = the k corpus vectors with vec_id in [base, base+k),
-    sliced per subspace (the deterministic simplified trainer — see
-    the x56 block comment); rows ride in via broadcast; argmin is over
-    integer-quantized distances with centroid-id tie-break."""
-    v = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    seeds = (
-        v.filter((F.col("vec_id") >= base) & (F.col("vec_id") < base + k))
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
-    sub = v.crossJoin(F.broadcast(seeds))
-    dists = sub.select(
+    return f"CAST(floor(({terms}) * 1e9 + 0.5) AS BIGINT)"
+
+
+def _pq_seeds(v: DataFrame, lo: int, k: int) -> DataFrame:
+    """(cid, cv): the k codebook vectors, vec_id in [lo, lo + k)."""
+    return _id_range(v, lo, k).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+
+
+def _pq_subdist(vecs: DataFrame, seeds: DataFrame, m: int) -> DataFrame:
+    """(vec_id, j, cid, d): for each (vec_id, v) row and each codebook
+    seed (cid, cv), the squared distance between their subspace-j
+    slices in 1e-9 units, over `m` equal slices of the _DIM components.
+    The seeds broadcast."""
+    if _DIM % m != 0:
+        raise ValueError(
+            f"m={m} must divide the {_DIM}-dim embedding evenly"
+            " (a floor-truncated slice width would silently drop trailing"
+            " dimensions from the ADC distance)"
+        )
+    dsub = _DIM // m
+    wide = vecs.crossJoin(F.broadcast(seeds)).select(
         "vec_id",
         "cid",
         *[
-            F.expr(
-                f"CAST(floor({_chain_dist2('v', 'cv', j * dsub, j * dsub, dsub)}"
-                f" * 1e9 + 0.5) AS BIGINT)"
-            ).alias(f"d{j}")
+            F.expr(_dist2_e9("v", "cv", str(j * dsub), dsub)).alias(f"d{j}")
             for j in range(m)
         ],
     )
-    per_sub = dists.select(
+    return wide.select(
         "vec_id",
+        "cid",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.col(f"d{j}").alias("d"),
-                        F.col("cid").alias("cid"),
-                    )
+                    F.struct(F.lit(j).alias("j"), F.col(f"d{j}").alias("d"))
                     for j in range(m)
                 ]
             )
         ).alias("e"),
-    ).select("vec_id", "e.j", "e.d", "e.cid")
-    return per_sub.groupBy("vec_id", "j").agg(
-        F.min(F.struct("d", "cid")).alias("best")
-    ).select("vec_id", "j", F.col("best.cid").alias("code"))
+    ).select("vec_id", "e.j", "cid", "e.d")
 
 
-@query(
-    "x56_pq_ann",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    seeds AS (SELECT vec_id AS cid, v AS cv FROM v WHERE vec_id < {_PQ_K}),
+def pq_encode(v: DataFrame, seeds: DataFrame, m: int) -> DataFrame:
+    """(vec_id, j, code): each vector's nearest codebook seed per
+    subspace — the argmin over the integer sub-distances, ties to the
+    smaller cid.  The codebook is fixed-id corpus vectors sliced per
+    subspace (the deterministic simplified trainer — see the x56 block
+    comment)."""
+    return (
+        _pq_subdist(v, seeds, m)
+        .groupBy("vec_id", "j")
+        .agg(F.min(F.struct("d", "cid")).alias("best"))
+        .select("vec_id", "j", F.col("best.cid").alias("code"))
+    )
+
+
+def _adc_sum(codes: DataFrame, v: DataFrame, seeds: DataFrame, m: int) -> DataFrame:
+    """(query_id, neighbor_id, adc_e9): each PQ probe query's Asymmetric
+    Distance to each candidate — the query's (j, cid) sub-distance LUT
+    summed over the candidate's codes.  The LUT broadcasts and joins
+    `codes` on the columns they share: (j, code), plus query_id when
+    the codes are already paired with the queries whose probed lists
+    hold them (x57)."""
+    lut = _pq_subdist(_id_range(v, _PQ_K, _PQ_QUERIES), seeds, m).select(
+        F.col("vec_id").alias("query_id"), "j", F.col("cid").alias("code"), "d"
+    )
+    on = [c for c in lut.columns if c in codes.columns]
+    return (
+        codes.join(F.broadcast(lut), on)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("d").cast("long").alias("adc_e9"))
+    )
+
+
+def _pq_sql(cb0: int, k: int, m: int) -> str:
+    """DuckDB twin of the PQ stages over the `v` CTE, codebook vec_id in
+    [cb0, cb0 + k): CTEs `dists` (the long sub-distance frame), `codes`
+    (argmin ties to the smaller cid, as pq_encode), `luts` and `adc`
+    (the ADC sum of every probe query to every other vector)."""
+    dsub = _DIM // m
+    return f"""seeds AS (SELECT vec_id AS cid, v AS cv FROM v
+              WHERE vec_id >= {cb0} AND vec_id < {cb0 + k}),
     dists AS (
       SELECT v.vec_id, s.cid, t.j,
-             CAST(floor((
-               {" + ".join("((v.v[1 + t.j * 8 + %d] - s.cv[1 + t.j * 8 + %d]) * (v.v[1 + t.j * 8 + %d] - s.cv[1 + t.j * 8 + %d]))" % (i, i, i, i) for i in range(8))}
-             ) * 1e9 + 0.5) AS BIGINT) AS d
-      FROM v CROSS JOIN seeds s CROSS JOIN range({_PQ_M}) AS t(j)),
+             {_dist2_e9("v.v", "s.cv", f"1 + t.j * {dsub}", dsub)} AS d
+      FROM v CROSS JOIN seeds s CROSS JOIN range({m}) AS t(j)),
     codes AS (
-      SELECT vec_id, j, arg_min(cid, d * {_PQ_K} + cid) AS code
+      SELECT vec_id, j, arg_min(cid, d * {k} + (cid - {cb0})) AS code
       FROM dists GROUP BY 1, 2),
     luts AS (
       SELECT vec_id AS query_id, cid, j, d
@@ -502,7 +565,14 @@ def pq_encode(
       SELECT l.query_id, c.vec_id AS neighbor_id, SUM(l.d) AS adc_e9
       FROM codes c JOIN luts l ON l.j = c.j AND l.cid = c.code
       WHERE c.vec_id <> l.query_id
-      GROUP BY 1, 2),
+      GROUP BY 1, 2)"""
+
+
+@query(
+    "x56_pq_ann",
+    oracle=f"""
+    WITH {_V_SQL},
+    {_pq_sql(0, _PQ_K, _PQ_M)},
     ranked AS (
       SELECT query_id, neighbor_id, CAST(adc_e9 AS BIGINT) AS adc_e9,
              row_number() OVER (PARTITION BY query_id
@@ -517,56 +587,15 @@ def x56_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: codes are computed once per corpus vector (the
     crossJoin against the 16-row broadcast codebook never shuffles the
-    corpus); the per-query LUT is 4x16 (subspaces x codebook) integer
+    corpus); the per-query LUT is 8x16 (subspaces x codebook) integer
     partials joined onto the code table by (subspace, code) — again
     broadcastable — and the ADC sum + per-query top-k ride one partial
     aggregation.  At scale the code table is the thing that persists
     (8 B/vector) and this query is a scan over IT, not over the raw
     embeddings.  (Constants: _PQ_TOPK/_PQ_M/_PQ_K above.)"""
-    emb = spread(load(spark, sf_dir, "embeddings"))
-    codes = pq_encode(emb)
-    v = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    queries = v.filter(
-        (F.col("vec_id") >= _PQ_K) & (F.col("vec_id") < _PQ_K + _PQ_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    seeds = v.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    lut = queries.crossJoin(F.broadcast(seeds)).select(
-        "query_id",
-        "cid",
-        *[
-            F.expr(
-                f"CAST(floor({_chain_dist2('qv', 'cv', j * _PQ_DSUB, j * _PQ_DSUB)}"
-                f" * 1e9 + 0.5) AS BIGINT)"
-            ).alias(f"d{j}")
-            for j in range(_PQ_M)
-        ],
-    )
-    lut_long = lut.select(
-        "query_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.col(f"d{j}").alias("d"),
-                        F.col("cid").alias("cid"),
-                    )
-                    for j in range(_PQ_M)
-                ]
-            )
-        ).alias("e"),
-    ).select("query_id", "e.j", "e.d", "e.cid")
-    adc = (
-        codes.join(
-            F.broadcast(lut_long),
-            (lut_long.j == codes.j) & (lut_long.cid == codes.code),
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").cast("long").alias("adc_e9"))
-    )
+    v = _vectors(spread(load(spark, sf_dir, "embeddings")))
+    seeds = _pq_seeds(v, 0, _PQ_K)
+    adc = _adc_sum(pq_encode(v, seeds, _PQ_M), v, seeds, _PQ_M)
     w = Window.partitionBy("query_id").orderBy("adc_e9", "neighbor_id")
     return adc.select(
         "query_id", "neighbor_id", "adc_e9", F.row_number().over(w).alias("rnk")
@@ -611,12 +640,15 @@ _X57_SHORTLIST = 100
 _X57_LISTS = 10
 _X57_SEED0 = _PQ_K + _PQ_QUERIES   # routing seeds: vec_id in [19, 29)
 _X57_M = 16                        # finer subspaces than x56 (4 dims each)
-_X57_DSUB = 4
 _X57_K = 32                        # codebook entries per subspace
 _X57_CB0 = _X57_SEED0 + _X57_LISTS  # codebook: vec_id in [29, 61)
 
+# The oracle sums the ADC of every (query, vector) pair and keeps the
+# probed lists' members afterwards; the engine prunes before the sum.
+# The sum of one pair does not depend on which pairs are kept, so both
+# state the same shortlist.
 _X57_ORACLE = f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    WITH {_V_SQL},
     q AS (SELECT vec_id AS query_id, v AS qv FROM v
           WHERE vec_id >= {_PQ_K} AND vec_id < {_PQ_K + _PQ_QUERIES}),
     rseeds AS (SELECT vec_id AS list_id, v AS sv FROM v
@@ -630,60 +662,28 @@ _X57_ORACLE = f"""
                      + (r.list_id - {_X57_SEED0})) AS list_id
       FROM v CROSS JOIN rseeds r
       GROUP BY 1),
+    route AS (
+      SELECT q.query_id, r.list_id AS neighbor_id, q.qv, r.sv AS cv
+      FROM q CROSS JOIN rseeds r),
     probe AS (
-      SELECT query_id, list_id FROM (
-        SELECT q.query_id, r.list_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY CAST(floor(
-                                    list_cosine_similarity(q.qv, r.sv) * 1e6
-                                    + 0.5) AS BIGINT) DESC, r.list_id) AS pr
-        FROM q CROSS JOIN rseeds r)
-      WHERE pr <= {_X57_NPROBE}),
-    seeds AS (SELECT vec_id AS cid, v AS cv FROM v
-              WHERE vec_id >= {_X57_CB0} AND vec_id < {_X57_CB0 + _X57_K}),
-    dists AS (
-      SELECT v.vec_id, s.cid, t.j,
-             CAST(floor((
-               {" + ".join("((v.v[1 + t.j * %d + %d] - s.cv[1 + t.j * %d + %d]) * (v.v[1 + t.j * %d + %d] - s.cv[1 + t.j * %d + %d]))" % (_X57_DSUB, i, _X57_DSUB, i, _X57_DSUB, i, _X57_DSUB, i) for i in range(_X57_DSUB))}
-             ) * 1e9 + 0.5) AS BIGINT) AS d
-      FROM v CROSS JOIN seeds s CROSS JOIN range({_X57_M}) AS t(j)),
-    codes AS (
-      SELECT vec_id, j,
-             arg_min(cid, d * {_X57_K} + (cid - {_X57_CB0})) AS code
-      FROM dists GROUP BY 1, 2),
-    luts AS (
-      SELECT vec_id AS query_id, cid, j, d
-      FROM dists
-      WHERE vec_id >= {_PQ_K} AND vec_id < {_PQ_K + _PQ_QUERIES}),
-    adc AS (
-      SELECT l.query_id, c.vec_id AS neighbor_id, SUM(l.d) AS adc_e9
-      FROM codes c
-      JOIN assign a ON a.vec_id = c.vec_id
-      JOIN probe p ON p.list_id = a.list_id
-      JOIN luts l ON l.query_id = p.query_id AND l.j = c.j AND l.cid = c.code
-      WHERE c.vec_id <> l.query_id
-      GROUP BY 1, 2),
+      SELECT query_id, neighbor_id AS list_id
+      FROM ({_cosine_topk_sql("SELECT * FROM route", _X57_NPROBE)})),
+    {_pq_sql(_X57_CB0, _X57_K, _X57_M)},
     short AS (
       SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc_e9, neighbor_id) AS rs
-        FROM adc)
+        SELECT d.query_id, d.neighbor_id,
+               row_number() OVER (PARTITION BY d.query_id
+                                  ORDER BY d.adc_e9, d.neighbor_id) AS rs
+        FROM adc d
+        JOIN assign a ON a.vec_id = d.neighbor_id
+        JOIN probe p ON p.query_id = d.query_id AND p.list_id = a.list_id)
       WHERE rs <= {_X57_SHORTLIST}),
     rer AS (
-      SELECT s.query_id, s.neighbor_id,
-             CAST(floor(list_cosine_similarity(q.qv, nv.v) * 1e6 + 0.5)
-                  AS BIGINT) AS cos_sim_e6
+      SELECT s.query_id, s.neighbor_id, q.qv, nv.v AS cv
       FROM short s
       JOIN q ON q.query_id = s.query_id
-      JOIN v nv ON nv.vec_id = s.neighbor_id),
-    ranked AS (
-      SELECT query_id, neighbor_id, cos_sim_e6,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos_sim_e6 DESC, neighbor_id) AS rnk
-      FROM rer)
-    SELECT query_id, neighbor_id, cos_sim_e6, CAST(rnk AS INT) AS rnk
-    FROM ranked WHERE rnk <= {_PQ_TOPK}
+      JOIN v nv ON nv.vec_id = s.neighbor_id)
+    {_cosine_topk_sql("SELECT * FROM rer", _PQ_TOPK)}
     """
 
 
@@ -705,27 +705,18 @@ def ivfpq_ann(
     end.  `n_probe`/`shortlist`/`m` are the recall-vs-cost knobs the
     x57 sweep (scripts/planted_sweep.py x57) tunes on the planted-neighbor
     fixture; the registered key pins the defaults the oracle states.
-    `m` sub-spaces re-slice the 64 dims (dsub = 64/m) over the same
+    `m` sub-spaces re-slice the _DIM dims (dsub = _DIM/m) over the same
     [29, 61) codebook range."""
-    if 64 % m != 0:
-        raise ValueError(
-            f"ivfpq_ann: m={m} must divide the 64-dim embedding evenly"
-            " (a floor-truncated dsub would silently drop trailing"
-            " dimensions from the ADC distance)"
-        )
-    dsub = 64 // m
-    emb = spread(load(spark, sf_dir, "embeddings"))
-    v = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    queries = v.filter(
-        (F.col("vec_id") >= _PQ_K) & (F.col("vec_id") < _PQ_K + _PQ_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
+    v = _vectors(spread(load(spark, sf_dir, "embeddings")))
+    queries = _id_range(v, _PQ_K, _PQ_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
     # 1) route: nearest-seed list assignment for the corpus, then the
     # top-n_probe seed lists per query — same quantized-cosine metric,
     # composite-integer argmin so ties break on list id on both engines
-    rseeds = v.filter(
-        (F.col("vec_id") >= _X57_SEED0)
-        & (F.col("vec_id") < _X57_SEED0 + _X57_LISTS)
-    ).select(F.col("vec_id").alias("list_id"), F.col("v").alias("sv"))
+    rseeds = _id_range(v, _X57_SEED0, _X57_LISTS).select(
+        F.col("vec_id").alias("list_id"), F.col("v").alias("sv")
+    )
     sim = v.crossJoin(F.broadcast(rseeds)).withColumn(
         "sim_e6", qint(cosine(F.col("v"), F.col("sv")))
     )
@@ -744,91 +735,34 @@ def ivfpq_ann(
         )
         .select("vec_id", F.col("best.l").alias("list_id"))
     )
-    q2s = queries.crossJoin(F.broadcast(rseeds)).withColumn(
-        "sim_e6", qint(cosine(F.col("qv"), F.col("sv")))
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("sim_e6").desc(), F.col("list_id")
-    )
-    probes = (
-        q2s.select("query_id", "list_id", F.row_number().over(wq).alias("pr"))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "list_id")
-    )
-    # 2) ADC over probed lists only: per-query LUT of (subspace, cid)
-    # integer partials, summed via each candidate's codes (x57's finer
-    # m=16/k=32 codebook — see the parameter block comment)
-    seeds = v.filter(
-        (F.col("vec_id") >= _X57_CB0) & (F.col("vec_id") < _X57_CB0 + _X57_K)
-    ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    lut = queries.crossJoin(F.broadcast(seeds)).select(
-        "query_id",
-        "cid",
-        *[
-            F.expr(
-                f"CAST(floor({_chain_dist2('qv', 'cv', j * dsub, j * dsub, dsub)}"
-                f" * 1e9 + 0.5) AS BIGINT)"
-            ).alias(f"d{j}")
-            for j in range(m)
-        ],
-    )
-    lut_long = lut.select(
-        "query_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.col(f"d{j}").alias("d"),
-                        F.col("cid").alias("cid"),
-                    )
-                    for j in range(m)
-                ]
+    route = queries.crossJoin(
+        F.broadcast(
+            rseeds.select(
+                F.col("list_id").alias("neighbor_id"), F.col("sv").alias("cv")
             )
-        ).alias("e"),
-    ).select("query_id", "e.j", "e.d", "e.cid")
-    codes = pq_encode(emb, m=m, dsub=dsub, k=_X57_K, base=_X57_CB0)
-    probed = assign.join(F.broadcast(probes), "list_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    adc = (
-        probed.join(codes, "vec_id")
-        .join(
-            F.broadcast(lut_long).withColumnRenamed("query_id", "lq"),
-            (F.col("lq") == F.col("query_id"))
-            & (lut_long.j == codes.j)
-            & (F.col("cid") == F.col("code")),
         )
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").cast("long").alias("adc_e9"))
     )
+    probes = _cosine_topk(route, n_probe).select(
+        "query_id", F.col("neighbor_id").alias("list_id")
+    )
+    # 2) ADC over probed lists only: each probed vector's codes paired
+    # with its query meet that query's LUT (x57's finer m=16/k=32
+    # codebook — see the parameter block comment)
+    codebook = _pq_seeds(v, _X57_CB0, _X57_K)
+    probed = assign.join(F.broadcast(probes), "list_id").join(
+        pq_encode(v, codebook, m), "vec_id"
+    )
+    adc = _adc_sum(probed, v, codebook, m)
     ws = Window.partitionBy("query_id").orderBy("adc_e9", "neighbor_id")
     short = (
-        adc.select(
-            "query_id", "neighbor_id", F.row_number().over(ws).alias("rs")
-        )
+        adc.select("query_id", "neighbor_id", F.row_number().over(ws).alias("rs"))
         .filter(F.col("rs") <= shortlist)
         .select("query_id", "neighbor_id")
     )
     # 3) exact re-rank of the shortlist over raw vectors
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"))
-    rer = (
-        short.join(nv, "neighbor_id")
-        .join(F.broadcast(queries), "query_id")
-        .withColumn("cos_sim_e6", qint(cosine(F.col("qv"), F.col("nv"))))
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim_e6").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.select(
-            "query_id",
-            "neighbor_id",
-            "cos_sim_e6",
-            F.row_number().over(wr).alias("rnk"),
-        )
-        .filter(F.col("rnk") <= _PQ_TOPK)
-    )
+    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
+    rer = short.join(nv, "neighbor_id").join(F.broadcast(queries), "query_id")
+    return _cosine_topk(rer, _PQ_TOPK)
 
 
 @query("x57_ivfpq_ann", oracle=_X57_ORACLE)
@@ -838,38 +772,6 @@ def x57_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall sweep saturates routing); :func:`ivfpq_ann` is the
     parameterized surface the recall sweep drives."""
     return ivfpq_ann(spark, sf_dir)
-
-
-def _x57b_oracle() -> str:
-    composed = _registry.ORACLE["x57_ivfpq_ann"]
-    return f"""
-    WITH composed AS (SELECT query_id, neighbor_id FROM ({composed})),
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM v
-          WHERE vec_id >= {_PQ_K} AND vec_id < {_PQ_K + _PQ_QUERIES}),
-    exact_k AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, c.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.query_id
-                                  ORDER BY CAST(floor(
-                                    list_cosine_similarity(q.qv, c.v) * 1e6
-                                    + 0.5) AS BIGINT) DESC, c.vec_id) AS rnk
-        FROM q JOIN v c ON c.vec_id <> q.query_id)
-      WHERE rnk <= {_PQ_TOPK}),
-    hits AS (
-      SELECT e.query_id,
-             COUNT(*) FILTER (WHERE cm.neighbor_id IS NOT NULL) AS n_hit,
-             COUNT(*) AS n_exact
-      FROM exact_k e
-      LEFT JOIN composed cm
-        ON e.query_id = cm.query_id AND e.neighbor_id = cm.neighbor_id
-      GROUP BY 1)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(floor(CAST(n_hit AS DOUBLE) / n_exact * 1e6 + 0.5) AS BIGINT)
-             AS recall_e6
-    FROM hits ORDER BY query_id
-    """
 
 
 def ivfpq_recall(
@@ -883,52 +785,20 @@ def ivfpq_recall(
     IVF->ADC->rerank pipeline vs brute-force exact cosine over the SAME
     probe queries — the number a production owner tunes n_probe and
     shortlist against (scripts/planted_sweep.py x57 drives this surface over
-    the planted-neighbor fixture).  Exact ground truth ranks over the
-    quantized similarity (integer, neighbor_id tie-break) so both
-    engines pick identical top-k sets."""
-    emb = spread(load(spark, sf_dir, "embeddings"))
-    v = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    queries = v.filter(
-        (F.col("vec_id") >= _PQ_K) & (F.col("vec_id") < _PQ_K + _PQ_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    cands = v.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    scored = cands.join(
-        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
-    ).withColumn("sim_e6", qint(cosine(F.col("qv"), F.col("cv"))))
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("sim_e6").desc(), F.col("neighbor_id")
-    )
-    exact = (
-        scored.select(
-            "query_id", "neighbor_id", F.row_number().over(we).alias("rnk")
-        )
-        .filter(F.col("rnk") <= _PQ_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-    composed = ivfpq_ann(spark, sf_dir, n_probe, shortlist, m).select(
-        "query_id", F.col("neighbor_id").alias("c_neighbor")
-    )
-    j = exact.join(
-        composed,
-        (exact.query_id == composed.query_id)
-        & (exact.neighbor_id == composed.c_neighbor),
-        "left",
-    ).select(exact.query_id, "neighbor_id", "c_neighbor")
-    hits = j.groupBy("query_id").agg(
-        F.sum(F.when(F.col("c_neighbor").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_hit"),
-        F.count("*").cast("long").alias("n_exact"),
-    )
-    return hits.select(
-        "query_id",
-        "n_hit",
-        "n_exact",
-        qint(F.col("n_hit").cast("double") / F.col("n_exact")).alias("recall_e6"),
-    )
+    the planted-neighbor fixture)."""
+    v = _vectors(spread(load(spark, sf_dir, "embeddings")))
+    exact = _cosine_topk(_exact_pairs(v, _PQ_K, _PQ_QUERIES), _PQ_TOPK)
+    return _recall_at_k(exact, ivfpq_ann(spark, sf_dir, n_probe, shortlist, m))
 
 
-@query("x57b_ivfpq_recall", oracle=_x57b_oracle())
+@query(
+    "x57b_ivfpq_recall",
+    oracle=_recall_at_k_sql(
+        f"""WITH {_V_SQL}
+    {_cosine_topk_sql(_exact_pairs_sql(_PQ_K, _PQ_QUERIES), _PQ_TOPK)}""",
+        _registry.ORACLE["x57_ivfpq_ann"],
+    ),
+)
 def x57b_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered recall monitor at the oracle-stated defaults; see
     :func:`ivfpq_recall` for the parameterized sweep surface."""
@@ -1621,23 +1491,21 @@ def x93_int8_embed_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate multiply-add — NO shuffle at all (plan: scan → generate →
 # broadcast join → project), embarrassingly parallel at 100 TB.
 _X98_OUT = 16
-#: The fixture's embedding width, the projection's input dimension.
-_X98_IN = 64
 
 
 def jl_project(vectors: DataFrame, out_dim: int = _X98_OUT) -> DataFrame:
     """(vec_id, dim, comp_e6): integer-exact ±1 random projection of
     `embedding` into `out_dim` components.
 
-    Assumes every embedding has exactly ``_X98_IN`` components (the
+    Assumes every embedding has exactly ``_DIM`` components (the
     fixture's 64): the ±1 sign matrix is built ONCE from the
-    (out_dim × _X98_IN) coordinate grid and broadcast — a pure function
+    (out_dim × _DIM) coordinate grid and broadcast — a pure function
     of (j, i), never sampled from the data (an earlier draft read the
     length off ``vectors.limit(1)``, an arbitrary row).  A per-row
     assert_true trips the job on any mismatched row rather than
     letting zip_with pad a silent NULL component."""
     spark = vectors.sparkSession
-    # sign row per output dim j: [s(j,0) … s(j,_X98_IN-1)]
+    # sign row per output dim j: [s(j,0) … s(j,_DIM-1)]
     sign = lambda j, i: (
         F.lit(1)
         - F.lit(2)
@@ -1664,7 +1532,7 @@ def jl_project(vectors: DataFrame, out_dim: int = _X98_OUT) -> DataFrame:
         .select(
             "dim",
             F.transform(
-                F.sequence(F.lit(0), F.lit(_X98_IN - 1)),
+                F.sequence(F.lit(0), F.lit(_DIM - 1)),
                 lambda i: sign(F.col("dim"), i),
             ).alias("signs"),
         )
@@ -1676,8 +1544,8 @@ def jl_project(vectors: DataFrame, out_dim: int = _X98_OUT) -> DataFrame:
         ),
     )
     guard = F.assert_true(
-        F.size("embedding") == _X98_IN,
-        F.lit(f"jl_project: embedding length != {_X98_IN}"),
+        F.size("embedding") == _DIM,
+        F.lit(f"jl_project: embedding length != {_DIM}"),
     )
     return (
         vectors.select("vec_id", F.when(guard.isNull(), q).alias("q"))
@@ -1773,21 +1641,16 @@ def mmr_rerank(emb: DataFrame, driver_threshold: int = 100_000) -> DataFrame:
     output by induction: the same (7*rel - 3*ms, cand_id) argmax over
     the same integers.  Past the threshold the distributed loop below
     runs unchanged — the 100 TB arm."""
-    q = emb.filter(F.col("vec_id") < _X102_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    scored = (
-        emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
-        .join(F.broadcast(q), F.col("query_id") != F.col("cand_id"))
-        .withColumn("rel_e6", qint(cosine(F.col("qv"), F.col("cv"))))
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("rel_e6").desc(), F.col("cand_id").asc()
-    )
+    v = _vectors(emb)
+    pool = _cosine_topk(_exact_pairs(v, 0, _X102_QUERIES), _X102_POOL)
     pool_df = (
-        scored.withColumn("prnk", F.row_number().over(wp))
-        .filter(F.col("prnk") <= _X102_POOL)
-        .select("query_id", "cand_id", "rel_e6", "cv")
+        v.join(F.broadcast(pool), F.col("vec_id") == F.col("neighbor_id"))
+        .select(
+            "query_id",
+            F.col("neighbor_id").alias("cand_id"),
+            F.col("cos_sim_e6").alias("rel_e6"),
+            F.col("v").alias("cv"),
+        )
         .localCheckpoint(eager=True)  # P rows/query feed every step
     )
     if _X102_QUERIES * _X102_POOL <= driver_threshold:
@@ -1919,28 +1782,20 @@ def _x102_oracle() -> str:
     """Unrolled greedy-MMR oracle: one (pick, state) CTE pair per step.
     Cosines via list_cosine_similarity (the x05 parity pairing with the
     engine's sequential zip_with/aggregate)."""
+    pool = _cosine_topk_sql(_exact_pairs_sql(0, _X102_QUERIES), _X102_POOL)
     ctes = f"""
-    WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM emb
-          WHERE vec_id < {_X102_QUERIES}),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS cand_id,
-             CAST(floor(list_cosine_similarity(q.qv, c.v) * 1e6 + 0.5)
-                  AS BIGINT) AS rel_e6
-      FROM q CROSS JOIN emb c WHERE c.vec_id != q.query_id),
+    WITH {_V_SQL},
     pool AS (
-      SELECT query_id, cand_id, rel_e6 FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY rel_e6 DESC, cand_id) AS prnk
-        FROM scored) WHERE prnk <= {_X102_POOL}),
+      SELECT query_id, neighbor_id AS cand_id, cos_sim_e6 AS rel_e6
+      FROM ({pool})),
     psim AS (
       SELECT a.query_id, a.cand_id AS a_id, b.cand_id AS b_id,
              CAST(floor(list_cosine_similarity(ea.v, eb.v) * 1e6 + 0.5)
                   AS BIGINT) AS sim_e6
       FROM pool a JOIN pool b
         ON a.query_id = b.query_id AND a.cand_id != b.cand_id
-      JOIN emb ea ON ea.vec_id = a.cand_id
-      JOIN emb eb ON eb.vec_id = b.cand_id),
+      JOIN v ea ON ea.vec_id = a.cand_id
+      JOIN v eb ON eb.vec_id = b.cand_id),
     st0 AS (SELECT query_id, cand_id, rel_e6, CAST(0 AS BIGINT) AS ms
             FROM pool)"""
     for j in range(1, _X102_K + 1):
@@ -2005,8 +1860,7 @@ _X103_FRAC_DIV = 5  # shortlist = max(200, n_cands DIV 5) — a 5x scan cut
 
 def _x103_oracle() -> str:
     proj = _x98_oracle_sql(_X103_OUT)
-    exact = _registry.ORACLE["x05_knn"]
-    return f"""
+    approx = f"""
     WITH proj AS (SELECT * FROM ({proj})),
     nrm AS (SELECT vec_id, SUM(comp_e6 * comp_e6) AS n2
             FROM proj GROUP BY 1),
@@ -2030,31 +1884,14 @@ def _x103_oracle() -> str:
         WHERE nq.n2 > 0 AND nc.n2 > 0)
       WHERE r <= greatest({_X103_MIN_SHORTLIST},
                           ncand // {_X103_FRAC_DIV})),
-    emb2 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    rerank AS (
-      SELECT query_id, cand_id FROM (
-        SELECT c.query_id, c.cand_id,
-               row_number() OVER (PARTITION BY c.query_id ORDER BY
-                 list_cosine_similarity(eq.v, ec.v) DESC, c.cand_id) AS r
-        FROM cands c
-        JOIN emb2 eq ON eq.vec_id = c.query_id
-        JOIN emb2 ec ON ec.vec_id = c.cand_id)
-      WHERE r <= {_KNN_K}),
-    exact_k AS (SELECT query_id, neighbor_id FROM ({exact})),
-    hits AS (
-      SELECT e.query_id,
-             COUNT(*) FILTER (WHERE a.cand_id IS NOT NULL) AS n_hit,
-             COUNT(*) AS n_exact
-      FROM exact_k e
-      LEFT JOIN rerank a
-        ON a.query_id = e.query_id AND a.cand_id = e.neighbor_id
-      GROUP BY 1)
-    SELECT query_id, CAST(n_hit AS BIGINT) AS n_hit,
-           CAST(n_exact AS BIGINT) AS n_exact,
-           CAST(floor(CAST(n_hit AS DOUBLE) / n_exact * 1e6 + 0.5)
-                AS BIGINT) AS recall_e6
-    FROM hits ORDER BY query_id
-    """
+    {_V_SQL},
+    rer AS (
+      SELECT c.query_id, c.cand_id AS neighbor_id, eq.v AS qv, ec.v AS cv
+      FROM cands c
+      JOIN v eq ON eq.vec_id = c.query_id
+      JOIN v ec ON ec.vec_id = c.cand_id)
+    {_cosine_topk_sql("SELECT * FROM rer", _KNN_K)}"""
+    return _recall_at_k_sql(_registry.ORACLE["x05_knn"], approx)
 
 
 def jl_ann_recall(
@@ -2108,45 +1945,14 @@ def jl_ann_recall(
                 F.expr(f"ncand div {frac_div}"),
             )
         )
-        .select("query_id", "cand_id")
+        .select("query_id", F.col("cand_id").alias("neighbor_id"))
     )
     eq = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    ec = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv"))
-    wr = Window.partitionBy("query_id").orderBy(
-        cosine(F.col("qv"), F.col("cv")).desc(), F.col("cand_id").asc()
+    ec = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
-    rerank = (
-        cands.join(F.broadcast(eq), "query_id")
-        .join(ec, "cand_id")
-        .withColumn("r", F.row_number().over(wr))
-        .filter(F.col("r") <= _KNN_K)
-        .select("query_id", "cand_id")
-    )
-    exact = x05_knn(spark, sf_dir).select(
-        "query_id", F.col("neighbor_id")
-    )
-    hits = (
-        exact.join(
-            rerank.withColumnRenamed("cand_id", "neighbor_id")
-            .withColumn("hit", F.lit(1)),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").alias("n_hit"),
-            F.count("*").alias("n_exact"),
-        )
-    )
-    return hits.select(
-        "query_id",
-        F.col("n_hit").cast("long").alias("n_hit"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        F.floor(
-            F.col("n_hit").cast("double") / F.col("n_exact") * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long").alias("recall_e6"),
-    ).orderBy("query_id")
+    rer = cands.join(F.broadcast(eq), "query_id").join(ec, "neighbor_id")
+    return _recall_at_k(x05_knn(spark, sf_dir), _cosine_topk(rer, _KNN_K))
 
 
 @query("x103_jl_ann_recall", oracle=_x103_oracle())

@@ -361,12 +361,22 @@ _STATED_ONCE = (
     # one x04 and one x61 pair rule (scale_closure_check reads both)
     "ON a.shingle = b.shingle AND a.doc_id < b.doc_id",
     "list_cosine_similarity(va.v, vb.v)",
+    # one cosine top-k, one recall@k and one PQ sub-distance frame for the
+    # dense vector-search keys (similarity.py, each with its DuckDB twin)
+    'F.col("cos_sim_e6").desc(), F.col("neighbor_id")',
+    "ORDER BY cos_sim_e6 DESC, neighbor_id) AS rnk",
+    'alias("n_exact")',
+    "COUNT(*) AS n_exact",
+    'F.lit(j).alias("j")',
+    "arg_min(cid",
 )
 _STATED_NOWHERE = (
     "INTERVAL 30 MINUTE",
     "1800000",
     '- 3).cast("double")',
     'F.slice(F.col("t"), 2, F.size("t") - 1)',
+    "zip_with(slice(t, 1, size(t) - 1),",
+    "1073741824",
 )
 
 

@@ -99,13 +99,13 @@ def test_ivf_recall_vs_brute_force(spark):
     )
     exact = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_topk(spark, emb, queries, k=5, n_probe=10).collect()
+        for r in similarity.ivf_topk(emb, queries, k=5, n_probe=10).collect()
     }
 
     def recall(n_probe):
         a = {
             (r.query_id, r.neighbor_id)
-            for r in similarity.ivf_topk(spark, emb, queries, k=5, n_probe=n_probe).collect()
+            for r in similarity.ivf_topk(emb, queries, k=5, n_probe=n_probe).collect()
         }
         return len(exact & a) / len(exact)
 
@@ -130,8 +130,41 @@ def test_cosine_symmetry(spark):
 
 def test_lsh_simjoin_contains_closest_pairs(spark):
     emb = load(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 100)
-    got = {(r.id_a, r.id_b) for r in similarity.lsh_simjoin(spark, emb, 1.3).collect()}
+    got = {(r.id_a, r.id_b) for r in similarity.lsh_simjoin(emb, 1.3).collect()}
     assert got  # finds some close pairs on clustered fixture data
+
+
+def test_recall_at_k_matches_its_sql_twin(spark):
+    """x50/x57b/x103's recall@k on a hand case, Spark and DuckDB: query 1
+    finds 2 of its 3 exact neighbours, query 2 finds none, and the
+    approx rows outside the exact set (1->9, 2->7, 2->8) count for
+    nothing."""
+    import duckdb
+
+    from fanstats_producer_spark.operators.similarity import (
+        _recall_at_k,
+        _recall_at_k_sql,
+    )
+
+    exact = [(1, 10), (1, 11), (1, 12), (2, 20), (2, 21)]
+    approx = [(1, 10), (1, 12), (1, 9), (2, 7), (2, 8)]
+    schema = "query_id long, neighbor_id long"
+    got = _recall_at_k(
+        spark.createDataFrame(exact, schema), spark.createDataFrame(approx, schema)
+    )
+    assert got.columns == ["query_id", "n_hit", "n_exact", "recall_e6"]
+
+    def select(rows):
+        return " UNION ALL ".join(
+            f"SELECT {q}::BIGINT AS query_id, {n}::BIGINT AS neighbor_id"
+            for q, n in rows
+        )
+
+    want = duckdb.connect().execute(
+        _recall_at_k_sql(select(exact), select(approx))
+    ).fetchall()
+    assert sorted(tuple(r) for r in got.collect()) == sorted(want)
+    assert sorted(want) == [(1, 2, 3, 666_667), (2, 0, 2, 0)]
 
 
 # --- as-of join -------------------------------------------------------------------
