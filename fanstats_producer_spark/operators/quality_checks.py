@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fanstats_producer_spark.functions.num import qint
+from fanstats_producer_spark.functions.num import qint, sql_qint
 from fanstats_producer_spark.io import load
 from fanstats_producer_spark.registry import query
 
@@ -350,39 +350,75 @@ def x49_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the x30 contract), so the per-source PSI is an exact integer sum.
 # Scale: one (source, bucket, half) aggregate, then |sources × buckets|
 # rows — corpus-size-independent after the first aggregate.
-@query(
-    "x63_psi_drift",
-    oracle="""
-    WITH b AS (
-      SELECT source, doc_id % 2 AS half,
-             CAST(floor(log2(greatest(n_chars, 1))) AS BIGINT) AS bucket
-      FROM documents),
+def psi_from_counts(counts: DataFrame, key: str) -> DataFrame:
+    """Per-`key` PSI from a (key, bucket, n_ref, n_live) count table —
+    shared by batch x63 and the s23 online monitor's emit
+    (jobs.streaming_psi_drift), whose merged live histogram plus the
+    static reference IS this table.  Laplace-smoothed probabilities over
+    each key's observed bucket set, each ln term quantized to an e9
+    integer BEFORE the exact integer sum (see x63's block comment)."""
+    tot = counts.groupBy(key).agg(
+        F.sum("n_ref").alias("t_ref"),
+        F.sum("n_live").alias("t_live"),
+        F.count("*").alias("n_buckets"),
+    )
+    p_live = (F.col("n_live") + 1).cast("double") / (
+        F.col("t_live") + F.col("n_buckets")
+    )
+    p_ref = (F.col("n_ref") + 1).cast("double") / (
+        F.col("t_ref") + F.col("n_buckets")
+    )
+    return (
+        counts.join(F.broadcast(tot), key)
+        .groupBy(key)
+        .agg(
+            F.sum(qint((p_live - p_ref) * F.log(p_live / p_ref), 9))
+            .cast("long")
+            .alias("psi_e9"),
+            F.min("t_ref").cast("long").alias("n_ref"),
+            F.min("t_live").cast("long").alias("n_live"),
+        )
+    )
+
+
+def psi_sql(key: str, halves: str) -> str:
+    """DuckDB twin of :func:`psi_from_counts`.  `halves` selects one
+    (key, half, bucket) row per observation, half 0 the reference and
+    half 1 the live population; the builder counts them into the
+    `counts` table and states the PSI over it."""
+    return f"""
+    WITH b AS ({halves}),
     counts AS (
-      SELECT source, bucket,
+      SELECT {key}, bucket,
              COUNT(*) FILTER (WHERE half = 0) AS n_ref,
              COUNT(*) FILTER (WHERE half = 1) AS n_live
       FROM b GROUP BY 1, 2),
     tot AS (
-      SELECT source, SUM(n_ref) AS t_ref, SUM(n_live) AS t_live,
+      SELECT {key}, SUM(n_ref) AS t_ref, SUM(n_live) AS t_live,
              COUNT(*) AS n_buckets
       FROM counts GROUP BY 1),
-    contrib AS (
-      SELECT c.source,
-             CAST(floor((
-               (CAST(c.n_live + 1 AS DOUBLE) / (t.t_live + t.n_buckets))
-               - (CAST(c.n_ref + 1 AS DOUBLE) / (t.t_ref + t.n_buckets))
-             ) * ln(
-               (CAST(c.n_live + 1 AS DOUBLE) / (t.t_live + t.n_buckets))
-               / (CAST(c.n_ref + 1 AS DOUBLE) / (t.t_ref + t.n_buckets))
-             ) * 1e9 + 0.5) AS BIGINT) AS psi_term_e9
-      FROM counts c JOIN tot t USING (source))
-    SELECT c.source,
-           CAST(SUM(c.psi_term_e9) AS BIGINT) AS psi_e9,
-           CAST(MIN(t.t_ref) AS BIGINT) AS n_ref,
-           CAST(MIN(t.t_live) AS BIGINT) AS n_live
-    FROM contrib c JOIN tot t USING (source)
-    GROUP BY 1 ORDER BY 1
-    """,
+    p AS (
+      SELECT c.{key}, t.t_ref, t.t_live,
+             CAST(c.n_live + 1 AS DOUBLE) / (t.t_live + t.n_buckets) AS p_live,
+             CAST(c.n_ref + 1 AS DOUBLE) / (t.t_ref + t.n_buckets) AS p_ref
+      FROM counts c JOIN tot t USING ({key}))
+    SELECT {key},
+           CAST(SUM({sql_qint("(p_live - p_ref) * ln(p_live / p_ref)", 9)})
+                AS BIGINT) AS psi_e9,
+           CAST(MIN(t_ref) AS BIGINT) AS n_ref,
+           CAST(MIN(t_live) AS BIGINT) AS n_live
+    FROM p GROUP BY 1
+    """
+
+
+@query(
+    "x63_psi_drift",
+    oracle=psi_sql(
+        "source",
+        "SELECT source, doc_id % 2 AS half,"
+        " CAST(floor(log2(greatest(n_chars, 1))) AS BIGINT) AS bucket"
+        " FROM documents",
+    ),
 )
 def x63_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source PSI between the reference and live halves over
@@ -390,40 +426,15 @@ def x63_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts and quantized before summation, so the monitor
     value-hash-matches across engines."""
     docs = load(spark, sf_dir, "documents")
-    b = docs.select(
+    half = F.col("doc_id") % 2
+    counts = docs.groupBy(
         "source",
-        (F.col("doc_id") % 2).alias("half"),
         F.floor(F.log2(F.greatest(F.col("n_chars"), F.lit(1)))).alias("bucket"),
+    ).agg(
+        F.count(F.when(half == 0, 1)).alias("n_ref"),
+        F.count(F.when(half == 1, 1)).alias("n_live"),
     )
-    counts = b.groupBy("source", "bucket").agg(
-        F.count(F.when(F.col("half") == 0, 1)).alias("n_ref"),
-        F.count(F.when(F.col("half") == 1, 1)).alias("n_live"),
-    )
-    tot = counts.groupBy("source").agg(
-        F.sum("n_ref").alias("t_ref"),
-        F.sum("n_live").alias("t_live"),
-        F.count("*").alias("n_buckets"),
-    )
-    j = counts.join(F.broadcast(tot), "source")
-    p_live = (F.col("n_live") + 1).cast("double") / (
-        F.col("t_live") + F.col("n_buckets")
-    )
-    p_ref = (F.col("n_ref") + 1).cast("double") / (
-        F.col("t_ref") + F.col("n_buckets")
-    )
-    contrib = j.select(
-        "source",
-        "t_ref",
-        "t_live",
-        F.floor((p_live - p_ref) * F.log(p_live / p_ref) * 1e9 + 0.5)
-        .cast("long")
-        .alias("psi_term_e9"),
-    )
-    return contrib.groupBy("source").agg(
-        F.sum("psi_term_e9").cast("long").alias("psi_e9"),
-        F.min("t_ref").cast("long").alias("n_ref"),
-        F.min("t_live").cast("long").alias("n_live"),
-    )
+    return psi_from_counts(counts, "source")
 
 
 # --- x105: exact two-sample Kolmogorov-Smirnov drift matrix ----------------------
@@ -443,7 +454,7 @@ def x63_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # latencies); for truly continuous 100 TB columns, run it over x97's
 # bottom-k sample instead (the DKW bound then caps the added error) —
 # the composition this operator's helper accepts any frame for.
-X105_ORACLE = """
+X105_ORACLE = f"""
     WITH ev AS (
       SELECT event_type AS t, value AS v FROM events WHERE value IS NOT NULL),
     totals AS (SELECT t, COUNT(*) AS n FROM ev GROUP BY 1),
@@ -470,8 +481,7 @@ X105_ORACLE = """
       FROM pairs GROUP BY 1, 2)
     SELECT type_a, type_b, CAST(d_num AS BIGINT) AS d_num,
            CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-           CAST(floor(CAST(d_num AS DOUBLE) / (n_a * n_b) * 1e6 + 0.5)
-                AS BIGINT) AS ks_e6
+           {sql_qint("CAST(d_num AS DOUBLE) / (n_a * n_b)")} AS ks_e6
     FROM agg
     """
 
@@ -487,7 +497,7 @@ def x105_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def value_counts(events: DataFrame) -> DataFrame:
     """The (t, v, c) count table: rows per event type and non-null value.
     x105 and x107 read it, and it is the state the s33/s34 online
-    monitors keep (jobs.streaming_value_counts_monitor)."""
+    monitors keep, merged by SUM (jobs.staged_sum)."""
     return (
         events.filter(F.col("value").isNotNull())
         .select(F.col("event_type").alias("t"), F.col("value").alias("v"))
@@ -548,12 +558,9 @@ def ks_matrix_from_counts(cnts: DataFrame) -> DataFrame:
         F.col("d_num").cast("long").alias("d_num"),
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
-        F.floor(
-            F.col("d_num").cast("double")
-            / (F.col("n_a") * F.col("n_b"))
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long").alias("ks_e6"),
+        qint(
+            F.col("d_num").cast("double") / (F.col("n_a") * F.col("n_b"))
+        ).alias("ks_e6"),
     )
 
 
@@ -572,7 +579,7 @@ def ks_matrix_from_counts(cnts: DataFrame) -> DataFrame:
 # expansion is a broadcast join against the types×types dim (fan-out
 # |types|-1, never corpus²); ranks are per-pair windows (partitioned
 # — no global window); everything after is map-side-combinable sums.
-X107_ORACLE = """
+X107_ORACLE = f"""
     WITH ev AS (
       SELECT event_type AS t, value AS v FROM events
       WHERE value IS NOT NULL),
@@ -597,8 +604,7 @@ X107_ORACLE = """
     SELECT type_a, type_b,
            CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
            CAST(r2_a - n_a * (n_a + 1) AS BIGINT) AS u2_a,
-           CAST(floor(CAST(r2_a - n_a * (n_a + 1) AS DOUBLE)
-                      / (2 * n_a * n_b) * 1e6 + 0.5) AS BIGINT)
+           {sql_qint("CAST(r2_a - n_a * (n_a + 1) AS DOUBLE) / (2 * n_a * n_b)")}
              AS auc_e6
     FROM agg
     """
@@ -669,12 +675,9 @@ def auc_matrix_from_counts(cnts: DataFrame) -> DataFrame:
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
         u2.cast("long").alias("u2_a"),
-        F.floor(
-            u2.cast("double")
-            / (2 * F.col("n_a") * F.col("n_b"))
-            * F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long").alias("auc_e6"),
+        qint(u2.cast("double") / (2 * F.col("n_a") * F.col("n_b"))).alias(
+            "auc_e6"
+        ),
     )
 
 
@@ -693,29 +696,61 @@ def auc_matrix_from_counts(cnts: DataFrame) -> DataFrame:
 # cross-engine float sum order anywhere); chi² total and the
 # (R−1)(C−1) dof ride every row as window totals over the
 # cell-count-sized frame.
-X109_ORACLE = """
-    WITH obs AS (
+#
+# The contingency frame both categorical audits (x109, x113) read: per
+# (lang, source) cell the observed count o, its row and column margins
+# r and c, the total n and the chi² cell contrib_e6.  _CELLS_SQL is its
+# DuckDB twin, a CTE chain ending in `cells`.
+_CELLS_SQL = f"""
+    obs AS (
       SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
     rows_ AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS r FROM obs GROUP BY 1),
     cols_ AS (SELECT source, CAST(SUM(o) AS BIGINT) AS c FROM obs GROUP BY 1),
     n AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM obs),
-    cells AS (
-      SELECT obs.lang, obs.source, obs.o,
-             CAST(floor(
-               (obs.o - CAST(rows_.r * cols_.c AS DOUBLE) / n.n)
-               * (obs.o - CAST(rows_.r * cols_.c AS DOUBLE) / n.n)
-               / (CAST(rows_.r * cols_.c AS DOUBLE) / n.n)
-               * 1e6 + 0.5) AS BIGINT) AS contrib_e6
+    ex AS (
+      SELECT obs.lang, obs.source, obs.o, rows_.r, cols_.c, n.n,
+             CAST(rows_.r * cols_.c AS DOUBLE) / n.n AS e
       FROM obs JOIN rows_ USING (lang) JOIN cols_ USING (source)
       CROSS JOIN n),
-    tot AS (
-      SELECT lang, source, o, contrib_e6,
-             CAST(SUM(contrib_e6) OVER () AS BIGINT) AS chi2_e6,
-             CAST((COUNT(DISTINCT lang) OVER () - 1)
-                  * (COUNT(DISTINCT source) OVER () - 1) AS BIGINT) AS dof
-      FROM cells)
-    SELECT lang, source, CAST(o AS BIGINT) AS o, contrib_e6, chi2_e6, dof
-    FROM tot
+    cells AS (
+      SELECT lang, source, o, r, c, n,
+             {sql_qint("(o - e) * (o - e) / e")} AS contrib_e6
+      FROM ex)"""
+
+
+def contingency_counts(docs: DataFrame) -> DataFrame:
+    """The (lang, source, o) contingency-count table of a document
+    frame.  x109 and x113 read it, and it is the state the s35 online
+    monitor keeps, merged by SUM."""
+    return docs.groupBy("lang", "source").agg(F.count("*").alias("o"))
+
+
+def contingency_cells(obs: DataFrame) -> DataFrame:
+    """(lang, source, o, r, c, n, contrib_e6) from a contingency-count
+    table: the margins, the total and the e6 chi² cell (see x109's
+    block comment), the twin of _CELLS_SQL."""
+    rows_ = obs.groupBy("lang").agg(F.sum("o").alias("r"))
+    cols_ = obs.groupBy("source").agg(F.sum("o").alias("c"))
+    n = obs.agg(F.sum("o").alias("n"))
+    e = (F.col("r") * F.col("c")).cast("double") / F.col("n")
+    return (
+        obs.join(F.broadcast(rows_), "lang")
+        .join(F.broadcast(cols_), "source")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "lang", "source", "o", "r", "c", "n",
+            qint((F.col("o") - e) * (F.col("o") - e) / e).alias("contrib_e6"),
+        )
+    )
+
+
+X109_ORACLE = f"""
+    WITH {_CELLS_SQL}
+    SELECT lang, source, CAST(o AS BIGINT) AS o, contrib_e6,
+           CAST(SUM(contrib_e6) OVER () AS BIGINT) AS chi2_e6,
+           CAST((COUNT(DISTINCT lang) OVER () - 1)
+                * (COUNT(DISTINCT source) OVER () - 1) AS BIGINT) AS dof
+    FROM cells
     """
 
 
@@ -726,12 +761,7 @@ def x109_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     block comment for the parity argument).  Shares
     :func:`chi2_from_counts` with the s35 online monitor (the
     x105/s33 and x107/s34 pattern)."""
-    obs = (
-        load(spark, sf_dir, "documents")
-        .groupBy("lang", "source")
-        .agg(F.count("*").alias("o"))
-    )
-    return chi2_from_counts(obs)
+    return chi2_from_counts(contingency_counts(load(spark, sf_dir, "documents")))
 
 
 def chi2_from_counts(obs: DataFrame) -> DataFrame:
@@ -741,26 +771,8 @@ def chi2_from_counts(obs: DataFrame) -> DataFrame:
     identical deterministic per-cell expression out (see x109's block
     comment), so the monitor is bit-identical to the batch key on any
     input."""
-    rows_ = obs.groupBy("lang").agg(F.sum("o").alias("r"))
-    cols_ = obs.groupBy("source").agg(F.sum("o").alias("c"))
-    n = obs.agg(F.sum("o").alias("n"))
-    e = (F.col("r") * F.col("c")).cast("double") / F.col("n")
-    cells = (
-        obs.join(F.broadcast(rows_), "lang")
-        .join(F.broadcast(cols_), "source")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "lang",
-            "source",
-            "o",
-            F.floor(
-                (F.col("o") - e) * (F.col("o") - e) / e * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias("contrib_e6"),
-        )
-    )
     w = Window.partitionBy()
-    tot = cells.select(
+    return contingency_cells(obs).select(
         "lang",
         "source",
         F.col("o").cast("long").alias("o"),
@@ -771,7 +783,6 @@ def chi2_from_counts(obs: DataFrame) -> DataFrame:
             * (F.size(F.collect_set("source").over(w)) - 1)
         ).cast("long").alias("dof"),
     )
-    return tot
 
 
 # --- x113: mutual information + Cramér's V (lang × source) -----------------------
@@ -792,40 +803,25 @@ def chi2_from_counts(obs: DataFrame) -> DataFrame:
 # rather than dividing by zero.
 @query(
     "x113_mi_cramers_v",
-    oracle="""
-    WITH obs AS (
-      SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY 1, 2),
-    rows_ AS (SELECT lang, CAST(SUM(o) AS BIGINT) AS r FROM obs GROUP BY 1),
-    cols_ AS (SELECT source, CAST(SUM(o) AS BIGINT) AS c FROM obs GROUP BY 1),
-    n AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM obs),
-    cells AS (
-      SELECT obs.lang, obs.source, obs.o, n.n,
-             CAST(floor(
-               (obs.o - CAST(rows_.r * cols_.c AS DOUBLE) / n.n)
-               * (obs.o - CAST(rows_.r * cols_.c AS DOUBLE) / n.n)
-               / (CAST(rows_.r * cols_.c AS DOUBLE) / n.n)
-               * 1e6 + 0.5) AS BIGINT) AS chi2c_e6,
-             CAST(floor(
-               CAST(obs.o AS DOUBLE) / n.n
-               * log2(CAST(obs.o * n.n AS DOUBLE)
-                      / CAST(rows_.r * cols_.c AS DOUBLE))
-               * 1e9 + 0.5) AS BIGINT) AS mi_contrib_e9
-      FROM obs JOIN rows_ USING (lang) JOIN cols_ USING (source)
-      CROSS JOIN n),
+    oracle=f"""
+    WITH {_CELLS_SQL},
+    mi AS (
+      SELECT lang, source, o, n, contrib_e6,
+             {sql_qint("CAST(o AS DOUBLE) / n * log2(CAST(o * n AS DOUBLE)"
+                       " / CAST(r * c AS DOUBLE))", 9)} AS mi_contrib_e9
+      FROM cells),
     tot AS (
       SELECT lang, source, o, n, mi_contrib_e9,
              CAST(SUM(mi_contrib_e9) OVER () AS BIGINT) AS mi_e9,
-             CAST(SUM(chi2c_e6) OVER () AS BIGINT) AS chi2_e6,
+             CAST(SUM(contrib_e6) OVER () AS BIGINT) AS chi2_e6,
              CAST(least(COUNT(DISTINCT lang) OVER () - 1,
                         COUNT(DISTINCT source) OVER () - 1)
                   AS BIGINT) AS mink
-      FROM cells)
+      FROM mi)
     SELECT lang, source, CAST(o AS BIGINT) AS o, mi_contrib_e9, mi_e9,
            CASE WHEN mink = 0 THEN CAST(0 AS BIGINT)
-                ELSE CAST(floor(sqrt(
-                       CAST(chi2_e6 AS DOUBLE) / 1e6
-                       / (CAST(n AS DOUBLE) * mink))
-                     * 1e6 + 0.5) AS BIGINT)
+                ELSE {sql_qint("sqrt(CAST(chi2_e6 AS DOUBLE) / 1e6"
+                               " / (CAST(n AS DOUBLE) * mink))")}
            END AS cramers_v_e6
     FROM tot
     """,
@@ -834,38 +830,18 @@ def x113_mi_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x113: per-cell mutual-information contributions with the MI
     total and Cramér's V as window totals over the lang × source
     contingency table (see block comment for the parity argument)."""
-    obs = (
-        load(spark, sf_dir, "documents")
-        .groupBy("lang", "source")
-        .agg(F.count("*").alias("o"))
-    )
-    rows_ = obs.groupBy("lang").agg(F.sum("o").alias("r"))
-    cols_ = obs.groupBy("source").agg(F.sum("o").alias("c"))
-    n = obs.agg(F.sum("o").alias("n"))
-    e = (F.col("r") * F.col("c")).cast("double") / F.col("n")
-    cells = (
-        obs.join(F.broadcast(rows_), "lang")
-        .join(F.broadcast(cols_), "source")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "lang",
-            "source",
-            "o",
-            "n",
-            F.floor(
-                (F.col("o") - e) * (F.col("o") - e) / e * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long").alias("chi2c_e6"),
-            F.floor(
-                F.col("o").cast("double") / F.col("n")
-                * F.log2(
-                    (F.col("o") * F.col("n")).cast("double")
-                    / (F.col("r") * F.col("c")).cast("double")
-                )
-                * F.lit(1e9)
-                + F.lit(0.5)
-            ).cast("long").alias("mi_contrib_e9"),
-        )
+    cells = contingency_cells(
+        contingency_counts(load(spark, sf_dir, "documents"))
+    ).withColumn(
+        "mi_contrib_e9",
+        qint(
+            F.col("o").cast("double") / F.col("n")
+            * F.log2(
+                (F.col("o") * F.col("n")).cast("double")
+                / (F.col("r") * F.col("c")).cast("double")
+            ),
+            9,
+        ),
     )
     w = Window.partitionBy()
     tot = cells.select(
@@ -875,7 +851,7 @@ def x113_mi_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "mi_contrib_e9",
         F.sum("mi_contrib_e9").over(w).cast("long").alias("mi_e9"),
-        F.sum("chi2c_e6").over(w).cast("long").alias("chi2_e6"),
+        F.sum("contrib_e6").over(w).cast("long").alias("chi2_e6"),
         F.least(
             F.size(F.collect_set("lang").over(w)) - 1,
             F.size(F.collect_set("source").over(w)) - 1,
@@ -889,14 +865,12 @@ def x113_mi_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mi_e9",
         F.when(F.col("mink") == 0, F.lit(0).cast("long"))
         .otherwise(
-            F.floor(
+            qint(
                 F.sqrt(
                     F.col("chi2_e6").cast("double") / F.lit(1e6)
                     / (F.col("n").cast("double") * F.col("mink"))
                 )
-                * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long")
+            )
         )
         .alias("cramers_v_e6"),
     )
@@ -932,14 +906,13 @@ def x113_mi_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x112 envelope convention).  State is |labels| x 2 x dim cells —
 # bounded forever, which is what makes the s36 online twin's staged
 # SUM-merge state O(1) in stream length.
-X114_ORACLE = """
+X114_ORACLE = f"""
     WITH ex AS (
       SELECT label, vec_id % 2 AS half, u['k'] AS k, u['q'] AS q
       FROM (SELECT label, vec_id,
                    unnest(list_transform(range(1, len(embedding) + 1),
-                          i -> {'k': i - 1,
-                                'q': CAST(floor(CAST(embedding[i] AS DOUBLE)
-                                          * 1e6 + 0.5) AS BIGINT)})) AS u
+                          i -> {{'k': i - 1,
+                                 'q': {sql_qint("embedding[i]")}}})) AS u
             FROM embeddings)),
     sums AS (
       SELECT label, half, k, CAST(SUM(q) AS BIGINT) AS s, COUNT(*) AS n
@@ -958,9 +931,9 @@ X114_ORACLE = """
     SELECT label,
            CAST(n_ref AS BIGINT) AS n_ref,
            CAST(n_live AS BIGINT) AS n_live,
-           CAST(floor(sqrt(CAST(shift2 AS DOUBLE))
-                      / (CAST(n_ref AS DOUBLE) * CAST(n_live AS DOUBLE))
-                      + 0.5) AS BIGINT) AS centroid_shift_e6
+           {sql_qint("sqrt(CAST(shift2 AS DOUBLE))"
+                     " / (CAST(n_ref AS DOUBLE) * CAST(n_live AS DOUBLE))", 0)}
+             AS centroid_shift_e6
     FROM agg
     """
 
@@ -991,9 +964,7 @@ def embedding_component_sums(emb: DataFrame) -> DataFrame:
         "label",
         "half",
         "k",
-        F.floor(F.col("x").cast("double") * F.lit(1e6) + F.lit(0.5))
-        .cast("long")
-        .alias("q"),
+        qint("x").alias("q"),
     )
     return ex.groupBy("label", "half", "k").agg(
         F.sum("q").alias("s"), F.count("*").alias("n")
@@ -1037,13 +1008,11 @@ def embedding_drift_from_sums(sums: DataFrame) -> DataFrame:
         "label",
         "n_ref",
         "n_live",
-        F.floor(
+        qint(
             F.sqrt(F.col("shift2").cast("double"))
-            / (F.col("n_ref").cast("double") * F.col("n_live").cast("double"))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("centroid_shift_e6"),
+            / (F.col("n_ref").cast("double") * F.col("n_live").cast("double")),
+            0,
+        ).alias("centroid_shift_e6"),
     )
 
 

@@ -45,6 +45,7 @@ from pyspark.sql.streaming import StreamingQuery
 from fanstats_producer_spark.functions.chunking import _CHUNK, _STRIDE
 from fanstats_producer_spark.functions.num import sql_dsum_pos
 from fanstats_producer_spark.functions.text import _STOP_SQL
+from fanstats_producer_spark.io import load, normalize_events_ts, spread
 # imported EXPLICITLY at module level (not composed inside the oracle
 # builder) so standalone worker imports see it — the x61/x24 gotcha
 from fanstats_producer_spark.operators.dedup import (
@@ -311,7 +312,6 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the fixture events table (s01's P1-made-
     continuous source, parquet flavor), staged by _link_landing, with
     io.load's events-ts normalization (event-time ops need TIMESTAMP)."""
-    from fanstats_producer_spark.io import load, normalize_events_ts
 
     # Validate on the batch side FIRST: io.load runs the nanos-magnitude
     # sample check a stream cannot run — and the session confs (UTC,
@@ -334,10 +334,9 @@ def _parity_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     are checked before reuse — their deliberately-old epoch mtimes
     (batch ordering) make them prime targets for age-based /tmp
     reapers."""
-    from fanstats_producer_spark.io import load as _load
 
     def stage(landing: str) -> list[str]:
-        docs = _load(spark, sf_dir, "documents").select(
+        docs = load(spark, sf_dir, "documents").select(
             "doc_id",
             F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
             "text",
@@ -397,11 +396,9 @@ def _doc_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     AvailableNow with no maxFilesPerTrigger still drains every part file
     in ONE micro-batch.  The staged files are Spark's _SUCCESS marker
     and every part file."""
-    from fanstats_producer_spark.io import load as _load
-    from fanstats_producer_spark.io import spread
 
     def stage(landing: str) -> list[str]:
-        docs = spread(_load(spark, sf_dir, "documents"), "doc_id")
+        docs = spread(load(spark, sf_dir, "documents"), "doc_id")
         # Stage DISTRIBUTED (executor-side JSON write, not a driver
         # collect — at 100 TB the corpus never fits on the driver).  Event
         # time is synthetic and deterministic: doc_id seconds laid out
@@ -765,9 +762,8 @@ def s11_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_events_stream(spark, sf_dir)
     deduped = jobs.deduped_by_content(stream)
     kept = _drain_memory(spark, deduped, "append")
-    from fanstats_producer_spark.io import load as _load
 
-    total = _load(spark, sf_dir, "events").count()
+    total = load(spark, sf_dir, "events").count()
     return kept.agg(
         F.lit(total).cast("long").alias("n_input"), F.count("*").alias("n_kept")
     )
@@ -962,7 +958,6 @@ def s19_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time).  The drained table's final emission per key equals the batch
     three-way join aggregate the oracle states."""
     from fanstats_producer_spark.functions.num import dsum_pos
-    from fanstats_producer_spark.io import load
 
     stream = _read_events_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
@@ -1009,7 +1004,6 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     update mode; the final emission per key equals the batch aggregate
     over both event types."""
     from fanstats_producer_spark.functions.num import dsum_pos
-    from fanstats_producer_spark.io import load
 
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -1152,37 +1146,12 @@ def s22_stream_verified_near_dup(
 
 @query(
     "s23_stream_drift",
-    oracle="""
-    WITH b AS (
-      SELECT event_type, event_id % 2 AS half,
-             CAST(floor(value / 8.0) AS BIGINT) AS bucket
-      FROM events),
-    counts AS (
-      SELECT event_type, bucket,
-             COUNT(*) FILTER (WHERE half = 0) AS n_ref,
-             COUNT(*) FILTER (WHERE half = 1) AS n_live
-      FROM b GROUP BY 1, 2),
-    tot AS (
-      SELECT event_type, SUM(n_ref) AS t_ref, SUM(n_live) AS t_live,
-             COUNT(*) AS n_buckets
-      FROM counts GROUP BY 1),
-    contrib AS (
-      SELECT c.event_type,
-             CAST(floor((
-               (CAST(c.n_live + 1 AS DOUBLE) / (t.t_live + t.n_buckets))
-               - (CAST(c.n_ref + 1 AS DOUBLE) / (t.t_ref + t.n_buckets))
-             ) * ln(
-               (CAST(c.n_live + 1 AS DOUBLE) / (t.t_live + t.n_buckets))
-               / (CAST(c.n_ref + 1 AS DOUBLE) / (t.t_ref + t.n_buckets))
-             ) * 1e9 + 0.5) AS BIGINT) AS psi_term_e9
-      FROM counts c JOIN tot t USING (event_type))
-    SELECT c.event_type,
-           CAST(SUM(c.psi_term_e9) AS BIGINT) AS psi_e9,
-           CAST(MIN(t.t_ref) AS BIGINT) AS n_ref,
-           CAST(MIN(t.t_live) AS BIGINT) AS n_live
-    FROM contrib c JOIN tot t USING (event_type)
-    GROUP BY 1
-    """,
+    oracle=quality_checks.psi_sql(
+        "event_type",
+        "SELECT event_type, event_id % 2 AS half,"
+        f" CAST(floor(value / {jobs.PSI_BUCKET_WIDTH}) AS BIGINT) AS bucket"
+        " FROM events",
+    ),
 )
 def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s23: the ONLINE arm of x63's PSI drift gate — the live half of
@@ -1194,16 +1163,9 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PSI is recomputed from totals, the drained monitor equals the
     batch formulation for ANY batch slicing — the oracle states that
     batch value directly (no single-batch precondition, unlike s22)."""
-    from fanstats_producer_spark.io import load as _load
-
     ref_counts = (
-        _load(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 2 == 0)
-        .select(
-            "event_type",
-            F.floor(F.col("value") / jobs.PSI_BUCKET_WIDTH)
-            .cast("long")
-            .alias("bucket"),
+        jobs.psi_buckets(
+            load(spark, sf_dir, "events").filter(F.col("event_id") % 2 == 0)
         )
         .groupBy("event_type", "bucket")
         .agg(F.count("*").alias("n_ref"))
@@ -1254,7 +1216,6 @@ def s24_stream_contamination_gate(
     themselves (they share all their own shingles) — the stream drops
     them along with contaminated training docs, which is the correct
     production behavior: nothing from the benchmark enters the mix."""
-    from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.llm_data import (
         contamination_gate,
         eval_shingle_set,
@@ -1266,7 +1227,7 @@ def s24_stream_contamination_gate(
         # one collect per (sf_dir, session) — the suite is static, so
         # re-collecting it per drain was pure waste (the _doc_landing
         # rationale applied to the gate's constant side)
-        ev_docs = _load(spark, sf_dir, "documents").filter(
+        ev_docs = load(spark, sf_dir, "documents").filter(
             F.col("doc_id") % _X27_EVAL_MOD == 0
         )
         shingles = _EVAL_SHINGLES_CACHE[key] = eval_shingle_set(ev_docs)
@@ -1345,14 +1306,13 @@ def s26_stream_semantic_decontam(
     index; the n-gram gate (s24) and this one are the two production
     arms of the same admission pipeline."""
 
-    from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import (
         _X66_N_EVAL,
         eval_matrix_row,
         semantic_decontam_gate,
     )
 
-    emb = _load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     evs = eval_matrix_row(emb)
     stream = _link_landing(spark, f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") >= _X66_N_EVAL
@@ -1410,10 +1370,9 @@ def s26b_stream_decontam_large_eval(
     entries whose fast sim lands within 1e-10 of an e6 floor boundary
     are recomputed with the fold's exact scalar sequence, so no ulp
     class remains."""
-    from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import _as_double
 
-    emb = _load(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     evals = emb.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("eval_id"),
         _as_double(F.col("embedding")).alias("ev"),
@@ -1660,18 +1619,18 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("s33_stream_ks_monitor", oracle=quality_checks.X105_ORACLE)
 def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s33: ONLINE exact-KS drift matrix — the cumulative (type,
-    value) count state merged per batch
-    (jobs.streaming_value_counts_monitor),
-    the KS matrix rebuilt from
-    the drained state with the SAME shared downstream as batch x105
+    value) count state (quality_checks.value_counts) sum-merged per
+    batch by jobs.staged_sum, the KS matrix rebuilt from the drained
+    state with the SAME shared downstream as batch x105
     (quality_checks.ks_matrix_from_counts).  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the
     oracle is x105's VERBATIM with no drain precondition."""
     stream = _read_events_stream(spark, sf_dir)
     return _drain_files(
         spark,
-        lambda out, _, ckpt: jobs.streaming_value_counts_monitor(
-            stream, out, ckpt, job_name="streaming_ks_monitor"
+        lambda out, _, ckpt: jobs.staged_sum(
+            stream, out, ckpt, partial=quality_checks.value_counts,
+            counts=["c"], name="s33_stream_ks_monitor",
         ),
         quality_checks.ks_matrix_from_counts,
     )
@@ -1683,10 +1642,10 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-based member of the online drift battery (s23 PSI, s31
     quantile, s33 exact-KS), completing it: every batch statistic in
     the x105/x107 family now has an online twin.  The persisted state
-    is the SAME cumulative (type, value) count table s33 keeps
-    (jobs.streaming_value_counts_monitor — one state, every rank/CDF
-    statistic); the AUC matrix is rebuilt from the drained state via
-    the shared quality_checks.auc_matrix_from_counts, whose
+    is the SAME cumulative (type, value) count table s33 keeps (one
+    state, every rank/CDF statistic); the AUC matrix is rebuilt from
+    the drained state via the shared
+    quality_checks.auc_matrix_from_counts, whose
     doubled-midrank-from-counts algebra is integer-exact and therefore
     bit-identical to batch x107 on any input.  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the oracle
@@ -1694,8 +1653,9 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_events_stream(spark, sf_dir)
     return _drain_files(
         spark,
-        lambda out, _, ckpt: jobs.streaming_value_counts_monitor(
-            stream, out, ckpt, job_name="streaming_auc_monitor"
+        lambda out, _, ckpt: jobs.staged_sum(
+            stream, out, ckpt, partial=quality_checks.value_counts,
+            counts=["c"], name="s34_stream_auc_monitor",
         ),
         quality_checks.auc_matrix_from_counts,
     )
@@ -1707,19 +1667,22 @@ def s35_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     contingency report maintained over the document stream, the
     categorical member closing the online battery (numeric: s23 PSI,
     s31 quantile, s33 KS, s34 AUC; categorical: s35).  State is the
-    (lang, source) count table — bounded by the category domain
-    forever (jobs.streaming_contingency_monitor); the report rebuilds
-    from state via the shared
-    quality_checks.chi2_from_counts, bit-identical to batch x109 (the
-    per-cell expression reads only the counts).  Counts are sums, so
-    the monitor is batch-slicing-invariant by commutativity and the
-    oracle is x109's VERBATIM with no drain precondition."""
+    (lang, source) count table (quality_checks.contingency_counts) —
+    bounded by the category domain forever; the report rebuilds from
+    state via the shared quality_checks.chi2_from_counts, bit-identical
+    to batch x109 (the per-cell expression reads only the counts).
+    Counts are sums, so the monitor is batch-slicing-invariant by
+    commutativity and the oracle is x109's VERBATIM with no drain
+    precondition."""
     # the shared _doc_landing JSON staging drops the source column, so
     # stage the parquet directly
     stream = _link_landing(spark, f"{sf_dir}/documents.parquet")
     return _drain_files(
         spark,
-        lambda out, _, ckpt: jobs.streaming_contingency_monitor(stream, out, ckpt),
+        lambda out, _, ckpt: jobs.staged_sum(
+            stream, out, ckpt, partial=quality_checks.contingency_counts,
+            counts=["o"], name="s35_stream_chi2_monitor",
+        ),
         quality_checks.chi2_from_counts,
     )
 
@@ -1730,19 +1693,20 @@ def s36_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-shift report maintained over the embedding stream, the
     vector member completing the online battery (numeric: s23 PSI,
     s31 quantile, s33 KS, s34 AUC; categorical: s35; vector: s36).
-    State is the (label, half, k) exact component-sum table — bounded
-    by |labels| x 2 x dim forever
-    (jobs.streaming_embedding_drift_monitor); the report rebuilds from
-    state via the shared
-    quality_checks.embedding_drift_from_sums, bit-identical to batch
-    x114 (integer sums are batch-slicing-invariant by commutativity),
-    so the oracle is x114's VERBATIM with no drain precondition."""
+    State is the (label, half, k) exact component-sum table
+    (quality_checks.embedding_component_sums) — bounded by
+    |labels| x 2 x dim forever; the report rebuilds from state via the
+    shared quality_checks.embedding_drift_from_sums, bit-identical to
+    batch x114 (integer sums are batch-slicing-invariant by
+    commutativity), so the oracle is x114's VERBATIM with no drain
+    precondition."""
     stream = _link_landing(spark, f"{sf_dir}/embeddings.parquet")
     return _drain_files(
         spark,
-        lambda out, _, ckpt: jobs.streaming_embedding_drift_monitor(
-            stream, out, ckpt
+        lambda out, _, ckpt: jobs.staged_sum(
+            stream, out, ckpt,
+            partial=quality_checks.embedding_component_sums,
+            counts=["s", "n"], name="s36_stream_embedding_drift",
         ),
         quality_checks.embedding_drift_from_sums,
     )
-

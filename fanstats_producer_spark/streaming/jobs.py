@@ -231,6 +231,40 @@ def staged_merge(
     )
 
 
+def staged_sum(
+    stream: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    *,
+    partial,
+    counts: list[str],
+    name: str,
+    emit=None,
+) -> StreamingQuery:
+    """staged_merge for a state of integer counts: `partial` counts one
+    batch, and the merge SUMs the `counts` columns grouped by every
+    other column.  Sums are not replay-idempotent, so the `_BATCH`
+    marker is on.  A count table merged this way reaches the same state
+    under any batch slicing — the property s23's PSI and the s33-s36
+    drift monitors (KS, AUC, chi², centroid shift) read their reports
+    from."""
+
+    def combine(u: DataFrame) -> DataFrame:
+        keys = [c for c in u.columns if c not in counts]
+        return u.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in counts])
+
+    return staged_merge(
+        stream,
+        state_dir,
+        checkpoint_dir,
+        partial=partial,
+        combine=combine,
+        idempotent=False,
+        emit=emit,
+        name=name,
+    )
+
+
 def _write_stamped(df: DataFrame, out_dir: str, batch_id: int) -> None:
     """Batch-stamped output partition: a replay of the batch overwrites
     the same directory, never double-appends."""
@@ -982,6 +1016,16 @@ def deduped_by_content(events: DataFrame) -> DataFrame:
     )
 
 
+def psi_buckets(events: DataFrame) -> DataFrame:
+    """(event_type, bucket) per event: s23's value histogram buckets,
+    PSI_BUCKET_WIDTH wide, read by the live stream and by the static
+    reference histogram alike."""
+    return events.select(
+        "event_type",
+        F.floor(F.col("value") / PSI_BUCKET_WIDTH).cast("long").alias("bucket"),
+    )
+
+
 def streaming_psi_drift(
     events: DataFrame,
     ref_counts: DataFrame,
@@ -993,24 +1037,18 @@ def streaming_psi_drift(
     continuously against a static reference distribution.
 
     State is the cumulative (event_type, bucket) live histogram: plain
-    integer counts merged per batch, so state size is |types x buckets|
-    — corpus-length-independent — and the merge is a commutative sum,
-    NOT replay-idempotent (staged_merge with the `_BATCH` marker; the
-    monitor lands before the promote, so a replay has nothing to do).
-    That commutativity gives s23 a property the dedup streams lack: the
-    final monitor is BATCH-PARTITION-INVARIANT (any maxFilesPerTrigger
-    slicing converges to the same table, pytest-pinned), because PSI is
-    recomputed each batch from the merged totals, not from per-batch
-    arrivals.  Each batch overwrites the monitor table with the current
-    per-type PSI — the live dashboard feed.
-
-    PSI math is x63's exactly: Laplace-smoothed probabilities over the
-    union bucket set, each term floor(x*1e9+0.5)-quantized BEFORE the
-    integer sum, so the monitor value-hash-matches the batch oracle."""
-    bucketed = events.select(
-        "event_type",
-        F.floor(F.col("value") / PSI_BUCKET_WIDTH).cast("long").alias("bucket"),
-    )
+    integer counts merged per batch by staged_sum, so state size is
+    |types x buckets| — corpus-length-independent.  That commutativity
+    gives s23 a property the dedup streams lack: the final monitor is
+    BATCH-PARTITION-INVARIANT (any maxFilesPerTrigger slicing converges
+    to the same table, pytest-pinned), because PSI is recomputed each
+    batch from the merged totals, not from per-batch arrivals.  Each
+    batch overwrites the monitor table with the current per-type PSI —
+    the live dashboard feed — before the promote, so a replay has
+    nothing to do.  The PSI itself is x63's
+    (quality_checks.psi_from_counts), so the monitor value-hash-matches
+    the batch oracle."""
+    from fanstats_producer_spark.operators.quality_checks import psi_from_counts
 
     def emit(combined):
         counts = (
@@ -1034,47 +1072,18 @@ def streaming_psi_drift(
                 F.sum("n_live").alias("n_live"),
             )
         )
-        tot = counts.groupBy("event_type").agg(
-            F.sum("n_ref").alias("t_ref"),
-            F.sum("n_live").alias("t_live"),
-            F.count("*").alias("n_buckets"),
+        psi_from_counts(counts, "event_type").write.mode("overwrite").parquet(
+            monitor_dir
         )
-        j = counts.join(F.broadcast(tot), "event_type")
-        p_live = (F.col("n_live") + 1).cast("double") / (
-            F.col("t_live") + F.col("n_buckets")
-        )
-        p_ref = (F.col("n_ref") + 1).cast("double") / (
-            F.col("t_ref") + F.col("n_buckets")
-        )
-        monitor = (
-            j.select(
-                "event_type",
-                "t_ref",
-                "t_live",
-                F.floor((p_live - p_ref) * F.log(p_live / p_ref) * 1e9 + 0.5)
-                .cast("long")
-                .alias("psi_term_e9"),
-            )
-            .groupBy("event_type")
-            .agg(
-                F.sum("psi_term_e9").cast("long").alias("psi_e9"),
-                F.min("t_ref").cast("long").alias("n_ref"),
-                F.min("t_live").cast("long").alias("n_live"),
-            )
-        )
-        monitor.write.mode("overwrite").parquet(monitor_dir)
 
-    return staged_merge(
-        bucketed,
+    return staged_sum(
+        psi_buckets(events),
         state_dir,
         checkpoint_dir,
         partial=lambda b: b.groupBy("event_type", "bucket").agg(
             F.count("*").cast("long").alias("n_live")
         ),
-        combine=lambda u: u.groupBy("event_type", "bucket").agg(
-            F.sum("n_live").cast("long").alias("n_live")
-        ),
-        idempotent=False,
+        counts=["n_live"],
         emit=emit,
         name="streaming_psi_drift",
     )
@@ -1295,93 +1304,4 @@ def streaming_quantile_monitor(
             u.dropDuplicates(["event_id"]), "event_id", k
         ),
         idempotent=True,
-    )
-
-
-def streaming_value_counts_monitor(
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    job_name: str = "streaming_value_counts_monitor",
-) -> StreamingQuery:
-    """The shared state engine behind the exact online drift monitors
-    (s33 KS, s34 Mann-Whitney/AUC): the cumulative (type, value)
-    count table maintained over an unbounded event stream — bounded
-    by the live value domain (the regime exact rank/CDF statistics
-    are for; continuous domains go through x97's sample first, x105's
-    block comment).  Counts merge by SUM, so staged_merge runs with
-    the `_BATCH` marker; `job_name` labels its stale-state error.
-    Readers rebuild their matrix from state at any time
-    (quality_checks.ks_matrix_from_counts / auc_matrix_from_counts) —
-    republishing per batch costs |grid| work, never a rescan of the
-    stream; ONE state table serves every rank/CDF statistic at once."""
-    from fanstats_producer_spark.operators.quality_checks import value_counts
-
-    return staged_merge(
-        events.select("event_type", "value"),
-        state_dir,
-        checkpoint_dir,
-        partial=value_counts,
-        combine=lambda u: u.groupBy("t", "v").agg(F.sum("c").alias("c")),
-        idempotent=False,
-        name=job_name,
-    )
-
-
-def streaming_contingency_monitor(
-    docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """s35: the categorical twin of the value-counts state engine —
-    the cumulative (lang, source) contingency-count table maintained
-    over a document stream, bounded by |langs|·|sources| forever,
-    merged by SUM under the `_BATCH` marker.  Readers rebuild the full
-    chi-square independence report from state at any time via
-    quality_checks.chi2_from_counts — x109's exact per-cell expression
-    over counts, so the online report is bit-identical to the batch
-    key at every point in the stream."""
-    return staged_merge(
-        docs.select("lang", "source"),
-        state_dir,
-        checkpoint_dir,
-        partial=lambda b: b.groupBy("lang", "source").agg(
-            F.count("*").alias("o")
-        ),
-        combine=lambda u: u.groupBy("lang", "source").agg(
-            F.sum("o").alias("o")
-        ),
-        idempotent=False,
-        name="streaming_contingency_monitor",
-    )
-
-
-def streaming_embedding_drift_monitor(
-    emb: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """s36: the VECTOR member of the online drift battery — the
-    cumulative (label, half, k) component-sum table (exact int64 sum
-    of e6-quantized embedding components + row count) maintained over
-    an embedding stream, bounded by |labels| x 2 x dim cells forever,
-    merged by SUM under the `_BATCH` marker.  Readers rebuild the
-    centroid-shift report from state at any time via
-    quality_checks.embedding_drift_from_sums — only the final row runs
-    (correctly-rounded) float ops, so the online report is
-    bit-identical to batch x114 at every point in the stream."""
-    from fanstats_producer_spark.operators.quality_checks import (
-        embedding_component_sums,
-    )
-
-    return staged_merge(
-        emb.select("vec_id", "label", "embedding"),
-        state_dir,
-        checkpoint_dir,
-        partial=embedding_component_sums,
-        combine=lambda u: u.groupBy("label", "half", "k").agg(
-            F.sum("s").alias("s"), F.sum("n").alias("n")
-        ),
-        idempotent=False,
-        name="streaming_embedding_drift_monitor",
     )

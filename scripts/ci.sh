@@ -43,6 +43,18 @@ if awk '/^[^ #]/ { top = $0 }
   echo "_work_dir( outside _drain_files/s20 or atexit.register( outside _landing" >&2
   exit 1
 fi
+# A count-table state merges by SUM through one combinator,
+# jobs.staged_sum: a staged_merge( combine that F.sum(s) anywhere else in
+# the module is a hand-copied summed-state monitor again.
+if awk '/^[^ #]/ { top = $0; comb = 0 }
+  /combine=/ { comb = 1 }
+  /^ *(idempotent|emit|name)=/ { comb = 0 }
+  comb && /F\.sum\(/ && top !~ /^def staged_sum\(/ {
+    print FILENAME ":" FNR ":" $0; bad = 1 }
+  END { exit !bad }' fanstats_producer_spark/streaming/jobs.py; then
+  echo "sum-merging staged_merge( combine outside jobs.staged_sum" >&2
+  exit 1
+fi
 # Scripts and tests find their checkout from their own __file__: a
 # hard-coded checkout path makes a run from any other copy (a parent
 # copy for an A/B, say) silently import and measure that fixed checkout.

@@ -349,7 +349,8 @@ def test_every_package_def_is_reached_from_a_program_entry():
 # operators/dedup.py next to the Spark code it mirrors and built from the
 # constants that code reads: the MinHash chain (_MH_CHAIN), the closure
 # (_CLOSURE_SQL) and the k-shingle expression (_shingles_sql).  The fan-session
-# gap is one integer in streaming/jobs.py, so no oracle writes it as a literal.
+# gap and s23's PSI bucket width are each one constant in streaming/jobs.py,
+# so no oracle writes them as literals.
 # A second copy of any of these lets the two engines drift apart.
 _STATED_ONCE = (
     "2654435761",
@@ -369,6 +370,13 @@ _STATED_ONCE = (
     "COUNT(*) AS n_exact",
     'F.lit(j).alias("j")',
     "arg_min(cid",
+    # one PSI, one contingency frame and one chi² cell for the drift
+    # battery (quality_checks.py, each with its DuckDB twin)
+    "F.log(p_live / p_ref)",
+    "ln(p_live / p_ref)",
+    "COUNT(*) FILTER (WHERE half = 0) AS n_ref",
+    "rows_ AS (SELECT lang",
+    '(F.col("o") - e) * (F.col("o") - e) / e',
 )
 _STATED_NOWHERE = (
     "INTERVAL 30 MINUTE",
@@ -377,6 +385,7 @@ _STATED_NOWHERE = (
     'F.slice(F.col("t"), 2, F.size("t") - 1)',
     "zip_with(slice(t, 1, size(t) - 1),",
     "1073741824",
+    "/ 8.0)",
 )
 
 

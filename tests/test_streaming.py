@@ -11,6 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from fanstats_producer_spark.operators import quality_checks
 from fanstats_producer_spark.streaming import jobs
 
 
@@ -284,16 +285,19 @@ _STAGED_USERS = {
                 s, st, ck, k=5),
             True),
     "s33": (jobs.EVENT_SCHEMA, _EVENTS,
-            lambda s, st, ck, o: jobs.streaming_value_counts_monitor(
-                s, st, ck, job_name="streaming_ks_monitor"),
+            lambda s, st, ck, o: jobs.staged_sum(
+                s, st, ck, partial=quality_checks.value_counts,
+                counts=["c"], name="s33"),
             False),
     "s35": (_DOC_SCHEMA, _DOCS,
-            lambda s, st, ck, o: jobs.streaming_contingency_monitor(
-                s, st, ck),
+            lambda s, st, ck, o: jobs.staged_sum(
+                s, st, ck, partial=quality_checks.contingency_counts,
+                counts=["o"], name="s35"),
             False),
     "s36": ("vec_id long, embedding array<float>, label int", _EMB,
-            lambda s, st, ck, o: jobs.streaming_embedding_drift_monitor(
-                s, st, ck),
+            lambda s, st, ck, o: jobs.staged_sum(
+                s, st, ck, partial=quality_checks.embedding_component_sums,
+                counts=["s", "n"], name="s36"),
             False),
 }
 
@@ -2303,13 +2307,15 @@ def test_s33_ks_monitor_slicing_invariant_and_stale_state_raises(
     state = str(tmp_path / "state")
 
     def _drain(ckpt):
-        q = jobs.streaming_value_counts_monitor(
+        q = jobs.staged_sum(
             jobs.read_event_stream(
                 spark, str(landing), max_files_per_trigger=1
             ),
             state,
             str(tmp_path / ckpt),
-            job_name="streaming_ks_monitor",
+            partial=quality_checks.value_counts,
+            counts=["c"],
+            name="s33",
         )
         q.awaitTermination(120)
         return q
@@ -2382,11 +2388,13 @@ def test_auc_from_counts_algebra_and_s34_slicing(spark, landing, tmp_path):
                 eid += 1
         _os.utime(landing / f"b{bi}.json", (1000000000 + bi * 100,) * 2)
     state = str(tmp_path / "state")
-    q = jobs.streaming_value_counts_monitor(
+    q = jobs.staged_sum(
         jobs.read_event_stream(spark, str(landing), max_files_per_trigger=1),
         state,
         str(tmp_path / "ckpt"),
-        job_name="streaming_auc_monitor",
+        partial=quality_checks.value_counts,
+        counts=["c"],
+        name="s34",
     )
     q.awaitTermination(120)
     got = sorted(
@@ -2446,8 +2454,9 @@ def test_s35_contingency_monitor_slicing_invariant(spark, tmp_path):
         .json(str(landing))
     )
     state = str(tmp_path / "state")
-    q = jobs.streaming_contingency_monitor(
-        stream, state, str(tmp_path / "ckpt")
+    q = jobs.staged_sum(
+        stream, state, str(tmp_path / "ckpt"),
+        partial=quality_checks.contingency_counts, counts=["o"], name="s35",
     )
     q.awaitTermination(120)
     got = sorted(
@@ -2503,8 +2512,9 @@ def test_s36_embedding_drift_monitor_slicing_invariant(spark, tmp_path):
         .parquet(str(landing))
     )
     state = str(tmp_path / "state")
-    q = jobs.streaming_embedding_drift_monitor(
-        stream, state, str(tmp_path / "ckpt")
+    q = jobs.staged_sum(
+        stream, state, str(tmp_path / "ckpt"),
+        partial=embedding_component_sums, counts=["s", "n"], name="s36",
     )
     q.awaitTermination(120)
     got = sorted(

@@ -2162,6 +2162,82 @@ def test_x103_jl_pipeline_finds_planted_near_duplicates(spark, tmp_path):
         assert r.n_hit >= 1, (qid, r)  # the planted partner survives JL
 
 
+def test_x63_psi_hand_case(spark, tmp_path):
+    """psi_from_counts against a plain-Python Laplace-smoothed PSI on a
+    hand (source, bucket, n_ref, n_live) table: per source, p = (n + 1)
+    / (t + n_buckets) over the source's observed buckets, each term
+    (p_live - p_ref)·ln(p_live / p_ref) e9-quantized before the integer
+    sum.  x63 then reaches the same rows from a documents fixture whose
+    doc_id-parity halves and power-of-2 n_chars buckets make that
+    table, and its DuckDB oracle agrees.  Source "b" has identical
+    halves, so its PSI is exactly 0 (ln(1.0) is exact)."""
+    import math
+
+    import duckdb
+
+    from fanstats_producer_spark.operators.quality_checks import (
+        psi_from_counts,
+        x63_psi_drift,
+    )
+    from fanstats_producer_spark.registry import ORACLE
+
+    # (source, n_chars) per doc_id: even ids are the reference half
+    docs = [
+        ("a", 4), ("a", 5), ("a", 16), ("a", 7), ("a", 1), ("a", 0),
+        ("a", 2), ("a", 40), ("b", 8), ("b", 9), ("b", 1000), ("b", 600),
+    ]
+    counts = {}
+    for doc_id, (src, n_chars) in enumerate(docs):
+        bucket = math.floor(math.log2(max(n_chars, 1)))
+        ref, live = counts.get((src, bucket), (0, 0))
+        counts[(src, bucket)] = (
+            (ref + 1, live) if doc_id % 2 == 0 else (ref, live + 1)
+        )
+    # a: buckets 0 (1 ref, 1 live), 1 (1, 0), 2 (1, 2), 4 (1, 0), 5 (0, 1)
+    assert counts[("a", 2)] == (1, 2) and counts[("a", 5)] == (0, 1)
+
+    want = {}
+    for src in ("a", "b"):
+        cells = [v for (s, _), v in counts.items() if s == src]
+        t_ref = sum(r for r, _ in cells)
+        t_live = sum(lv for _, lv in cells)
+        psi = 0
+        for n_ref, n_live in cells:
+            p_live = float(n_live + 1) / (t_live + len(cells))
+            p_ref = float(n_ref + 1) / (t_ref + len(cells))
+            psi += math.floor(
+                (p_live - p_ref) * math.log(p_live / p_ref) * 1e9 + 0.5
+            )
+        want[src] = (psi, t_ref, t_live)
+    assert want["a"][0] > 0 and want["b"] == (0, 2, 2)
+
+    table = spark.createDataFrame(
+        [(s, b, r, lv) for (s, b), (r, lv) in counts.items()],
+        "source string, bucket long, n_ref long, n_live long",
+    )
+    got = {
+        r.source: (r.psi_e9, r.n_ref, r.n_live)
+        for r in psi_from_counts(table, "source").collect()
+    }
+    assert got == want
+
+    d = str(tmp_path)
+    spark.createDataFrame(
+        [(i, f"doc {i}", "en", s, n) for i, (s, n) in enumerate(docs)],
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long",
+    ).write.parquet(f"{d}/documents.parquet")
+    rows = x63_psi_drift(spark, d).collect()
+    assert {r.source: (r.psi_e9, r.n_ref, r.n_live) for r in rows} == want
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT *"
+        f" FROM '{d}/documents.parquet/*.parquet'"
+    )
+    oracle = con.execute(ORACLE["x63_psi_drift"]).fetchall()
+    assert {s: (p, r, lv) for s, p, r, lv in oracle} == want
+
+
 def test_x105_ks_hand_case(spark, tmp_path):
     """Exact KS on a hand-computable frame: A=[1,2,2,5] vs B=[2,3]
     gives D = 1/4 (integer d_num 2 over n_a·n_b = 8); an identical
